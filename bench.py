@@ -541,6 +541,7 @@ def bench_lakehouse(spark, sf_dir: str, runs: int):
         # metadata cost is flat in table file count (the unsharded
         # ratio at these sizes reads ~5-10x; tools/manifest_soak.py
         # has the full curve to 1M files)
+        from data_pipeline_demo_spark.sinks.manifest import next_manifest
         from data_pipeline_demo_spark.sinks.txlog import (
             _commit_manifest,
             _latest_manifest,
@@ -557,34 +558,19 @@ def bench_lakehouse(spark, sf_dir: str, runs: int):
             }
             _commit_manifest(
                 spark, sroot,
-                {
-                    "version": 0, "key": "li_id", "num_buckets": 32,
-                    "buckets": buckets,
-                    "row_counts": {b: 1 for b in buckets},
-                    "app_txns": {}, "stats_columns": [],
-                    "bucket_stats": {}, "bloom_columns": [],
-                    "bucket_blooms": {}, "bloom_bits": 1024,
-                    "manifest_sharding": {"groups": 32},
-                    "operation": "BENCH",
-                    "committed_at_ms": int(time.time() * 1000),
-                },
+                next_manifest(
+                    None, "BENCH", key="li_id", num_buckets=32,
+                    buckets=buckets,
+                    row_counts={b: 1 for b in buckets},
+                    manifest_sharding={"groups": 32},
+                ),
             )
             prev = _latest_manifest(spark, sroot)
             nb = dict(prev["buckets"])
             nb["7"] = list(nb["7"]) + ["data/0007/new.parquet"]
             t0 = time.perf_counter()
             _commit_manifest(
-                spark, sroot,
-                {
-                    "version": 1, "key": "li_id", "num_buckets": 32,
-                    "buckets": nb,
-                    "row_counts": dict(prev["row_counts"]),
-                    "app_txns": {}, "stats_columns": [],
-                    "bucket_stats": {}, "bloom_columns": [],
-                    "bucket_blooms": {}, "bloom_bits": 1024,
-                    "operation": "BENCH",
-                    "committed_at_ms": int(time.time() * 1000),
-                },
+                spark, sroot, next_manifest(prev, "BENCH", buckets=nb),
                 prev=prev,
             )
             return time.perf_counter() - t0

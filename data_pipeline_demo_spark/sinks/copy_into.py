@@ -29,7 +29,7 @@ Design for 100 TB:
   the data: RESTORE carries the pointer of the restored snapshot,
   CLONE materializes the source's history into the target's own
   copylog, and every other verb carries the pointer forward
-  (``sinks/txlog._copy_carry``). The chain self-compacts past
+  (``sinks/manifest.next_manifest``). The chain self-compacts past
   ``COPYLOG_CHAIN_MAX`` links and OPTIMIZE collapses it to one file;
   vacuum sweeps orphaned sidecars.
 - Concurrency: the version claim is the only arbitration point. A lost
@@ -40,8 +40,6 @@ Design for 100 TB:
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,20 +54,21 @@ from .txlog import (
     _commit_manifest,
     _copy_chain,
     _copy_history_map,
-    _dv_carry,
     _enforce_table_constraints,
     _evolved_schema,
+    _history_of,
     _latest_manifest,
     _publish_touched_buckets,
     _write_copylog_sidecar,
 )
+from .manifest import next_manifest
+from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
 # Self-compaction backstop: past this many chain links the next COPY
 # folds the FULL history into its own sidecar (prev=None), bounding the
 # skip-check walk at ~64 small reads even if OPTIMIZE never runs. The
 # fold is O(total files) write amortized over 64 loads.
 COPYLOG_CHAIN_MAX = 64
-from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
 _FORMATS = {"parquet", "orc", "csv", "json"}
 
@@ -326,12 +325,7 @@ def copy_into(
     # COPYLOG_CHAIN_MAX / OPTIMIZE compaction
     chain = _copy_chain(spark, root_path, prev)
     legacy = prev.get("copy_files") or {}
-    history: dict[str, list] = {}
-    for _rel, payload in chain:
-        for p, rec in payload.get("files", {}).items():
-            history.setdefault(p, rec)
-    for p, rec in legacy.items():
-        history.setdefault(p, rec)
+    history = _history_of(chain, legacy)
     new_files = [
         (p, sz, mt)
         for p, sz, mt in files
@@ -549,48 +543,19 @@ def copy_into(
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": version,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": stats_columns,
-            "bucket_stats": bucket_stats,
-            "bloom_columns": bloom_columns,
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": bloom_bits,
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **(
-                {"schema": schema_fields}
-                if schema_fields is not None
-                else {}
-            ),
-            **({"dropped_columns": dropped_columns} if dropped_columns else {}),
-            **(
-                {"generated_columns": generated_columns}
-                if generated_columns
-                else {}
-            ),
-            **(
-                {
-                    "identity_columns": identity_columns,
-                    "identity_high_water": identity_hwm,
-                }
-                if identity_columns
-                else {}
-            ),
-            **(
-                {"column_defaults": column_defaults}
-                if column_defaults
-                else {}
-            ),
-            **_dv_carry(prev),
-            "copy_log": {"head": head_rel, "count": total},
-            "operation": "COPY INTO",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "COPY INTO",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            schema=schema_fields,
+            identity_high_water=identity_hwm,
+            copy_files=None,
+            copy_log={"head": head_rel, "count": total},
+        ),
         prev=prev,
     )
     return {

@@ -57,7 +57,6 @@ Two hard guards distinguish this path from the plain upsert:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,14 +69,13 @@ from .txlog import (
     _bucket_of,
     _check_features,
     _commit_manifest,
-    _copy_carry,
-    _dv_carry,
     _enforce_table_constraints,
     _latest_manifest,
     _publish_touched_buckets,
     _read_buckets_logical,
     FEATURE_DV,
 )
+from .manifest import dvs_without, next_manifest
 from .upsert import BUCKET_COL
 
 
@@ -584,44 +582,18 @@ def txlog_merge(
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": version,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": list(prev.get("stats_columns", [])),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": list(prev.get("bloom_columns", [])),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **(
-                {"schema": schema_fields}
-                if schema_fields is not None
-                else {}
-            ),
-            **(
-                {"dropped_columns": dropped_columns}
-                if dropped_columns
-                else {}
-            ),
-            **({"generated_columns": generated} if generated else {}),
-            **(
-                {
-                    "identity_columns": identity,
-                    "identity_high_water": identity_hwm,
-                }
-                if identity
-                else {}
-            ),
-            **({"column_defaults": defaults} if defaults else {}),
-            **_dv_carry(prev, touched),
-            **_copy_carry(prev),
-            "operation": "MERGE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "MERGE",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            schema=schema_fields,
+            identity_high_water=identity_hwm,
+            bucket_dvs=dvs_without(prev, touched),
+        ),
         prev=prev,
     )
     res.version = version

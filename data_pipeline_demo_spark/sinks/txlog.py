@@ -48,6 +48,19 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .manifest import (
+    DEFAULT_SHARD_GROUPS,
+    FEATURE_DV,
+    FEATURE_SHARDS,  # noqa: F401  (re-export)
+    SHARDS_DIR,
+    deflate as deflate_manifest,
+    dvs_without,
+    inflate as inflate_manifest,
+    next_manifest,
+    shard_groups_of,
+    stat_value,
+    zone_maps_overlap,
+)
 from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
 COMMITS_DIR = "_commits"
@@ -159,40 +172,13 @@ def _read_manifest(
     finally:
         stream.close()
     m = json.loads(text)
-    return _inflate_manifest(spark, root_path, m) if inflate else m
-
-
-def _inflate_manifest(spark: SparkSession, root_path: str, m: dict) -> dict:
-    """Resolve a sharded root manifest to the flat in-memory shape every
-    consumer expects: read the bucket-group shard files its
-    ``manifest_shards`` pointers name and reassemble ``buckets``. The
-    ``manifest-shards`` token is dropped from ``requires`` (this reader
-    just satisfied it); :func:`_deflate_manifest` re-adds it at commit.
-    Unsharded manifests pass through untouched. Shard-read failures
-    propagate as-is — they mean missing/corrupt shard files, not a
-    corrupt root, so :func:`_latest_manifest` must NOT quarantine the
-    root over them."""
-    ptrs = m.get("manifest_shards")
-    if ptrs is None:
+    if not inflate:
         return m
-    buckets: dict[str, list] = {}
-    for g in sorted(ptrs, key=int):
-        try:
-            payload = _read_rel_json(spark, root_path, ptrs[g])
-        except ValueError as e:  # incl. JSONDecodeError: corrupt SHARD,
-            raise RuntimeError(  # never quarantine the ROOT over it
-                f"txtable {root_path}: corrupt manifest shard "
-                f"{ptrs[g]!r} (group {g})"
-            ) from e
-        for b, rels in payload.get("buckets", {}).items():
-            buckets[b] = list(rels)
-    m["buckets"] = buckets
-    req = [r for r in m.get("requires", []) if r != FEATURE_SHARDS]
-    if req:
-        m["requires"] = req
-    else:
-        m.pop("requires", None)
-    return m
+    # a corrupt SHARD raises RuntimeError, so _latest_manifest never
+    # quarantines the ROOT over it
+    return inflate_manifest(
+        m, lambda rel: _read_rel_json(spark, root_path, rel)
+    )
 
 
 _RACE_EXCEPTIONS = (
@@ -345,32 +331,9 @@ def set_log_store(store: LogStore | None) -> LogStore:
     return prev
 
 
-# ---------------------------------------------------------------------------
-# Per-bucket-group manifest shards (round-12 judge directive #1 — the
-# Iceberg manifest-list idea, format-compatible). An unsharded commit
-# publishes ONE root json carrying every bucket's file list: O(live
-# files) bytes per commit, the last super-constant metadata term at
-# 10^6+ file counts. A SHARDED table instead stores the file lists in
-# immutable ``_manifest_shards/<uuid>.json`` files, each covering the
-# bucket group ``bucket % groups``; the root carries only O(groups)
-# pointers plus the per-bucket scalars (row counts, zone maps, blooms —
-# O(num_buckets), bounded). A commit rewrites ONLY the shards of groups
-# it touched — untouched groups re-point at their immutable prior shard
-# (content-compared against prev, so reuse is proven, not assumed) —
-# making commit metadata cost O(touched files + groups), flat in table
-# size. Shards follow the data-file rules: invisible until a committed
-# root references them, immutable forever after, swept by vacuum when
-# no kept root points at them. The root carries ``requires:
-# ["manifest-shards"]`` so a reader that predates sharding refuses
-# loudly instead of seeing an empty table.
-# ---------------------------------------------------------------------------
-
-SHARDS_DIR = "_manifest_shards"
-FEATURE_SHARDS = "manifest-shards"
-DEFAULT_SHARD_GROUPS = 32
-
-
 def _read_rel_json(spark: SparkSession, root_path: str, rel: str) -> dict:
+    """Parse one root-relative JSON file (manifest shard, copylog
+    sidecar)."""
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
     stream = fs.open(jvm.org.apache.hadoop.fs.Path(root, rel))
@@ -381,84 +344,28 @@ def _read_rel_json(spark: SparkSession, root_path: str, rel: str) -> dict:
     return json.loads(text)
 
 
-def _write_shard(spark: SparkSession, root_path: str, payload: dict) -> str:
-    """Write one immutable manifest shard; returns its root-relative
-    path. No atomicity needed: like data files, a shard is invisible
-    until a committed root manifest references it."""
+def _write_rel_json(
+    spark: SparkSession, root_path: str, rel: str, payload: dict
+) -> None:
+    """Create one immutable root-relative JSON file (manifest shard,
+    copylog sidecar). No atomicity needed: like a data file, it is
+    invisible until a committed manifest references it."""
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
-    rel = f"{SHARDS_DIR}/{uuid.uuid4().hex}.json"
-    p = jvm.org.apache.hadoop.fs.Path(root, rel)
-    out = fs.create(p, False)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(root, rel), False)
     try:
         out.write(bytearray(json.dumps(payload).encode("utf-8")))
     finally:
         out.close()
-    return rel
-
-
-def _shard_groups_of(cfg: dict | None) -> int | None:
-    if not cfg:
-        return None
-    return max(1, int(cfg.get("groups", DEFAULT_SHARD_GROUPS)))
-
-
-def _deflate_manifest(
-    spark: SparkSession, root_path: str, manifest: dict, prev: dict | None
-) -> dict:
-    """Commit-side counterpart of :func:`_inflate_manifest`: when the
-    table is sharded (config set on this manifest by the enabling
-    commit, or carried from ``prev``), move the bucket file lists out
-    of the root into per-group shard files, reusing ``prev``'s
-    immutable shard for every group whose content is UNCHANGED (proven
-    by direct comparison against prev's inflated buckets — cheap python
-    equality, no IO). Mutates and returns ``manifest``."""
-    cfg = manifest.pop("manifest_sharding", None) or (prev or {}).get(
-        "manifest_sharding"
-    )
-    groups = _shard_groups_of(cfg)
-    if groups is None:
-        manifest.pop("manifest_shards", None)
-        return manifest
-    buckets = manifest.pop("buckets", {}) or {}
-    by_group: dict[int, dict[str, list]] = {}
-    for b, rels in buckets.items():
-        if rels:
-            by_group.setdefault(int(b) % groups, {})[str(b)] = list(rels)
-    prev_ptrs: dict[int, str] = {}
-    prev_groups: dict[int, dict[str, list]] = {}
-    if (
-        prev is not None
-        and prev.get("manifest_shards")
-        and _shard_groups_of(prev.get("manifest_sharding")) == groups
-    ):
-        prev_ptrs = {
-            int(g): rel for g, rel in prev["manifest_shards"].items()
-        }
-        for b, rels in (prev.get("buckets") or {}).items():
-            if rels:
-                prev_groups.setdefault(int(b) % groups, {})[str(b)] = rels
-    ptrs: dict[str, str] = {}
-    for g in sorted(by_group):
-        if g in prev_ptrs and prev_groups.get(g) == by_group[g]:
-            ptrs[str(g)] = prev_ptrs[g]
-        else:
-            ptrs[str(g)] = _write_shard(
-                spark, root_path, {"buckets": by_group[g]}
-            )
-    manifest["manifest_sharding"] = {"groups": groups}
-    manifest["manifest_shards"] = ptrs
-    manifest["requires"] = sorted(
-        set(manifest.get("requires", [])) | {FEATURE_SHARDS}
-    )
-    return manifest
 
 
 def _commit_manifest(
     spark: SparkSession, root_path: str, manifest: dict, prev: dict | None = None
 ) -> None:
     """Content-atomically publish ``_commits/<version>.json``; raise
-    ConcurrentCommitError iff that version already exists.
+    ConcurrentCommitError iff that version already exists. ``manifest``
+    comes from :func:`next_manifest`; ``prev`` is the inflated snapshot
+    it was built from, whose unchanged manifest shards are reused.
 
     The version claim is delegated to the installed :class:`LogStore`
     (default :class:`HadoopRenameLogStore` — tmp + rename-without-
@@ -482,44 +389,14 @@ def _commit_manifest(
     p = _commit_path(jvm, root, manifest["version"])
     if fs.exists(p):  # fast path; the claim below is the real gate
         raise ConcurrentCommitError(str(p))
-    manifest = _deflate_manifest(spark, root_path, manifest, prev)
+    manifest = deflate_manifest(
+        manifest,
+        prev,
+        lambda rel, payload: _write_rel_json(spark, root_path, rel, payload),
+    )
     payload = json.dumps(manifest).encode("utf-8")
     if not _log_store.put_if_absent(spark, fs, commits, p, payload):
         raise ConcurrentCommitError(str(p))
-
-
-def _stat_value(v):
-    """JSON-safe zone-map stat representation: primitives pass through;
-    dates/decimals/timestamps stringify (ISO date strings order
-    lexicographically = chronologically, so range pruning stays
-    correct). Used by BOTH the manifest writer and the pruning reader
-    so bounds and stored stats always compare like-for-like. Decimal
-    STRING stats do NOT order lexicographically ('9.5' > '12.0') —
-    the pruning comparator re-parses numeric-looking string pairs
-    through Decimal (:func:`_stat_cmp_pair`)."""
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    return str(v)
-
-
-def _stat_cmp_pair(a, b, decimal_bound: bool):
-    """(a, b) coerced so ``a < b`` compares by VALUE for zone-map
-    pruning. ``decimal_bound=True`` means the CALLER's bound was a
-    Decimal (⇒ the column is decimal-typed and its string stats are
-    stringified Decimals): string pairs re-parse through Decimal —
-    '9.5' vs '12.0' must order 9.5 < 12.0, not lexicographic '9' > '1'.
-    With a non-Decimal bound, strings pass through untouched: for
-    STRING columns Spark's own predicate semantics ARE lexicographic
-    (numeric-looking text like zip codes included), and ISO
-    date/timestamp strings order lexicographically = chronologically."""
-    if decimal_bound and isinstance(a, str) and isinstance(b, str):
-        import decimal as _dec
-
-        try:
-            return _dec.Decimal(a), _dec.Decimal(b)
-        except _dec.InvalidOperation:
-            return a, b
-    return a, b
 
 
 # --- per-version schema tracking (Delta's schema-on-log model) -------------
@@ -744,26 +621,6 @@ def _evolve_fields(
                 "rows), or drop it from the batch"
             )
         out.append(dict(f))
-    return out
-
-
-def _schema_carry(manifest: dict) -> dict:
-    """Manifest entries that propagate a snapshot's schema state into
-    the next version unchanged (schema-preserving commits: DELETE,
-    UPDATE, compaction, clone, restore)."""
-    out = {}
-    if "schema" in manifest:
-        out["schema"] = [dict(f) for f in manifest["schema"]]
-    if manifest.get("dropped_columns"):
-        out["dropped_columns"] = list(manifest["dropped_columns"])
-    if manifest.get("generated_columns"):
-        out["generated_columns"] = dict(manifest["generated_columns"])
-    if manifest.get("column_defaults"):
-        out["column_defaults"] = dict(manifest["column_defaults"])
-    # identity config AND its mutable high-water mark travel with the
-    # schema state: a commit path that dropped the mark would re-issue
-    # already-used ids (see _identity_carry)
-    out.update(_identity_carry(manifest))
     return out
 
 
@@ -1096,25 +953,6 @@ def _normalize_identity(ident: dict) -> dict:
     }
 
 
-def _identity_carry(manifest: dict) -> dict:
-    """Identity config + high-water manifest entries, carried through
-    every commit of a table that declares them. The high-water mark is
-    the one MUTABLE piece of schema-adjacent state: losing it on any
-    commit path would re-issue already-used ids (actual corruption, not
-    just a dropped rule), so every commit shape carries it."""
-    if not manifest.get("identity_columns"):
-        return {}
-    return {
-        "identity_columns": {
-            c: dict(cfg)
-            for c, cfg in manifest["identity_columns"].items()
-        },
-        "identity_high_water": dict(
-            manifest.get("identity_high_water", {})
-        ),
-    }
-
-
 def _identity_restore_carry(src: dict, cur: dict) -> dict:
     """RESTORE must never regress the identity high-water mark (a
     restored table that re-issued ids already given out by the undone
@@ -1195,7 +1033,6 @@ def _abs(root_path: str, rel: str) -> str:
 # deleted rows), which can only fail to prune, never prune wrongly.
 
 DV_DIR = "dv"
-FEATURE_DV = "deletion-vectors"
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -1219,60 +1056,6 @@ def _check_features(
         )
 
 
-def _requires_of(manifest_fields: dict) -> dict:
-    """The ``requires`` entry a manifest with these fields must carry."""
-    req = []
-    if manifest_fields.get("bucket_dvs"):
-        req.append(FEATURE_DV)
-    return {"requires": req} if req else {}
-
-
-def _dv_carry(prev: dict, cleared_buckets=()) -> dict:
-    """Manifest DV fields carried forward from ``prev``, minus buckets
-    a rewrite just materialized. Returns {} for DV-free tables."""
-    cleared = {str(b) for b in cleared_buckets}
-    dvs = {
-        b: list(r)
-        for b, r in prev.get("bucket_dvs", {}).items()
-        if b not in cleared and r
-    }
-    counts = {
-        b: int(n)
-        for b, n in prev.get("dv_counts", {}).items()
-        if b not in cleared and b in dvs
-    }
-    fields = {}
-    if dvs:
-        fields["bucket_dvs"] = dvs
-        fields["dv_counts"] = counts
-    return {**fields, **_requires_of(fields)}
-
-
-def _copy_carry(prev: dict | None) -> dict:
-    """COPY INTO load-history fields carried forward from ``prev``
-    unchanged. Every commit that evolves a snapshot (MERGE, DELETE,
-    UPDATE, ALTER, OPTIMIZE, REBUCKET, TRUNCATE) must carry the
-    history — a commit that dropped it would silently re-arm
-    already-loaded files for a double load. RESTORE and CLONE carry
-    from their SOURCE manifest, so load history time-travels/copies
-    consistently with the data it describes.
-
-    Two representations exist: ``copy_log`` is the current O(1)
-    manifest pointer ``{"head": <copylog/ sidecar rel path>, "count":
-    n}`` into an immutable chain of per-load sidecar files (round-11
-    judge directive #2 — the manifest no longer grows O(all files ever
-    loaded) per commit); ``copy_files`` is the legacy embedded map,
-    still carried for tables that predate the sidecar (the next COPY
-    INTO migrates it into the chain). Returns {} for tables never
-    COPY'd into."""
-    out: dict = {}
-    if prev and prev.get("copy_files"):
-        out["copy_files"] = dict(prev["copy_files"])
-    if prev and prev.get("copy_log"):
-        out["copy_log"] = dict(prev["copy_log"])
-    return out
-
-
 # ---------------------------------------------------------------------------
 # COPY INTO load-history sidecars: the manifest keeps an O(1) pointer;
 # each COPY commit appends one immutable copylog/<uuid>.json holding
@@ -1292,29 +1075,9 @@ def _write_copylog_sidecar(
     """Write one immutable copylog sidecar; returns its root-relative
     path. Payload shape: ``{"files": {path: [size, mtime_ms, version]},
     "prev": <rel path | None>, "count": <total files in history>}``."""
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
     rel = f"{COPYLOG_DIR}/{uuid.uuid4().hex}.json"
-    p = jvm.org.apache.hadoop.fs.Path(root, rel)
-    out = fs.create(p, False)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
+    _write_rel_json(spark, root_path, rel, payload)
     return rel
-
-
-def _read_copylog_sidecar(
-    spark: SparkSession, root_path: str, rel: str
-) -> dict:
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(root, rel))
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
 
 
 def _copy_chain(
@@ -1333,44 +1096,56 @@ def _copy_chain(
                 "itself/an ancestor (cycle)"
             )
         seen.add(node)
-        payload = _read_copylog_sidecar(spark, root_path, node)
+        payload = _read_rel_json(spark, root_path, node)
         out.append((node, payload))
         node = payload.get("prev")
+    return out
+
+
+def _history_of(links, legacy: dict | None) -> dict[str, list]:
+    """Load history ``{path: [size, mtime_ms, version]}`` of a copylog
+    chain (newest entry wins for a force-reloaded file) plus a legacy
+    embedded ``copy_files`` map (oldest — fills gaps only)."""
+    out: dict[str, list] = {}
+    for _rel, payload in links:
+        for p, rec in payload.get("files", {}).items():
+            out.setdefault(p, rec)
+    for p, rec in (legacy or {}).items():
+        out.setdefault(p, rec)
     return out
 
 
 def _copy_history_map(
     spark: SparkSession, root_path: str, manifest: dict
 ) -> dict[str, list]:
-    """Full load history ``{path: [size, mtime_ms, version]}`` for the
-    snapshot: sidecar chain (newest entry wins for a force-reloaded
-    file) plus any legacy embedded ``copy_files`` (oldest — fills
-    gaps only)."""
-    out: dict[str, list] = {}
-    for _rel, payload in _copy_chain(spark, root_path, manifest):
-        for p, rec in payload.get("files", {}).items():
-            out.setdefault(p, rec)
-    for p, rec in (manifest.get("copy_files") or {}).items():
-        out.setdefault(p, rec)
-    return out
+    """Full load history of the snapshot (see :func:`_history_of`)."""
+    return _history_of(
+        _copy_chain(spark, root_path, manifest), manifest.get("copy_files")
+    )
+
+
+def _single_copy_log(spark: SparkSession, root_path: str, hist: dict) -> dict:
+    """Manifest changes pointing the COPY history at ONE new sidecar
+    holding ``hist``; the legacy embedded map retires."""
+    rel = _write_copylog_sidecar(
+        spark, root_path, {"files": hist, "prev": None, "count": len(hist)}
+    )
+    return {"copy_files": None, "copy_log": {"head": rel, "count": len(hist)}}
 
 
 def _clone_copy_fields(
     spark: SparkSession, source_root: str, src_manifest: dict,
     target_root: str,
 ) -> dict:
-    """Manifest fields giving a CLONE target the source's full COPY
+    """Manifest changes giving a CLONE target the source's full COPY
     history: one compacted sidecar written into the TARGET's copylog/
-    (empty dict when the source has none)."""
+    (the chain's rel paths are root-relative, so a raw pointer copy
+    would dangle across roots). Both fields reset when the source has
+    no history."""
     hist = _copy_history_map(spark, source_root, src_manifest)
     if not hist:
-        return {}
-    rel = _write_copylog_sidecar(
-        spark,
-        target_root,
-        {"files": hist, "prev": None, "count": len(hist)},
-    )
-    return {"copy_log": {"head": rel, "count": len(hist)}}
+        return {"copy_files": None, "copy_log": None}
+    return _single_copy_log(spark, target_root, hist)
 
 
 def _compacted_copy_fields(
@@ -1379,26 +1154,12 @@ def _compacted_copy_fields(
     """OPTIMIZE's copylog maintenance: collapse a multi-link chain (or
     a legacy embedded ``copy_files`` map) into ONE sidecar, so the
     skip-check walk on the next COPY INTO is a single read. An
-    already-compact chain carries through untouched."""
-    chain = (manifest.get("copy_log") or {}).get("head")
-    legacy = manifest.get("copy_files")
-    if not chain and not legacy:
-        return {}
+    already-compact chain carries through untouched (no changes)."""
     links = _copy_chain(spark, root_path, manifest)
-    if len(links) == 1 and not legacy:
-        return _copy_carry(manifest)
-    hist: dict[str, list] = {}
-    for _rel, payload in links:
-        for p, rec in payload.get("files", {}).items():
-            hist.setdefault(p, rec)
-    for p, rec in (legacy or {}).items():
-        hist.setdefault(p, rec)
-    rel = _write_copylog_sidecar(
-        spark,
-        root_path,
-        {"files": hist, "prev": None, "count": len(hist)},
-    )
-    return {"copy_log": {"head": rel, "count": len(hist)}}
+    legacy = manifest.get("copy_files")
+    if len(links) <= 1 and not legacy:
+        return {}
+    return _single_copy_log(spark, root_path, _history_of(links, legacy))
 
 
 def _norm_fs_path(p: str) -> str:
@@ -1902,8 +1663,8 @@ def _publish_touched_buckets(
             if stats_columns and bucket_stats is not None:
                 bucket_stats[bs] = {
                     c: [
-                        _stat_value(got.get(f"__lo_{b}_{c}")),
-                        _stat_value(got.get(f"__hi_{b}_{c}")),
+                        stat_value(got.get(f"__lo_{b}_{c}")),
+                        stat_value(got.get(f"__hi_{b}_{c}")),
                     ]
                     for c in stats_columns
                 }
@@ -1938,7 +1699,7 @@ def _publish_touched_buckets(
         if stats_columns and bucket_stats is not None:
             for r in stat_rows:
                 bucket_stats[str(r[BUCKET_COL])] = {
-                    c: [_stat_value(r[f"__lo_{c}"]), _stat_value(r[f"__hi_{c}"])]
+                    c: [stat_value(r[f"__lo_{c}"]), stat_value(r[f"__hi_{c}"])]
                     for c in stats_columns
                 }
         if stats_columns and bucket_nulls is not None:
@@ -2358,66 +2119,45 @@ def txlog_upsert(
         # evaluation (the cache existed to keep the row handle stable)
         _idpin.unpersist()
 
-    _commit_manifest(
-        spark,
-        root_path,
-        {
-            "version": version,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": app_txns,
-            "stats_columns": stats_columns,
-            "bucket_stats": bucket_stats,
-            "bloom_columns": bloom_columns,
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": bloom_bits,
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **({"schema": schema_fields} if schema_fields is not None else {}),
-            **({"dropped_columns": dropped_columns} if dropped_columns else {}),
-            **(
-                {"generated_columns": generated_columns}
-                if generated_columns
-                else {}
-            ),
-            **(
-                {
-                    "identity_columns": identity_columns,
-                    "identity_high_water": identity_hwm,
+    manifest = next_manifest(
+        prev,
+        "REPLACE"
+        if replaced_version is not None
+        else ("MERGE" if prev is not None else "CREATE"),
+        version=version,
+        key=key,
+        num_buckets=num_buckets,
+        buckets=buckets,
+        row_counts=row_counts,
+        app_txns=app_txns,
+        stats_columns=stats_columns,
+        bucket_stats=bucket_stats,
+        bloom_columns=bloom_columns,
+        bucket_blooms=bucket_blooms,
+        bloom_bits=bloom_bits,
+        bucket_nulls=bucket_nulls,
+        schema=schema_fields,
+        dropped_columns=dropped_columns,
+        generated_columns=generated_columns,
+        identity_columns=identity_columns,
+        identity_high_water=identity_hwm,
+        column_defaults=column_defaults,
+        bucket_dvs=dvs_without(prev, touched),
+        **(
+            {
+                "manifest_sharding": {
+                    "groups": (
+                        DEFAULT_SHARD_GROUPS
+                        if manifest_shards is True
+                        else int(manifest_shards)
+                    )
                 }
-                if identity_columns
-                else {}
-            ),
-            **(
-                {"column_defaults": column_defaults}
-                if column_defaults
-                else {}
-            ),
-            **(_dv_carry(prev, touched) if prev is not None else {}),
-            **_copy_carry(prev),
-            **(
-                {
-                    "manifest_sharding": {
-                        "groups": (
-                            DEFAULT_SHARD_GROUPS
-                            if manifest_shards is True
-                            else int(manifest_shards)
-                        )
-                    }
-                }
-                if manifest_shards
-                else {}
-            ),
-            "operation": (
-                "REPLACE"
-                if replaced_version is not None
-                else ("MERGE" if prev is not None else "CREATE")
-            ),
-            "committed_at_ms": int(time.time() * 1000),
-        },
-        prev=prev,
+            }
+            if manifest_shards
+            else {}
+        ),
     )
+    _commit_manifest(spark, root_path, manifest, prev=prev)
     if replaced_version is not None:
         # reset write-side governance AFTER the commit landed (a lost
         # commit race must not wipe the incumbent's constraints/props)
@@ -2429,12 +2169,9 @@ def txlog_upsert(
             _publish_sidecar_json(
                 spark, root_path, PROPERTIES_DIR, {}, pv, "table properties"
             )
-    remaining_dv = (
-        _dv_carry(prev, touched).get("dv_counts", {})
-        if prev is not None
-        else {}
+    return sum(row_counts.values()) - sum(
+        manifest.get("dv_counts", {}).values()
     )
-    return sum(row_counts.values()) - sum(remaining_dv.values())
 
 
 def _version_at_timestamp(
@@ -2528,39 +2265,15 @@ def _zonemap_overlapping_buckets(
     stats = manifest.get("bucket_stats", {})
 
     def overlaps(b: str) -> bool:
-        st = stats.get(b)
-        if st is None:
-            return True  # no stats recorded: must keep
-        for c, (lo, hi) in prune_between.items():
-            mn, mx = st.get(c, [None, None])
-            if mn is None or mx is None:
-                continue  # all-null bucket column: keep
-            # stats were JSON-serialized through _stat_value (dates
-            # etc. → ISO strings); coerce the caller's bounds the
-            # same way so both sides always compare like-for-like
-            dec_bound = any(
-                isinstance(v, _dec.Decimal)
-                for v in (lo, hi)
-                if v is not None
-            )
-            lo_s, hi_s = _stat_value(lo), _stat_value(hi)
-            try:
-                if lo_s is not None:
-                    mx_c, lo_c = _stat_cmp_pair(mx, lo_s, dec_bound)
-                    if mx_c < lo_c:
-                        return False
-                if hi_s is not None:
-                    mn_c, hi_c = _stat_cmp_pair(mn, hi_s, dec_bound)
-                    if mn_c > hi_c:
-                        return False
-            except TypeError:
-                raise ValueError(
-                    f"prune_between bound for {c!r} ({type(lo or hi).__name__}) "
-                    f"is not comparable with the stored zone-map stats "
-                    f"({type(mn).__name__}); pass the column's native "
-                    "numeric/string type or a date/decimal value"
-                ) from None
-        return True
+        try:
+            return zone_maps_overlap(stats.get(b), prune_between)
+        except TypeError:
+            raise ValueError(
+                f"prune_between bounds {prune_between!r} are not "
+                "comparable with the stored zone-map stats; pass the "
+                "column's native numeric/string type or a date/decimal "
+                "value"
+            ) from None
 
     return [b for b in live if overlaps(b)]
 
@@ -2895,25 +2608,16 @@ def txlog_delete(
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **_schema_carry(prev),
-            **_dv_carry(prev, touched),
-            **_copy_carry(prev),
-            "operation": "DELETE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "DELETE",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            bucket_dvs=dvs_without(prev, touched),
+        ),
         prev=prev,
     )
     return prior - kept
@@ -2993,36 +2697,14 @@ def _txlog_delete_mor(
     n = sum(dv_counts.values()) - sum(prev.get("dv_counts", {}).values())
     if n == 0:
         return 0  # nothing matched: no version churn
-    fields = {"bucket_dvs": bucket_dvs, "dv_counts": dv_counts}
+    # every data field carries: null counts are PHYSICAL (all file
+    # rows) and a merge-on-read delete changes no file
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": dict(buckets),
-            "row_counts": dict(prev["row_counts"]),
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": dict(prev.get("bucket_stats", {})),
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": dict(prev.get("bucket_blooms", {})),
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            # null counts are PHYSICAL (all file rows) — a merge-on-read
-            # delete changes no file, so they carry exactly
-            **(
-                {"bucket_nulls": dict(prev["bucket_nulls"])}
-                if prev.get("bucket_nulls")
-                else {}
-            ),
-            **_schema_carry(prev),
-            **fields,
-            **_requires_of(fields),
-            **_copy_carry(prev),
-            "operation": "DELETE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev, "DELETE", bucket_dvs=bucket_dvs, dv_counts=dv_counts
+        ),
         prev=prev,
     )
     return n
@@ -3159,30 +2841,20 @@ def _txlog_update_mor(
         bucket_stats.pop(b, None)
         bucket_blooms.pop(b, None)
         bucket_nulls.pop(b, None)
-    fields = {"bucket_dvs": bucket_dvs, "dv_counts": dv_counts}
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **_schema_carry(prev),
-            **fields,
-            **_requires_of(fields),
-            **_copy_carry(prev),
-            "operation": "UPDATE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "UPDATE",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            bucket_dvs=bucket_dvs,
+            dv_counts=dv_counts,
+        ),
         prev=prev,
     )
     return n
@@ -3322,98 +2994,30 @@ def txlog_update(
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": key,
-            "num_buckets": num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **_schema_carry(prev),
-            **_dv_carry(prev, touched),
-            **_copy_carry(prev),
-            "operation": "UPDATE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "UPDATE",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            bucket_dvs=dvs_without(prev, touched),
+        ),
         prev=prev,
     )
     return n_updated
 
 
-def _alter_commit(
-    spark, root_path: str, prev: dict, fields, dropped, generated=None,
-    operation: str = "ALTER", identity=None, identity_hwm=None,
-    defaults=None,
-) -> int:
-    """Publish a METADATA-ONLY schema change: every file reference,
-    row count, stat, and bloom carries forward untouched — the commit
-    is one manifest write, zero data IO, at any table size.
-    ``identity``/``identity_hwm`` override the carried identity state
-    (drop/rename of an identity column); ``None`` carries ``prev``'s."""
-    _i = (
-        dict(identity)
-        if identity is not None
-        else dict(prev.get("identity_columns", {}))
-    )
-    _ih = (
-        dict(identity_hwm)
-        if identity_hwm is not None
-        else dict(prev.get("identity_high_water", {}))
-    )
-    _g = (
-        dict(generated)
-        if generated is not None
-        else dict(prev.get("generated_columns", {}))
-    )
-    _d = (
-        dict(defaults)
-        if defaults is not None
-        else dict(prev.get("column_defaults", {}))
-    )
-    new_version = prev["version"] + 1
-    _commit_manifest(
-        spark,
-        root_path,
-        {
-            "version": new_version,
-            "key": prev["key"],
-            "num_buckets": prev["num_buckets"],
-            "buckets": {b: list(r) for b, r in prev["buckets"].items()},
-            "row_counts": dict(prev["row_counts"]),
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": dict(prev.get("bucket_stats", {})),
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": dict(prev.get("bucket_blooms", {})),
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            "schema": fields,
-            **({"dropped_columns": dropped} if dropped else {}),
-            **({"generated_columns": _g} if _g else {}),
-            **({"column_defaults": _d} if _d else {}),
-            **(
-                {"identity_columns": _i, "identity_high_water": _ih}
-                if _i
-                else {}
-            ),
-            **(
-                {"bucket_nulls": dict(prev["bucket_nulls"])}
-                if prev.get("bucket_nulls")
-                else {}
-            ),
-            **_dv_carry(prev),
-            **_copy_carry(prev),
-            "operation": operation,
-            "committed_at_ms": int(time.time() * 1000),
-        },
-        prev=prev,
-    )
-    return new_version
+def _alter_commit(spark, root_path: str, prev: dict, **changes) -> int:
+    """Publish a METADATA-ONLY schema change (``schema``,
+    ``dropped_columns``, generated/identity/default declarations in
+    ``changes``): every file reference, row count, stat, and bloom
+    carries forward untouched — one manifest write, zero data IO, at
+    any table size. Returns the new version."""
+    m = next_manifest(prev, "ALTER", **changes)
+    _commit_manifest(spark, root_path, m, prev=prev)
+    return m["version"]
 
 
 def txlog_add_column(
@@ -3468,7 +3072,7 @@ def txlog_add_column(
             "metadata": meta,
         }
     )
-    return _alter_commit(spark, root_path, prev, fields, dropped)
+    return _alter_commit(spark, root_path, prev, schema=fields)
 
 
 def txlog_drop_column(spark: SparkSession, root_path: str, name: str) -> int:
@@ -3533,8 +3137,15 @@ def txlog_drop_column(spark: SparkSession, root_path: str, name: str) -> int:
     defaults = dict(prev.get("column_defaults", {}))
     defaults.pop(name, None)
     return _alter_commit(
-        spark, root_path, prev, fields, dropped, generated=generated,
-        identity=identity, identity_hwm=identity_hwm, defaults=defaults,
+        spark,
+        root_path,
+        prev,
+        schema=fields,
+        dropped_columns=dropped,
+        generated_columns=generated,
+        identity_columns=identity,
+        identity_high_water=identity_hwm,
+        column_defaults=defaults,
     )
 
 
@@ -3618,12 +3229,10 @@ def txlog_rename_column(
         spark,
         root_path,
         prev,
-        fields,
-        list(prev.get("dropped_columns", [])),
-        generated=generated,
-        identity=identity,
-        identity_hwm=identity_hwm,
-        defaults=defaults,
+        schema=fields,
+        identity_columns=identity,
+        identity_high_water=identity_hwm,
+        column_defaults=defaults,
     )
 
 
@@ -3862,46 +3471,24 @@ def shallow_clone_txtable(
         _check_features(tgt, frozenset({FEATURE_DV}), "replace")
     fs, root = _hadoop_fs(spark, source_root)
     qualified = fs.makeQualified(root).toString()
+    # the clone carries the SOURCE snapshot's table state. A sharded
+    # source clones SHARDED: with no prev to reuse, fresh shard files
+    # land in the TARGET's own _manifest_shards/. COPY history travels
+    # with the content (_clone_copy_fields).
     _commit_manifest(
         spark,
         target_root,
-        {
-            "version": 0 if tgt is None else tgt["version"] + 1,
-            "key": src["key"],
-            "num_buckets": src["num_buckets"],
-            "buckets": {
+        next_manifest(
+            src,
+            "CLONE" if tgt is None else "REPLACE CLONE",
+            version=0 if tgt is None else tgt["version"] + 1,
+            buckets={
                 b: [_abs(qualified, rel) for rel in rels]
                 for b, rels in src["buckets"].items()
             },
-            "row_counts": dict(src["row_counts"]),
-            "app_txns": {},
-            "stats_columns": src.get("stats_columns", []),
-            "bucket_stats": dict(src.get("bucket_stats", {})),
-            "bloom_columns": src.get("bloom_columns", []),
-            "bucket_blooms": dict(src.get("bucket_blooms", {})),
-            "bloom_bits": int(src.get("bloom_bits", BLOOM_BITS)),
-            **(
-                {"bucket_nulls": dict(src["bucket_nulls"])}
-                if src.get("bucket_nulls")
-                else {}
-            ),
-            **_schema_carry(src),
-            # a sharded source clones SHARDED: fresh shard files land
-            # in the TARGET's own _manifest_shards/ (pointers are
-            # root-relative; _deflate_manifest writes them at commit)
-            **(
-                {"manifest_sharding": dict(src["manifest_sharding"])}
-                if src.get("manifest_sharding")
-                else {}
-            ),
-            # COPY history travels with the content: materialize the
-            # SOURCE's full history into ONE sidecar in the TARGET's
-            # own copylog/ (the chain's rel paths are root-relative, so
-            # a raw pointer copy would dangle across roots)
+            app_txns={},
             **_clone_copy_fields(spark, source_root, src, target_root),
-            "operation": "CLONE" if tgt is None else "REPLACE CLONE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        ),
     )
     _clone_mutable_metadata(
         spark, source_root, target_root, replace=tgt is not None
@@ -3999,7 +3586,7 @@ def deep_clone_txtable(
         bloom_columns=m.get("bloom_columns", []) or None,
         bloom_bits=int(m.get("bloom_bits", BLOOM_BITS)),
         generated_columns=m.get("generated_columns", {}) or None,
-        manifest_shards=_shard_groups_of(m.get("manifest_sharding")),
+        manifest_shards=shard_groups_of(m.get("manifest_sharding")),
         replace=replace,
     )
     # dropped-column tombstones must survive the clone (without them a
@@ -4008,9 +3595,7 @@ def deep_clone_txtable(
     dropped = list(m.get("dropped_columns", []))
     if dropped:
         tgt = _latest_manifest(spark, target_root)
-        _alter_commit(
-            spark, target_root, tgt, tgt.get("schema"), dropped
-        )
+        _alter_commit(spark, target_root, tgt, dropped_columns=dropped)
     if m.get("identity_columns"):
         # identity spec + high-water mark re-attach AFTER the data
         # lands: the cloned rows legitimately CARRY their ids, which
@@ -4021,17 +3606,16 @@ def deep_clone_txtable(
         _commit_manifest(
             spark,
             target_root,
-            {
-                **tgt,
-                "version": tgt["version"] + 1,
-                **_identity_carry(m),
-                "operation": "CLONE",
-                "committed_at_ms": int(time.time() * 1000),
-            },
+            next_manifest(
+                tgt,
+                "CLONE",
+                identity_columns=m["identity_columns"],
+                identity_high_water=m.get("identity_high_water", {}),
+            ),
             prev=tgt,
         )
     copy_fields = _clone_copy_fields(spark, source_root, m, target_root)
-    if copy_fields:
+    if copy_fields["copy_log"]:
         # COPY INTO load history travels with the content it describes
         # (same rule as the shallow clone): without it a COPY on the
         # clone would re-load files whose rows it already has
@@ -4039,13 +3623,7 @@ def deep_clone_txtable(
         _commit_manifest(
             spark,
             target_root,
-            {
-                **tgt,
-                "version": tgt["version"] + 1,
-                **copy_fields,
-                "operation": "CLONE",
-                "committed_at_ms": int(time.time() * 1000),
-            },
+            next_manifest(tgt, "CLONE", **copy_fields),
             prev=tgt,
         )
     _clone_mutable_metadata(
@@ -4090,14 +3668,7 @@ def set_column_default(
             dict(prev.get("identity_columns", {})),
         )
         defaults[col] = expr
-    return _alter_commit(
-        spark,
-        root_path,
-        prev,
-        fields,
-        list(prev.get("dropped_columns", [])),
-        defaults=defaults,
-    )
+    return _alter_commit(spark, root_path, prev, column_defaults=defaults)
 
 
 def txtable_history(spark: SparkSession, root_path: str) -> list[dict]:
@@ -4118,9 +3689,10 @@ def txtable_history(spark: SparkSession, root_path: str) -> list[dict]:
             {
                 "version": v,
                 # what produced this version (Delta HISTORY's operation
-                # column): CREATE/MERGE/UPDATE/DELETE/APPEND/OVERWRITE/
-                # COPY INTO/TRUNCATE/ALTER/CLONE/RESTORE/OPTIMIZE/
-                # REBUCKET; None for manifests predating the field
+                # column): CREATE/REPLACE/MERGE/UPDATE/DELETE/APPEND/
+                # OVERWRITE/COPY INTO/TRUNCATE/ALTER/ANALYZE/CLONE/
+                # REPLACE CLONE/RESTORE/OPTIMIZE/REBUCKET; None for
+                # manifests predating the field
                 "operation": m.get("operation"),
                 "num_buckets_live": (
                     len(m["buckets"])
@@ -4182,39 +3754,23 @@ def restore_txtable(
     # the new manifest copies src's fields: an unknown required feature
     # would be silently STRIPPED (its bookkeeping dropped) — refuse
     _check_features(src, frozenset({FEATURE_DV}), "restore to")
+    # the restored snapshot's state (COPY history included) on top of
+    # the CURRENT table's sharding mode; the identity high-water mark
+    # never regresses (ids issued by the undone versions stay burned)
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": cur["version"] + 1,
-            "key": src["key"],
-            "num_buckets": src["num_buckets"],
-            "buckets": {b: list(r) for b, r in src["buckets"].items()},
-            "row_counts": dict(src["row_counts"]),
-            "app_txns": dict(
+        next_manifest(
+            src,
+            "RESTORE",
+            version=cur["version"] + 1,
+            app_txns=dict(
                 (src if reset_app_txns else cur).get("app_txns", {})
             ),
-            "stats_columns": src.get("stats_columns", []),
-            "bucket_stats": dict(src.get("bucket_stats", {})),
-            "bloom_columns": src.get("bloom_columns", []),
-            "bucket_blooms": dict(src.get("bucket_blooms", {})),
-            "bloom_bits": int(src.get("bloom_bits", BLOOM_BITS)),
-            **(
-                {"bucket_nulls": dict(src["bucket_nulls"])}
-                if src.get("bucket_nulls")
-                else {}
-            ),
-            **_schema_carry(src),
-            # AFTER the carry: the identity high-water mark must never
-            # regress across a restore (ids issued by the undone
-            # versions stay burned)
             **_identity_restore_carry(src, cur),
-            **_dv_carry(src),
-            "restored_from_version": version,
-            **_copy_carry(src),
-            "operation": "RESTORE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+            manifest_sharding=cur.get("manifest_sharding"),
+            restored_from_version=version,
+        ),
         prev=cur,
     )
     return cur["version"] + 1
@@ -4245,23 +3801,16 @@ def truncate_txtable(spark: SparkSession, root_path: str) -> int:
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": prev["key"],
-            "num_buckets": prev["num_buckets"],
-            "buckets": {},
-            "row_counts": {},
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": list(prev.get("stats_columns", [])),
-            "bucket_stats": {},
-            "bloom_columns": list(prev.get("bloom_columns", [])),
-            "bucket_blooms": {},
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **_schema_carry(prev),
-            **_copy_carry(prev),
-            "operation": "TRUNCATE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "TRUNCATE",
+            buckets={},
+            row_counts={},
+            bucket_stats={},
+            bucket_blooms={},
+            bucket_nulls=None,
+            bucket_dvs=None,
+        ),
         prev=prev,
     )
     return removed
@@ -4625,31 +4174,23 @@ def compact_txtable(
             # count and wrongly prune an IS NOT NULL probe.
             row_counts[b] = new_rows
             bucket_nulls.pop(b, None)
+    # rows unchanged by compaction/ZORDER ⇒ zone maps and bloom
+    # filters both still exact (conservative for buckets that just
+    # materialized deletion vectors)
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": manifest["version"] + 1,
-            "key": manifest["key"],
-            "num_buckets": manifest["num_buckets"],
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(manifest.get("app_txns", {})),
-            # rows unchanged by compaction/ZORDER ⇒ zone maps and
-            # bloom filters both still exact (conservative for buckets
-            # that just materialized deletion vectors)
-            "stats_columns": manifest.get("stats_columns", []),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": manifest.get("bloom_columns", []),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(manifest.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **_schema_carry(manifest),
-            **_dv_carry(manifest, todo.keys()),
+        next_manifest(
+            manifest,
+            "OPTIMIZE",
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            bucket_dvs=dvs_without(manifest, todo),
             **_compacted_copy_fields(spark, root_path, manifest),
-            "operation": "OPTIMIZE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        ),
         prev=manifest,
     )
     return len(todo)
@@ -5017,8 +4558,8 @@ def analyze_txtable(
                     bs = str(r[BUCKET_COL])
                     bucket_stats[bs] = {
                         c: [
-                            _stat_value(r[f"__lo_{c}"]),
-                            _stat_value(r[f"__hi_{c}"]),
+                            stat_value(r[f"__lo_{c}"]),
+                            stat_value(r[f"__hi_{c}"]),
                         ]
                         for c in stats_columns
                     }
@@ -5030,40 +4571,18 @@ def analyze_txtable(
                     bucket_blooms.setdefault(bs, {})[c] = words
         finally:
             df.unpersist()
-    new_version = prev["version"] + 1
-    _commit_manifest(
-        spark,
-        root_path,
-        {
-            **{
-                k: v
-                for k, v in prev.items()
-                if k
-                not in (
-                    "version",
-                    "stats_columns",
-                    "bucket_stats",
-                    "bucket_nulls",
-                    "bloom_columns",
-                    "bucket_blooms",
-                    "bloom_bits",
-                    "operation",
-                    "committed_at_ms",
-                )
-            },
-            "version": new_version,
-            "stats_columns": stats_columns,
-            "bucket_stats": bucket_stats,
-            "bloom_columns": bloom_columns,
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": bits,
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            "operation": "ANALYZE",
-            "committed_at_ms": int(time.time() * 1000),
-        },
-        prev=prev,
+    m = next_manifest(
+        prev,
+        "ANALYZE",
+        stats_columns=stats_columns,
+        bucket_stats=bucket_stats,
+        bloom_columns=bloom_columns,
+        bucket_blooms=bucket_blooms,
+        bloom_bits=bits,
+        bucket_nulls=bucket_nulls,
     )
-    return new_version
+    _commit_manifest(spark, root_path, m, prev=prev)
+    return m["version"]
 
 
 def rebucket_txtable(
@@ -5128,27 +4647,21 @@ def rebucket_txtable(
                 int(n) for n in prev["row_counts"].values()
             ),
         )
+    # the rewrite materialized every deletion vector
     _commit_manifest(
         spark,
         root_path,
-        {
-            "version": prev["version"] + 1,
-            "key": key,
-            "num_buckets": new_num_buckets,
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": dict(prev.get("app_txns", {})),
-            "stats_columns": prev.get("stats_columns", []),
-            "bucket_stats": bucket_stats,
-            "bloom_columns": prev.get("bloom_columns", []),
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": int(prev.get("bloom_bits", BLOOM_BITS)),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **_schema_carry(prev),
-            **_copy_carry(prev),
-            "operation": "REBUCKET",
-            "committed_at_ms": int(time.time() * 1000),
-        },
+        next_manifest(
+            prev,
+            "REBUCKET",
+            num_buckets=new_num_buckets,
+            buckets=buckets,
+            row_counts=row_counts,
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            bucket_dvs=None,
+        ),
         prev=prev,
     )
     return prev["version"] + 1

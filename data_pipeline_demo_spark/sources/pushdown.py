@@ -51,6 +51,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from ..sinks.manifest import BLOOM_BITS, zone_maps_overlap
+
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -158,7 +160,6 @@ def bucket_of_literal(value, num_buckets: int, key_kind: str) -> int | None:
 # distinct value per bucket for ~1% fpp) without either a fixed
 # expression count at build time or dense manifest blobs.
 
-BLOOM_BITS = 1024  # default creation-time size
 BLOOM_K = 3
 
 
@@ -208,22 +209,6 @@ def _arrow_key_kind(arrow_schema, key: str) -> str | None:
     if pa.types.is_int8(t) or pa.types.is_int16(t) or pa.types.is_int32(t):
         return "int32"
     return None
-
-
-def _sv(v):
-    """JSON-safe stat coercion — MUST mirror ``sinks.txlog._stat_value``
-    (the function that serialized the stats at write time) so bounds and
-    stored zone-map values always compare like-for-like."""
-    import datetime as _dt
-    import decimal as _dec
-
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    if isinstance(v, _dec.Decimal):
-        return float(v)
-    return str(v)
 
 
 def _one_col(f) -> str | None:
@@ -362,49 +347,13 @@ def prune_bucket_ids(manifest: dict, filters, arrow_schema) -> list[str]:
         c: bnds for c, bnds in collect_bounds(filters).items() if c in stats_cols
     }
     if bounds:
-        import decimal as _dec
-
         stats = manifest.get("bucket_stats", {})
 
-        def _pair(a, b, dec_bound):
-            # stringified-Decimal stats must compare by VALUE, never
-            # lexically ('9.5' > '12.0') — parity with
-            # sinks.txlog._stat_cmp_pair; only when the pushed literal
-            # itself is a Decimal (string columns keep Spark's own
-            # lexicographic semantics)
-            if dec_bound and isinstance(a, str) and isinstance(b, str):
-                try:
-                    return _dec.Decimal(a), _dec.Decimal(b)
-                except _dec.InvalidOperation:
-                    return a, b
-            return a, b
-
         def overlaps(b: str) -> bool:
-            st = stats.get(b)
-            if st is None:
-                return True  # no stats recorded: must keep
-            for c, (lo, hi) in bounds.items():
-                mn, mx = st.get(c, [None, None])
-                if mn is None or mx is None:
-                    continue  # all-null bucket column: keep
-                dec_bound = any(
-                    isinstance(v, _dec.Decimal)
-                    for v in (lo, hi)
-                    if v is not None
-                )
-                lo_s, hi_s = _sv(lo), _sv(hi)
-                try:
-                    if lo_s is not None:
-                        mx_c, lo_c = _pair(mx, lo_s, dec_bound)
-                        if mx_c < lo_c:
-                            return False
-                    if hi_s is not None:
-                        mn_c, hi_c = _pair(mn, hi_s, dec_bound)
-                        if mn_c > hi_c:
-                            return False
-                except TypeError:
-                    return True  # incomparable literal: keep, stay exact
-            return True
+            try:
+                return zone_maps_overlap(stats.get(b), bounds)
+            except TypeError:
+                return True  # incomparable literal: keep, stay exact
 
         live = [b for b in live if overlaps(b)]
 

@@ -66,6 +66,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ..sinks.manifest import FEATURE_DV, FEATURE_SHARDS, inflate
+
 COMMITS_DIR = "_commits"
 CHANGE_COL = "_change_type"
 
@@ -237,7 +239,7 @@ def _manifest_versions(fs, root: str) -> list[int]:
 
 # table features the python DataSource implements end-to-end (snapshot
 # read, pushdown read, batch CDC, streaming CDC)
-_SUPPORTED_FEATURES = frozenset({"deletion-vectors", "manifest-shards"})
+_SUPPORTED_FEATURES = frozenset({FEATURE_DV, FEATURE_SHARDS})
 
 
 def _check_manifest_features(manifest: dict) -> None:
@@ -254,9 +256,6 @@ def _check_manifest_features(manifest: dict) -> None:
         )
 
 
-SHARDS_DIR = "_manifest_shards"
-
-
 def _read_manifest(
     fs, root: str, version: int, check_features: bool = True
 ) -> dict:
@@ -264,32 +263,12 @@ def _read_manifest(
     m = json.loads(fs.open_bytes(p).decode("utf-8"))
     if check_features:
         _check_manifest_features(m)
-    return _inflate_manifest(fs, root, m)
-
-
-def _inflate_manifest(fs, root: str, m: dict) -> dict:
-    """Python-side mirror of ``sinks.txlog._inflate_manifest``: a
-    sharded root (``manifest_shards`` group → rel-path pointers) gets
-    its bucket file lists reassembled from the immutable shard files;
-    the ``manifest-shards`` requires-token drops (this reader just
-    satisfied it). Unsharded manifests pass through untouched."""
-    ptrs = m.get("manifest_shards")
-    if ptrs is None:
-        return m
-    buckets: dict[str, list] = {}
-    for g in sorted(ptrs, key=int):
-        payload = json.loads(
-            fs.open_bytes(root.rstrip("/") + "/" + ptrs[g]).decode("utf-8")
-        )
-        for b, rels in payload.get("buckets", {}).items():
-            buckets[b] = list(rels)
-    m["buckets"] = buckets
-    req = [r for r in m.get("requires", []) if r != "manifest-shards"]
-    if req:
-        m["requires"] = req
-    else:
-        m.pop("requires", None)
-    return m
+    return inflate(
+        m,
+        lambda rel: json.loads(
+            fs.open_bytes(root.rstrip("/") + "/" + rel).decode("utf-8")
+        ),
+    )
 
 
 def _manifest_or_empty(fs, root: str, version: int, template: dict) -> dict:

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import os
 import uuid
+import warnings
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -68,9 +69,14 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..sinks.manifest import (
+    FEATURE_DV,
+    deflate,
+    next_manifest,
+    stat_value,
+)
 from .txtable_source import (
     COMMITS_DIR,
-    SHARDS_DIR,
     _fs_root,
     _latest_version,
     _LocalFS,
@@ -355,6 +361,16 @@ def bucket_ids_for(col, key_kind: str, num_buckets: int):
 # ---------------------------------------------------------------------------
 
 
+def _makedirs(impl, path: str) -> None:
+    """``makedirs`` on an fsspec filesystem. A directory that already
+    exists, or a backend without directories (object stores), is fine;
+    any other failure (permissions, quota, connectivity) propagates."""
+    try:
+        impl.makedirs(path, exist_ok=True)
+    except (FileExistsError, NotImplementedError):
+        pass
+
+
 def _http_conditional_put(base_url: str, store_root: str, path: str,
                           payload: bytes) -> bool:
     """S3-shaped conditional create over HTTP: ``PUT`` with
@@ -415,10 +431,7 @@ def put_manifest_if_absent(fs, root: str, version: int, payload: bytes,
         finally:
             os.unlink(tmp)
     impl = fs.fs()
-    try:
-        impl.makedirs(commits, exist_ok=True)
-    except Exception:
-        pass
+    _makedirs(impl, commits)
     try:
         with impl.open(dst, "xb") as out:
             out.write(payload)
@@ -432,15 +445,6 @@ def put_manifest_if_absent(fs, root: str, version: int, payload: bytes,
         return True
 
 
-def _stat_value(v):
-    """JSON-safe zone-map stat — MUST mirror ``sinks.txlog._stat_value``
-    so python- and JVM-written stats compare like-for-like in the
-    pruning readers."""
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    return str(v)
-
-
 def _widen(prev: list | None, new: list | None, decimal: bool = False):
     """Union of two [lo, hi] stat intervals; ``None`` (no information)
     poisons the result — absent stats must stay absent so the pruning
@@ -448,7 +452,7 @@ def _widen(prev: list | None, new: list | None, decimal: bool = False):
     column is decimal-typed, so string stats are stringified Decimals):
     string pairs COMPARE by Decimal value — '9.5' vs '12.0' must pick
     hi='12.0', never the lexical '9.5' — while the stored strings pass
-    through unchanged (parity with sinks.txlog._stat_cmp_pair).
+    through unchanged (parity with sinks.manifest.stat_cmp_pair).
 
     When ``decimal`` is False but a compared string pair PARSES as
     Decimal AND the lexical and numeric orders disagree, the column's
@@ -541,10 +545,7 @@ class _TaskState:
             w = pq.ParquetWriter(path, schema)
         else:
             impl = self.fs.fs()
-            try:
-                impl.makedirs(path.rsplit("/", 1)[0], exist_ok=True)
-            except Exception:
-                pass
+            _makedirs(impl, path.rsplit("/", 1)[0])
             w = pq.ParquetWriter(path, schema, filesystem=impl)
         self.writers[b] = w
         self.rels[b] = rel
@@ -568,7 +569,7 @@ class _TaskState:
                 continue
             mm = pc.min_max(col)
             # RAW python values here (Decimal/date compare by value);
-            # finish() stringifies via _stat_value for the wire format
+            # finish() stringifies via stat_value for the wire format
             lo, hi = mm["min"].as_py(), mm["max"].as_py()
             cur = st.get(c)
             st[c] = [lo, hi] if cur is None else (_widen(cur, [lo, hi]) or [lo, hi])
@@ -687,7 +688,7 @@ class _TaskState:
                     self.rels[b],
                     self.rows[b],
                     {
-                        c: [_stat_value(v[0]), _stat_value(v[1])]
+                        c: [stat_value(v[0]), stat_value(v[1])]
                         for c, v in self.stats[b].items()
                         if v is not None
                     },
@@ -985,7 +986,7 @@ def commit_files(
         # required feature is unknown here — refuse rather than
         # silently strip it from the next manifest.
         unknown_req = sorted(
-            set((prev or {}).get("requires", [])) - {"deletion-vectors"}
+            set((prev or {}).get("requires", [])) - {FEATURE_DV}
         )
         if unknown_req:
             raise NotImplementedError(
@@ -1039,24 +1040,6 @@ def commit_files(
                     "between plan and commit (a concurrent ALTER "
                     "RENAME/ADD won the race) — re-run the write"
                 )
-        dv_fields = {}
-        if prev is not None and not overwrite:
-            dvs = {
-                b: list(r)
-                for b, r in prev.get("bucket_dvs", {}).items()
-                if r
-            }
-            if dvs:
-                dv_fields = {
-                    "bucket_dvs": dvs,
-                    "dv_counts": {
-                        b: int(n)
-                        for b, n in prev.get("dv_counts", {}).items()
-                        if b in dvs
-                    },
-                    "requires": ["deletion-vectors"],
-                }
-        version = 0 if prev is None else prev["version"] + 1
         app_txns = dict(prev.get("app_txns", {})) if prev else {}
         if (
             txn_app_id is not None
@@ -1102,15 +1085,12 @@ def commit_files(
         bloom_columns = (
             prev.get("bloom_columns", []) if prev is not None else []
         )
-        bloom_bits = (
-            int(prev.get("bloom_bits", 1024)) if prev is not None else 1024
-        )
         schema_fields, dropped_columns = _resolve_commit_schema(
             prev, spec, overwrite
         )
         # decimal-typed stats columns stringify on the wire: the merge
         # below must compare them by VALUE (never lexically) — same
-        # rule as the reader's _stat_cmp_pair
+        # rule as the reader's stat_cmp_pair
         _fields_for_dec = schema_fields or (prev or {}).get("schema") or []
         dec_cols = {
             f["name"]
@@ -1201,22 +1181,18 @@ def commit_files(
                     bucket_stats.pop(bs, None)
         # table-level declarations carry forward on APPEND (a blind
         # insert changes rows, never the table's contract); OVERWRITE
-        # replaces the snapshot and resets them with the schema.
-        # generated_columns: dropping it here would silently strip the
-        # GENERATED ALWAYS AS invariant from every later commit (the
-        # next upsert omitting the column would insert NULLs instead of
-        # computing the expression). copy_files: dropping it would
-        # re-arm already-COPY-INTO-loaded files for a double load.
-        carried = {}
-        if prev is not None and not overwrite:
-            if prev.get("generated_columns"):
-                carried["generated_columns"] = dict(prev["generated_columns"])
-            if prev.get("column_defaults"):
-                carried["column_defaults"] = dict(prev["column_defaults"])
-            if prev.get("copy_files"):
-                carried["copy_files"] = dict(prev["copy_files"])
-            if prev.get("copy_log"):  # O(1) sidecar-chain pointer
-                carried["copy_log"] = dict(prev["copy_log"])
+        # replaces the snapshot and resets them with the schema —
+        # generated columns, defaults, COPY history and deletion
+        # vectors (bloom declarations and sharding stay).
+        reset = (
+            dict.fromkeys(
+                ("generated_columns", "column_defaults", "copy_files",
+                 "copy_log", "bucket_dvs")
+            )
+            if overwrite
+            else {}
+        )
+        identity = {}
         if prev is not None and prev.get("identity_columns"):
             # identity carries on OVERWRITE too (unlike generated
             # columns, which reset with the snapshot): losing the
@@ -1234,39 +1210,39 @@ def commit_files(
                 for c, cfg in prev["identity_columns"].items()
                 if new_names is None or c in new_names
             }
-            if keep:
-                prev_hwm = dict(prev.get("identity_high_water", {}))
-                hwm = (
-                    dict(spec["identity_hwm"])
-                    if spec.get("identity_hwm") is not None
-                    else prev_hwm
-                )
-                carried["identity_columns"] = keep
-                carried["identity_high_water"] = {
+            prev_hwm = dict(prev.get("identity_high_water", {}))
+            hwm = spec.get("identity_hwm") or prev_hwm
+            identity = {
+                "identity_columns": keep,
+                "identity_high_water": {
                     c: int(hwm.get(c, prev_hwm.get(c))) for c in keep
-                }
-        manifest = {
-            "version": version,
-            "key": spec["key"],
-            "num_buckets": spec["num_buckets"],
-            "buckets": buckets,
-            "row_counts": row_counts,
-            "app_txns": app_txns,
-            "stats_columns": spec["stats_columns"],
-            "bucket_stats": bucket_stats,
-            "bloom_columns": bloom_columns,
-            "bucket_blooms": bucket_blooms,
-            "bloom_bits": bloom_bits,
-            **({"schema": schema_fields} if schema_fields else {}),
-            **({"dropped_columns": dropped_columns} if dropped_columns else {}),
-            **({"bucket_nulls": bucket_nulls} if bucket_nulls else {}),
-            **dv_fields,
-            **carried,
-            "operation": "OVERWRITE" if overwrite else "APPEND",
-            "committed_at_ms": _now_ms(),
-        }
-        manifest = _deflate_manifest_py(fs, root, manifest, prev)
-        payload = json.dumps(manifest).encode("utf-8")
+                },
+            }
+        manifest = next_manifest(
+            prev,
+            "OVERWRITE" if overwrite else "APPEND",
+            key=spec["key"],
+            num_buckets=spec["num_buckets"],
+            buckets=buckets,
+            row_counts=row_counts,
+            app_txns=app_txns,
+            stats_columns=spec["stats_columns"],
+            bucket_stats=bucket_stats,
+            bucket_blooms=bucket_blooms,
+            bucket_nulls=bucket_nulls,
+            schema=schema_fields,
+            dropped_columns=dropped_columns,
+            **identity,
+            **reset,
+        )
+        version = manifest["version"]
+        payload = json.dumps(
+            deflate(
+                manifest,
+                prev,
+                lambda rel, shard: _write_rel_json(fs, root, rel, shard),
+            )
+        ).encode("utf-8")
         if put_manifest_if_absent(
             fs, root, version, payload, http_claim=spec.get("http_claim")
         ):
@@ -1276,13 +1252,12 @@ def commit_files(
     )
 
 
-def _write_shard_py(fs, root: str, payload: dict) -> str:
-    """Write one immutable manifest shard through the python fs
-    abstraction; returns its root-relative path. No atomicity needed —
-    a shard is invisible until a committed root references it."""
+def _write_rel_json(fs, root: str, rel: str, payload: dict) -> None:
+    """Write one immutable root-relative JSON file (a manifest shard)
+    through the python fs abstraction. No atomicity needed — a shard is
+    invisible until a committed root references it."""
     import json
 
-    rel = f"{SHARDS_DIR}/{uuid.uuid4().hex}.json"
     path = root.rstrip("/") + "/" + rel
     data = json.dumps(payload).encode("utf-8")
     if isinstance(fs, _LocalFS):
@@ -1291,53 +1266,8 @@ def _write_shard_py(fs, root: str, payload: dict) -> str:
             f.write(data)
     else:
         impl = fs.fs()
-        try:
-            impl.makedirs(root.rstrip("/") + "/" + SHARDS_DIR, exist_ok=True)
-        except Exception:
-            pass
+        _makedirs(impl, path.rsplit("/", 1)[0])
         impl.pipe_file(path, data)
-    return rel
-
-
-def _deflate_manifest_py(fs, root: str, manifest: dict, prev) -> dict:
-    """Python mirror of ``sinks.txlog._deflate_manifest``: on a sharded
-    table (config carried from ``prev`` — the python writer never
-    enables sharding itself), move the bucket file lists into per-group
-    shard files, reusing prev's immutable shard for every group whose
-    content is unchanged (proven by direct comparison against prev's
-    inflated buckets). Mutates and returns ``manifest``."""
-    cfg = (prev or {}).get("manifest_sharding")
-    if not cfg:
-        manifest.pop("manifest_shards", None)
-        return manifest
-    groups = max(1, int(cfg.get("groups", 32)))
-    buckets = manifest.pop("buckets", {}) or {}
-    by_group: dict[int, dict] = {}
-    for b, rels in buckets.items():
-        if rels:
-            by_group.setdefault(int(b) % groups, {})[str(b)] = list(rels)
-    prev_ptrs = {
-        int(g): rel
-        for g, rel in (prev.get("manifest_shards") or {}).items()
-    }
-    prev_groups: dict[int, dict] = {}
-    for b, rels in (prev.get("buckets") or {}).items():
-        if rels:
-            prev_groups.setdefault(int(b) % groups, {})[str(b)] = rels
-    ptrs: dict[str, str] = {}
-    for g in sorted(by_group):
-        if g in prev_ptrs and prev_groups.get(g) == by_group[g]:
-            ptrs[str(g)] = prev_ptrs[g]
-        else:
-            ptrs[str(g)] = _write_shard_py(
-                fs, root, {"buckets": by_group[g]}
-            )
-    manifest["manifest_sharding"] = {"groups": groups}
-    manifest["manifest_shards"] = ptrs
-    manifest["requires"] = sorted(
-        set(manifest.get("requires", [])) | {"manifest-shards"}
-    )
-    return manifest
 
 
 def _abort_files(fs, root: str, messages) -> None:
@@ -1355,8 +1285,12 @@ def _abort_files(fs, root: str, messages) -> None:
                     os.unlink(path)
                 else:
                     fs.fs().rm_file(path)
-            except Exception:
-                pass
+            except OSError as e:
+                warnings.warn(
+                    f"txtable abort: could not remove staged file {path} "
+                    f"({e!r}); vacuum will sweep it",
+                    stacklevel=2,
+                )
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,212 @@
+"""The txtable manifest format (``sinks/manifest.py``): one builder for
+every commit, and the carry-forward contract of each write verb."""
+
+from __future__ import annotations
+
+import ast
+import sys
+from pathlib import Path
+
+import pytest
+
+from data_pipeline_demo_spark.sinks.manifest import (
+    FEATURE_DV,
+    FEATURE_SHARDS,
+    deflate,
+    inflate,
+    next_manifest,
+)
+
+PKG = Path(__file__).resolve().parents[1] / "data_pipeline_demo_spark"
+sys.path.insert(0, str(PKG.parent / "tools"))
+
+
+def _stamping_dicts(root: Path) -> list[str]:
+    """Dict displays that stamp a commit time: a ``"committed_at_ms"``
+    key whose value is not a ``.get(...)`` read of a recorded manifest
+    (history and DESCRIBE rows copy the recorded stamp through)."""
+    out = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Dict):
+                continue
+            for k, v in zip(node.keys, node.values):
+                if not (isinstance(k, ast.Constant) and k.value == "committed_at_ms"):
+                    continue
+                reads = (
+                    isinstance(v, ast.Call)
+                    and isinstance(v.func, ast.Attribute)
+                    and v.func.attr == "get"
+                )
+                if not reads:
+                    out.append(f"{path.relative_to(root)}:{node.lineno}")
+    return out
+
+
+def test_only_the_manifest_module_assembles_manifests():
+    """Guard: every commit builds its manifest through
+    ``next_manifest``. A hand-built commit dict elsewhere in the
+    package re-implements the carry rules — and drifts."""
+    hits = [
+        h for h in _stamping_dicts(PKG) if not h.startswith("sinks/manifest.py")
+    ]
+    assert hits == [], f"hand-built commit dicts: {hits}"
+
+
+def test_next_manifest_carries_and_resets():
+    base = {
+        "version": 4,
+        "key": "id",
+        "num_buckets": 2,
+        "buckets": {"0": ["a"], "1": ["b"]},
+        "row_counts": {"0": 1, "1": 1},
+        "bucket_dvs": {"0": ["dv0"], "1": ["dv1"]},
+        "dv_counts": {"0": 1, "1": 1},
+        "requires": [FEATURE_DV],
+        "identity_columns": {"i": {"start": 1, "step": 1, "always": True}},
+        "identity_high_water": {"i": 7},
+        "copy_log": {"head": "copylog/x.json", "count": 1},
+        "manifest_shards": {"0": "s.json"},
+        "restored_from_version": 1,
+        "operation": "RESTORE",
+        "committed_at_ms": 1,
+    }
+    m = next_manifest(base, "DELETE", bucket_dvs={"1": ["dv1"]})
+    assert m["version"] == 5 and m["operation"] == "DELETE"
+    assert m["committed_at_ms"] > 1
+    # per-commit fields never carry
+    assert "restored_from_version" not in m and "manifest_shards" not in m
+    # counts follow the surviving vectors; requires is derived
+    assert m["bucket_dvs"] == {"1": ["dv1"]} and m["dv_counts"] == {"1": 1}
+    assert m["requires"] == [FEATURE_DV]
+    assert m["identity_high_water"] == {"i": 7}
+    assert m["copy_log"] == base["copy_log"]
+    # defaults for absent required fields; None and empties drop
+    assert m["bloom_bits"] == 1024 and m["app_txns"] == {}
+    m = next_manifest(base, "TRUNCATE", bucket_dvs=None, identity_columns={})
+    for gone in ("bucket_dvs", "dv_counts", "requires", "identity_columns",
+                 "identity_high_water"):
+        assert gone not in m
+    with pytest.raises(ValueError, match="num_buckets"):
+        next_manifest(None, "CREATE", key="id")
+
+
+def test_deflate_reuses_unchanged_shards_and_inflate_restores():
+    written: dict[str, dict] = {}
+
+    def write(rel, payload):
+        written[rel] = payload
+
+    v0 = next_manifest(
+        None,
+        "CREATE",
+        key="id",
+        num_buckets=4,
+        buckets={"0": ["a"], "1": ["b"], "2": ["c"]},
+        manifest_sharding={"groups": 2},
+    )
+    root0 = deflate(dict(v0), None, write)
+    assert "buckets" not in root0 and root0["requires"] == [FEATURE_SHARDS]
+    prev = inflate(dict(root0), written.__getitem__)
+    assert prev["buckets"] == v0["buckets"] and "requires" not in prev
+    root1 = deflate(
+        next_manifest(prev, "MERGE", buckets={**prev["buckets"], "1": ["b2"]}),
+        prev,
+        write,
+    )
+    # group 0 (buckets 0, 2) is unchanged: its shard is reused
+    assert root1["manifest_shards"]["0"] == root0["manifest_shards"]["0"]
+    assert root1["manifest_shards"]["1"] != root0["manifest_shards"]["1"]
+    with pytest.raises(RuntimeError, match="corrupt manifest shard"):
+        inflate(dict(root1), lambda rel: (_ for _ in ()).throw(ValueError()))
+
+
+# ---------------------------------------------------------------------------
+# Carry matrix: which table state each verb keeps, sets, changes or
+# resets. A changed cell is a change to the table format's contract.
+# ---------------------------------------------------------------------------
+
+# tracked field -> the manifest keys that make it up
+TRACKED = {
+    "identity_hwm": ("identity_high_water",),
+    "copy_history": ("copy_log", "copy_files"),
+    "generated": ("generated_columns",),
+    "defaults": ("column_defaults",),
+    "app_txns": ("app_txns",),
+    "dvs": ("bucket_dvs", "dv_counts"),
+    "sharding": ("manifest_sharding",),
+}
+
+
+def _status(before: dict | None, after: dict, keys) -> str:
+    b = tuple((before or {}).get(k) or None for k in keys)
+    a = tuple(after.get(k) or None for k in keys)
+    if not any(a):
+        return "reset" if any(b) else "-"
+    if not any(b):
+        return "set"
+    return "keep" if a == b else "change"
+
+
+def carry_matrix(steps) -> dict[str, dict[str, str]]:
+    return {
+        verb: {f: _status(before, after, keys) for f, keys in TRACKED.items()}
+        for verb, before, after in steps
+    }
+
+
+# Both remove every row, yet TRUNCATE keeps the COPY history (a
+# truncated table does not re-load its landing files) while OVERWRITE
+# drops it with the replaced snapshot; REPLACE drops it too, as a new
+# table definition. The asymmetry is the existing contract, kept as is.
+_EXPECTED_ROWS = {
+    # verb                   hwm       copy      gen       defaults  app       dvs       sharding
+    "CREATE":                ("set",    "-",      "set",    "set",    "set",    "-",      "set"),
+    "COPY INTO":             ("change", "set",    "keep",   "keep",   "keep",   "-",      "keep"),
+    "DELETE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
+    "ALTER ADD":             ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
+    "ALTER DROP":            ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
+    "APPEND":                ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
+    "UPDATE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
+    "DELETE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
+    "UPDATE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
+    "MERGE upsert":          ("change", "keep",   "keep",   "keep",   "change", "keep",   "keep"),
+    "ANALYZE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
+    "OPTIMIZE ZORDER":       ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep"),
+    "MERGE conditional":     ("change", "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
+    "REBUCKET":              ("keep",   "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
+    "CLONE shallow":         ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep"),
+    "CLONE deep":            ("keep",   "change", "keep",   "reset",  "reset",  "-",      "keep"),
+    "REPLACE":               ("reset",  "reset",  "reset",  "reset",  "-",      "-",      "reset"),
+    "RESTORE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
+    "ANALYZE after RESTORE": ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
+    "TRUNCATE":              ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep"),
+    "OVERWRITE":             ("keep",   "reset",  "reset",  "reset",  "keep",   "-",      "keep"),
+}
+EXPECTED = {v: dict(zip(TRACKED, row)) for v, row in _EXPECTED_ROWS.items()}
+
+
+@pytest.fixture(scope="module")
+def verb_steps(spark, tmp_path_factory):
+    from manifest_matrix import run_verbs
+
+    return run_verbs(spark, str(tmp_path_factory.mktemp("matrix")))
+
+
+def test_carry_matrix(verb_steps):
+    """Every write verb keeps, sets, changes or resets the identity
+    high-water mark, COPY history pointer, generated columns, defaults,
+    writer watermarks, deletion vectors and sharding config exactly as
+    pinned above."""
+    got = carry_matrix(verb_steps)
+    assert list(got) == list(EXPECTED)
+    for verb, row in EXPECTED.items():
+        assert got[verb] == row, verb
+
+
+def test_analyze_after_restore_drops_restored_from_version(verb_steps):
+    """``restored_from_version`` describes the RESTORE commit only; a
+    later ANALYZE must not carry it forward."""
+    by_verb = {verb: after for verb, _before, after in verb_steps}
+    assert by_verb["RESTORE"]["restored_from_version"] == 2
+    assert "restored_from_version" not in by_verb["ANALYZE after RESTORE"]

@@ -706,6 +706,69 @@ def test_pushdown_reader_prunes_with_zone_maps(registered, tmp_path):
         spark.read.format("txtable").load(root).filter("id > 10000").count() == 0
     )
 
+    # timestamp and decimal stats: the pushed literal (a tz-aware UTC
+    # datetime / a Decimal) must compare in the stored stats' own form,
+    # so the DataSource prunes exactly like read_txtable
+    import datetime as dt
+    import decimal
+
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from data_pipeline_demo_spark.sinks.txlog import read_txtable
+    from data_pipeline_demo_spark.sources.pushdown import bucket_of_literal
+
+    typed = str(tmp_path / "typed")
+    noon = dt.datetime(2024, 1, 1, 12, 0, 0)
+    # bucket 0 holds only 9.5, the others only 12.0: '9.5' > '12.0' as
+    # strings, so only a by-value comparison can prune bucket 0
+    txlog_upsert(
+        spark,
+        spark.createDataFrame(
+            [
+                (
+                    i,
+                    noon,
+                    decimal.Decimal(
+                        "9.5" if bucket_of_literal(i, 4, "int64") == 0 else "12.0"
+                    ),
+                )
+                for i in range(20)
+            ],
+            "id long, ts timestamp, amt decimal(10,1)",
+        ),
+        typed,
+        num_buckets=4,
+        stats_columns=["ts", "amt"],
+    )
+    probes = (
+        "ts >= timestamp'2024-01-01 06:00:00'",
+        "ts >= timestamp'2024-01-01 12:00:00'",
+        "ts > timestamp'2024-01-01 12:00:00'",
+        "ts <= timestamp'2024-01-01 12:00:00'",
+        "amt >= 10",
+        "amt <= 10",
+    )
+    for pred in probes:
+        want = read_txtable(spark, typed).filter(pred).count()
+        got = spark.read.format("txtable").load(typed).filter(pred).count()
+        assert got == want, pred
+    assert read_txtable(spark, typed).filter(
+        "ts >= timestamp'2024-01-01 12:00:00'"
+    ).count() == 20
+    ds3 = TxTableDataSource({"path": typed})
+    r3 = ds3.reader(ds3.schema())
+    r3.pushFilters([GreaterThanOrEqual(("amt",), decimal.Decimal("10.0"))])
+    assert 0 < len(r3.partitions()) < 4  # the 9.5-only bucket is pruned
+    # stats written by the python writer compare in the same form
+    spark.createDataFrame(
+        [(100 + i, noon, decimal.Decimal("12.0")) for i in range(4)],
+        "id long, ts timestamp, amt decimal(10,1)",
+    ).write.format("txtable").mode("append").save(typed)
+    for pred in probes:
+        want = read_txtable(spark, typed).filter(pred).count()
+        got = spark.read.format("txtable").load(typed).filter(pred).count()
+        assert got == want, pred
+
 
 def test_pushdown_prune_is_conservative_without_stats(registered, tmp_path):
     """A table created WITHOUT stats_columns never zone-prunes (all

@@ -495,6 +495,28 @@ def test_fsspec_claim_exclusive(monkeypatch):
     assert stored == {"version": 0}
 
 
+def test_fsspec_makedirs_failure_surfaces(monkeypatch):
+    """Only 'directory exists / no directories here' is tolerated when
+    preparing a path: a permission failure must surface, not be
+    swallowed into a later, vaguer error."""
+
+    class _DeniedFS(_MemWriteFS):
+        def makedirs(self, path, exist_ok=False):
+            raise PermissionError(path)
+
+    class _DeniedFsspec(_FakeFsspec):
+        @staticmethod
+        def filesystem(scheme, **options):
+            return _DeniedFS(**options)
+
+    monkeypatch.setitem(sys.modules, "fsspec", _DeniedFsspec)
+    _MemWriteFS.store = {}
+    fs, root = _fs_root("memw://tbl", {})
+    with pytest.raises(PermissionError):
+        put_manifest_if_absent(fs, root, 0, b"{}")
+    assert _MemWriteFS.store == {}
+
+
 # ---------------------------------------------------------------------------
 # Streaming sink: deterministic availableNow over a file source.
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ so the 100 TB metadata claim carries numbers, not an asymptote.
 
 File entries are fabricated rel paths (metadata-only: nothing reads
 data files here); the commit path exercised is the REAL one
-(_commit_manifest -> _deflate_manifest -> LogStore claim).
+(next_manifest -> _commit_manifest -> deflate -> LogStore claim).
 
 Usage: python tools/manifest_soak.py [max_files=1000000]
 Prints one JSON line per (mode, n_files) step.
@@ -22,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_demo_spark.session import get_spark  # noqa: E402
+from data_pipeline_demo_spark.sinks.manifest import next_manifest  # noqa: E402
 from data_pipeline_demo_spark.sinks.txlog import (  # noqa: E402
     _commit_manifest,
     _latest_manifest,
@@ -43,25 +44,18 @@ def _fabricate_buckets(n_files: int) -> dict[str, list[str]]:
     }
 
 
-def _base_manifest(version: int, buckets: dict, sharded: bool) -> dict:
-    return {
-        "version": version,
-        "key": "id",
-        "num_buckets": NUM_BUCKETS,
-        "buckets": buckets,
-        "row_counts": {b: len(r) * 1000 for b, r in buckets.items()},
-        "app_txns": {},
-        "stats_columns": ["v"],
-        "bucket_stats": {
-            b: {"v": [0.0, 1.0]} for b in buckets
-        },
-        "bloom_columns": [],
-        "bucket_blooms": {},
-        "bloom_bits": 1024,
-        **({"manifest_sharding": {"groups": GROUPS}} if sharded else {}),
-        "operation": "SOAK",
-        "committed_at_ms": int(time.time() * 1000),
-    }
+def _base_manifest(buckets: dict, sharded: bool) -> dict:
+    return next_manifest(
+        None,
+        "SOAK",
+        key="id",
+        num_buckets=NUM_BUCKETS,
+        buckets=buckets,
+        row_counts={b: len(r) * 1000 for b, r in buckets.items()},
+        stats_columns=["v"],
+        bucket_stats={b: {"v": [0.0, 1.0]} for b in buckets},
+        manifest_sharding={"groups": GROUPS} if sharded else None,
+    )
 
 
 def soak(max_files: int) -> list[dict]:
@@ -78,7 +72,7 @@ def soak(max_files: int) -> list[dict]:
             # v0: the full table at n files
             t0 = time.perf_counter()
             _commit_manifest(
-                spark, root, _base_manifest(0, buckets, sharded)
+                spark, root, _base_manifest(buckets, sharded)
             )
             t_full = time.perf_counter() - t0
             # snapshot load
@@ -93,7 +87,7 @@ def soak(max_files: int) -> list[dict]:
             # single-bucket commit: one bucket gains one file
             nb = dict(prev["buckets"])
             nb["7"] = list(nb["7"]) + ["data/0007/new-file.parquet"]
-            m1 = _base_manifest(1, nb, False)  # cfg carries via prev
+            m1 = next_manifest(prev, "SOAK", buckets=nb)
             t0 = time.perf_counter()
             _commit_manifest(spark, root, m1, prev=prev)
             t_commit = time.perf_counter() - t0
