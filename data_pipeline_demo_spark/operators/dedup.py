@@ -886,6 +886,9 @@ def connected_components(
 
     head = edges.take(CC_DRIVER_MAX_EDGES + 1)
     if len(head) <= CC_DRIVER_MAX_EDGES:
+        # the edges now live on the driver: release their checkpoint
+        # blocks rather than leave them until the JVM collects the plan
+        edges._jdf.queryExecution().logical().rdd().unpersist(False)
         # min-root union-find: find() with path compression; union
         # keeps the SMALLER root, so each final root is the component's
         # minimum node id — the distributed loop's exact labeling.

@@ -1,14 +1,24 @@
 """Embedding similarity search (north-star surface).
 
-Two tiers over `embeddings.embedding: array<float>[64]`:
+Search tiers over `embeddings.embedding: array<float>[64]`:
 
-- **Exact brute-force top-k** (`knn_exact`): probe set ⋈ corpus with a
-  deterministic decimal-exact cosine — the correctness baseline, and the
-  right choice when the probe set is small enough to broadcast.
-- **LSH-bucketed ANN** (`ann_lsh_topk`): random-hyperplane signatures →
-  candidates share a bucket → exact re-rank inside buckets. The 100 TB
-  path: the corpus is scanned once to sign, and each probe only touches
-  its buckets (partition pruning on the bucket key).
+- **Exact brute-force top-k** (`knn_exact`, `knn_numpy`,
+  `knn_exact_fast`): probe set ⋈ corpus with a deterministic
+  decimal-exact cosine — the correctness baseline, and the right choice
+  when the probe set is small enough to broadcast.
+- **LSH-bucketed ANN** (`ann_lsh_topk`, `build_ann_index`):
+  random-hyperplane signatures → candidates share a bucket → exact
+  re-rank inside buckets. The corpus is scanned once to sign, and each
+  probe only touches its buckets (partition pruning on the bucket key).
+- **IVF / IVF-PQ** (`ivf_build_index`, `ivfpq_build_index`): a coarse
+  k-means quantizer partitions the corpus into inverted lists; probes
+  read only their ``nprobe`` nearest lists.
+
+Every centroid computation — IVF/IVF-PQ builds, IVF append and CDC
+refresh, ``ivf_query`` routing, ``cluster_embeddings`` and SemDeDup —
+goes through ONE driver-resident k-means: the hash-sample init
+(:func:`_centroids`), Lloyd refinement (:func:`_refine_arrow`) and the
+single-scan router (:func:`_route_fold`).
 
 Float determinism: dot products and norms route through ``_dot_exact``'s
 floor-scaled integer accumulation below, so Spark's result is
@@ -41,13 +51,14 @@ _SEMANTIC_SCRATCH: list = []
 def clear_semantic_scratch() -> None:
     """Unpersist every semantic_dedup intermediate this process has
     registered. Safe to call at any time; the next semantic_dedup
-    recomputes from its inputs."""
+    recomputes from its inputs. ``semantic_dedup`` calls it on entry,
+    so repeated calls hold at most one call's scratch."""
     while _SEMANTIC_SCRATCH:
         df = _SEMANTIC_SCRATCH.pop()
-        try:
+        # a stopped context has already dropped its cache (and unpersist
+        # would raise on it)
+        if df.sparkSession.sparkContext._jsc is not None:
             df.unpersist()
-        except Exception:
-            pass
 
 
 def _dot_exact(a: Column, b: Column) -> Column:
@@ -514,23 +525,14 @@ def apply_index_changes(
 
         part_cols = ["tbl", "bucket"]
     elif kind == "ivf":
-        cent_path = index_path + "_centroids"
-        try:
-            cents = spark.read.parquet(cent_path)
-        except Exception as exc:
-            raise ValueError(
-                f"no IVF centroids at {cent_path}; ivf_build_index first"
-            ) from exc
+        cids, C_list = _load_centroids(spark, index_path)
 
         def place(change_types: list[str]) -> DataFrame:
             part = feed.filter(
                 F.col("_change_type").isin(change_types)
             ).select(id_col, vec_col)
             nz = part.filter(l2_norm_exact(F.col(vec_col)) > 0)
-            return nz.join(
-                _best_centroids(nz, cents, id_col, vec_col, n_best=1),
-                id_col,
-            ).select(F.col(id_col), F.col(vec_col), F.col("centroid_id"))
+            return _ivf_rows(nz, C_list, cids, id_col, vec_col)
 
         part_cols = ["centroid_id"]
     else:
@@ -739,9 +741,8 @@ def _centroids(
 ) -> DataFrame:
     """Deterministic coarse quantizer: the n_centroids corpus vectors with
     the smallest xxhash64(id) — a uniform pseudo-random sample that needs
-    no training job and is reproducible across engines and runs. (A
-    k-means refinement can replace this seam without touching the
-    assign/query shape.)"""
+    no training job and is reproducible across engines and runs. It is
+    the init of :func:`_kmeans`."""
     return (
         corpus.select(F.col(id_col), F.col(vec_col))
         .withColumn("__r", F.xxhash64(F.col(id_col)))
@@ -757,127 +758,31 @@ def _centroids(
     )
 
 
-def _refine_centroids(
-    corpus: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    iters: int,
-    engine: str = "expr",
-) -> DataFrame:
-    """Lloyd refinement over the deterministic hash-sample init: each
-    iteration assigns every corpus vector to its nearest centroid (one
-    broadcast pass — the same shape as the index build's assign step)
-    and moves each centroid to the element-wise mean of its members.
-
-    Determinism: per-element sums go through decimal accumulation, which
-    is exact and order-independent under Spark's parallel aggregation,
-    so the refined centroids are reproducible run-to-run (the seeded
-    init already is). A centroid that attracts no members — or whose
-    member mean cancels to the zero vector, where cosine routing is
-    undefined — keeps its previous vector. ``centroid_id`` values are
-    stable across iterations, so the assign/query shape is untouched.
-    """
-    dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
-        return cents
-    dim = int(dim_row["d"])
-    # NOTE (r12 optimization round, measured and deliberately REVERTED):
-    # materializing the centroids per iteration (collect + literal
-    # relation — the guide-§3.3 plan-truncation move, what MLlib does)
-    # flattens this loop's nested plan (113 Exchange nodes at 5
-    # iterations) but made q151 ~30× slower steady-state: the eager
-    # per-iteration collects execute BEFORE Spark's CacheManager can
-    # substitute the caller's persisted `assignments` relation, so every
-    # call re-pays ~1.1 s/iteration interpreted-HOF routing + ~2.3 s/
-    # iteration of the 64-wide decimal-avg aggregate that the lazy form
-    # amortizes across consumers and repeat runs within a session. The
-    # lazy nest's one-time planning cost is real but paid once.
-    for _ in range(iters):
-        assign = _best_centroids(
-            corpus, cents, id_col, vec_col, n_best=1, engine=engine
-        )
-        # element-wise decimal means in ONE combinable aggregate pass
-        # (map-side partials carry dim decimals per centroid) — no
-        # posexplode row blow-up, no collect_list reassembly exchange
-        means = (
-            corpus.join(assign, id_col)
-            .groupBy("centroid_id")
-            .agg(
-                *[
-                    F.avg(
-                        F.element_at(F.col(vec_col), i + 1).cast(
-                            "decimal(28,10)"
-                        )
-                    ).alias(f"__m{i}")
-                    for i in range(dim)
-                ]
-            )
-            .select(
-                "centroid_id",
-                F.array(
-                    *[F.col(f"__m{i}").cast("float") for i in range(dim)]
-                ).alias("__mvec"),
-            )
-        )
-        cents = cents.join(means, "centroid_id", "left").select(
-            "centroid_id",
-            F.when(
-                F.col("__mvec").isNotNull()
-                & (l2_norm_exact(F.col("__mvec")) > 0),
-                F.col("__mvec"),
-            )
-            .otherwise(F.col("__cvec"))
-            .alias("__cvec"),
-        )
-    return cents
-
-
-def _cos_double(va, vb) -> Column:
-    """Codegen double cosine for centroid ROUTING: zip_with product +
-    left-to-right aggregate fold — deterministic at any partitioning
-    (fold order is array order), ~100x cheaper than the decimal fold.
-    Routing only picks WHICH centroid/list a vector belongs to, so
-    result-bearing exactness guarantees (knn_exact, the oracle-checked
-    cosine tiers) are untouched — they keep ``_dot_exact``."""
-    da, db = va.cast("array<double>"), vb.cast("array<double>")
-
-    def ssum(v):
-        return F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-
-    dot = F.aggregate(
-        F.zip_with(da, db, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    return dot / F.sqrt(ssum(da) * ssum(db))
-
-
 def _fold_kernels():
-    """The numpy kernels the k-means fast tier ships to Python
-    workers, returned as NESTED functions so Spark pickles them BY
-    VALUE inside task closures (the engine package is not assumed
-    importable on executor Python workers — every other operator's
-    mapInPandas body follows the same convention).
+    """The numpy kernels the k-means ships to Python workers, returned
+    as NESTED functions so Spark pickles them BY VALUE inside task
+    closures (the engine package is not assumed importable on executor
+    Python workers — every other operator's mapInPandas body follows
+    the same convention).
 
-    - ``make_sims(C)``: vectorized twin of :func:`_cos_double`,
-      bit-identical by construction: the expr tier folds
-      ``acc + x_i*y_i`` LEFT-TO-RIGHT over the array, so the loop
-      accumulates dimension-by-dimension across all (row × centroid)
-      cells at once — the same IEEE double ops in the same order, just
-      batched. ``C`` is float64 (float32 → float64 is exact, matching
-      the expr tier's ``cast("array<double>")``).
-    - ``batch_route(pdf, vec_col, sims_fn, dim)``: routes one pandas
-      batch, returning ``(ok_mask, best_idx, sims)``. Rows whose
-      vector length mismatches the centroid dimension get a null
-      assignment (the expr tier's zip_with null-fold). Ties and NaNs
-      follow the ``max_by`` rule exactly: numpy's argmax returns the
-      first maximum — smallest centroid id since rows are
-      cid-ascending — and the FIRST NaN index when NaNs exist, which
-      matches Spark's NaN-greatest ordering plus the smallest-id
-      tiebreak.
+    - ``make_sims(C)``: the routing cosine of every (row, centroid)
+      cell, deterministic at any partitioning: ``acc + x_i*y_i`` is
+      folded LEFT-TO-RIGHT over the array, dimension-by-dimension across
+      all cells at once, then divided by ``sqrt(|x|² · |c|²)`` — the
+      same IEEE double ops in the same order for every row, so a
+      vector's route never depends on its batch. ``C`` is float64
+      (float32 → float64 is exact). Routing only picks WHICH
+      centroid/list a vector belongs to; result-bearing cosines
+      (knn_exact and the oracle-checked tiers) keep ``_dot_exact``.
+    - ``batch_route(pdf, vec_col, sims_fn, dim, n_best=1)``: routes one
+      pandas batch, returning ``(ok_mask, top, sims, V)`` with ``top``
+      the ``(rows, n_best)`` centroid indices of the ok rows. Rows
+      whose vector length mismatches the centroid dimension are not
+      ok: they get NO assignment. The order is (sim desc, centroid
+      index asc) with NaN greatest — Spark's double ordering — so ties
+      go to the smallest centroid id (centroids are cid-ascending);
+      for ``n_best=1`` numpy's argmax (first maximum, first NaN) is
+      that rule.
     - ``decimal_ints(V)``: per-element replication of Spark's
       ``cast(decimal(28,10))`` as integers in 1e-10 units — HALF_UP
       rounding of the value's SHORTEST decimal representation (Spark's
@@ -909,7 +814,7 @@ def _fold_kernels():
 
         return sims
 
-    def batch_route(pdf, vec_col, sims_fn, dim):
+    def batch_route(pdf, vec_col, sims_fn, dim, n_best=1):
         cells = pdf[vec_col].tolist()
         lens = np.fromiter(
             (len(v) if v is not None else -1 for v in cells),
@@ -917,13 +822,16 @@ def _fold_kernels():
             count=len(cells),
         )
         ok = lens == dim
-        if not ok.any():
-            return ok, np.empty(0, dtype=np.int64), None
-        V = np.stack(
-            [np.asarray(cells[i], dtype=np.float64) for i in np.flatnonzero(ok)]
-        )
+        V = np.asarray(
+            [cells[i] for i in np.flatnonzero(ok)], dtype=np.float64
+        ).reshape(-1, dim)
         S = sims_fn(V)
-        return ok, np.argmax(S, axis=1), S
+        if n_best == 1:
+            return ok, np.argmax(S, axis=1)[:, None], S, V
+        nan = np.isnan(S)
+        col = np.broadcast_to(np.arange(S.shape[1]), S.shape)
+        top = np.lexsort((col, np.where(nan, 0.0, -S), ~nan), axis=1)
+        return ok, top[:, :n_best], S, V
 
     def decimal_ints(V):
         valid = np.isfinite(V) & (np.abs(V) < 1e18)  # decimal(28,10) range
@@ -1003,46 +911,25 @@ def _avg_decimal_f32(s: int, n: int) -> float:
     return float(np.float32(float(Fraction(q14, 10**14))))
 
 
-def _route_arrow(
-    vectors: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    with_sim: bool,
-) -> DataFrame:
-    """BLAS centroid routing: centroids collect to one numpy matrix
-    (n_clusters × dim — metadata-sized by construction) and a single
-    ``mapInPandas`` scan computes every row's cosine row-block against
-    all centroids at once, emitting the argmax. r13: the row-block
-    arithmetic is the :func:`_fold_sim_fn` EXACT twin of the expr
-    tier's fold (r12 used normalized matmul, which could flip
-    knife-edge assignments), so arrow ≡ expr bit-for-bit — sims
-    included — not just on non-tie data."""
-    import numpy as np
-
-    cent_rows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
-    C32 = [list(r["__cvec"]) for r in cent_rows]
-    cids = [int(r["centroid_id"]) for r in cent_rows]
-    return _route_fold(
-        vectors, C32, cids, id_col, vec_col, with_sim=with_sim
-    )
-
-
 def _route_fold(
     vectors: DataFrame,
     C_list: list,
     cids: list,
     id_col: str,
     vec_col: str,
-    with_sim: bool,
+    with_sim: bool = False,
+    n_best: int = 1,
 ) -> DataFrame:
-    """One ``mapInPandas`` scan assigning every vector to its nearest
-    centroid by the exact fold cosine (see :func:`_fold_sim_fn`) —
-    centroids arrive as plain lists (driver-resident, metadata-sized),
-    so the scan is the ONLY distributed work: no broadcast exchange, no
-    crossJoin, no argmax shuffle. Rows whose vector length mismatches
-    the centroid dimension emit null assignment/sim, the expr tier's
-    null-fold behavior."""
+    """The one centroid router: a single ``mapInPandas`` scan giving
+    every vector its ``n_best`` nearest centroids by the fold cosine
+    (``make_sims`` in :func:`_fold_kernels`), one ``(id, centroid_id
+    [, __sim])`` row each, in (sim desc, centroid_id asc) order with
+    NaN greatest. Centroids arrive as plain lists (driver-resident,
+    metadata-sized), so the scan is the ONLY distributed work: no
+    broadcast exchange, no crossJoin, no argmax shuffle. A vector whose
+    length differs from the centroids' has no route: it gets ONE row
+    with a null ``centroid_id`` (and ``__sim``), and the index writers
+    drop it like a zero-norm vector."""
     import numpy as np
 
     id_type = {
@@ -1052,14 +939,12 @@ def _route_fold(
         ", __sim double" if with_sim else ""
     )
     if not C_list:
-        # no centroids (empty corpus): the expr crossJoin yields the
-        # empty relation
-        return (
-            vectors.sparkSession.createDataFrame([], schema)
-        )
+        # no centroids (empty corpus): nothing to route to
+        return vectors.sparkSession.createDataFrame([], schema)
     C = np.asarray(C_list, dtype=np.float64)
     cid_arr = np.asarray(cids, dtype=np.int64)
     dim = C.shape[1]
+    n = min(int(n_best), len(cids))
     make_sims, batch_route = _fold_kernels()[:2]
 
     def route(batches):
@@ -1070,64 +955,51 @@ def _route_fold(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ok, best, S = batch_route(pdf, vec_col, sims_fn, dim)
-            ids = pdf[id_col]
-            if ok.all():
-                out = {
-                    id_col: ids.to_numpy(),
-                    "centroid_id": cid_arr[best].astype(np.int32),
-                }
-                if with_sim:
-                    out["__sim"] = S[np.arange(S.shape[0]), best]
-                yield pd.DataFrame(out)
-            else:
-                # mismatched-length rows: null assignment/sim (the expr
-                # tier's null fold) — object arrays so a genuine NaN sim
-                # on an ok row stays NaN rather than collapsing to null
-                cent = np.full(len(pdf), None, dtype=object)
-                cent[ok] = [int(c) for c in cid_arr[best]]
-                out = {id_col: ids.to_numpy(), "centroid_id": cent}
-                if with_sim:
-                    sim = np.full(len(pdf), None, dtype=object)
-                    if S is not None:
-                        sim[ok] = [
-                            float(v)
-                            for v in S[np.arange(S.shape[0]), best]
-                        ]
-                    out["__sim"] = sim
-                yield pd.DataFrame(out)
+            ok, top, S, _ = batch_route(pdf, vec_col, sims_fn, dim, n)
+            ids = pdf[id_col].to_numpy()
+            out = {
+                id_col: np.repeat(ids[ok], n),
+                "centroid_id": cid_arr[top].ravel().astype(np.int32),
+            }
+            if with_sim:
+                out["__sim"] = np.take_along_axis(S, top, axis=1).ravel()
+            if not ok.all():
+                # one null row per unroutable vector — object arrays so
+                # the ints stay ints beside the nulls
+                bad = ids[~ok]
+                out[id_col] = np.concatenate([out[id_col], bad])
+                for c in out.keys() - {id_col}:
+                    out[c] = np.concatenate(
+                        [out[c].astype(object), np.full(len(bad), None)]
+                    )
+            yield pd.DataFrame(out)
 
     return vectors.select(id_col, vec_col).mapInPandas(route, schema)
 
 
 def _refine_arrow(
     corpus: DataFrame,
-    cent_rows: list,
+    C_list: list,
     vec_col: str,
     iters: int,
 ) -> list:
     """Lloyd refinement with driver-resident centroids: each iteration
     is ONE job — a ``mapInPandas`` scan that routes every vector by the
-    exact fold AND accumulates decimal-exact per-(centroid, dim)
+    fold cosine AND accumulates decimal-exact per-(centroid, dim)
     integer sums/counts as per-task partials (k × dim ints each,
     metadata-sized), collected and folded on the driver with arbitrary-
-    precision arithmetic. Replaces the expr tier's per-iteration
-    broadcast crossJoin + interpreted dim-wide decimal-avg aggregate
-    (the measured q151/q75 bottleneck: ~n·k·d interpreted lambda calls
-    plus an interpreted 64-wide decimal aggregation per pass) with
-    BLAS-shaped numpy and exact integer means — same bits, see
-    test_refine_arrow_equals_expr. Returns the refined centroid
-    vectors (python lists of float, cid-ascending), where each refined
-    element is float32(decimal-exact mean) exactly as the expr tier's
-    ``cast("float")`` lands it, and a centroid with no members / a
-    null-element mean / a mean below the ``_dot_exact`` floor keeps
-    its previous vector (the documented zero-routing rule)."""
+    precision arithmetic. The means are Spark's
+    ``avg(cast(decimal(28,10))).cast("float")`` bit for bit — pinned
+    against the expression k-means in ``tests/kmeans_oracle.py``.
+    Returns the refined centroid vectors (python lists of float, in
+    ``C_list`` order); a centroid with no members / a null-element
+    mean / a mean below the ``_dot_exact`` floor keeps its previous
+    vector (the documented zero-routing rule)."""
     import numpy as np
 
-    k = len(cent_rows)
+    k = len(C_list)
     if k == 0 or iters <= 0:
-        return [list(r["__cvec"]) for r in cent_rows]
-    C_list = [list(r["__cvec"]) for r in cent_rows]
+        return C_list
     dim = len(C_list[0])
 
     make_sims, batch_route, decimal_ints, chunk_col_sums = _fold_kernels()
@@ -1145,16 +1017,10 @@ def _refine_arrow(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                ok, best, _ = batch_route(pdf, "__v", sims_fn, dim)
+                ok, top, _, V = batch_route(pdf, "__v", sims_fn, dim)
                 if not ok.any():
                     continue
-                cells = pdf["__v"].tolist()
-                V = np.stack(
-                    [
-                        np.asarray(cells[i], dtype=np.float64)
-                        for i in np.flatnonzero(ok)
-                    ]
-                )
+                best = top[:, 0]
                 ints, valid, big = decimal_ints(V)
                 for j in range(k):
                     m = best == j
@@ -1215,69 +1081,64 @@ def _refine_arrow(
     return C_list
 
 
-def _cluster_arrow(
+def _kmeans(
     nz: DataFrame,
-    n_clusters: int,
+    n_centroids: int,
     id_col: str,
     vec_col: str,
     refine_iters: int,
-) -> DataFrame:
-    """The k-means fast tier end to end: collect the deterministic
-    hash-sample init (n_clusters rows — one small job), refine with
-    driver-resident centroids (one scan-job per iteration,
-    :func:`_refine_arrow`), and return the final assignment as a lazy
-    single-scan :func:`_route_fold`. The expr tier's lazily-nested
-    plan re-derived the whole centroid lineage inside every consumer
-    (113 Exchange nodes at 5 iterations); this shape is a flat scan
-    per pass with metadata-sized driver state — bit-identical results
-    (differential-tested), ~10x less plan."""
-    cent_rows = sorted(
-        _centroids(nz, n_clusters, id_col, vec_col).collect(),
-        key=lambda r: r["centroid_id"],
+) -> tuple[list, list]:
+    """The package's k-means: collect the deterministic hash-sample
+    init (:func:`_centroids`, n_centroids rows — one small job) and
+    refine it with driver-resident Lloyd passes (:func:`_refine_arrow`,
+    one flat scan-job per iteration). Returns ``(cids, C_list)``,
+    cid-ascending, ready for :func:`_route_fold`. ``nz`` must hold
+    non-zero vectors only (cosine is undefined at zero)."""
+    cids, C_list = _centroid_lists(
+        _centroids(nz, n_centroids, id_col, vec_col).collect()
     )
-    cids = [int(r["centroid_id"]) for r in cent_rows]
-    C_list = _refine_arrow(nz, cent_rows, vec_col, refine_iters)
-    return _route_fold(nz, C_list, cids, id_col, vec_col, with_sim=True)
+    return cids, _refine_arrow(nz, C_list, vec_col, refine_iters)
 
 
-def _best_centroids(
-    vectors: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_best: int,
-    engine: str = "expr",
-) -> DataFrame:
-    """(id → n_best nearest centroid_ids) by deterministic double
-    cosine: one scan of `vectors` against the broadcast centroid
-    table (``engine="expr"``), or the BLAS row-block scan
-    (``engine="arrow"``, n_best=1 only — see :func:`_route_arrow`)."""
-    if engine == "arrow" and n_best == 1:
-        return _route_arrow(vectors, cents, id_col, vec_col, with_sim=False)
-    scored = (
-        vectors.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col),
-            F.col("centroid_id"),
-            _cos_double(F.col(vec_col), F.col("__cvec")).alias("__sim"),
-        )
-    )
-    if n_best == 1:
-        # hash-agg argmax (map-side combinable) instead of a window
-        # sort exchange: max_by on (sim, -centroid_id) = highest sim,
-        # smallest id on ties — same pick as the window path
-        return scored.groupBy(id_col).agg(
-            F.max_by(
-                "centroid_id",
-                F.struct(F.col("__sim"), -F.col("centroid_id")),
-            ).alias("centroid_id")
-        )
-    w = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("centroid_id"))
+def _centroid_lists(rows: list) -> tuple[list, list]:
+    """``(centroid_id, __cvec)`` rows → cid-ascending ``(cids, C_list)``."""
+    rows = sorted(rows, key=lambda r: r["centroid_id"])
     return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= n_best)
-        .select(id_col, "centroid_id")
+        [int(r["centroid_id"]) for r in rows],
+        [list(r["__cvec"]) for r in rows],
     )
+
+
+def _ivf_rows(
+    nz: DataFrame, C_list: list, cids: list, id_col: str, vec_col: str
+) -> DataFrame:
+    """``(id, vector, centroid_id)`` inverted-list rows: ``nz`` routed
+    to its nearest centroid. A vector with no route (wrong length) is
+    not indexed, like a zero-norm one."""
+    assign = _route_fold(nz, C_list, cids, id_col, vec_col).filter(
+        F.col("centroid_id").isNotNull()
+    )
+    return nz.join(assign, id_col).select(
+        F.col(id_col), F.col(vec_col), F.col("centroid_id")
+    )
+
+
+def _load_centroids(spark, index_path: str) -> tuple[list, list]:
+    """``(cids, C_list)`` of a built IVF index's frozen quantizer, read
+    from ``<index>_centroids``. A missing file is a ValueError naming
+    the fix; any other read error (a corrupt file) surfaces as is."""
+    from pyspark.errors import AnalysisException
+
+    cent_path = index_path + "_centroids"
+    try:
+        cents = spark.read.parquet(cent_path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise ValueError(
+            f"no IVF centroids at {cent_path}; ivf_build_index first"
+        ) from exc
+    return _centroid_lists(cents.collect())
 
 
 def ivf_build_index(
@@ -1289,31 +1150,39 @@ def ivf_build_index(
     refine_iters: int = 0,
 ) -> None:
     """IVF index build: each corpus vector is assigned to its nearest
-    centroid (one broadcast pass) and the corpus lands partitioned by
+    centroid (one routing scan) and the corpus lands partitioned by
     ``centroid_id``. Complementary to the LSH index: IVF partitions
     follow the data's own geometry, so probe cost scales with nprobe/
-    n_centroids of the corpus rather than bucket occupancy.
+    n_centroids of the corpus rather than bucket occupancy. The
+    centroids land beside it as ``<index>_centroids``
+    (``centroid_id int, __cvec <vector type>``).
 
     ``refine_iters`` runs that many Lloyd (k-means) iterations over the
     hash-sample init before assignment — centroids move to member means,
     which tightens clusters and raises recall at equal nprobe. Each
-    iteration costs one extra broadcast assign + one grouped mean over
-    the corpus at build time; query cost is unchanged. Default 0 keeps
-    the build a single pass (and bit-reproducible against older indexes).
+    iteration is one scan-job over the corpus at build time with the
+    centroids held on the driver (:func:`_kmeans`), so the written
+    relation's plan is the same at any ``refine_iters``; query cost is
+    unchanged. Default 0 keeps the build a single pass (and
+    bit-reproducible against older indexes).
     """
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     nz = corpus.filter(l2_norm_exact(F.col(vec_col)) > 0)
-    cents = _centroids(nz, n_centroids, id_col, vec_col)
-    if refine_iters > 0:
-        cents = _refine_centroids(nz, cents, id_col, vec_col, refine_iters)
-    assign = _best_centroids(nz, cents, id_col, vec_col, n_best=1)
+    cids, C_list = _kmeans(nz, n_centroids, id_col, vec_col, refine_iters)
     (
-        nz.join(assign, id_col)
-        .select(F.col(id_col), F.col(vec_col), F.col("centroid_id"))
+        _ivf_rows(nz, C_list, cids, id_col, vec_col)
         .write.mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(index_path)
     )
-    cents.write.mode("overwrite").parquet(index_path + "_centroids")
+    schema = StructType([
+        StructField("centroid_id", IntegerType(), False),
+        StructField("__cvec", nz.schema[vec_col].dataType),
+    ])
+    corpus.sparkSession.createDataFrame(
+        list(zip(cids, C_list)), schema
+    ).write.mode("overwrite").parquet(index_path + "_centroids")
 
 
 def ivf_index_append(
@@ -1330,19 +1199,10 @@ def ivf_index_append(
     exact degeneracy) holds over the unioned corpus. O(new vectors) per
     refresh; rebuild when drift makes the frozen quantizer a bad fit.
     """
-    spark = new_vectors.sparkSession
-    cent_path = index_path + "_centroids"
-    try:
-        cents = spark.read.parquet(cent_path)
-    except Exception as exc:
-        raise ValueError(
-            f"no IVF centroids at {cent_path}; ivf_build_index first"
-        ) from exc
+    cids, C_list = _load_centroids(new_vectors.sparkSession, index_path)
     nz = new_vectors.filter(l2_norm_exact(F.col(vec_col)) > 0)
-    assign = _best_centroids(nz, cents, id_col, vec_col, n_best=1)
     (
-        nz.join(assign, id_col)
-        .select(F.col(id_col), F.col(vec_col), F.col("centroid_id"))
+        _ivf_rows(nz, C_list, cids, id_col, vec_col)
         .write.mode("append")
         .partitionBy("centroid_id")
         .parquet(index_path)
@@ -1361,7 +1221,7 @@ def ivf_index_refresh_from_txtable(
     :func:`ann_index_refresh_from_txtable`: the coarse quantizer is
     FROZEN after build (the append contract), so an update/delete
     PREIMAGE vector routes to exactly the inverted list its stale row
-    lives in — one broadcast assign over the feed names every touched
+    lives in — one routing scan over the feed names every touched
     ``centroid_id`` partition, no index scan. Same rewrite mechanics
     (partition-pruned read of touched lists, survivors minus stale AND
     fresh keys so replays converge, dynamic overwrite, drained-list
@@ -1402,20 +1262,21 @@ def ivf_query(
     """IVF probe: rank centroids per probe, read ONLY the nprobe best
     partitions (partition pruning on centroid_id), exact-cosine re-rank.
     Recall rises with nprobe; nprobe == n_centroids degenerates to the
-    exact scan."""
-    cents = spark.read.parquet(index_path + "_centroids")
+    exact scan. A probe of the wrong length has no route and no rows."""
+    cids, C_list = _load_centroids(spark, index_path)
     p = probes.select(
         F.col(probe_id_col).alias("__pid"),
         F.col(vec_col).alias("__pvec"),
         l2_norm_exact(F.col(vec_col)).alias("__pnorm"),
     ).filter(F.col("__pnorm") > 0)
-    route = _best_centroids(
+    route = _route_fold(
         p.select(F.col("__pid"), F.col("__pvec").alias(vec_col)),
-        cents,
+        C_list,
+        cids,
         "__pid",
         vec_col,
         n_best=nprobe,
-    )
+    ).filter(F.col("centroid_id").isNotNull())
     wanted = sorted({r["centroid_id"] for r in route.collect()})
     index = spark.read.parquet(index_path).filter(
         F.col("centroid_id").isin(wanted)
@@ -1566,7 +1427,6 @@ def cluster_embeddings(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     refine_iters: int = 5,
-    engine: str = "arrow",
 ) -> DataFrame:
     """K-means clustering of an embedding column — the corpus-curation
     primitive behind topic bucketing, domain-mixture analysis, and
@@ -1574,63 +1434,30 @@ def cluster_embeddings(
     plays in dataset-curation pipelines: group semantically, then
     inspect/sample/reweight per group).
 
-    Reuses the IVF machinery end-to-end: deterministic hash-sample
-    init (reproducible across runs/engines), ``refine_iters`` Lloyd
+    The IVF k-means end to end (:func:`_kmeans`): deterministic
+    hash-sample init (reproducible across runs), ``refine_iters`` Lloyd
     iterations with decimal-exact MEANS (order-independent under
-    parallel aggregation) and deterministic double-cosine ROUTING
-    (``_cos_double`` — left-to-right fold, partition-independent),
-    one assign pass. Zero-norm vectors — where cosine is undefined —
-    are excluded, like the IVF build. Returns one row per assigned
-    vector: ``(id_col, cluster_id, sim)`` with ``sim`` the double
-    cosine to the winning centroid.
+    parallel aggregation) and deterministic fold-cosine ROUTING
+    (partition-independent), one assign scan (:func:`_route_fold`).
+    Zero-norm vectors — where cosine is undefined — are excluded, like
+    the IVF build. Returns one row per assigned vector: ``(id_col,
+    cluster_id, sim)`` with ``sim`` the double cosine to the winning
+    centroid; a vector of the wrong length gets a null cluster and sim.
 
-    ``engine="arrow"`` (default since r13) runs the SAME math as
-    ``"expr"`` — bit-identical assignments, sims and refined centroids,
-    pinned by differential tests — through :func:`_cluster_arrow`:
-    numpy kernels that replay the fold's IEEE ops in order, exact
-    integer means replicating the decimal-avg cast chain, and
-    driver-resident centroids, so each Lloyd pass is ONE flat scan-job
-    instead of a nested broadcast-crossJoin + interpreted dim-wide
-    decimal aggregate (the measured q151/q75 bottleneck). ``"expr"``
-    stays: pure-expression, UDF-free — the tier for deployments that
-    forbid Python workers.
-
-    Scale shape: centroids are n_clusters × dim — broadcast-sized by
-    construction; every pass over the corpus is a scan + broadcast
-    join (no all-pairs anywhere); the grouped means shuffle
-    n_clusters × dim rows. 100× corpus = 100× scan, same shuffle.
+    Scale shape: centroids are n_clusters × dim and live on the driver;
+    every Lloyd pass is ONE flat scan-job whose per-task partials are
+    n_clusters × dim integers (no all-pairs anywhere, no shuffle). 100×
+    corpus = 100× scan, same partials.
     """
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"unknown engine tier: {engine!r}")
     nz = corpus.filter(l2_norm_exact(F.col(vec_col)) > 0)
-    if engine == "arrow":
-        # the exact-fold BLAS tier end to end (init collect + driver-
-        # resident Lloyd iterations + one-scan routing) — bit-identical
-        # to the expr tier (differential tests), ~10x less plan
-        return _cluster_arrow(
-            nz, n_clusters, id_col, vec_col, refine_iters
-        ).select(
-            id_col,
-            F.col("centroid_id").alias("cluster_id"),
-            F.col("__sim").alias("sim"),
-        )
-    cents = _centroids(nz, n_clusters, id_col, vec_col)
-    if refine_iters > 0:
-        cents = _refine_centroids(
-            nz, cents, id_col, vec_col, refine_iters, engine="expr"
-        )
-    scored = nz.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
+    cids, C_list = _kmeans(nz, n_clusters, id_col, vec_col, refine_iters)
+    return _route_fold(
+        nz, C_list, cids, id_col, vec_col, with_sim=True
+    ).select(
+        id_col,
         F.col("centroid_id").alias("cluster_id"),
-        _cos_double(F.col(vec_col), F.col("__cvec")).alias("sim"),
+        F.col("__sim").alias("sim"),
     )
-    # hash-agg argmax, same pick as a (sim desc, cluster_id asc) window
-    return scored.groupBy(id_col).agg(
-        F.max_by(
-            F.struct("cluster_id", "sim"),
-            F.struct(F.col("sim"), -F.col("cluster_id")),
-        ).alias("__best")
-    ).select(id_col, "__best.cluster_id", "__best.sim")
 
 
 def cluster_summary(assignments: DataFrame) -> DataFrame:
@@ -2166,7 +1993,7 @@ def ivfpq_build_index(
     sample_rows: int = 4096,
 ) -> None:
     """Build: coarse centroids (hash-sample + Lloyd refinement, the IVF
-    machinery) → one broadcast assign pass → residual PQ codebooks
+    k-means :func:`_kmeans`) → one routing scan → residual PQ codebooks
     trained on a deterministic residual sample → map-only residual
     encode. Codes land partitioned by ``centroid_id`` (probe pruning =
     partition pruning); centroids and the PQ model persist beside them.
@@ -2177,21 +2004,14 @@ def ivfpq_build_index(
     import numpy as np
 
     nz = corpus.filter(l2_norm_exact(F.col(vec_col)) > 0)
-    cents = _centroids(nz, n_centroids, id_col, vec_col)
-    if refine_iters > 0:
-        cents = _refine_centroids(nz, cents, id_col, vec_col, refine_iters)
-    cents = cents.persist()
-    assign = _best_centroids(nz, cents, id_col, vec_col, n_best=1)
-    with_cid = nz.select(id_col, vec_col).join(assign, id_col)
-
-    cent_rows = cents.collect()
-    cmat = np.asarray([r["__cvec"] for r in cent_rows], dtype=np.float64)
+    cids, C_list = _kmeans(nz, n_centroids, id_col, vec_col, refine_iters)
+    cmat = np.asarray(C_list, dtype=np.float64)
     cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
-    cids = np.asarray([r["centroid_id"] for r in cent_rows])
-    cid_to_row = {int(c): i for i, c in enumerate(cids)}
+    cid_to_row = {c: i for i, c in enumerate(cids)}
     dim = cmat.shape[1]
     if dim % m:
         raise ValueError(f"ivfpq: dim {dim} not divisible by m={m}")
+    with_cid = _ivf_rows(nz, C_list, cids, id_col, vec_col)
 
     # residual sample for codebook training (hash-ordered, capped)
     sample = (
@@ -2205,7 +2025,7 @@ def ivfpq_build_index(
     X /= np.linalg.norm(X, axis=1, keepdims=True)
     R = X - cmat[[cid_to_row[int(r[1])] for r in sample]]
     model = _pq_fit_numpy(R, m=m, k=k)
-    model["centroid_ids"] = [int(c) for c in cids]
+    model["centroid_ids"] = cids
     model["centroids"] = cmat.tolist()
 
     import pandas as pd
@@ -2247,7 +2067,6 @@ def ivfpq_build_index(
         .partitionBy("centroid_id")
         .parquet(index_path)
     )
-    cents.unpersist()
     with open(index_path.rstrip("/") + "_ivfpq.json", "w") as f:
         _json.dump(model, f)
 
@@ -2380,21 +2199,6 @@ def ivfpq_search(
 # --- SemDeDup: semantic deduplication via cluster-then-prune ---------------
 
 
-def _cosine_double(va, vb, na, nb):
-    """Whole-stage-codegen double cosine: zip_with product + aggregate
-    sum, rounded to 9 decimals so threshold comparisons are stable
-    across partition layouts (addition order inside one fold is fixed
-    left-to-right, so the value is deterministic; rounding guards the
-    THRESHOLD against engine ulps, same convention as the MAD/radius
-    operators)."""
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(dot / (na * nb), 9)
-
-
 def semantic_dedup_pairs(
     corpus: DataFrame,
     eps: float = 0.05,
@@ -2403,7 +2207,6 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     refine_iters: int = 5,
     assignments: DataFrame | None = None,
-    verify: str = "arrow",
 ) -> DataFrame:
     """Within-cluster semantic-duplicate pairs, the SemDeDup blocking
     (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -2416,23 +2219,16 @@ def semantic_dedup_pairs(
     bit-parity). Pass ``assignments`` (a :func:`cluster_embeddings`
     result) to reuse an existing clustering.
 
-    ``verify`` picks the within-cluster pair engine:
-
-    - ``"arrow"`` (default): ONE grouped Arrow batch per cluster
-      computes the whole gram matrix ``V·Vᵀ`` in BLAS and emits only
-      the above-threshold upper triangle. The pair join never
-      materializes: the old equi-join shipped BOTH 64-double vectors
-      per candidate pair (~1 KB × Σ|C|² shuffle) and folded cosines in
-      interpreted higher-order expressions — the measured q151
-      bottleneck; the gram batch ships each vector ONCE per cluster
-      and turns the Σ|C|²·d multiplies into BLAS (q151 3.9s → see
-      bench). Memory per task is O(|C|²) for the mask — the same
-      budget the pair relation already cost, bounded by scaling
-      ``n_clusters`` with the corpus.
-    - ``"expr"``: the original codegen zip_with/aggregate fold over
-      the cluster equi-join — no Python anywhere, kept for UDF-free
-      deployments and as the differential twin (tests assert
-      arrow ≡ expr pair sets and 9-decimal cosines on planted data).
+    The verify is ONE grouped Arrow batch per cluster: it computes the
+    whole gram matrix ``V·Vᵀ`` in BLAS and emits only the
+    above-threshold upper triangle, so the pair relation never
+    materializes — each vector ships ONCE per cluster instead of once
+    per candidate pair, and the Σ|C|²·d multiplies are BLAS. Memory per
+    task is O(|C|²) for the mask, bounded by scaling ``n_clusters`` with
+    the corpus. Rounding to 9 decimals keeps the THRESHOLD stable
+    against summation-order ulps (the MAD/radius operators' convention);
+    the pair set and cosines are pinned against an expression-fold
+    verify over the cluster equi-join in ``tests/kmeans_oracle.py``.
 
     Compared to the LSH near-dup tier this trades probabilistic recall
     for the paper's semantic blocking: recall is exact WITHIN clusters
@@ -2440,16 +2236,15 @@ def semantic_dedup_pairs(
     the clusters themselves are reusable curation artifacts.
 
     Scale shape: the paper's own design point — all-pairs is confined
-    to each cluster (sum of |C_i|^2, not n^2; clusters are ~n/k), the
-    pair join is an equality join on cluster_id, and the cosine verify
-    runs only on co-clustered pairs, in whole-stage codegen. At 100 TB,
+    to each cluster (sum of |C_i|^2, not n^2; clusters are ~n/k) and
+    the verify runs only on co-clustered vectors. At 100 TB,
     ``n_clusters`` scales with the corpus so cluster occupancy stays
     bounded.
     """
+    import numpy as np
+
     if not 0.0 <= eps < 1.0:
         raise ValueError(f"eps must be in [0, 1), got {eps}")
-    if verify not in ("arrow", "expr"):
-        raise ValueError(f"unknown verify tier: {verify!r}")
     if assignments is None:
         assignments = cluster_embeddings(
             corpus, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
@@ -2469,61 +2264,36 @@ def semantic_dedup_pairs(
             )
         ).alias("__n"),
     ).filter(F.col("__n") > 0)
-    if verify == "arrow":
-        import numpy as np
+    id_type = dict(zip(corpus.columns, [f.dataType.simpleString() for f in corpus.schema.fields]))[id_col]
+    out_schema = f"id_a {id_type}, id_b {id_type}, cosine double"
+    threshold = 1.0 - eps
 
-        id_type = dict(zip(corpus.columns, [f.dataType.simpleString() for f in corpus.schema.fields]))[id_col]
-        out_schema = f"id_a {id_type}, id_b {id_type}, cosine double"
-        threshold = 1.0 - eps
+    def gram(pdf):
+        import pandas as pd
 
-        def gram(pdf):
-            import pandas as pd
-
-            m = len(pdf)
-            if m < 2:
-                return pd.DataFrame(
-                    {"id_a": [], "id_b": [], "cosine": []}
-                )
-            V = np.stack(pdf[vec_col].to_numpy())
-            n = pdf["__n"].to_numpy()
-            G = (V @ V.T) / np.outer(n, n)
-            iu, ju = np.triu_indices(m, k=1)
-            cos = np.round(G[iu, ju], 9)
-            keep = cos >= threshold
-            ids = pdf[id_col].to_numpy()
-            a_ids, b_ids = ids[iu[keep]], ids[ju[keep]]
-            swap = a_ids > b_ids
-            a_ids[swap], b_ids[swap] = b_ids[swap], a_ids[swap]
+        m = len(pdf)
+        if m < 2:
             return pd.DataFrame(
-                {"id_a": a_ids, "id_b": b_ids, "cosine": cos[keep]}
+                {"id_a": [], "id_b": [], "cosine": []}
             )
+        V = np.stack(pdf[vec_col].to_numpy())
+        n = pdf["__n"].to_numpy()
+        G = (V @ V.T) / np.outer(n, n)
+        iu, ju = np.triu_indices(m, k=1)
+        cos = np.round(G[iu, ju], 9)
+        keep = cos >= threshold
+        ids = pdf[id_col].to_numpy()
+        a_ids, b_ids = ids[iu[keep]], ids[ju[keep]]
+        swap = a_ids > b_ids
+        a_ids[swap], b_ids[swap] = b_ids[swap], a_ids[swap]
+        return pd.DataFrame(
+            {"id_a": a_ids, "id_b": b_ids, "cosine": cos[keep]}
+        )
 
-        return (
-            member.select("cluster_id", id_col, vec_col, "__n")
-            .groupBy("cluster_id")
-            .applyInPandas(gram, out_schema)
-        )
-    a = member.select(
-        "cluster_id",
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    b = member.select(
-        "cluster_id",
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
-        F.col("__n").alias("__nb"),
-    )
     return (
-        a.join(b, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            _cosine_double(
-                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(1.0 - eps))
+        member.select("cluster_id", id_col, vec_col, "__n")
+        .groupBy("cluster_id")
+        .applyInPandas(gram, out_schema)
     )
 
 
@@ -2535,21 +2305,12 @@ def semantic_dedup(
     vec_col: str = "embedding",
     refine_iters: int = 5,
     keep: str = "low_centroid_sim",
-    verify: str = "arrow",
-    engine: str = "arrow",
 ) -> DataFrame:
     """SemDeDup end to end: cluster -> within-cluster near-pairs ->
     connected components -> one survivor per duplicate group. Returns
     the surviving rows of ``corpus`` (all columns). The clustering runs
-    ONCE and is shared by the blocking and the survivor policy.
-
-    ``engine`` routes the k-means: ``"arrow"`` (default since r13) is
-    the exact-fold BLAS tier — bit-identical to ``"expr"`` (pinned by
-    differential tests; the fold kernel replays the expr tier's IEEE
-    ops in order) with driver-resident Lloyd state instead of the
-    expr tier's nested per-iteration broadcast/aggregate plan;
-    ``"expr"`` stays for UDF-free deployments. ``verify`` picks the
-    pair cosine (see :func:`semantic_dedup_pairs`).
+    ONCE (:func:`cluster_embeddings`) and is shared by the blocking
+    (:func:`semantic_dedup_pairs`) and the survivor policy.
 
     ``keep`` picks the survivor per duplicate component:
     ``"low_centroid_sim"`` keeps the member LEAST similar to its
@@ -2559,7 +2320,7 @@ def semantic_dedup(
     the result is reproducible either way.
 
     Scale shape: pairs from :func:`semantic_dedup_pairs` (cluster-
-    blocked, codegen cosine); components via the iterative min-label
+    blocked gram batches); components via the iterative min-label
     propagation in ``operators.dedup`` (bounded by pair count); the
     survivor pick is one window over component-sized groups; the final
     anti join is id-keyed. Nothing touches n^2.
@@ -2570,20 +2331,22 @@ def semantic_dedup(
 
     # the assignment feeds three consumers (pair blocking, the CC
     # iteration's lineage, the survivor policy) — persist it so the
-    # k-means passes run ONCE, not once per consumer (at 100 TB this
-    # is a materialized curation artifact anyway). Both persists are
-    # registered in the module scratch so callers that re-run the
-    # operator cold (the bench's per-run reset — r13 judge directive:
-    # runs 2..n must not reuse run 1's CacheManager entries) can drop
-    # them via clear_semantic_scratch().
+    # assign scan runs ONCE, not once per consumer (at 100 TB this is a
+    # materialized curation artifact anyway). Both persists are
+    # registered in the module scratch: the previous call's scratch is
+    # released here, so N calls hold one call's worth, and callers that
+    # re-run the operator cold (the bench's per-run reset: runs 2..n
+    # must not reuse run 1's CacheManager entries) can drop it via
+    # clear_semantic_scratch().
+    clear_semantic_scratch()
     assignments = cluster_embeddings(
         corpus, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
-        refine_iters=refine_iters, engine=engine,
+        refine_iters=refine_iters,
     ).persist()
     _SEMANTIC_SCRATCH.append(assignments)
     pairs = semantic_dedup_pairs(
         corpus, eps=eps, id_col=id_col, vec_col=vec_col,
-        assignments=assignments, verify=verify,
+        assignments=assignments,
     ).persist()
     _SEMANTIC_SCRATCH.append(pairs)
     comp = connected_components(

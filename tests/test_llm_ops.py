@@ -192,6 +192,8 @@ def test_ivf_index_append_exact_degeneracy(spark, sf_dir, tmp_path):
 
     with _pytest.raises(ValueError, match="centroids"):
         similarity.ivf_index_append(emb, str(tmp_path / "missing"))
+    with _pytest.raises(ValueError, match="centroids"):
+        similarity.ivf_query(spark, str(tmp_path / "missing"), probes)
 
 
 def test_ivf_index_recall_and_pruning(spark, sf_dir, tmp_path):

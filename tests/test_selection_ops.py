@@ -7,6 +7,7 @@ plain-numpy/pure-Python reference where the semantics are numeric.
 
 import math
 
+import kmeans_oracle
 import numpy as np
 import pytest
 
@@ -301,9 +302,9 @@ def test_dsir_sample_exact_k_deterministic_and_biased(spark):
 
 
 def test_semantic_dedup_pairs_arrow_equals_expr(spark):
-    """The BLAS gram tier and the codegen fold tier must emit the SAME
-    pair set with 9-decimal-identical cosines — the differential that
-    lets the fast tier be the default."""
+    """The BLAS gram verify and the oracle's expression fold over the
+    cluster equi-join must emit the SAME pair set with 9-decimal-
+    identical cosines."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -327,11 +328,11 @@ def test_semantic_dedup_pairs_arrow_equals_expr(spark):
     kw = dict(eps=0.05, assignments=assignments)
     arrow = {
         (r.id_a, r.id_b): r.cosine
-        for r in semantic_dedup_pairs(corpus, verify="arrow", **kw).collect()
+        for r in semantic_dedup_pairs(corpus, **kw).collect()
     }
     expr = {
         (r.id_a, r.id_b): r.cosine
-        for r in semantic_dedup_pairs(corpus, verify="expr", **kw).collect()
+        for r in kmeans_oracle.semantic_dedup_pairs(corpus, **kw).collect()
     }
     assignments.unpersist()
     assert set(arrow) == set(expr) and len(arrow) >= 10
@@ -339,22 +340,9 @@ def test_semantic_dedup_pairs_arrow_equals_expr(spark):
         assert abs(arrow[k] - expr[k]) < 2e-9
 
 
-def test_semantic_dedup_pairs_rejects_bad_verify(spark):
-    corpus = _planted_corpus(spark)
-    with pytest.raises(ValueError, match="verify"):
-        semantic_dedup_pairs(corpus, verify="gpu")
-
-
 def test_cluster_routing_arrow_equals_expr(spark):
-    """The BLAS routing tier must assign every vector to the same
-    cluster as the expression fold tier on planted (non-knife-edge)
-    data — the differential that certifies the fast tier."""
-    import numpy as np
-
-    from data_pipeline_demo_spark.operators.similarity import (
-        cluster_embeddings,
-    )
-
+    """cluster_embeddings must assign every vector to the same cluster
+    as the oracle's expression k-means on random data."""
     rng = np.random.default_rng(11)
     rows = [
         (i, [float(x) for x in rng.normal(size=8)]) for i in range(120)
@@ -363,18 +351,16 @@ def test_cluster_routing_arrow_equals_expr(spark):
     a = {
         r.vec_id: r.cluster_id
         for r in cluster_embeddings(
-            corpus, n_clusters=5, refine_iters=2, engine="arrow"
+            corpus, n_clusters=5, refine_iters=2
         ).collect()
     }
     e = {
         r.vec_id: r.cluster_id
-        for r in cluster_embeddings(
-            corpus, n_clusters=5, refine_iters=2, engine="expr"
+        for r in kmeans_oracle.cluster_embeddings(
+            corpus, n_clusters=5, refine_iters=2
         ).collect()
     }
     assert a == e
-    with pytest.raises(ValueError, match="engine"):
-        cluster_embeddings(corpus, engine="gpu")
 
 
 def test_retrieval_metrics_hand_computed(spark):
@@ -468,11 +454,11 @@ def test_retrieval_metrics_window_is_query_partitioned(spark):
 
 
 def test_decimal_ints_match_spark_cast(spark):
-    """The arrow k-means tier's integer replication of
-    cast(decimal(28,10)) must agree with Spark's own cast element-for-
-    element — boundary halves, float32-origin values, tiny and huge
-    magnitudes included (r13: the fast tier's means are built from
-    these integers, so this pin is what makes arrow ≡ expr exact)."""
+    """The k-means' integer replication of cast(decimal(28,10)) must
+    agree with Spark's own cast element-for-element — boundary halves,
+    float32-origin values, tiny and huge magnitudes included (the Lloyd
+    means are built from these integers, so this pin is what makes
+    them equal the expression oracle's decimal averages)."""
     from pyspark.sql import functions as F
 
     from data_pipeline_demo_spark.operators.similarity import _fold_kernels
@@ -539,11 +525,11 @@ def test_avg_decimal_semantics_match_spark(spark):
 
 
 def test_cluster_arrow_bitwise_equals_expr(spark):
-    """r13 pin: the arrow tier is BIT-identical to expr — assignments
-    AND sims — on random double and float32 corpora with planted
-    exact-duplicate vectors (duplicate corpus vectors can be sampled
-    as two identical centroids, exercising the tie-break knife edge
-    the r12 matmul tier was only 'probably' right on)."""
+    """cluster_embeddings is BIT-identical to the oracle's expression
+    k-means — assignments AND sims — on random double and float32
+    corpora with planted exact-duplicate vectors (duplicate corpus
+    vectors can be sampled as two identical centroids, exercising the
+    tie-break knife edge a normalized-matmul router gets wrong)."""
     import struct
 
     rng = np.random.default_rng(17)
@@ -553,13 +539,13 @@ def test_cluster_arrow_bitwise_equals_expr(spark):
     a = {
         r["vec_id"]: (r["cluster_id"], struct.pack("d", r["sim"]))
         for r in cluster_embeddings(
-            corpus, n_clusters=6, refine_iters=3, engine="arrow"
+            corpus, n_clusters=6, refine_iters=3
         ).collect()
     }
     e = {
         r["vec_id"]: (r["cluster_id"], struct.pack("d", r["sim"]))
-        for r in cluster_embeddings(
-            corpus, n_clusters=6, refine_iters=3, engine="expr"
+        for r in kmeans_oracle.cluster_embeddings(
+            corpus, n_clusters=6, refine_iters=3
         ).collect()
     }
     assert a == e
@@ -573,13 +559,13 @@ def test_cluster_arrow_bitwise_equals_expr(spark):
     a32 = {
         r["vec_id"]: (r["cluster_id"], struct.pack("d", r["sim"]))
         for r in cluster_embeddings(
-            corp32, n_clusters=5, refine_iters=4, engine="arrow"
+            corp32, n_clusters=5, refine_iters=4
         ).collect()
     }
     e32 = {
         r["vec_id"]: (r["cluster_id"], struct.pack("d", r["sim"]))
-        for r in cluster_embeddings(
-            corp32, n_clusters=5, refine_iters=4, engine="expr"
+        for r in kmeans_oracle.cluster_embeddings(
+            corp32, n_clusters=5, refine_iters=4
         ).collect()
     }
     assert a32 == e32
