@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also re-assert on sessions we did not create
@@ -135,8 +136,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going
+        except AnalysisException:
+            pass  # CANNOT_MODIFY_STATIC_CONFIG on this build — keep going
     # the engine's data sources are part of its query surface: a foreign
     # session running registry queries needs format("txtable") resolvable
     _register_engine_sources(spark)

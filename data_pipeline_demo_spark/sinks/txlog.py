@@ -1033,6 +1033,9 @@ def _abs(root_path: str, rel: str) -> str:
 # deleted rows), which can only fail to prune, never prune wrongly.
 
 DV_DIR = "dv"
+# what ``_write_dv_files`` writes: the manifest file reference and the
+# row's ``_metadata.row_index`` within that file
+_DV_SCHEMA = "__dv_file STRING, __dv_pos BIGINT"
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -1268,11 +1271,21 @@ def _read_buckets_logical(spark, root_path: str, manifest: dict, bucket_ids):
         return df
     cols = df.columns
     rows = _with_row_refs(spark, root_path, manifest, df, bucket_ids)
-    dvs = spark.read.parquet(
-        *[_abs(root_path, r) for r in dv_rels]
-    ).select("__dv_file", "__dv_pos")
+    dvs = _read_dvs(spark, root_path, dv_rels)
     return rows.join(dvs, ["__dv_file", "__dv_pos"], "left_anti").select(
         *cols
+    )
+
+
+def _read_dvs(spark, root_path: str, dv_rels: list[str]):
+    """The (``__dv_file``, ``__dv_pos``) rows of the given deletion-vector
+    files, read under their fixed schema so building the read runs no
+    schema-inference job. Both layouts ``_write_dv_files`` produces list
+    FILES: flat ``dv/<uuid>/part-*`` and per-bucket
+    ``dv/<uuid>/__bucket=N/part-*``. A file passed by name is its own
+    base path, so ``__bucket`` never surfaces as a partition column."""
+    return spark.read.schema(_DV_SCHEMA).parquet(
+        *[_abs(root_path, r) for r in dv_rels]
     )
 
 
@@ -2686,9 +2699,7 @@ def _txlog_delete_mor(
     if dv_rels:
         # rows a previous merge-on-read delete already removed must not
         # re-record (they would double-count dv_counts)
-        dvs = spark.read.parquet(
-            *[_abs(root_path, r) for r in dv_rels]
-        ).select("__dv_file", "__dv_pos")
+        dvs = _read_dvs(spark, root_path, dv_rels)
         matched = matched.join(dvs, ["__dv_file", "__dv_pos"], "left_anti")
     doomed = matched.select(
         "__dv_file", "__dv_pos", _bucket_of(key, num_buckets).alias(BUCKET_COL)
@@ -2769,9 +2780,7 @@ def _txlog_update_mor(
     )
     dv_rels = _dv_rels(prev, [str(b) for b in live])
     if dv_rels:
-        dvs = spark.read.parquet(
-            *[_abs(root_path, r) for r in dv_rels]
-        ).select("__dv_file", "__dv_pos")
+        dvs = _read_dvs(spark, root_path, dv_rels)
         matched = matched.join(dvs, ["__dv_file", "__dv_pos"], "left_anti")
     matched = matched.persist()
     try:

@@ -69,3 +69,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF0001
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)``: the number of Spark jobs ``fn()`` starts."""
+    from tools.plan_audit import count_jobs
+
+    return lambda fn: count_jobs(spark, fn)

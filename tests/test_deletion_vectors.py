@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from data_pipeline_demo_spark.sinks.txlog import (
     UnsupportedTableFeatureError,
+    _read_buckets_logical,
+    _read_dvs,
     compact_txtable,
     read_txtable,
     restore_txtable,
@@ -82,6 +84,53 @@ def test_mor_delete_matches_cow_delete(spark, tmp_path):
     assert _as_dict(read_txtable(spark, mor)) == _as_dict(
         read_txtable(spark, cow)
     )
+
+
+def test_logical_read_build_runs_no_jobs(spark, tmp_path, jobs_during):
+    """Building the logical bucket read ``lookup_with_index`` uses runs
+    no Spark job on a table with deletion vectors: the vectors are read
+    under their fixed schema, not inferred."""
+    root = _fresh(spark, tmp_path)
+    txlog_delete(
+        spark,
+        root,
+        keys=spark.createDataFrame([(3,), (7,)], "id long"),
+        mode="merge-on-read",
+    )
+    m = _manifest(tmp_path, "tx", 1)
+    built = []
+    assert (
+        jobs_during(
+            lambda: built.append(
+                _read_buckets_logical(spark, root, m, list(m["buckets"]))
+            )
+        )
+        == 0
+    )
+    assert _as_dict(built[0]) == {
+        i: f"v{i}" for i in range(40) if i not in (3, 7)
+    }
+
+
+def test_read_dvs_reads_both_layouts(spark, tmp_path):
+    """``_read_dvs`` returns exactly (__dv_file, __dv_pos) from the flat
+    layout and from the per-bucket ``__bucket=N`` layout a broad delete
+    writes."""
+    root = str(tmp_path / "tx")
+    doomed = spark.createDataFrame(
+        [("a.parquet", 1, 0), ("b.parquet", 5, 2)],
+        "__dv_file string, __dv_pos long, __bucket int",
+    )
+    doomed.drop("__bucket").repartition(1).write.parquet(f"{root}/dv/flat")
+    doomed.write.partitionBy("__bucket").parquet(f"{root}/dv/split")
+    for layout in ("flat", "split"):
+        rels = sorted(
+            str(p.relative_to(root))
+            for p in (tmp_path / "tx" / "dv" / layout).rglob("*.parquet")
+        )
+        df = _read_dvs(spark, root, rels)
+        assert df.columns == ["__dv_file", "__dv_pos"]
+        assert sorted(df.collect()) == [("a.parquet", 1), ("b.parquet", 5)]
 
 
 def test_mor_predicate_delete_and_stacking(spark, tmp_path):

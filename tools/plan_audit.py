@@ -19,7 +19,10 @@ SF-independent in shape) and flag
 - ``row_python``             BatchEvalPython (row-at-a-time Python).
 
 Exit code 1 iff any query raises a flag that is not in the allowlist
-below. Usage::
+below. The JSON line also reports, without failing, ``build_jobs``: the
+Spark jobs a SECOND build of each query still starts (the first build
+warmed the catalog's schema cache), for the queries where that is not
+zero — work the Python plan construction pays on every call. Usage::
 
     python tools/plan_audit.py [--sf /root/testdata/sf0.001] [query ...]
 
@@ -34,6 +37,7 @@ import json
 import os
 import re
 import sys
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -247,6 +251,19 @@ def audit_plan(plan: str) -> list[str]:
     return sorted(set(flags))
 
 
+def count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted under a fresh job group."""
+    sc = spark.sparkContext
+    gid = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
@@ -267,6 +284,7 @@ def main() -> int:
     qs = entry.queries()
     names = args.queries or sorted(qs)
     report: dict[str, list[str]] = {}
+    jobs: dict[str, int] = {}
     bad = 0
     for name in names:
         if name not in qs:
@@ -275,11 +293,14 @@ def main() -> int:
         try:
             df = qs[name](spark, args.sf)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            n = count_jobs(spark, lambda: qs[name](spark, args.sf))
         except Exception as exc:  # noqa: BLE001 - report, don't die
             report[name] = [f"error: {type(exc).__name__}: {exc}"[:200]]
             bad += 1
             print(f"ERR  {name}: {report[name][0]}")
             continue
+        if n:
+            jobs[name] = n
         flags = [
             f for f in audit_plan(plan)
             if (name, f) not in ALLOWLIST
@@ -289,7 +310,7 @@ def main() -> int:
             bad += 1
             print(f"FLAG {name}: {', '.join(flags)}")
     print(json.dumps({"audited": len(names), "flagged": bad,
-                      "flags": report}))
+                      "flags": report, "build_jobs": jobs}))
     return 1 if bad else 0
 
 
