@@ -17,8 +17,7 @@ Design for 100 TB:
   the buckets they hash into gain files, and no existing data file is
   read or rewritten — cost is O(new rows), never O(table). Bucket
   bookkeeping (row counts, zone-map min/max, null counts, Bloom words)
-  merges with the same append algebra the streaming/python writer uses
-  (``sources/txtable_writer.py:commit_files``): counts sum, stats
+  merges through ``sinks/manifest.append_files``: counts sum, stats
   widen value-aware, Blooms OR, and any bucket whose prior coverage is
   unknowable goes conservatively stat-less rather than wrong.
 - Load history lives in immutable ``copylog/`` sidecars — one O(new
@@ -47,10 +46,10 @@ from pyspark.sql.types import StructType
 
 from .txlog import (
     FEATURE_DV,
+    _JVM_ERRORS,
     _allocate_identity_columns,
     _apply_column_defaults,
     _apply_generated_columns,
-    _check_features,
     _commit_manifest,
     _copy_chain,
     _copy_history_map,
@@ -61,7 +60,13 @@ from .txlog import (
     _publish_touched_buckets,
     _write_copylog_sidecar,
 )
-from .manifest import next_manifest
+from .manifest import (
+    append_files,
+    check_features,
+    decimal_columns,
+    next_manifest,
+    norm_fs_path,
+)
 from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
 # Self-compaction backstop: past this many chain links the next COPY
@@ -177,16 +182,6 @@ def _list_source_files(
     return sorted(out)
 
 
-def _norm_path(p: str) -> str:
-    """Scheme-insensitive local-path normalization for set comparison:
-    ``file:///x``, ``file:/x`` and ``/x`` all name the same file."""
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
 def _plan_batch_read(
     spark: SparkSession,
     source: str,
@@ -216,13 +211,11 @@ def _plan_batch_read(
     set either way."""
     explicit = [p for p, _, _ in new_files]
     if pattern is None and len(new_files) == len(files) and files:
-        from .upsert import _hadoop_fs
-
         fs, src = _hadoop_fs(spark, source)
         try:
             is_dir = fs.getFileStatus(src).isDirectory()
-        except Exception:
-            is_dir = False
+        except _JVM_ERRORS:
+            is_dir = False  # a glob source names no single path
         if is_dir:
             base = src.toString().rstrip("/")
             rels = [
@@ -236,8 +229,8 @@ def _plan_batch_read(
                 batch = _read_new_files(
                     spark, [base], fmt, format_options, prev
                 )
-                want = {_norm_path(p) for p, _, _ in files}
-                got = {_norm_path(p) for p in batch.inputFiles()}
+                want = {norm_fs_path(p) for p, _, _ in files}
+                got = {norm_fs_path(p) for p in batch.inputFiles()}
                 if got == want:
                     return batch
     return _read_new_files(spark, explicit, fmt, format_options, prev)
@@ -317,7 +310,7 @@ def copy_into(
             "with CREATE TABLE txtable.`<path>` (<schema>) [KEY k] "
             "[BUCKETS n], or CREATE TABLE ... AS SELECT"
         )
-    _check_features(prev, frozenset({FEATURE_DV}), "COPY INTO")
+    check_features(prev, frozenset({FEATURE_DV}), "COPY INTO")
 
     files = _list_source_files(spark, source, pattern)
     # full history = sidecar chain (newest wins) + legacy embedded map;
@@ -403,8 +396,8 @@ def copy_into(
     # the write itself reveals which ones actually received files.
     touched = list(range(num_buckets))
     # fresh dicts: _publish writes the files and fills ONLY the new
-    # files' bookkeeping; the append algebra below merges it into the
-    # previous snapshot's without reading any existing file
+    # files' bookkeeping; append_files merges it into the previous
+    # snapshot's without reading any existing file
     new_buckets: dict[str, list[str]] = {}
     new_counts: dict[str, int] = {}
     new_stats: dict[str, dict] = {}
@@ -427,98 +420,6 @@ def copy_into(
     )
     if _idpin is not None:
         _idpin.unpersist()
-
-    buckets = {b: list(fl) for b, fl in prev["buckets"].items()}
-    row_counts = dict(prev["row_counts"])
-    bucket_stats = {
-        b: dict(st) for b, st in prev.get("bucket_stats", {}).items()
-    }
-    bucket_blooms = {
-        b: dict(w) for b, w in prev.get("bucket_blooms", {}).items()
-    }
-    bucket_nulls = {
-        b: dict(n) for b, n in prev.get("bucket_nulls", {}).items()
-    }
-    dec_cols = {
-        f["name"]
-        for f in (schema_fields or prev.get("schema") or [])
-        if str(f.get("type", "")).startswith("decimal")
-    }
-    from ..sources.txtable_writer import _widen
-
-    for bs, rels in new_buckets.items():
-        prior_files = bool(buckets.get(bs))
-        buckets[bs] = list(buckets.get(bs, [])) + list(rels)
-        row_counts[bs] = int(row_counts.get(bs, 0)) + int(new_counts[bs])
-        if stats_columns:
-            # null counts SUM (physical, per file); a bucket with prior
-            # files but no recorded counts stays absent — recording
-            # only the new files' nulls would wrongly prune IS NULL
-            if prior_files and bs not in prev.get("bucket_nulls", {}):
-                bucket_nulls.pop(bs, None)
-            else:
-                cur_n = bucket_nulls.get(bs, {})
-                add_n = new_nulls.get(bs, {})
-                bucket_nulls[bs] = {
-                    c: int(cur_n.get(c, 0)) + int(add_n.get(c, 0))
-                    for c in stats_columns
-                }
-            # zone maps widen value-aware; an all-null (or absent — the
-            # batch may predate the column) new range keeps the old
-            # bounds EXACT, and a bucket whose old rows have no recorded
-            # range stays range-less (same rules as commit_files)
-            new_st = {
-                c: (
-                    None
-                    if (v := new_stats.get(bs, {}).get(c)) in (None, [None, None])
-                    else v
-                )
-                for c in stats_columns
-            }
-            if prior_files:
-                old_st = bucket_stats.get(bs)
-                if old_st is None:
-                    merged = None
-                else:
-                    merged = {}
-                    for c in stats_columns:
-                        old_c, new_c = old_st.get(c), new_st.get(c)
-                        w = (
-                            old_c
-                            if new_c is None
-                            else _widen(old_c, new_c, decimal=c in dec_cols)
-                        )
-                        if w is not None:
-                            merged[c] = w
-            else:
-                merged = {c: v for c, v in new_st.items() if v is not None}
-            if merged:
-                bucket_stats[bs] = merged
-            else:
-                bucket_stats.pop(bs, None)
-        if bloom_columns:
-            # Bloom words OR (append commutes on filters); a column the
-            # batch doesn't carry contributes nothing — its new rows
-            # read NULL, which no equality probe matches, so the old
-            # filter stays exact. A bucket that already LOST its filter
-            # stays filter-less (old rows' bits are unrecoverable).
-            cur = bucket_blooms.get(bs)
-            nb = new_blooms.get(bs, {})
-            if prior_files and cur is None:
-                bucket_blooms.pop(bs, None)
-            else:
-                merged_bloom = dict(cur or {})
-                for c in bloom_columns:
-                    old_w = dict(merged_bloom.get(c, {}))
-                    for k, hx in (nb.get(c) or {}).items():
-                        pv = old_w.get(k)
-                        old_w[k] = format(
-                            int(hx, 16) | (int(pv, 16) if pv else 0), "016x"
-                        )
-                    if old_w:
-                        merged_bloom[c] = old_w
-                if merged_bloom:
-                    bucket_blooms[bs] = merged_bloom
 
     version = prev["version"] + 1
     # one O(new files) sidecar per load, chained onto the previous head
@@ -546,11 +447,23 @@ def copy_into(
         next_manifest(
             prev,
             "COPY INTO",
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
+            **append_files(
+                prev,
+                [
+                    (
+                        bs,
+                        rels,
+                        new_counts[bs],
+                        new_stats.get(bs, {}),
+                        new_blooms.get(bs, {}),
+                        new_nulls.get(bs, {}),
+                    )
+                    for bs, rels in new_buckets.items()
+                ],
+                stats_columns,
+                bloom_columns,
+                decimal_columns(schema_fields or prev.get("schema")),
+            ),
             schema=schema_fields,
             identity_high_water=identity_hwm,
             copy_files=None,

@@ -1,13 +1,21 @@
-"""The txtable manifest format: the one place that assembles, shards,
-reassembles and stat-encodes ``_commits/<version>.json``.
+"""The txtable log format: the one place that owns the table's file
+layout, assembles, shards, reassembles and stat-encodes
+``_commits/<version>.json``, and merges appended files into a
+manifest's bucket bookkeeping.
 
 Every writer builds its next manifest through :func:`next_manifest` —
 the JVM verbs (``sinks/txlog.py``, ``sinks/merge.py``,
 ``sinks/copy_into.py``) and the Python DataSource writer
 (``sources/txtable_writer.py``) alike — so a field added to the format
-is carried (or deliberately reset) in exactly one place. Shard IO is
-the only thing that differs between the JVM-FS and the Python-fs paths;
-:func:`deflate` and :func:`inflate` take it as a callable.
+is carried (or deliberately reset) in exactly one place. Both blind
+appends, ``format("txtable")`` APPEND and COPY INTO, fold their new
+files in with :func:`append_files`. Readers and writers on both sides
+name and list log files with :func:`commit_rel` and
+:func:`versions_in`, refuse unknown ``requires`` tokens with
+:func:`check_features`, and resolve column mapping with
+:func:`mapping_of`. Shard, listing and file IO is the only thing that
+differs between the JVM-FS and the Python-fs paths; this module takes
+it as a callable or as the names a caller listed.
 
 Pure Python on purpose (no pyspark, no py4j): the DataSource's
 driver-side worker imports it without a SparkSession.
@@ -22,6 +30,7 @@ import uuid
 
 FEATURE_DV = "deletion-vectors"
 FEATURE_SHARDS = "manifest-shards"
+COMMITS_DIR = "_commits"
 SHARDS_DIR = "_manifest_shards"
 DEFAULT_SHARD_GROUPS = 32
 BLOOM_BITS = 1024  # default creation-time bloom filter size
@@ -116,6 +125,110 @@ def dvs_without(base: dict | None, buckets) -> dict:
         for b, r in (base or {}).get("bucket_dvs", {}).items()
         if b not in cleared
     }
+
+
+# ---------------------------------------------------------------------------
+# File layout: versioned log files, file references, column mapping and
+# the table-features gate. Callers do the listing and reading; these
+# functions decide what the names and fields mean.
+# ---------------------------------------------------------------------------
+
+
+def commit_rel(version: int, log_dir: str = COMMITS_DIR) -> str:
+    """Root-relative path of ``version``'s file in a versioned log
+    directory: ``_commits/`` by default, or a sidecar log such as
+    ``_constraints/`` or ``_properties/``."""
+    return f"{log_dir}/{version:020d}.json"
+
+
+def versions_in(names) -> list[int]:
+    """The version numbers among a log directory's entry ``names``,
+    ascending. Dot-prefixed entries are protocol internals, never
+    versions: ``.tmp-*`` is a file being written (or a crash leftover)
+    and ``.quarantine-*`` an unparsable manifest set aside by a
+    reader."""
+    out = []
+    for name in names:
+        if name.startswith(".") or not name.endswith(".json"):
+            continue
+        try:
+            out.append(int(name[: -len(".json")]))
+        except ValueError:
+            continue
+    return sorted(out)
+
+
+def is_absolute_ref(rel: str) -> bool:
+    """True for a manifest file reference that is not relative to the
+    table root: a shallow clone's manifest points into its source
+    table's immutable files with a leading '/', a scheme, or the
+    'file:' form."""
+    return rel.startswith("/") or "://" in rel or rel.startswith("file:")
+
+
+def norm_fs_path(p: str) -> str:
+    """Canonical form for comparing local paths: 'file:' schemes
+    (``file:///x``, ``file:/x``) collapse to the plain absolute path;
+    other schemes pass through."""
+    if p.startswith("file:"):
+        p = p[len("file:"):]
+        while p.startswith("//"):
+            p = p[1:]
+    return p
+
+
+def physical_name(field: dict) -> str:
+    """A schema field's physical (in-file) column name."""
+    return (field.get("metadata") or {}).get("physical") or field["name"]
+
+
+def mapping_of(fields) -> dict[str, str]:
+    """logical → physical names for the schema ``fields`` whose names
+    differ (column mapping, Delta's name mode). Empty: mapping is
+    inactive, the fast path."""
+    return {
+        f["name"]: physical_name(f)
+        for f in fields or []
+        if physical_name(f) != f["name"]
+    }
+
+
+def decimal_columns(fields) -> set[str]:
+    """Names of the decimal-typed schema ``fields``: their zone-map
+    stats are stringified Decimals and compare by value."""
+    return {
+        f["name"]
+        for f in fields or []
+        if str(f.get("type", "")).startswith("decimal")
+    }
+
+
+class UnsupportedTableFeatureError(NotImplementedError):
+    """The manifest requires a table feature this code path does not
+    support. Refusing is the only safe answer: e.g. ignoring deletion
+    vectors would resurrect deleted rows."""
+
+
+def check_features(
+    manifest: dict, supported=frozenset(), op: str = "operate on"
+) -> None:
+    """Refuse (Delta's table-features model) a manifest whose
+    ``requires`` names a feature outside ``supported``."""
+    missing = sorted(set(manifest.get("requires", [])) - set(supported))
+    if not missing:
+        return
+    hint = (
+        " For deletion vectors, materialize them first (compact_txtable) "
+        "or use the JVM verbs (read_txtable / txlog_upsert / ...), which "
+        "support them."
+        if FEATURE_DV in missing
+        else ""
+    )
+    raise UnsupportedTableFeatureError(
+        f"cannot {op} this txtable: manifest version "
+        f"{manifest.get('version')} requires table feature(s) "
+        f"{missing} unsupported here.{hint}"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -257,6 +370,53 @@ def stat_cmp_pair(a, b, decimal_bound: bool):
     return a, b
 
 
+def widen(prev: list | None, new: list | None, decimal: bool = False):
+    """Union of two [lo, hi] stat intervals; ``None`` (no information)
+    poisons the result — absent stats must stay absent so the pruning
+    reader conservatively keeps the bucket. ``decimal=True`` (the
+    column is decimal-typed, so string stats are stringified Decimals):
+    string pairs COMPARE by Decimal value — '9.5' vs '12.0' must pick
+    hi='12.0', never the lexical '9.5' — while the stored strings pass
+    through unchanged (the rule :func:`stat_cmp_pair` applies).
+
+    When ``decimal`` is False but a compared string pair PARSES as
+    Decimal AND the lexical and numeric orders disagree, the column's
+    type is ambiguous (a legacy schema-less manifest can't say whether
+    '9.5'/'12.0' are stringified decimals or genuine strings): picking
+    lexically could record a numerically too-NARROW bound that a
+    Decimal-probing reader then uses to wrongly prune rows. Drop the
+    stat to None — conservative, the bucket stays kept. Incomparable
+    values (a schema-evolved type) drop it too."""
+    if prev is None or new is None:
+        return None
+
+    def _key(v):
+        if decimal and isinstance(v, str):
+            try:
+                return _dec.Decimal(v)
+            except _dec.InvalidOperation:
+                return v
+        return v
+
+    def _ambiguous(a, b) -> bool:
+        if decimal or not (isinstance(a, str) and isinstance(b, str)):
+            return False
+        try:
+            da, db = _dec.Decimal(a), _dec.Decimal(b)
+        except _dec.InvalidOperation:
+            return False  # not decimal-shaped: lexical is the order
+        return (a <= b) != (da <= db)  # orders disagree: can't pick safely
+
+    if _ambiguous(prev[0], new[0]) or _ambiguous(prev[1], new[1]):
+        return None
+    try:
+        lo = prev[0] if _key(prev[0]) <= _key(new[0]) else new[0]
+        hi = prev[1] if _key(prev[1]) >= _key(new[1]) else new[1]
+    except TypeError:
+        return None
+    return [lo, hi]
+
+
 def zone_maps_overlap(stats: dict | None, bounds: dict[str, tuple]) -> bool:
     """False iff a bucket's zone maps (``stats``: ``{col: [min, max]}``)
     prove that no row lies inside every ``{col: (lo, hi)}`` window
@@ -280,3 +440,112 @@ def zone_maps_overlap(stats: dict | None, bounds: dict[str, tuple]) -> bool:
             if a > b:
                 return False
     return True
+
+
+# ---------------------------------------------------------------------------
+# Append algebra, shared by the two blind appends: ``format("txtable")``
+# APPEND/OVERWRITE (``sources/txtable_writer.commit_files``) and COPY
+# INTO (``sinks/copy_into.copy_into``). New files never overlap old
+# ones, so bookkeeping merges without reading any existing file.
+# ---------------------------------------------------------------------------
+
+def _or_words(old: dict, new: dict) -> dict:
+    out = dict(old)
+    for k, hx in new.items():
+        pv = out.get(k)
+        out[k] = format(int(hx, 16) | (int(pv, 16) if pv else 0), "016x")
+    return out
+
+
+def append_files(
+    prev: dict | None,
+    entries,
+    stats_columns,
+    bloom_columns,
+    decimal_columns=frozenset(),
+) -> dict:
+    """``prev``'s bucket bookkeeping with ``entries`` appended: the
+    ``buckets``, ``row_counts``, ``bucket_stats``, ``bucket_blooms`` and
+    ``bucket_nulls`` changes for :func:`next_manifest`. ``prev=None``
+    appends to an empty snapshot (an overwrite).
+
+    Each entry is ``(bucket, files, rows, stats[, blooms[, nulls]])``
+    for files newly written into one bucket; entries apply in order,
+    so a later entry sees an earlier one's files as prior files.
+
+    - Files join the bucket's list and ``rows`` add to its row count.
+    - ``stats`` (``{col: [lo, hi]}``): bounds widen by value
+      (:func:`widen`; ``decimal_columns`` compare as Decimals). A
+      column that is absent or ``[None, None]`` holds only nulls, so
+      the old bounds stay exact; a ``None`` range is unknown and the
+      column goes stat-less for the bucket. A bucket whose prior files
+      have no stats, or no range for a column, stays without one.
+    - ``nulls`` (``{col: n}``) sum; a column missing from them was
+      absent from the batch, so all ``rows`` are null there. A legacy
+      entry without them, or a bucket whose prior files have no
+      counts, loses its counts.
+    - ``blooms`` (``{col: {word: hex16}}``) OR into the bucket's
+      filter, one word map per bloom column (empty when no word is
+      set); ``None`` (the writer could not hash a column's type) or a
+      bucket whose prior files lost their filter leaves the bucket
+      without one. A legacy entry without blooms counts as ``None``.
+    """
+    prev = prev or {}
+    buckets = {b: list(fl) for b, fl in prev.get("buckets", {}).items()}
+    row_counts = dict(prev.get("row_counts", {}))
+    bucket_stats = {b: dict(s) for b, s in prev.get("bucket_stats", {}).items()}
+    bucket_blooms = {b: dict(w) for b, w in prev.get("bucket_blooms", {}).items()}
+    bucket_nulls = {b: dict(n) for b, n in prev.get("bucket_nulls", {}).items()}
+    for b, files, rows, stats, *rest in entries:
+        blooms = rest[0] if rest else None
+        nulls = rest[1] if len(rest) > 1 else None
+        bs = str(b)
+        prior = bool(buckets.get(bs))
+        buckets[bs] = buckets.get(bs, []) + list(files)
+        row_counts[bs] = int(row_counts.get(bs, 0)) + int(rows)
+        if stats_columns:
+            if nulls is None or (prior and bs not in bucket_nulls):
+                bucket_nulls.pop(bs, None)
+            else:
+                cur_n = bucket_nulls.get(bs, {})
+                bucket_nulls[bs] = {
+                    c: int(cur_n.get(c, 0)) + int(nulls.get(c, rows))
+                    for c in stats_columns
+                }
+            merged = {}
+            # prior files without recorded stats stay without: any range
+            # would be too narrow for their rows
+            if not prior or bs in bucket_stats:
+                old = bucket_stats.get(bs, {}) if prior else {}
+                for c in stats_columns:
+                    new = stats.get(c, [None, None])
+                    if new is None:
+                        continue  # unknown range: the column goes stat-less
+                    if list(new) == [None, None]:
+                        w = old.get(c)  # all null: old bounds stay exact
+                    elif prior:
+                        w = widen(old.get(c), new, decimal=c in decimal_columns)
+                    else:
+                        w = new
+                    if w is not None:
+                        merged[c] = w
+            if merged:
+                bucket_stats[bs] = merged
+            else:
+                bucket_stats.pop(bs, None)
+        if bloom_columns:
+            cur = bucket_blooms.get(bs)
+            if blooms is None or (prior and cur is None):
+                bucket_blooms.pop(bs, None)
+            else:
+                bucket_blooms[bs] = {
+                    c: _or_words((cur or {}).get(c, {}), blooms.get(c) or {})
+                    for c in bloom_columns
+                }
+    return {
+        "buckets": buckets,
+        "row_counts": row_counts,
+        "bucket_stats": bucket_stats,
+        "bucket_blooms": bucket_blooms,
+        "bucket_nulls": bucket_nulls,
+    }

@@ -67,7 +67,6 @@ from .txlog import (
     ConcurrentCommitError,  # noqa: F401  (re-export for callers)
     _apply_generated_columns,
     _bucket_of,
-    _check_features,
     _commit_manifest,
     _enforce_table_constraints,
     _latest_manifest,
@@ -75,7 +74,7 @@ from .txlog import (
     _read_buckets_logical,
     FEATURE_DV,
 )
-from .manifest import dvs_without, next_manifest
+from .manifest import check_features, dvs_without, next_manifest
 from .upsert import BUCKET_COL
 
 
@@ -142,7 +141,7 @@ def txlog_merge(
             "existing target; create it with CREATE TABLE or a first "
             "write"
         )
-    _check_features(prev, frozenset({FEATURE_DV}), "merge")
+    check_features(prev, frozenset({FEATURE_DV}), "merge")
     key = prev["key"]
     if on_key is not None and on_key != key:
         raise ValueError(

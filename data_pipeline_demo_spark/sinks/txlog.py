@@ -45,26 +45,40 @@ import time
 import uuid
 
 from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import (
+    COMMITS_DIR,
     DEFAULT_SHARD_GROUPS,
     FEATURE_DV,
     FEATURE_SHARDS,  # noqa: F401  (re-export)
     SHARDS_DIR,
+    UnsupportedTableFeatureError,  # noqa: F401  (re-export)
+    check_features,
+    commit_rel,
     deflate as deflate_manifest,
     dvs_without,
     inflate as inflate_manifest,
+    is_absolute_ref,
+    mapping_of,
     next_manifest,
+    norm_fs_path,
+    physical_name,
     shard_groups_of,
     stat_value,
+    versions_in,
     zone_maps_overlap,
 )
 from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
-COMMITS_DIR = "_commits"
 DATA_DIR = "data"
+
+# What a failed JVM call raises: py4j's wrapper, or the pyspark error
+# Spark's handler converts some JVM classes into (IllegalArgument-,
+# UnsupportedOperationException, ...).
+_JVM_ERRORS = (Py4JJavaError, CapturedException)
 
 # Per-bucket commit bookkeeping (row counts + zone-map min/max/null
 # counts) rides the write action's own Observation when the conditional
@@ -98,25 +112,14 @@ class ConcurrentCommitError(RuntimeError):
     """
 
 
-def _commit_path(jvm, root, version: int):
-    return jvm.org.apache.hadoop.fs.Path(root, f"{COMMITS_DIR}/{version:020d}.json")
+def _commit_path(jvm, root, version: int, log_dir: str = COMMITS_DIR):
+    return jvm.org.apache.hadoop.fs.Path(root, commit_rel(version, log_dir))
 
 
-def _manifest_versions(fs, commits) -> list[int]:
-    """Committed version numbers under ``_commits/``, ascending.
-    Dot-prefixed entries are protocol internals, never manifests:
-    ``.tmp-*`` is a manifest being written (or a crash leftover) and
-    ``.quarantine-*`` an unparsable manifest set aside by a reader."""
-    versions = []
-    for st in fs.listStatus(commits):
-        name = st.getPath().getName()
-        if name.startswith(".") or not name.endswith(".json"):
-            continue
-        try:
-            versions.append(int(name[:-5]))
-        except ValueError:
-            continue
-    return sorted(versions)
+def _listed_versions(fs, log_dir) -> list[int]:
+    """Versions in the log directory ``log_dir`` (a Hadoop Path),
+    ascending: one ``listStatus``."""
+    return versions_in(st.getPath().getName() for st in fs.listStatus(log_dir))
 
 
 def _latest_manifest(spark: SparkSession, root_path: str) -> dict | None:
@@ -137,7 +140,7 @@ def _latest_manifest(spark: SparkSession, root_path: str) -> dict | None:
     commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
     if not fs.exists(commits):
         return None
-    for v in reversed(_manifest_versions(fs, commits)):
+    for v in reversed(_listed_versions(fs, commits)):
         try:
             return _read_manifest(spark, root_path, v)
         except (ValueError, json.JSONDecodeError):
@@ -149,7 +152,7 @@ def _latest_manifest(spark: SparkSession, root_path: str) -> dict | None:
                         commits, f".quarantine-{p.getName()}"
                     ),
                 )
-            except Exception:
+            except _JVM_ERRORS:
                 pass  # read-only reader: skipping is enough
     return None
 
@@ -454,21 +457,6 @@ def _manifest_struct(manifest: dict):
 # a parquet read and logical to physical right before a parquet write.
 
 
-def _phys_of(f: dict) -> str:
-    """A schema field's physical (in-file) column name."""
-    return (f.get("metadata") or {}).get("physical") or f["name"]
-
-
-def _mapping_of(manifest: dict) -> dict[str, str]:
-    """logical → physical for fields where they DIFFER (empty dict =
-    mapping inactive, the fast path)."""
-    return {
-        f["name"]: _phys_of(f)
-        for f in manifest.get("schema", [])
-        if _phys_of(f) != f["name"]
-    }
-
-
 def _physical_struct(manifest: dict):
     """The manifest schema as a StructType under PHYSICAL names — what
     the parquet files actually contain."""
@@ -481,7 +469,7 @@ def _physical_struct(manifest: dict):
         {
             "type": "struct",
             "fields": [
-                {**f, "name": _phys_of(f), "metadata": {}} for f in fields
+                {**f, "name": physical_name(f), "metadata": {}} for f in fields
             ],
         }
     )
@@ -489,7 +477,7 @@ def _physical_struct(manifest: dict):
 
 def _to_logical(df, manifest: dict):
     """Rename a physically-named frame to logical names (post-read)."""
-    mapping = _mapping_of(manifest)
+    mapping = mapping_of(manifest.get("schema"))
     if not mapping:
         return df
     phys_to_log = {p: l for l, p in mapping.items()}
@@ -506,7 +494,7 @@ def _to_physical(df, manifest: dict | None):
     Columns outside the schema (BUCKET_COL, helper cols) pass through."""
     if manifest is None:
         return df
-    mapping = _mapping_of(manifest)
+    mapping = mapping_of(manifest.get("schema"))
     if not mapping:
         return df
     return df.select(
@@ -999,7 +987,7 @@ def _abs(root_path: str, rel: str) -> str:
     table root; a shallow clone's manifest carries ABSOLUTE references
     into its source table's immutable files (see
     :func:`shallow_clone_txtable`) — those pass through unchanged."""
-    if rel.startswith("/") or "://" in rel or rel.startswith("file:"):
+    if is_absolute_ref(rel):
         return rel
     return root_path.rstrip("/") + "/" + rel
 
@@ -1036,27 +1024,6 @@ DV_DIR = "dv"
 # what ``_write_dv_files`` writes: the manifest file reference and the
 # row's ``_metadata.row_index`` within that file
 _DV_SCHEMA = "__dv_file STRING, __dv_pos BIGINT"
-
-
-class UnsupportedTableFeatureError(RuntimeError):
-    """The manifest requires a table feature this code path does not
-    support. Refusing is the only safe answer: e.g. ignoring deletion
-    vectors would resurrect deleted rows."""
-
-
-def _check_features(
-    manifest: dict, supported: frozenset = frozenset(), op: str = "operate on"
-) -> None:
-    missing = sorted(set(manifest.get("requires", [])) - set(supported))
-    if missing:
-        raise UnsupportedTableFeatureError(
-            f"cannot {op} this txtable: manifest version "
-            f"{manifest.get('version')} requires table feature(s) "
-            f"{missing} unsupported here. For deletion vectors, "
-            "materialize them first (compact_txtable) or use the JVM "
-            "verbs (read_txtable / txlog_upsert / ...), which support "
-            "them."
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -1165,17 +1132,6 @@ def _compacted_copy_fields(
     return _single_copy_log(spark, root_path, _history_of(links, legacy))
 
 
-def _norm_fs_path(p: str) -> str:
-    """Canonical form for comparing a manifest-derived absolute path
-    with Spark's ``_metadata.file_path`` URI: local-fs 'file:' schemes
-    collapse to a plain absolute path; other schemes pass through."""
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
 # ASCII characters java.net.URI leaves raw in a path: RFC 2396
 # unreserved + mark + the pchar punctuation. Everything else ASCII
 # (space, '%', '#', '?', brackets, controls, ...) percent-encodes.
@@ -1218,7 +1174,7 @@ def _file_ref_lookup(spark, root_path: str, manifest: dict, bucket_ids):
     snapshot's file list). The manifest REF is what deletion vectors
     store: spelling-independent and stable across reader URI forms."""
     pairs = [
-        (_uri_fs_path(_norm_fs_path(_abs(root_path, rel))), rel)
+        (_uri_fs_path(norm_fs_path(_abs(root_path, rel))), rel)
         for b in bucket_ids
         for rel in manifest["buckets"].get(str(b), [])
     ]
@@ -1227,7 +1183,7 @@ def _file_ref_lookup(spark, root_path: str, manifest: dict, bucket_ids):
 
 def _fp_norm():
     """Normalized `_metadata.file_path` (local 'file:' scheme collapsed
-    to a plain absolute path) — matches `_norm_fs_path` python-side."""
+    to a plain absolute path) — matches `norm_fs_path` python-side."""
     return F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
 
 
@@ -1691,7 +1647,7 @@ def _publish_touched_buckets(
         # names restored from the physical write mapping; with no stats
         # or bloom columns this is a footer-only count (no data pages
         # read)
-        mapping = _mapping_of(manifest) if manifest else {}
+        mapping = mapping_of(manifest.get("schema")) if manifest else {}
         need = list(dict.fromkeys(stats_columns + bloom_columns))
         rb = spark.read.option("basePath", out_dir).parquet(out_dir).select(
             F.col(BUCKET_COL),
@@ -1876,7 +1832,7 @@ def txlog_upsert(
         raise ValueError("txn_app_id and txn_version must be set together")
     prev = _latest_manifest(spark, root_path)
     if prev is not None:
-        _check_features(
+        check_features(
             prev,
             frozenset({FEATURE_DV}),
             "REPLACE" if replace else "MERGE into",
@@ -2198,7 +2154,7 @@ def _version_at_timestamp(
     commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
     candidates = [
         v
-        for v in _manifest_versions(fs, commits)
+        for v in _listed_versions(fs, commits)
         if _read_manifest(spark, root_path, v, inflate=False).get(
             "committed_at_ms", 0
         )
@@ -2228,7 +2184,7 @@ def _version_from_timestamp(
     commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
     candidates = [
         v
-        for v in _manifest_versions(fs, commits)
+        for v in _listed_versions(fs, commits)
         if _read_manifest(spark, root_path, v, inflate=False).get(
             "committed_at_ms", 0
         )
@@ -2347,7 +2303,7 @@ def read_txtable(
     )
     if manifest is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(manifest, frozenset({FEATURE_DV}), "read")
+    check_features(manifest, frozenset({FEATURE_DV}), "read")
     live = sorted(manifest["buckets"], key=int)
     predicate = None
     if prune_between:
@@ -2548,7 +2504,7 @@ def txlog_delete(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(prev, frozenset({FEATURE_DV}), "DELETE from")
+    check_features(prev, frozenset({FEATURE_DV}), "DELETE from")
     if mode == "merge-on-read":
         return _txlog_delete_mor(spark, root_path, prev, keys, where)
     key = prev["key"]
@@ -2912,7 +2868,7 @@ def txlog_update(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(prev, frozenset({FEATURE_DV}), "UPDATE")
+    check_features(prev, frozenset({FEATURE_DV}), "UPDATE")
     if mode == "merge-on-read":
         return _txlog_update_mor(spark, root_path, prev, set, where)
     key = prev["key"]
@@ -3069,7 +3025,7 @@ def txlog_add_column(
     # historical file could hold under it — tombstoned (dropped)
     # physicals and every current field's physical are off-limits;
     # mint a unique physical and map the logical name onto it
-    taken = set(dropped) | {_phys_of(f) for f in fields}
+    taken = set(dropped) | {physical_name(f) for f in fields}
     meta: dict = {}
     if name in taken:
         meta["physical"] = f"{name}__p{prev['version'] + 1}_{uuid.uuid4().hex[:8]}"
@@ -3132,7 +3088,7 @@ def txlog_drop_column(spark: SparkSession, root_path: str, name: str) -> int:
     # tombstone the PHYSICAL name (what files actually hold the bytes
     # under); for unmapped fields that is the logical name, unchanged
     # pre-mapping behavior
-    doomed_phys = next(_phys_of(f) for f in fields if f["name"] == name)
+    doomed_phys = next(physical_name(f) for f in fields if f["name"] == name)
     fields = [f for f in fields if f["name"] != name]
     dropped = list(prev.get("dropped_columns", []))
     dropped.append(doomed_phys)
@@ -3219,7 +3175,7 @@ def txlog_rename_column(
     for f in fields:
         if f["name"] == old:
             meta = dict(f.get("metadata") or {})
-            meta["physical"] = _phys_of(f)  # pin the in-file name
+            meta["physical"] = physical_name(f)  # pin the in-file name
             f["name"] = new
             f["metadata"] = meta
     # an identity column renames freely (no expression references it —
@@ -3282,7 +3238,7 @@ def txtable_changes(
     if m_to is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
     for m in (m_from, m_to):
-        _check_features(m, frozenset({FEATURE_DV}), "read changes from")
+        check_features(m, frozenset({FEATURE_DV}), "read changes from")
     key = m_to["key"]
 
     # a bucket changed iff its file list OR its deletion-vector list
@@ -3339,7 +3295,7 @@ def txtable_changes(
     by_phys: dict[str, set] = {}
     for mm in (m_from, m_to):
         for f in mm.get("schema", []):
-            by_phys.setdefault(_phys_of(f), set()).add(f["name"])
+            by_phys.setdefault(physical_name(f), set()).add(f["name"])
     conflicted = sorted(p for p, names in by_phys.items() if len(names) > 1)
     if conflicted:
         raise ValueError(
@@ -3466,7 +3422,7 @@ def shallow_clone_txtable(
     # manifest would need the source's DV files too, and vacuum/compact
     # interplay across tables gets subtle. Materialize first
     # (compact_txtable) or deep-clone (reads logically).
-    _check_features(src, frozenset(), "shallow-clone")
+    check_features(src, frozenset(), "shallow-clone")
     tgt = _latest_manifest(spark, target_root)
     if tgt is not None and not replace:
         raise FileExistsError(
@@ -3477,7 +3433,7 @@ def shallow_clone_txtable(
     if tgt is not None:
         # CREATE OR REPLACE ... CLONE: the target is redefined as the
         # clone in one commit; its prior versions stay time-travelable
-        _check_features(tgt, frozenset({FEATURE_DV}), "replace")
+        check_features(tgt, frozenset({FEATURE_DV}), "replace")
     fs, root = _hadoop_fs(spark, source_root)
     qualified = fs.makeQualified(root).toString()
     # the clone carries the SOURCE snapshot's table state. A sharded
@@ -3690,7 +3646,7 @@ def txtable_history(spark: SparkSession, root_path: str) -> list[dict]:
     if not fs.exists(commits):
         return []
     out = []
-    for v in _manifest_versions(fs, commits):
+    for v in _listed_versions(fs, commits):
         # metadata-only read: a sharded root's row_counts names the
         # same non-empty bucket set without touching any shard file
         m = _read_manifest(spark, root_path, v, inflate=False)
@@ -3762,7 +3718,7 @@ def restore_txtable(
     src = _read_manifest(spark, root_path, version)
     # the new manifest copies src's fields: an unknown required feature
     # would be silently STRIPPED (its bookkeeping dropped) — refuse
-    _check_features(src, frozenset({FEATURE_DV}), "restore to")
+    check_features(src, frozenset({FEATURE_DV}), "restore to")
     # the restored snapshot's state (COPY history included) on top of
     # the CURRENT table's sharding mode; the identity high-water mark
     # never regresses (ids issued by the undone versions stay burned)
@@ -3803,7 +3759,7 @@ def truncate_txtable(spark: SparkSession, root_path: str) -> int:
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(prev, frozenset({FEATURE_DV}), "truncate")
+    check_features(prev, frozenset({FEATURE_DV}), "truncate")
     removed = sum(int(v) for v in prev.get("row_counts", {}).values()) - sum(
         int(v) for v in prev.get("dv_counts", {}).values()
     )
@@ -3874,7 +3830,7 @@ def vacuum_txtable(
     commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
     if not fs.exists(commits):
         return 0
-    versions = _manifest_versions(fs, commits)
+    versions = _listed_versions(fs, commits)
     if not versions:
         return 0
     keep = set(versions[-max(1, keep_last):])
@@ -3889,7 +3845,7 @@ def vacuum_txtable(
     live_shards: set[str] = set()
     for v in keep:
         m = _read_manifest(spark, root_path, v)
-        _check_features(m, frozenset({FEATURE_DV}), "vacuum")
+        check_features(m, frozenset({FEATURE_DV}), "vacuum")
         for rels in m["buckets"].values():
             live.update(rels)
         # deletion-vector sidecars referenced by a kept manifest are as
@@ -4006,24 +3962,11 @@ def vacuum_txtable(
         cdir = jvm.org.apache.hadoop.fs.Path(root, dir_name)
         if not fs.exists(cdir):
             continue
-        cvers = []
-        for st in fs.listStatus(cdir):
-            nm = st.getPath().getName()
-            if nm.endswith(".json") and not nm.startswith("."):
-                try:
-                    cvers.append(int(nm[: -len(".json")]))
-                except ValueError:
-                    continue
-        for v in cvers:
-            if cvers and v != max(cvers):
-                if not dry_run:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(
-                            cdir, f"{v:020d}.json"
-                        ),
-                        False,
-                    )
-                deleted += 1
+        cvers = _listed_versions(fs, cdir)
+        for v in cvers[:-1]:
+            if not dry_run:
+                fs.delete(_commit_path(jvm, root, v, dir_name), False)
+            deleted += 1
         if legacy_name is not None:
             legacy = jvm.org.apache.hadoop.fs.Path(root, legacy_name)
             if cvers and fs.exists(legacy):
@@ -4073,7 +4016,7 @@ def compact_txtable(
     manifest = _latest_manifest(spark, root_path)
     if manifest is None:
         return 0
-    _check_features(manifest, frozenset({FEATURE_DV}), "compact")
+    check_features(manifest, frozenset({FEATURE_DV}), "compact")
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
     dv_buckets = set(manifest.get("bucket_dvs", {}))
@@ -4246,20 +4189,10 @@ def _latest_sidecar_json(
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
     d = jvm.org.apache.hadoop.fs.Path(root, dir_name)
-    best = None
-    if fs.exists(d):
-        for st in fs.listStatus(d):
-            nm = st.getPath().getName()
-            if not nm.endswith(".json") or nm.startswith("."):
-                continue
-            try:
-                v = int(nm[: -len(".json")])
-            except ValueError:
-                continue
-            if best is None or v > best:
-                best = v
+    versions = _listed_versions(fs, d) if fs.exists(d) else []
+    best = versions[-1] if versions else None
     if best is not None:
-        p = jvm.org.apache.hadoop.fs.Path(d, f"{best:020d}.json")
+        p = _commit_path(jvm, root, best, dir_name)
     else:
         if legacy_file is None:
             return None, {}
@@ -4318,7 +4251,7 @@ def _publish_sidecar_json(
     d = jvm.org.apache.hadoop.fs.Path(root, dir_name)
     fs.mkdirs(d)
     version = 0 if base_version is None else base_version + 1
-    dst = jvm.org.apache.hadoop.fs.Path(d, f"{version:020d}.json")
+    dst = _commit_path(jvm, root, version, dir_name)
     payload = json.dumps(payload_obj).encode("utf-8")
     if not _log_store.put_if_absent(spark, fs, d, dst, payload):
         raise ConcurrentCommitError(
@@ -4518,7 +4451,7 @@ def analyze_txtable(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(prev, frozenset({FEATURE_DV}), "analyze")
+    check_features(prev, frozenset({FEATURE_DV}), "analyze")
     stats_columns = (
         list(prev.get("stats_columns", []))
         if stats_columns is None
@@ -4621,7 +4554,7 @@ def rebucket_txtable(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    _check_features(prev, frozenset({FEATURE_DV}), "rebucket")
+    check_features(prev, frozenset({FEATURE_DV}), "rebucket")
     key = prev["key"]
     if new_num_buckets == prev["num_buckets"]:
         return prev["version"]  # already there: no-op, no empty commit

@@ -357,7 +357,7 @@ def _changed_since(
     ``rebucket_txtable``) — index pruning cannot help there."""
     try:
         m_wm = _read_manifest(spark, table_root, wm)
-    except Exception:
+    except FileNotFoundError:
         return None
     if m_wm["num_buckets"] != latest["num_buckets"]:
         return None

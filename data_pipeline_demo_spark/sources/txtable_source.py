@@ -39,9 +39,11 @@ e.g. ``.option("fs.anon", "true")``. Without fsspec the old loud
 NotImplementedError stands (the JVM-side readers in ``sinks.txlog``
 speak any Hadoop FS regardless). Manifest file references are
 root-relative normally, but a shallow clone's manifest carries
-ABSOLUTE refs into its source table (``sinks.txlog._abs`` contract);
+ABSOLUTE refs into its source table (``sinks.manifest.is_absolute_ref``);
 those are resolved against the REF's own scheme, not joined onto the
-clone root.
+clone root. Log file names and listings, the ``requires`` gate and
+column mapping come from ``sinks/manifest.py``, the same functions the
+JVM verbs use; this module only does the IO.
 
 SQL access: ``spark.read.format("txtable").load(root)
 .createOrReplaceTempView("t")`` then query ``t``. ``CREATE TABLE …
@@ -58,6 +60,7 @@ import os
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -66,9 +69,18 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..sinks.manifest import FEATURE_DV, FEATURE_SHARDS, inflate
+from ..sinks.manifest import (
+    COMMITS_DIR,
+    FEATURE_DV,
+    FEATURE_SHARDS,
+    check_features as _check_features,  # the name of a parameter below
+    commit_rel,
+    inflate,
+    is_absolute_ref,
+    mapping_of,
+    versions_in,
+)
 
-COMMITS_DIR = "_commits"
 CHANGE_COL = "_change_type"
 
 # ---------------------------------------------------------------------------
@@ -205,12 +217,11 @@ def _fs_root(path: str, fs_options: dict) -> tuple[object, str]:
 
 
 def _resolve_ref(fs, root: str, rel: str, fs_options: dict) -> tuple[object, str]:
-    """Resolve one manifest file reference. Mirrors
-    ``sinks.txlog._abs``: normally root-relative; a shallow clone's
-    manifest carries absolute refs (leading '/', a scheme, or the
-    'file:' form) into its source table's immutable files — those
-    resolve against their OWN filesystem, never joined onto root."""
-    if rel.startswith("/") or "://" in rel or rel.startswith("file:"):
+    """Resolve one manifest file reference: normally root-relative; an
+    absolute ref (a shallow clone's, into its source table's immutable
+    files) resolves against its OWN filesystem, never joined onto
+    root."""
+    if is_absolute_ref(rel):
         return _fs_root(rel, fs_options)
     return fs, root.rstrip("/") + "/" + rel
 
@@ -224,17 +235,10 @@ def _manifest_versions(fs, root: str) -> list[int]:
     commits = root.rstrip("/") + "/" + COMMITS_DIR
     if not fs.isdir(commits):
         raise FileNotFoundError(f"no committed txtable at {root}")
-    out = []
-    for name in fs.list_names(commits):
-        if name.startswith(".") or not name.endswith(".json"):
-            continue
-        try:
-            out.append(int(name[:-5]))
-        except ValueError:
-            continue
+    out = versions_in(fs.list_names(commits))
     if not out:
         raise FileNotFoundError(f"no committed txtable at {root}")
-    return sorted(out)
+    return out
 
 
 # table features the python DataSource implements end-to-end (snapshot
@@ -242,27 +246,15 @@ def _manifest_versions(fs, root: str) -> list[int]:
 _SUPPORTED_FEATURES = frozenset({FEATURE_DV, FEATURE_SHARDS})
 
 
-def _check_manifest_features(manifest: dict) -> None:
-    """Protocol gate (Delta table-features model): a manifest carrying
-    ``requires`` tokens this reader does not implement must be REFUSED,
-    not half-read — silently ignoring a feature like deletion vectors
-    would resurrect deleted rows."""
-    req = sorted(set(manifest.get("requires", [])) - _SUPPORTED_FEATURES)
-    if req:
-        raise NotImplementedError(
-            f"txtable manifest version {manifest.get('version')} requires "
-            f"table feature(s) {req} the python DataSource does not "
-            "support; read via the JVM-path sinks.txlog verbs"
-        )
-
-
 def _read_manifest(
     fs, root: str, version: int, check_features: bool = True
 ) -> dict:
-    p = root.rstrip("/") + f"/{COMMITS_DIR}/{version:020d}.json"
+    p = root.rstrip("/") + "/" + commit_rel(version)
     m = json.loads(fs.open_bytes(p).decode("utf-8"))
     if check_features:
-        _check_manifest_features(m)
+        # refused, not half-read: ignoring e.g. deletion vectors would
+        # resurrect deleted rows
+        _check_features(m, _SUPPORTED_FEATURES, "read")
     return inflate(
         m,
         lambda rel: json.loads(
@@ -361,18 +353,6 @@ def _union_arrow_schema(refs: list[tuple]):
             if field.name not in fields:
                 fields[field.name] = field
     return pa.schema(list(fields.values()))
-
-
-def _mapping_from_manifest(manifest: dict) -> dict[str, str]:
-    """logical → PHYSICAL (in-file) column name, for fields where they
-    differ (column mapping, Delta's name-mode — agreement with the JVM
-    reader's ``sinks/txlog.py:_mapping_of``). Empty = inactive."""
-    out = {}
-    for f in manifest.get("schema", []):
-        phys = (f.get("metadata") or {}).get("physical") or f["name"]
-        if phys != f["name"]:
-            out[f["name"]] = phys
-    return out
 
 
 def _aligned_table(ref: tuple, schema, mapping: dict | None = None):
@@ -622,7 +602,7 @@ class _TxTableBatchReader(DataSourceReader):
         self.fs_options = fs_options
         self.manifest = _read_manifest(fs, root, version)
         self.arrow_schema = _manifest_arrow_schema(self.manifest)
-        self.mapping = _mapping_from_manifest(self.manifest)
+        self.mapping = mapping_of(self.manifest.get("schema"))
         if self.arrow_schema is None:  # legacy manifest: union of footers
             refs = _snapshot_refs(fs, root, self.manifest, fs_options)
             self.arrow_schema = _union_arrow_schema(refs) if refs else None
@@ -798,8 +778,8 @@ def _change_partitions(
                 f"{m_to.get('version')}); read each side with time "
                 "travel instead"
             )
-    old_mapping = _mapping_from_manifest(m_from)
-    new_mapping = _mapping_from_manifest(m_to)
+    old_mapping = mapping_of(m_from.get("schema"))
+    new_mapping = mapping_of(m_to.get("schema"))
     parts = []
     for b in changed:
         o_refs, o_rels, o_dvs = _bucket_side(fs, root, m_from, b, fs_options)
@@ -1109,7 +1089,7 @@ def register_txtable_source(spark) -> None:
     spark.dataSource.register(TxTableDataSource)
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
+    except AnalysisException:
         # a build where this conf is immutable still works via
         # .option("pushdown", "false")
         pass

@@ -30,13 +30,15 @@ Execution shape (the 100 TB story):
   JVM-written one. Each task keeps at most ``num_buckets`` open
   ParquetWriters and never materializes more than one incoming batch.
 - The driver collects only metadata (file refs + row counts + zone-map
-  min/max per bucket) and commits a manifest version through a
+  min/max, null counts and Bloom words per bucket), folds it into the
+  snapshot with ``sinks.manifest.append_files`` — the append algebra
+  COPY INTO uses too — and commits a manifest version through a
   python-side content-atomic claim (tmp + ``os.link`` — link fails iff
   the destination exists, the POSIX no-overwrite primitive; fsspec
   backends use exclusive-create where supported). A crash before the
   claim leaves the table at the previous version with the new files
   invisible (and vacuum-able) — same story as the JVM LogStore path
-  (``sinks/txlog.py:226``).
+  (``sinks.txlog._commit_manifest``).
 - APPEND COMMUTES, so a lost commit race is retried against the
   winner's manifest instead of failing the job: re-read latest, re-add
   the same file refs, claim the next version. Overwrite retries the
@@ -70,13 +72,19 @@ from pyspark.sql.datasource import (
 )
 
 from ..sinks.manifest import (
+    COMMITS_DIR,
     FEATURE_DV,
+    append_files,
+    check_features,
+    commit_rel,
+    decimal_columns,
     deflate,
+    mapping_of,
     next_manifest,
     stat_value,
+    widen,
 )
 from .txtable_source import (
-    COMMITS_DIR,
     _fs_root,
     _latest_version,
     _LocalFS,
@@ -413,7 +421,7 @@ def put_manifest_if_absent(fs, root: str, version: int, payload: bytes,
     effort — raw object stores wanting a hard guarantee use the HTTP
     claim or the JVM ConditionalPutLogStore path, ``sinks/txlog.py``)."""
     commits = root.rstrip("/") + "/" + COMMITS_DIR
-    dst = f"{commits}/{version:020d}.json"
+    dst = root.rstrip("/") + "/" + commit_rel(version)
     if http_claim is not None:
         return _http_conditional_put(http_claim[0], http_claim[1], dst, payload)
     if isinstance(fs, _LocalFS):
@@ -445,63 +453,22 @@ def put_manifest_if_absent(fs, root: str, version: int, payload: bytes,
         return True
 
 
-def _widen(prev: list | None, new: list | None, decimal: bool = False):
-    """Union of two [lo, hi] stat intervals; ``None`` (no information)
-    poisons the result — absent stats must stay absent so the pruning
-    reader conservatively keeps the bucket. ``decimal=True`` (the
-    column is decimal-typed, so string stats are stringified Decimals):
-    string pairs COMPARE by Decimal value — '9.5' vs '12.0' must pick
-    hi='12.0', never the lexical '9.5' — while the stored strings pass
-    through unchanged (parity with sinks.manifest.stat_cmp_pair).
-
-    When ``decimal`` is False but a compared string pair PARSES as
-    Decimal AND the lexical and numeric orders disagree, the column's
-    type is ambiguous (a legacy schema-less manifest can't say whether
-    '9.5'/'12.0' are stringified decimals or genuine strings): picking
-    lexically could record a numerically too-NARROW bound that a
-    Decimal-probing reader then uses to wrongly prune rows. Drop the
-    stat to None — conservative, the bucket stays kept."""
-    if prev is None or new is None:
-        return None
-
-    import decimal as _dec
-
-    def _key(v):
-        if decimal and isinstance(v, str):
-            try:
-                return _dec.Decimal(v)
-            except _dec.InvalidOperation:
-                return v
-        return v
-
-    def _ambiguous(a, b) -> bool:
-        if decimal or not (isinstance(a, str) and isinstance(b, str)):
-            return False
-        try:
-            da, db = _dec.Decimal(a), _dec.Decimal(b)
-        except _dec.InvalidOperation:
-            return False  # not decimal-shaped: lexical is the order
-        return (a <= b) != (da <= db)  # orders disagree: can't pick safely
-
-    if _ambiguous(prev[0], new[0]) or _ambiguous(prev[1], new[1]):
-        return None
-    try:
-        lo = prev[0] if _key(prev[0]) <= _key(new[0]) else new[0]
-        hi = prev[1] if _key(prev[1]) >= _key(new[1]) else new[1]
-    except TypeError:
-        return None  # incomparable (schema-evolved type): drop stats
-    return [lo, hi]
-
-
 # ---------------------------------------------------------------------------
 # Executor-side task writer (shared by batch and streaming).
 # ---------------------------------------------------------------------------
 
 
+# a column whose running range could not be widened (``widen`` gave
+# None): it stays range-less for the rest of the task
+_NO_RANGE = object()
+
+
 @dataclass
 class _TxFiles(WriterCommitMessage):
     """One task's written files: (bucket, root-relative path, rows,
-    {stats_col: [lo, hi] | None})."""
+    stats, blooms, nulls), which ``commit_files`` folds in with
+    ``sinks.manifest.append_files`` (stats ``{col: [lo, hi] | None}``,
+    ``None`` for a dropped range)."""
 
     entries: list = field(default_factory=list)
 
@@ -562,17 +529,18 @@ class _TaskState:
         nn = self.nulls[b]
         for c in self.stats_columns:
             if c not in tbl.column_names:
+                nn[c] += tbl.num_rows  # the column reads NULL in these rows
                 continue
             col = tbl.column(c)
             nn[c] += int(col.null_count)
-            if col.null_count == len(col):
+            cur = st.get(c)
+            if col.null_count == len(col) or cur is _NO_RANGE:
                 continue
             mm = pc.min_max(col)
             # RAW python values here (Decimal/date compare by value);
             # finish() stringifies via stat_value for the wire format
             lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            cur = st.get(c)
-            st[c] = [lo, hi] if cur is None else (_widen(cur, [lo, hi]) or [lo, hi])
+            st[c] = [lo, hi] if cur is None else widen(cur, [lo, hi]) or _NO_RANGE
 
     def _track_blooms(self, b: int, tbl):
         """OR this slice's bloom positions into the bucket's running
@@ -688,7 +656,9 @@ class _TaskState:
                     self.rels[b],
                     self.rows[b],
                     {
-                        c: [stat_value(v[0]), stat_value(v[1])]
+                        c: None
+                        if v is _NO_RANGE
+                        else [stat_value(v[0]), stat_value(v[1])]
                         for c, v in self.stats[b].items()
                         if v is not None
                     },
@@ -752,7 +722,7 @@ def _resolve_table_spec(fs, root: str, options: dict, schema) -> dict:
             # _to_physical boundary — a mapped table keeps its
             # df.write.format("txtable") path (round-11 judge
             # directive #3; this was a loud refusal before)
-            "mapping": _mapping_of_fields(m.get("schema", [])),
+            "mapping": mapping_of(m.get("schema")),
         }
     else:
         spec = {
@@ -834,17 +804,6 @@ def _resolve_table_spec(fs, root: str, options: dict, schema) -> dict:
         else None
     )
     return spec
-
-
-def _mapping_of_fields(fields: list) -> dict[str, str]:
-    """Logical→physical name map from manifest schema field metadata —
-    only non-identity entries (mirrors ``sinks.txlog._mapping_of``)."""
-    out = {}
-    for f in fields or []:
-        phys = (f.get("metadata") or {}).get("physical")
-        if phys not in (None, f["name"]):
-            out[f["name"]] = phys
-    return out
 
 
 def _resolve_commit_schema(prev: dict | None, spec: dict, overwrite: bool):
@@ -985,14 +944,8 @@ def commit_files(
         # dropping them with the buckets they covered. Any OTHER
         # required feature is unknown here — refuse rather than
         # silently strip it from the next manifest.
-        unknown_req = sorted(
-            set((prev or {}).get("requires", [])) - {FEATURE_DV}
-        )
-        if unknown_req:
-            raise NotImplementedError(
-                f"txtable at {root} requires table feature(s) "
-                f"{unknown_req} the python writer does not support"
-            )
+        if prev is not None:
+            check_features(prev, frozenset({FEATURE_DV}), "write to")
         if spec.get("identity_hwm_base") is not None and prev is not None:
             # identity allocation does NOT commute: the task files
             # already hold ids computed against the base marks, so if
@@ -1030,7 +983,7 @@ def commit_files(
                     f"{spec['num_buckets']}); a concurrent creation or "
                     "rebucket won the race — re-run the write"
                 )
-            cur_mapping = _mapping_of_fields(prev.get("schema", []))
+            cur_mapping = mapping_of(prev.get("schema"))
             if cur_mapping != spec.get("mapping", {}):
                 # a RENAME/re-ADD committed between plan and commit:
                 # this write's files carry the PLAN-time physical names
@@ -1066,119 +1019,9 @@ def commit_files(
             return False
         if txn_app_id is not None:
             app_txns[txn_app_id] = txn_version
-        if prev is not None and not overwrite:
-            buckets = {b: list(fl) for b, fl in prev["buckets"].items()}
-            row_counts = dict(prev["row_counts"])
-            bucket_stats = {
-                b: dict(st) for b, st in prev.get("bucket_stats", {}).items()
-            }
-            bucket_blooms = {
-                b: dict(st) for b, st in prev.get("bucket_blooms", {}).items()
-            }
-            bucket_nulls = {
-                b: dict(st) for b, st in prev.get("bucket_nulls", {}).items()
-            }
-        else:
-            buckets, row_counts, bucket_stats = {}, {}, {}
-            bucket_blooms = {}
-            bucket_nulls = {}
-        bloom_columns = (
-            prev.get("bloom_columns", []) if prev is not None else []
-        )
         schema_fields, dropped_columns = _resolve_commit_schema(
             prev, spec, overwrite
         )
-        # decimal-typed stats columns stringify on the wire: the merge
-        # below must compare them by VALUE (never lexically) — same
-        # rule as the reader's stat_cmp_pair
-        _fields_for_dec = schema_fields or (prev or {}).get("schema") or []
-        dec_cols = {
-            f["name"]
-            for f in _fields_for_dec
-            if str(f.get("type", "")).startswith("decimal")
-        }
-        for entry in entries:
-            # entries may be legacy 4-tuples (no bloom payload): treat
-            # as blooms=None → pop touched filters (pre-r7 conservative)
-            b, rel, rows, stats, *rest = entry
-            blooms = rest[0] if rest else None
-            nulls = rest[1] if len(rest) > 1 else None
-            bs = str(b)
-            prior_files = buckets.get(bs)
-            buckets.setdefault(bs, []).append(rel)
-            row_counts[bs] = row_counts.get(bs, 0) + rows
-            if spec["stats_columns"]:
-                # null counts SUM under append (physical, per file);
-                # a bucket with prior files but no recorded counts (or
-                # a legacy task payload) must stay absent — recording
-                # only the new files' nulls would wrongly prune IS NULL
-                if nulls is None or (
-                    prior_files and bs not in bucket_nulls
-                ):
-                    bucket_nulls.pop(bs, None)
-                else:
-                    cur_n = bucket_nulls.get(bs, {})
-                    bucket_nulls[bs] = {
-                        c: cur_n.get(c, 0) + int(nulls.get(c, 0))
-                        for c in spec["stats_columns"]
-                    }
-            if bloom_columns:
-                # append COMMUTES on bloom filters too: the task's sparse
-                # words (bit-parity numpy build, `_track_blooms`) OR into
-                # the bucket's existing filter — old rows stay covered,
-                # new rows gain coverage, pruning stays exact. A write
-                # that couldn't hash a column's type (blooms=None) pops
-                # the filter instead (never publish wrong bits), as does
-                # appending to a bucket that already lost its filter
-                # (the old rows' bits are unrecoverable without a scan —
-                # the next JVM MERGE of the bucket rebuilds from scratch).
-                cur = bucket_blooms.get(bs)
-                if blooms is None or (prior_files and cur is None):
-                    bucket_blooms.pop(bs, None)
-                else:
-                    merged_bloom = {}
-                    for c in bloom_columns:
-                        old_w = dict((cur or {}).get(c, {}))
-                        for k, hx in (blooms.get(c) or {}).items():
-                            prev_hx = old_w.get(k)
-                            v = int(hx, 16) | (
-                                int(prev_hx, 16) if prev_hx else 0
-                            )
-                            old_w[k] = format(v, "016x")
-                        merged_bloom[c] = old_w
-                    bucket_blooms[bs] = merged_bloom
-            if spec["stats_columns"]:
-                new_st = {
-                    c: stats.get(c) for c in spec["stats_columns"]
-                }
-                if prior_files:
-                    old_st = bucket_stats.get(bs)
-                    if old_st is None:
-                        # pre-existing files with no recorded stats:
-                        # recording only the new files' range would
-                        # wrongly prune the old rows
-                        merged = None
-                    else:
-                        merged = {}
-                        for c in spec["stats_columns"]:
-                            old_c, new_c = old_st.get(c), new_st.get(c)
-                            # all-null append leaves old bounds EXACT
-                            # (nulls never match a range predicate)
-                            w = (
-                                old_c
-                                if new_c is None
-                                else _widen(old_c, new_c, decimal=c in dec_cols)
-                            )
-                            if w is not None:
-                                merged[c] = w
-                else:
-                    merged = {
-                        c: v for c, v in new_st.items() if v is not None
-                    }
-                if merged:
-                    bucket_stats[bs] = merged
-                else:
-                    bucket_stats.pop(bs, None)
         # table-level declarations carry forward on APPEND (a blind
         # insert changes rows, never the table's contract); OVERWRITE
         # replaces the snapshot and resets them with the schema —
@@ -1223,13 +1066,15 @@ def commit_files(
             "OVERWRITE" if overwrite else "APPEND",
             key=spec["key"],
             num_buckets=spec["num_buckets"],
-            buckets=buckets,
-            row_counts=row_counts,
+            **append_files(
+                None if overwrite else prev,
+                [(b, [rel], *rest) for b, rel, *rest in entries],
+                spec["stats_columns"],
+                (prev or {}).get("bloom_columns", []),
+                decimal_columns(schema_fields or (prev or {}).get("schema")),
+            ),
             app_txns=app_txns,
             stats_columns=spec["stats_columns"],
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
             schema=schema_fields,
             dropped_columns=dropped_columns,
             **identity,

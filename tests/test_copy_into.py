@@ -747,3 +747,103 @@ def test_list_source_files_authority_uri_uses_hadoop_path(spark, tmp_path):
     bogus = f"file://{str(land).lstrip('/')}"  # first segment = authority
     with pytest.raises(Exception, match="Wrong FS|file://"):
         _list_source_files(spark, bogus, None)
+
+
+def test_batch_read_probe_skips_only_jvm_errors(spark, tmp_path, monkeypatch):
+    """The flat-directory fast path probes the source with one
+    ``getFileStatus``. A glob source fails that probe on the JVM side
+    and loads through the explicit file list; an error from anywhere
+    else propagates instead of silently turning the fast path off."""
+    from data_pipeline_demo_spark.sinks import copy_into as ci
+
+    land = str(tmp_path / "land")
+    root = str(tmp_path / "t")
+    _create(spark, root)
+    _land_parquet(spark, land, "a", [(1, "x"), (2, "y")], "id long, v string")
+    r = copy_into(spark, root, os.path.join(land, "*.parquet"), "parquet")
+    assert r["num_loaded_files"] == 1 and _vals(spark, root) == [(1, "x"), (2, "y")]
+
+    class _StatusFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def getFileStatus(self, path):
+            raise TypeError("not IO")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = ci._hadoop_fs
+
+    def patched(spark_, path):
+        fs, qualified = real(spark_, path)
+        return _StatusFails(fs), qualified
+
+    monkeypatch.setattr(ci, "_hadoop_fs", patched)
+    _land_parquet(spark, land, "b", [(3, "z")], "id long, v string")
+    with pytest.raises(TypeError, match="not IO"):
+        copy_into(spark, root, land, "parquet", force=True)
+
+
+def test_copy_into_bucket_opened_without_bloom_column_keeps_a_filter(
+    spark, tmp_path
+):
+    """A COPY INTO batch without the Bloom column opens its buckets with
+    an empty word map (the rows read NULL, which no probe matches), the
+    rule ``format("txtable")`` appends follow, so later loads keep
+    those buckets' filters. Probes return exactly the rows a full scan
+    finds."""
+    land = str(tmp_path / "land")
+    root = str(tmp_path / "t")
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` (id BIGINT, v STRING) KEY id "
+        "BUCKETS 8 STATS (id) BLOOM (v)",
+    )
+    txlog_upsert(
+        spark, spark.createDataFrame([(0, "s0")], "id long, v string"), root
+    )
+    before = set(_latest_manifest(spark, root)["buckets"])
+    _land_parquet(spark, land + "/a", "ids", [(i,) for i in range(1, 6)], "id long")
+    copy_into(spark, root, land + "/a", "parquet")
+    m = _latest_manifest(spark, root)
+    opened = set(m["buckets"]) - before
+    assert opened
+    assert all(m["bucket_blooms"][b] == {"v": {}} for b in opened)
+    _land_parquet(
+        spark, land + "/b", "vals",
+        [(i, f"s{i}") for i in range(6, 40)], "id long, v string",
+    )
+    copy_into(spark, root, land + "/b", "parquet")
+    m = _latest_manifest(spark, root)
+    assert set(m["bucket_blooms"]) == set(m["buckets"])
+    truth = {r.id: r.v for r in read_txtable(spark, root).collect()}
+    for probe in ("s0", "s7", "s39", "missing"):
+        got = read_txtable(spark, root, bloom_eq={"v": probe}).filter(
+            F.col("v") == probe
+        )
+        assert sorted(r.id for r in got.collect()) == sorted(
+            i for i, v in truth.items() if v == probe
+        )
+    got = read_txtable(spark, root, prune_between={"id": (2, 4)}).filter(
+        F.col("id").between(2, 4)
+    )
+    assert sorted(r.id for r in got.collect()) == [2, 3, 4]
+
+
+def test_copy_into_without_a_stats_column_counts_its_nulls(spark, tmp_path):
+    """Loaded rows that lack a declared stats column read NULL there;
+    the bucket's null count includes them, so IS NULL pruning keeps
+    them."""
+    land = str(tmp_path / "land")
+    root = str(tmp_path / "t")
+    _create(spark, root, ddl="id BIGINT, v STRING", extra="STATS (v)")
+    txlog_upsert(
+        spark, spark.createDataFrame([(0, "a")], "id long, v string"), root
+    )
+    _land_parquet(spark, land, "ids", [(i,) for i in range(1, 6)], "id long")
+    copy_into(spark, root, land, "parquet")
+    nulls = _latest_manifest(spark, root)["bucket_nulls"]
+    assert sum(n["v"] for n in nulls.values()) == 5
+    got = read_txtable(spark, root, prune_is_null={"v": True})
+    assert sorted(r.id for r in got.collect()) == [1, 2, 3, 4, 5]

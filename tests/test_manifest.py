@@ -12,9 +12,15 @@ import pytest
 from data_pipeline_demo_spark.sinks.manifest import (
     FEATURE_DV,
     FEATURE_SHARDS,
+    UnsupportedTableFeatureError,
+    append_files,
+    check_features,
+    commit_rel,
     deflate,
     inflate,
+    mapping_of,
     next_manifest,
+    versions_in,
 )
 
 PKG = Path(__file__).resolve().parents[1] / "data_pipeline_demo_spark"
@@ -43,6 +49,30 @@ def _stamping_dicts(root: Path) -> list[str]:
     return out
 
 
+def _layout_literals(root: Path) -> list[str]:
+    """String constants that spell the commit log's layout: the
+    ``_commits`` directory or a ``020d`` version file name (an f-string
+    format spec or a ``format`` argument). Docstrings are prose and do
+    not count."""
+    out = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        prose = {
+            id(node.value)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in prose
+                and ("_commits" in node.value or "020d" in node.value)
+            ):
+                out.append(f"{path.relative_to(root)}:{node.lineno}")
+    return out
+
+
 def test_only_the_manifest_module_assembles_manifests():
     """Guard: every commit builds its manifest through
     ``next_manifest``. A hand-built commit dict elsewhere in the
@@ -51,6 +81,195 @@ def test_only_the_manifest_module_assembles_manifests():
         h for h in _stamping_dicts(PKG) if not h.startswith("sinks/manifest.py")
     ]
     assert hits == [], f"hand-built commit dicts: {hits}"
+    # the log's file layout has one owner too: every other module names
+    # log files through commit_rel / COMMITS_DIR
+    hits = [
+        h for h in _layout_literals(PKG) if not h.startswith("sinks/manifest.py")
+    ]
+    assert hits == [], f"log layout spelled outside sinks/manifest.py: {hits}"
+
+
+def test_layout_helpers():
+    assert commit_rel(7) == "_commits/00000000000000000007.json"
+    assert commit_rel(0, "_properties") == "_properties/00000000000000000000.json"
+    names = [
+        commit_rel(v).split("/")[1] for v in (3, 1, 12)
+    ] + [".tmp-abc", ".quarantine-00000000000000000004.json", "x.json",
+         "_manifest_shards", "5.json"]
+    assert versions_in(names) == [1, 3, 5, 12]
+    fields = [
+        {"name": "a", "metadata": {}},
+        {"name": "b", "metadata": {"physical": "col-1"}},
+        {"name": "c", "metadata": {"physical": "c"}},
+        {"name": "d"},
+    ]
+    assert mapping_of(fields) == {"b": "col-1"} and mapping_of(None) == {}
+
+
+def test_check_features_refuses_unknown_tokens():
+    check_features({"requires": [FEATURE_DV]}, {FEATURE_DV}, "read")
+    check_features({}, frozenset(), "read")
+    with pytest.raises(UnsupportedTableFeatureError, match="quantum"):
+        check_features({"version": 3, "requires": ["quantum"]}, {FEATURE_DV})
+    # one error type for every caller: the JVM verbs caught RuntimeError,
+    # the python DataSource and writer NotImplementedError
+    assert issubclass(UnsupportedTableFeatureError, NotImplementedError)
+    assert issubclass(UnsupportedTableFeatureError, RuntimeError)
+
+
+# ---------------------------------------------------------------------------
+# Append algebra: one table per rule. Each case appends ``entries`` to
+# ``prev`` (stats column "x", bloom column "s") and pins the bucket-0
+# bookkeeping that comes out; ``absent`` marks a field with no entry
+# for the bucket.
+# ---------------------------------------------------------------------------
+
+_PREV = {
+    "buckets": {"0": ["old.parquet"]},
+    "row_counts": {"0": 5},
+    "bucket_stats": {"0": {"x": [10, 20]}},
+    "bucket_nulls": {"0": {"x": 1}},
+    "bucket_blooms": {"0": {"s": {"0": "00000000000000f0"}}},
+}
+absent = object()
+
+
+def _without(field):
+    return {k: v for k, v in _PREV.items() if k != field}
+
+
+# case: (prev, entries, decimal_columns, {field: bucket-0 value})
+_APPEND_CASES = {
+    "counts sum": (
+        _PREV,
+        [("0", ["a"], 3, {"x": [11, 12]}, {}, {"x": 2}),
+         ("0", ["b"], 4, {"x": [11, 12]}, {}, {"x": 0})],
+        (),
+        {"buckets": ["old.parquet", "a", "b"], "row_counts": 12,
+         "bucket_nulls": {"x": 3}},
+    ),
+    "all-null append keeps the old bounds exact": (
+        _PREV,
+        [("0", ["a"], 3, {}, {}, {"x": 3})],
+        (),
+        {"bucket_stats": {"x": [10, 20]}, "bucket_nulls": {"x": 4}},
+    ),
+    "[None, None] means no range": (
+        _PREV,
+        [("0", ["a"], 3, {"x": [None, None]}, {}, {"x": 3})],
+        (),
+        {"bucket_stats": {"x": [10, 20]}},
+    ),
+    "[None, None] in a new bucket records no range": (
+        None,
+        [("0", ["a"], 3, {"x": [None, None]}, {}, {"x": 3})],
+        (),
+        {"bucket_stats": absent, "bucket_nulls": {"x": 3}},
+    ),
+    "bounds widen": (
+        _PREV,
+        [("0", ["a"], 3, {"x": [2, 15]}, {}, {"x": 0})],
+        (),
+        {"bucket_stats": {"x": [2, 20]}},
+    ),
+    "an unknown range drops the column": (
+        _PREV,
+        [("0", ["a"], 3, {"x": None}, {}, {"x": 0})],
+        (),
+        {"bucket_stats": absent},
+    ),
+    "prior files with no stats stay stat-less": (
+        _without("bucket_stats"),
+        [("0", ["a"], 3, {"x": [1, 2]}, {}, {"x": 0})],
+        (),
+        {"bucket_stats": absent},
+    ),
+    "a column missing from the null counts is all null": (
+        _PREV,
+        [("0", ["a"], 3, {}, {}, {})],
+        (),
+        {"bucket_nulls": {"x": 4}, "bucket_stats": {"x": [10, 20]}},
+    ),
+    "prior files with no null counts stay count-less": (
+        _without("bucket_nulls"),
+        [("0", ["a"], 3, {"x": [1, 2]}, {}, {"x": 0})],
+        (),
+        {"bucket_nulls": absent},
+    ),
+    "decimal bounds widen by value": (
+        {**_PREV, "bucket_stats": {"0": {"x": ["1.0", "9.5"]}}},
+        [("0", ["a"], 3, {"x": ["2.0", "12.0"]}, {}, {"x": 0})],
+        ("x",),
+        {"bucket_stats": {"x": ["1.0", "12.0"]}},
+    ),
+    "decimal-shaped strings without a type drop the range": (
+        {**_PREV, "bucket_stats": {"0": {"x": ["1.0", "9.5"]}}},
+        [("0", ["a"], 3, {"x": ["2.0", "12.0"]}, {}, {"x": 0})],
+        (),
+        {"bucket_stats": absent},
+    ),
+    "bloom words OR": (
+        _PREV,
+        [("0", ["a"], 3, {}, {"s": {"0": "000000000000000f", "3": "01"}}, {})],
+        (),
+        {"bucket_blooms": {"s": {"0": "00000000000000ff",
+                                 "3": "0000000000000001"}}},
+    ),
+    "a column with no words stores an empty word map": (
+        None,
+        [("0", ["a"], 3, {}, {}, {})],
+        (),
+        {"bucket_blooms": {"s": {}}},
+    ),
+    "a lost filter stays lost": (
+        _without("bucket_blooms"),
+        [("0", ["a"], 3, {}, {"s": {"0": "01"}}, {})],
+        (),
+        {"bucket_blooms": absent},
+    ),
+    "blooms=None pops the filter": (
+        _PREV,
+        [("0", ["a"], 3, {}, None, {})],
+        (),
+        {"bucket_blooms": absent},
+    ),
+    "a legacy 4-tuple entry pops nulls and blooms": (
+        _PREV,
+        [("0", ["a"], 3, {"x": [11, 12]})],
+        (),
+        {"bucket_nulls": absent, "bucket_blooms": absent,
+         "bucket_stats": {"x": [10, 20]}, "row_counts": 8},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_APPEND_CASES))
+def test_append_files(case):
+    prev, entries, dec, want = _APPEND_CASES[case]
+    got = append_files(prev, entries, ["x"], ["s"], set(dec))
+    assert set(got) == {
+        "buckets", "row_counts", "bucket_stats", "bucket_blooms", "bucket_nulls"
+    }
+    for field, value in want.items():
+        assert got[field].get("0", absent) == value, field
+
+
+def test_append_files_leaves_prev_and_other_buckets_alone():
+    import copy
+
+    prev = {**copy.deepcopy(_PREV), "buckets": {"0": ["old"], "1": ["one"]},
+            "row_counts": {"0": 5, "1": 2}}
+    snapshot = copy.deepcopy(prev)
+    got = append_files(prev, [(2, ["new"], 1, {"x": [0, 0]}, {}, {"x": 0})],
+                       ["x"], ["s"])
+    assert prev == snapshot
+    assert got["buckets"] == {"0": ["old"], "1": ["one"], "2": ["new"]}
+    assert got["row_counts"] == {"0": 5, "1": 2, "2": 1}
+    assert got["bucket_stats"]["2"] == {"x": [0, 0]}
+    # no declared columns: only files and counts move
+    got = append_files(prev, [(0, ["new"], 1, {"x": [0, 0]})], [], [])
+    assert got["bucket_stats"] == prev["bucket_stats"]
+    assert got["bucket_blooms"] == prev["bucket_blooms"]
 
 
 def test_next_manifest_carries_and_resets():

@@ -185,11 +185,11 @@ def test_old_reader_refuses_via_requires(spark, t):
     """A reader that does not speak manifest-shards must refuse loudly,
     never see an empty table (Delta table-features model). Simulated by
     checking the raw root's requires against a featureless consumer."""
-    from data_pipeline_demo_spark.sinks.txlog import _check_features
+    from data_pipeline_demo_spark.sinks.manifest import check_features
 
     raw, _ = _root_json(t)
     with pytest.raises(UnsupportedTableFeatureError):
-        _check_features(raw, frozenset({"deletion-vectors"}), "read")
+        check_features(raw, frozenset({"deletion-vectors"}), "read")
 
 
 def test_vacuum_sweeps_orphan_shards_keeps_live(spark, t):

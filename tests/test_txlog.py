@@ -245,6 +245,56 @@ def test_txlog_commit_is_content_atomic(spark, tmp_path):
     assert not any(n.startswith(".quarantine-") for n in names)
 
 
+class _RenameFails:
+    """A Hadoop FileSystem whose ``rename`` fails with ``error``, or on
+    the JVM side for ``"jvm-io"`` (a ``Py4JJavaError``) and
+    ``"jvm-arg"`` (an error pyspark converts); every other call goes
+    through."""
+
+    def __init__(self, fs, error):
+        self._fs, self._error = fs, error
+
+    def rename(self, src, dst):
+        if self._error == "jvm-io":
+            return self._fs.open(dst)  # FileNotFoundException
+        if self._error == "jvm-arg":
+            return self._fs.rename(src, None)  # IllegalArgumentException
+        raise self._error
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_quarantine_rename_failure_is_skipped_only_for_jvm_errors(
+    spark, tmp_path, monkeypatch
+):
+    """A read-only reader that cannot set an unparsable newest manifest
+    aside (a JVM error from ``rename``) still resolves the previous
+    version; any other error from the rename propagates."""
+    from data_pipeline_demo_spark.sinks import txlog
+
+    root = str(tmp_path / "tx")
+    txlog_upsert(spark, _rows(spark, [(1, "a")]), root, num_buckets=2)
+    bad = tmp_path / "tx/_commits" / f"{1:020d}.json"
+    bad.write_text("{truncated")
+    real = txlog._hadoop_fs
+
+    def patched(error):
+        def _fs(spark_, path):
+            fs, p = real(spark_, path)
+            return _RenameFails(fs, error), p
+
+        return _fs
+
+    for jvm_error in ("jvm-io", "jvm-arg"):
+        monkeypatch.setattr(txlog, "_hadoop_fs", patched(jvm_error))
+        assert txlog._latest_manifest(spark, root)["version"] == 0
+        assert bad.exists()  # skipped, not set aside
+    monkeypatch.setattr(txlog, "_hadoop_fs", patched(TypeError("not IO")))
+    with pytest.raises(TypeError, match="not IO"):
+        txlog._latest_manifest(spark, root)
+
+
 def test_txlog_commit_never_visible_half_written(spark, tmp_path):
     """No zero-byte final manifest exists at any point: the final name
     appears only via rename of a fully-written tmp. Proxy check: after

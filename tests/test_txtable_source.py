@@ -875,3 +875,36 @@ def test_stream_cdf_include_preimages(registered, tmp_path):
         (2, "update_preimage", "b"),
         (2, "update_postimage", "B2"),
     }
+
+
+def test_register_tolerates_only_an_immutable_conf():
+    """``register_txtable_source`` keeps going when the pushdown conf
+    cannot be set (``AnalysisException``, e.g. a static conf); any
+    other error from the conf call propagates."""
+    from pyspark.errors import AnalysisException
+
+    from data_pipeline_demo_spark.sources.txtable_source import (
+        register_txtable_source,
+    )
+
+    class _Conf:
+        def __init__(self, error):
+            self.error = error
+
+        def set(self, key, value):
+            raise self.error
+
+    class _Session:
+        def __init__(self, error):
+            self.registered = []
+            self.dataSource = self
+            self.conf = _Conf(error)
+
+        def register(self, source):
+            self.registered.append(source)
+
+    s = _Session(AnalysisException("CANNOT_MODIFY_STATIC_CONFIG"))
+    register_txtable_source(s)
+    assert len(s.registered) == 1
+    with pytest.raises(TypeError, match="not a conf error"):
+        register_txtable_source(_Session(TypeError("not a conf error")))

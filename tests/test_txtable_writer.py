@@ -260,6 +260,65 @@ def test_second_append_widens_zone_maps(registered, tmp_path):
     assert got.count() == 100
 
 
+def test_dropped_zone_map_range_stays_dropped(registered, tmp_path):
+    """A task whose running range cannot widen (decimal-shaped strings
+    whose lexical and numeric orders disagree) records no range for
+    the column, rather than only its last slice's range, and the
+    commit drops the bucket's older range with it: both pruning
+    readers must still find '9.5'."""
+    spark = registered
+    root = str(tmp_path / "zr")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # one slice per row inside each task
+
+    def append(rows):
+        spark.createDataFrame(rows, "k long, s string").coalesce(1).write.format(
+            "txtable"
+        ).option("key", "k").option("numBuckets", "1").option(
+            "statsColumns", "s"
+        ).mode("append").save(root)
+
+    try:
+        append([(1, "9.5"), (2, "12.0")])
+        fs, r = _fs_root(root, {})
+        assert "s" not in _read_manifest(fs, r, 0)["bucket_stats"].get("0", {})
+        append([(3, "1.0")])
+        append([(4, "9.7"), (5, "12.5")])
+    finally:
+        spark.conf.set(key, old)
+    assert "s" not in _read_manifest(fs, r, 2)["bucket_stats"].get("0", {})
+    got = read_txtable(spark, root, prune_between={"s": ("9", "9.9")}).filter(
+        F.col("s").between("9", "9.9")
+    )
+    assert sorted(x.k for x in got.collect()) == [1, 4]
+    pushed = spark.read.format("txtable").load(root).filter("s = '9.5'")
+    assert [x.k for x in pushed.collect()] == [1]
+
+
+def test_append_without_a_stats_column_counts_its_nulls(registered, tmp_path):
+    """Rows appended without a declared stats column read NULL there, so
+    the bucket's null count must include them: an IS NULL probe that
+    trusted a count of 0 would prune them."""
+    spark = registered
+    root = str(tmp_path / "nn")
+    txlog_upsert(
+        spark,
+        spark.createDataFrame([(i, i) for i in range(4)], "k long, v long"),
+        root,
+        key="k",
+        num_buckets=1,
+        stats_columns=["v"],
+    )
+    spark.createDataFrame([(10,), (11,)], "k long").write.format(
+        "txtable"
+    ).mode("append").save(root)
+    fs, r = _fs_root(root, {})
+    assert _read_manifest(fs, r, 1)["bucket_nulls"] == {"0": {"v": 2}}
+    got = read_txtable(spark, root, prune_is_null={"v": True})
+    assert sorted(x.k for x in got.collect()) == [10, 11]
+
+
 def test_conflicting_spec_raises(registered, tmp_path):
     spark = registered
     root = str(tmp_path / "c")
@@ -357,21 +416,21 @@ def test_txn_watermark_skips_replay(tmp_path):
 def test_widen_drops_ambiguous_decimal_shaped_strings():
     """Legacy schema-less manifest: a string stat pair that parses as
     Decimal with lexical/numeric order DISAGREEING is type-ambiguous —
-    _widen must return None (bucket conservatively kept) instead of a
+    widen must return None (bucket conservatively kept) instead of a
     possibly too-narrow lexical bound ('9.5' beats '12.0' lexically)."""
-    from data_pipeline_demo_spark.sources.txtable_writer import _widen
+    from data_pipeline_demo_spark.sinks.manifest import widen
 
     # disagreement: lexical '12.0' < '9.5' but numeric 12.0 > 9.5
-    assert _widen(["1.0", "9.5"], ["2.0", "12.0"]) is None
+    assert widen(["1.0", "9.5"], ["2.0", "12.0"]) is None
     # agreement (same order both ways): safe, widens normally
-    assert _widen(["1.0", "2.0"], ["1.5", "3.0"]) == ["1.0", "3.0"]
+    assert widen(["1.0", "2.0"], ["1.5", "3.0"]) == ["1.0", "3.0"]
     # non-decimal strings: lexical is the order (dates, ids)
-    assert _widen(["1994-01-01", "1994-06-01"], ["1994-03-01", "1994-09-01"]) == [
+    assert widen(["1994-01-01", "1994-06-01"], ["1994-03-01", "1994-09-01"]) == [
         "1994-01-01",
         "1994-09-01",
     ]
     # with the recorded decimal type: value compare, stat kept
-    assert _widen(["1.0", "9.5"], ["2.0", "12.0"], decimal=True) == [
+    assert widen(["1.0", "9.5"], ["2.0", "12.0"], decimal=True) == [
         "1.0",
         "12.0",
     ]

@@ -307,6 +307,37 @@ def test_stale_lookup_is_hybrid_not_full_scan(spark, tmp_path):
         assert got == _truth(spark, root, color), color
 
 
+def test_stale_lookup_corrupt_watermark_raises(spark, tmp_path):
+    """A vacuumed watermark manifest means a full scan (None); a
+    watermark manifest that exists but does not parse is corruption
+    and raises instead of silently scanning everything."""
+    from data_pipeline_demo_spark.sinks.txlog import _latest_manifest
+    from data_pipeline_demo_spark.sinks.value_index import (
+        _stale_scan_buckets,
+    )
+
+    root = str(tmp_path / "t")
+    idx = str(tmp_path / "ix")
+    _seed(spark, root)
+    wm = refresh_value_index(spark, root, idx, "color")
+    txlog_upsert(
+        spark,
+        spark.createDataFrame(
+            [(5000, "fresh", 1.0)], "id long, color string, amount double"
+        ),
+        root,
+    )
+    latest = _latest_manifest(spark, root)
+    wm_file = tmp_path / "t" / "_commits" / f"{wm:020d}.json"
+    wm_file.write_text("{not json")
+    # drop the local checksum so the read reaches the JSON parse
+    (wm_file.parent / f".{wm_file.name}.crc").unlink(missing_ok=True)
+    with pytest.raises(ValueError):
+        _stale_scan_buckets(spark, root, idx, wm, latest, "red")
+    wm_file.unlink()
+    assert _stale_scan_buckets(spark, root, idx, wm, latest, "red") is None
+
+
 def test_stale_lookup_full_scan_only_when_modulus_changed(spark, tmp_path):
     """After rebucket_txtable the stored bucket ids mean nothing: the
     hybrid helper refuses (None) and the lookup falls back to the full

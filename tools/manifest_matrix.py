@@ -12,6 +12,13 @@ prints the normalized manifests so two checkouts can be diffed:
     python tools/manifest_matrix.py > b.json   # in checkout B
     diff a.json b.json
 
+A second table declares zone-map (``v``, decimal ``d``) and Bloom
+(``s``) columns and takes blind appends through both COPY INTO and
+``format("txtable")`` — batches with values, with ``s`` all null, and
+(COPY INTO) without ``s`` — so the diff covers the append bookkeeping
+both paths share: counts, widened bounds, null counts and OR'd Bloom
+words.
+
 Normalization replaces commit times and uuid-derived file, shard and
 sidecar names, so equal output means equal manifests. The script uses
 only the public verbs, so it runs unchanged on older checkouts.
@@ -210,14 +217,68 @@ def run_verbs(spark, workdir: str) -> list[tuple[str, dict | None, dict]]:
     return out
 
 
+def run_bloom_appends(spark, workdir: str) -> list[str]:
+    """Blind appends into the stats- and Bloom-declared table
+    ``<workdir>/bt``, one commit each; returns the verbs in commit
+    order."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_demo_spark.sinks.copy_into import copy_into
+    from data_pipeline_demo_spark.sinks.txlog import txlog_upsert
+    from data_pipeline_demo_spark.sources.txtable_source import (
+        register_txtable_source,
+    )
+
+    register_txtable_source(spark)
+    t = os.path.join(workdir, "bt")
+    verbs: list[str] = []
+
+    def rows(lo: int, hi: int, s=True):
+        cols = [
+            F.col("id"),
+            (F.col("id") % 7).alias("v"),
+            (F.col("id") / 4).cast("decimal(10,2)").alias("d"),
+        ]
+        if s is not None:
+            sv = F.concat(F.lit("s"), F.col("id").cast("string")) if s else None
+            cols.append((sv if s else F.lit(None)).cast("string").alias("s"))
+        return spark.range(lo, hi).select(*cols)
+
+    def load(name: str, df) -> None:
+        land = os.path.join(workdir, "bland", name)
+        df.coalesce(1).write.parquet(land)
+        copy_into(spark, t, land, "parquet")
+
+    def append(df) -> None:
+        df.write.format("txtable").mode("append").save(t)
+
+    # a few rows in 8 buckets: the first loads also open new buckets
+    txlog_upsert(
+        spark, rows(0, 2), t, key="id", num_buckets=8,
+        stats_columns=["v", "d"], bloom_columns=["s"],
+    )
+    verbs.append("CREATE")
+    for verb, fn in (
+        ("COPY INTO no s", lambda: load("absent", rows(2, 5, s=None))),
+        ("COPY INTO s null", lambda: load("nulls", rows(5, 8, s=False))),
+        ("APPEND s null", lambda: append(rows(8, 11, s=False))),
+        ("COPY INTO", lambda: load("values", rows(11, 40))),
+        ("APPEND", lambda: append(rows(40, 70))),
+    ):
+        fn()
+        verbs.append(verb)
+    return verbs
+
+
 def main() -> None:
     from data_pipeline_demo_spark.session import get_spark
 
     spark = get_spark("manifest-matrix", master="local[2]", shuffle_partitions=4)
     with tempfile.TemporaryDirectory(prefix="manifest-matrix-") as d:
         steps = run_verbs(spark, d)
+        bloom_verbs = run_bloom_appends(spark, d)
         tables, root_bytes = {}, {}
-        for name in ("t", "shallow", "deep"):
+        for name in ("t", "shallow", "deep", "bt"):
             files = sorted(
                 glob.glob(os.path.join(d, name, "_commits", "[0-9]*.json"))
             )
@@ -229,6 +290,7 @@ def main() -> None:
     print(json.dumps(
         {
             "verbs": [v for v, _, _ in steps],
+            "bloom_verbs": bloom_verbs,
             "tables": tables,
             "root_bytes": root_bytes,
         },
