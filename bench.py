@@ -880,7 +880,6 @@ def bench_streaming(spark, sf_dir: str):
                 tmp + "/tx_target",
                 key="event_id",
                 checkpoint=tmp + "/ckpt_upsert",
-                use_txlog=True,
                 txn_app_id="bench-stream",
             )
             .trigger(availableNow=True)

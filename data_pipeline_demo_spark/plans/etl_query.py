@@ -88,6 +88,7 @@ def q62_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass must be all ledger-skips) and return its QA report row.
     ``sf_dir`` is unused — the e2e contract is over the landing fixture,
     not the shared tables."""
+    from ..sinks.txlog import read_txtable
     from .reference_etl import PipelineConfig, run_ingest
 
     tmp = tempfile.mkdtemp(prefix="spark_graft_q62_")
@@ -106,7 +107,7 @@ def q62_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
         report = run_ingest(spark, cfg)
         replay = run_ingest(spark, cfg)  # idempotent: ledger skips all
 
-        target = spark.read.parquet(cfg.target_path)
+        target = read_txtable(spark, cfg.target_path)
         qa = qa_aggregates(target).collect()[0].asDict()
         n_quarantined = (
             spark.read.parquet(cfg.quarantine_path).count()

@@ -6,7 +6,7 @@ re-expressed as a declarative batch job:
     landing CSVs ──read(schema)──▶ good / quarantine
         good ──clean_transactions──▶ typed rows
         ledger anti-join ──▶ only new files          (dedup guard, P4)
-        upsert_parquet(on id) ──▶ target             (K3)
+        txlog_upsert(on id) ──▶ target txtable       (K3)
         append_ledger ──▶ ledger                     (K5)
         qa_aggregates ──▶ run report                 (A1-A4)
 
@@ -30,12 +30,8 @@ from ..functions.cleaning import (
     clean_transactions,
     qa_aggregates_by,
 )
-from ..sinks.upsert import (
-    append_ledger_rows,
-    new_files,
-    upsert_parquet,
-    write_quarantine,
-)
+from ..sinks.txlog import txlog_upsert
+from ..sinks.upsert import append_ledger_rows, new_files, write_quarantine
 from ..sources.csv_ingest import (
     DEALER_TRANSACTIONS_SCHEMA,
     SOURCE_COL,
@@ -68,7 +64,8 @@ def run_ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
     landing files. Here the whole new-file batch is a single scan tagged
     with ``_metadata.file_name``; per-file row counts, QA rows, and
     ledger entries come from grouped aggregates over that scan, and the
-    target takes one bucketed upsert for the batch. EP2 step-5 ordering
+    target takes one keyed MERGE commit for the batch: ``target_path``
+    is a txtable (read it with ``read_txtable``). EP2 step-5 ordering
     is preserved per file: notify-start → write → ledger →
     notify-complete.
 
@@ -135,12 +132,7 @@ def run_ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
     to_write = to_write.observe(
         obs, *_qa_agg_exprs(to_write, "TotalAmount", "TransactionDatetime")
     )
-    total = upsert_parquet(
-        spark,
-        to_write,
-        cfg.target_path,
-        key=cfg.key,
-    )
+    total = txlog_upsert(spark, to_write, cfg.target_path, key=cfg.key)
     report["batch_qa"] = dict(obs.get)
     cleaned.unpersist()
     append_ledger_rows(

@@ -1,11 +1,12 @@
 """Log-backed transactional bucketed table — a dependency-free
 Delta/Iceberg-style commit protocol behind the K3 upsert seam.
 
-`sinks.upsert.upsert_parquet` publishes by renaming staged bucket
-directories over live ones; that swap is atomic per bucket on a real
-filesystem but not on S3-like object stores (README "Limits"). This
-module closes that seam the way lakehouse formats do (reference sink
-semantics: `/root/reference/data_pipeline.py:501-542`, the chunked
+Every keyed upsert in the engine (the batch ETL target, the streaming
+bridge) commits through ``txlog_upsert``. Publishing by renaming
+staged directories over live ones is atomic per directory on a real
+filesystem but not on S3-like object stores; this module commits the
+way lakehouse formats do instead (reference sink semantics:
+`/root/reference/data_pipeline.py:501-542`, the chunked
 ``upsert(on_conflict="id")``):
 
 - **Data files are immutable.** Every commit writes its rows into a
@@ -227,20 +228,20 @@ def _rename_no_overwrite(spark: SparkSession, fs, src, dst) -> bool:
     Primary: ``FileContext.rename(src, dst, Rename.NONE)`` — the exact
     call Delta's HDFSLogStore uses; it throws FileAlreadyExistsException
     on an existing destination and is atomic on HDFS/local filesystems.
-    Fallback (scheme without FileContext support):
-    ``FileSystem.rename``, whose HDFS contract returns false on an
-    existing destination — but ALSO for a missing source or missing
-    destination parent, so a false return is only mapped to a lost
-    race after confirming the destination actually exists; otherwise
-    it surfaces as an IOError naming both paths. Non-exists failures
-    propagate unchanged.
+    Fallback (scheme without FileContext support, i.e. the JVM call
+    failed; a Python-side error propagates): ``FileSystem.rename``,
+    whose HDFS contract returns false on an existing destination — but
+    ALSO for a missing source or missing destination parent, so a
+    false return is only mapped to a lost race after confirming the
+    destination actually exists; otherwise it surfaces as an IOError
+    naming both paths. Non-exists failures propagate unchanged.
     """
     jvm = spark._jvm
     try:
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             dst.toUri(), spark._jsc.hadoopConfiguration()
         )
-    except Exception:
+    except _JVM_ERRORS:
         return _rename_fallback(fs, src, dst)
     rename_enum = jvm.org.apache.hadoop.fs.Options.Rename
     opts = spark.sparkContext._gateway.new_array(rename_enum, 1)
@@ -1776,10 +1777,11 @@ def txlog_upsert(
     buckets from metadata alone. Untouched buckets carry their stats
     forward; rewritten buckets recompute exactly.
 
-    Same contract as `upsert.upsert_parquet`: matched keys take the
-    update row (null-safe, so a null key supersedes rather than
-    duplicates), unmatched insert, duplicate keys within a batch keep an
-    arbitrary single row, re-delivery of the same batch is idempotent.
+    The reference's keyed ``upsert(on_conflict="id")`` contract:
+    matched keys take the update row (null-safe, so a null key
+    supersedes rather than duplicates), unmatched insert, duplicate
+    keys within a batch keep an arbitrary single row, re-delivery of
+    the same batch is idempotent.
 
     Key and bucket modulus are fixed at table creation (defaults
     ``id``/32 when omitted) and read from the manifest thereafter.

@@ -2,22 +2,20 @@
 
 The reference's core sink is a chunked PostgREST ``upsert(on_conflict=
 "id")`` with retry + dead-letter (`/root/reference/data_pipeline.py:
-501-572`). The engine provides the same semantics three ways:
+501-572`). The engine provides the same semantics two ways:
 
-- **Bucketed parquet merge** (`upsert_parquet`): the target is
-  hash-partitioned on the key into ``__bucket=N`` directories; a batch
-  rewrites ONLY the buckets its keys touch (Spark dynamic partition
-  overwrite), so merge cost is O(touched buckets), not O(table). This
-  is the file-layout analog of Delta/Iceberg ``MERGE INTO`` — swap in
-  a real lakehouse MERGE when the runtime ships one; the commit then
-  gets log-backed atomicity instead of per-partition directory swaps.
+- **Log-backed MERGE** (`sinks.txlog.txlog_upsert`): every keyed
+  upsert into a table (the batch ETL's target, the streaming bridge)
+  commits one atomic snapshot of a hash-bucketed txtable. This module
+  keeps the bucketing function and the Hadoop-FS helpers it uses.
 - **JDBC upsert executor** (`upsert_jdbc` around `upsert_sql`): each
   partition streams batched ``INSERT … ON CONFLICT (id) DO UPDATE``
   statements through a DB-API connection — the direct analog of the
   reference's endpoint, minus the 5,000-row single-thread bottleneck.
-- **Ledger guard** (`new_files`): the duplicate-run check
-  (`data_pipeline.py:138-142,:213-238`) as ONE set-based anti-join per
-  batch instead of one LIMIT-1 probe per file.
+
+The **ledger guard** (`new_files`) is the duplicate-run check
+(`data_pipeline.py:138-142,:213-238`) as ONE set-based anti-join per
+batch instead of one LIMIT-1 probe per file.
 
 Spark task retries subsume the reference's re-chunk-at-1000 retry (K4);
 rows that still fail schema/cast validation quarantine explicitly
@@ -27,7 +25,6 @@ rows that still fail schema/cast validation quarantine explicitly
 from __future__ import annotations
 
 import json
-import uuid
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from itertools import chain
 
@@ -35,7 +32,6 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "__bucket"
-BUCKET_SPEC = "_upsert_bucket_spec.json"
 
 
 def _bucket_of(key: str, num_buckets: int) -> Column:
@@ -85,20 +81,12 @@ def write_json_sidecar(spark: SparkSession, path: str, obj: dict) -> None:
         out.close()
 
 
-def _read_bucket_spec(spark: SparkSession, target_path: str) -> dict | None:
-    return read_json_sidecar(spark, target_path.rstrip("/") + "/" + BUCKET_SPEC)
-
-
-def _write_bucket_spec(spark: SparkSession, target_path: str, spec: dict) -> None:
-    write_json_sidecar(spark, target_path.rstrip("/") + "/" + BUCKET_SPEC, spec)
-
-
 def _swap_in(fs, jvm, src, dst) -> None:
-    """Replace ``dst`` with ``src`` via two renames. The in-between
-    window is two metadata ops on a real filesystem; on object stores
-    without atomic rename this is the documented non-atomic seam (a
-    lakehouse MERGE with a commit log is the real fix — see module
-    docstring)."""
+    """Replace ``dst`` with ``src`` via two renames (the rollup's
+    per-partition publish). The in-between window is two metadata ops
+    on a real filesystem; on object stores without atomic rename it is
+    not atomic — keyed table writes commit through ``sinks.txlog``
+    instead."""
     trash = jvm.org.apache.hadoop.fs.Path(
         dst.getParent(), "." + dst.getName() + ".replaced"
     )
@@ -113,199 +101,6 @@ def _swap_in(fs, jvm, src, dst) -> None:
         raise IOError(f"rename {src} -> {dst} failed")
     if had_old:
         fs.delete(trash, True)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    updates: DataFrame,
-    target_path: str,
-    key: str | None = None,
-    num_buckets: int | None = None,
-) -> int:
-    """MERGE semantics onto a hash-bucketed parquet target: matched keys
-    take the update row, unmatched insert; re-running the same batch is
-    a no-op row-count-wise (idempotent re-delivery, FIXTURES.md upsert
-    contract). Within one batch, duplicate keys keep an arbitrary single
-    row (dropDuplicates) — matching the reference, whose last chunk wins.
-
-    Scale shape: only the buckets containing this batch's keys are read,
-    anti-joined, and rewritten (dynamic partition overwrite); untouched
-    bucket files are never opened for data. Returns the post-merge row
-    count — touched rows from the in-hand merged DataFrame plus a
-    column-less (footer-only) count of the pruned untouched buckets,
-    never a full re-read of what was just written.
-
-    The key and bucket modulus are fixed at table creation (defaults
-    ``id``/32 when omitted) and recorded in a
-    ``_upsert_bucket_spec.json`` sidecar (a lakehouse keeps this in its
-    table metadata); later calls use the recorded values. Passing a
-    value that CONFLICTS with an existing table's sidecar raises
-    ValueError — merging on a different column than the caller asked
-    for, or splitting a key across a different modulus, would corrupt
-    the table with no signal.
-
-    Commit protocol (write-audit-publish): the merge job only ever READS
-    the target and WRITES a staging directory — the target is never the
-    sink of a job that also scans it, so no cache eviction/recompute can
-    observe a half-deleted input (that was the hazard of overwriting in
-    place). Staged bucket directories are then renamed over the live
-    ones through the Hadoop FS API, so ``file://``-qualified and
-    ``hdfs://`` paths work identically. Renames are atomic per bucket on
-    a real filesystem; on S3-like stores rename is copy+delete and NOT
-    atomic — single-writer only, and a concurrent reader can glimpse a
-    missing bucket for the duration of two metadata ops. That residual
-    window is the documented seam a Delta/Iceberg ``MERGE INTO`` (log-
-    backed commit) closes; see README "Limits".
-
-    Null keys are treated as one key: the supersede join is null-safe
-    (``<=>``), so a null-keyed update row replaces the existing
-    null-keyed row instead of accumulating duplicates.
-    """
-    spec = _read_bucket_spec(spark, target_path)
-    if spec is not None:
-        if key is not None and key != spec["key"]:
-            raise ValueError(
-                f"upsert target {target_path} was created with key="
-                f"{spec['key']!r}; cannot merge on {key!r}"
-            )
-        if num_buckets is not None and num_buckets != spec["num_buckets"]:
-            raise ValueError(
-                f"upsert target {target_path} was created with "
-                f"num_buckets={spec['num_buckets']}; got {num_buckets}"
-            )
-        key = spec["key"]
-        num_buckets = spec["num_buckets"]
-    else:
-        key = "id" if key is None else key
-        num_buckets = 32 if num_buckets is None else num_buckets
-    updates = updates.dropDuplicates([key]).withColumn(
-        BUCKET_COL, _bucket_of(key, num_buckets)
-    )
-    jvm = spark._jvm
-    fs, target = _hadoop_fs(spark, target_path)
-    # a crashed previous publish leaves a sibling staging dir; it is
-    # never half-applied (publish is rename-only after a full write),
-    # so it is safe to drop before this commit writes its own
-    parent = target.getParent()
-    if parent is not None and fs.exists(parent):
-        prefix = target.getName() + "__staging_"
-        for st in fs.listStatus(parent):
-            if st.getPath().getName().startswith(prefix):
-                fs.delete(st.getPath(), True)
-    untouched_n = 0
-    incremental = False
-    touched: list[int] = []
-    if fs.exists(target):
-        current = spark.read.parquet(target_path)
-        if BUCKET_COL in current.columns:
-            # Incremental path: prune to touched buckets only.
-            touched = [
-                r[0] for r in updates.select(BUCKET_COL).distinct().collect()
-            ]
-            untouched = current.filter(~F.col(BUCKET_COL).isin(touched))
-            untouched_n = untouched.count()
-            current = current.filter(F.col(BUCKET_COL).isin(touched))
-            incremental = True
-        else:
-            # Legacy flat layout: one-time full rewrite into buckets —
-            # existing rows need bucket ids too, or the union would land
-            # them all in the null (__HIVE_DEFAULT_PARTITION__) dir.
-            current = current.withColumn(BUCKET_COL, _bucket_of(key, num_buckets))
-        upd_keys = updates.select(F.col(key).alias("__upd_key"))
-        keep = current.join(
-            upd_keys, F.col(key).eqNullSafe(F.col("__upd_key")), "left_anti"
-        )
-        merged = keep.unionByName(updates, allowMissingColumns=True)
-    else:
-        merged = updates
-
-    staging_str = target.toString() + "__staging_" + uuid.uuid4().hex
-    merged = merged.persist()  # perf only: one compute for count + write
-    try:
-        n_merged = merged.count()
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging_str)
-    finally:
-        merged.unpersist()
-
-    staging = jvm.org.apache.hadoop.fs.Path(staging_str)
-    if incremental:
-        # Publish only the touched bucket dirs; untouched bucket files
-        # are never opened, moved, or rewritten.
-        for b in touched:
-            name = f"{BUCKET_COL}={b}"
-            src = jvm.org.apache.hadoop.fs.Path(staging, name)
-            if fs.exists(src):
-                _swap_in(fs, jvm, src, jvm.org.apache.hadoop.fs.Path(target, name))
-        fs.delete(staging, True)
-    else:
-        # Fresh table or legacy full rewrite: publish the whole dataset.
-        parent = target.getParent()
-        if parent is not None and not fs.exists(parent):
-            fs.mkdirs(parent)
-        _swap_in(fs, jvm, staging, target)
-    if spec is None:
-        _write_bucket_spec(
-            spark, target_path, {"num_buckets": num_buckets, "key": key}
-        )
-    return untouched_n + n_merged
-
-
-def compact_buckets(
-    spark: SparkSession,
-    target_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-) -> int:
-    """Small-file maintenance for the bucketed upsert layout.
-
-    Each incremental merge writes a touched bucket with as many parquet
-    files as shuffle tasks carried its rows — at 1000-executor scale
-    that leaves buckets holding hundreds of small files and scans become
-    file-open-bound. This rewrites ONLY the buckets whose file count
-    exceeds what their byte size warrants (``ceil(bytes /
-    target_file_bytes)``, and at least ``min_files`` present), coalescing
-    each to its size-appropriate file count, then publishes with the
-    same stage-and-swap commit the merge uses. Rows are preserved
-    exactly; untouched buckets are never opened. Returns the number of
-    buckets compacted.
-
-    Staging lives in a dot-prefixed directory inside the target, which
-    Spark's file listing ignores — a crash mid-compaction leaves the
-    live table untouched (stragglers are cleaned on the next call).
-    """
-    jvm = spark._jvm
-    fs, target = _hadoop_fs(spark, target_path)
-    if not fs.exists(target):
-        return 0
-    compacted = 0
-    for status in fs.listStatus(target):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith(".compact_"):
-            fs.delete(status.getPath(), True)  # straggler from a crash
-            continue
-        if not status.isDirectory() or not name.startswith(BUCKET_COL + "="):
-            continue
-        files = [
-            s
-            for s in fs.listStatus(status.getPath())
-            if s.isFile() and s.getPath().getName().endswith(".parquet")
-        ]
-        nbytes = sum(s.getLen() for s in files)
-        want = max(1, -(-nbytes // target_file_bytes))
-        if len(files) < min_files or len(files) <= want:
-            continue
-        staging = jvm.org.apache.hadoop.fs.Path(
-            target, ".compact_" + uuid.uuid4().hex
-        )
-        (
-            spark.read.parquet(status.getPath().toString())
-            .repartition(int(want))
-            .write.mode("overwrite")
-            .parquet(staging.toString())
-        )
-        _swap_in(fs, jvm, staging, status.getPath())
-        compacted += 1
-    return compacted
 
 
 def upsert_sql(table: str, columns: Sequence[str], key: str = "id") -> str:

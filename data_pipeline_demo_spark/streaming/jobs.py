@@ -229,38 +229,40 @@ def stream_upsert_writer(
     target_path: str,
     key: str = "id",
     checkpoint: str | None = None,
-    use_txlog: bool = False,
+    use_txlog: bool = True,
     txn_app_id: str | None = None,
 ):
-    """foreachBatch bridge into the batch upsert sink: every micro-batch
-    lands through the same idempotent bucketed merge the batch pipeline
-    uses (sinks.upsert.upsert_parquet), giving the stream end-to-end
-    effectively-once semantics — foreachBatch may re-deliver a batch
-    after failure, and keyed upsert makes the replay a no-op (the
-    streaming form of the reference's chunked `on_conflict` sink,
-    data_pipeline.py:501-542).
+    """foreachBatch bridge into the keyed MERGE sink (sinks.txlog): every
+    micro-batch becomes one ``txlog_upsert`` snapshot commit on the
+    txtable at ``target_path``, so downstream readers observe the
+    stream as a sequence of atomic versions even on object stores.
+    foreachBatch may re-deliver a batch after failure; a replayed
+    micro-batch commits an identical snapshot (same keys supersede),
+    giving end-to-end effectively-once semantics (the streaming form of
+    the reference's chunked `on_conflict` sink, data_pipeline.py:
+    501-542). Read the target with ``read_txtable`` or
+    ``format("txtable")``.
 
     Returns the configured DataStreamWriter; caller picks the trigger
     (`.trigger(availableNow=True)` for the reference's cron shape,
     processingTime for continuous ingest).
 
-    ``use_txlog=True`` routes each micro-batch through the log-backed
-    transactional table instead (sinks.txlog): every micro-batch becomes
-    one snapshot commit, so downstream readers observe the stream as a
-    sequence of atomic versions even on object stores — and a replayed
-    micro-batch commits an identical snapshot (same keys supersede),
-    keeping effectively-once end-to-end.
+    ``use_txlog`` is accepted for existing callers and must be True:
+    the rename-publish parquet sink it once selected was removed.
 
-    ``txn_app_id`` (with ``use_txlog``) additionally records each
-    micro-batch's ``batch_id`` in the commit log (Delta's
-    txnAppId/txnVersion pattern): a re-delivered batch is then rejected
-    by the LOG, not merely neutralized by keyed idempotency — true
-    exactly-once even for payloads whose keys don't dedupe. Use a
-    stable id per logical stream (e.g. the checkpoint path).
+    ``txn_app_id`` additionally records each micro-batch's
+    ``batch_id`` in the commit log (Delta's txnAppId/txnVersion
+    pattern): a re-delivered batch is then rejected by the LOG, not
+    merely neutralized by keyed idempotency — true exactly-once even
+    for payloads whose keys don't dedupe. Use a stable id per logical
+    stream (e.g. the checkpoint path).
     """
-    write_batch = make_upsert_batch_fn(
-        target_path, key=key, use_txlog=use_txlog, txn_app_id=txn_app_id
-    )
+    if not use_txlog:
+        raise ValueError(
+            "use_txlog=False selected the parquet upsert sink, which was "
+            "removed; the target is now a txtable (use_txlog=True)"
+        )
+    write_batch = make_upsert_batch_fn(target_path, key=key, txn_app_id=txn_app_id)
     writer = stream.writeStream.foreachBatch(write_batch).outputMode("append")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -270,11 +272,11 @@ def stream_upsert_writer(
 def make_upsert_batch_fn(
     target_path: str,
     key: str = "id",
-    use_txlog: bool = False,
     txn_app_id: str | None = None,
 ):
-    """The foreachBatch callback behind ``stream_upsert_writer``,
-    exposed for direct testing.
+    """The foreachBatch callback behind ``stream_upsert_writer`` and
+    ``stream_ingest_landing``: one ``txlog_upsert`` commit per
+    non-empty micro-batch, exposed for direct testing.
 
     Empty micro-batches short-circuit BEFORE touching the sink: a quiet
     processingTime stream triggers on a cadence regardless of data, and
@@ -283,22 +285,18 @@ def make_upsert_batch_fn(
     writes) unboundedly between vacuums for zero information.
     """
     from ..sinks.txlog import txlog_upsert
-    from ..sinks.upsert import upsert_parquet
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if use_txlog:
-            txlog_upsert(
-                batch_df.sparkSession,
-                batch_df,
-                target_path,
-                key=key,
-                txn_app_id=txn_app_id,
-                txn_version=batch_id if txn_app_id is not None else None,
-            )
-        else:
-            upsert_parquet(batch_df.sparkSession, batch_df, target_path, key=key)
+        txlog_upsert(
+            batch_df.sparkSession,
+            batch_df,
+            target_path,
+            key=key,
+            txn_app_id=txn_app_id,
+            txn_version=batch_id if txn_app_id is not None else None,
+        )
 
     return write_batch
 
@@ -318,9 +316,11 @@ def stream_ingest_landing(
     file-source stream is that loop engine-grade — the checkpointed
     file log makes each landing file processed exactly once ACROSS
     runs (no per-file ledger probe anywhere), and every micro-batch
-    flows through the same clean → quarantine-split → idempotent
-    bucketed upsert the batch pipeline uses, so a replayed batch is a
-    no-op. SURVEY §1.1 names this the Spark analog of the reference's
+    flows through clean → quarantine-split → the same keyed txtable
+    MERGE the batch pipeline uses (``make_upsert_batch_fn``, so a batch
+    with no clean rows commits nothing), so a replayed batch is a
+    no-op. ``target_path`` is a txtable: read it with ``read_txtable``.
+    SURVEY §1.1 names this the Spark analog of the reference's
     incremental cron shape; `plans/reference_etl.run_ingest` remains
     the ledger-reporting batch form.
 
@@ -328,7 +328,7 @@ def stream_ingest_landing(
     AvailableNow; re-invoke on the next cron tick).
     """
     from ..functions.cleaning import clean_transactions
-    from ..sinks.upsert import upsert_parquet, write_quarantine
+    from ..sinks.upsert import write_quarantine
     from ..sources.csv_ingest import CORRUPT_COL, DEALER_TRANSACTIONS_SCHEMA
 
     schema = schema or DEALER_TRANSACTIONS_SCHEMA
@@ -341,6 +341,7 @@ def stream_ingest_landing(
         .schema(schema)
         .csv(landing_dir)
     )
+    upsert_batch = make_upsert_batch_fn(target_path, key=key)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()  # one pass feeds both splits
@@ -349,9 +350,7 @@ def stream_ingest_landing(
             bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
                 F.col(CORRUPT_COL).alias("raw_record")
             )
-            upsert_parquet(
-                batch_df.sparkSession, clean_transactions(good), target_path, key=key
-            )
+            upsert_batch(clean_transactions(good), batch_id)
             if not bad.isEmpty():
                 write_quarantine(bad, quarantine_path, "schema")
         finally:

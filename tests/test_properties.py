@@ -1,6 +1,6 @@
 """Property-based tests (SURVEY.md §5.4, hypothesis): the cleaning spec
-never throws and round-trips its own grammar; the upsert sink is
-idempotent under re-delivery.
+never throws and round-trips its own grammar; the txtable MERGE matches
+a dict model and is idempotent under re-delivery.
 
 Each hypothesis example batches its inputs into ONE small DataFrame so a
 property costs one Spark job, not one per string; example counts are
@@ -19,7 +19,6 @@ from data_pipeline_demo_spark.functions.cleaning import (
     clean_money,
     parse_datetime_robust,
 )
-from data_pipeline_demo_spark.sinks.upsert import upsert_parquet
 
 _SETTINGS = dict(
     max_examples=15,
@@ -83,33 +82,6 @@ def test_datetime_roundtrips_reference_formats(spark, dts):
     df = spark.createDataFrame([(r,) for r in raws], "raw string")
     got = [r["d"] for r in df.select(parse_datetime_robust("raw").alias("d")).collect()]
     assert got == [d.date() for d in dts]
-
-
-@given(
-    st.dictionaries(
-        st.integers(0, 50), st.floats(allow_nan=False, allow_infinity=False),
-        min_size=1, max_size=20,
-    ),
-    st.dictionaries(
-        st.integers(0, 50), st.floats(allow_nan=False, allow_infinity=False),
-        min_size=1, max_size=20,
-    ),
-)
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_upsert_idempotent_and_update_wins_property(spark, batch1, batch2):
-    target = tempfile.mkdtemp(prefix="prop_upsert_") + "/t"
-    try:
-        b1 = spark.createDataFrame(list(batch1.items()), "id long, v double")
-        b2 = spark.createDataFrame(list(batch2.items()), "id long, v double")
-        upsert_parquet(spark, b1, target)
-        n_once = upsert_parquet(spark, b1, target)  # re-delivery
-        assert n_once == len(batch1)
-        upsert_parquet(spark, b2, target)
-        got = {r["id"]: r["v"] for r in spark.read.parquet(target).collect()}
-        assert got == {**batch1, **batch2}  # update wins, inserts kept
-    finally:
-        shutil.rmtree(target.rsplit("/", 1)[0], ignore_errors=True)
 
 
 # --- rollup refresh ≡ one-shot under arbitrary increments ----------------
@@ -245,6 +217,9 @@ def test_txlog_merge_matches_dict_model(spark, bs):
                 for r in read_txtable(spark, root, version=version).collect()
             }
             assert got == model
+        # re-delivery of the last batch leaves the table unchanged
+        assert txlog_upsert(spark, df, root) == len(model)
+        assert {r["id"]: r["v"] for r in read_txtable(spark, root).collect()} == model
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

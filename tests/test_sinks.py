@@ -1,21 +1,19 @@
-"""Sink semantics: upsert idempotency + update-wins (FIXTURES.md §B),
-incremental bucket rewrites, the JDBC executor, ledger anti-join dedup,
-quarantine capture, end-to-end reference ETL."""
+"""Sink semantics: the JDBC executor, ledger anti-join dedup,
+quarantine capture, end-to-end reference ETL. The keyed txtable MERGE
+the ETL commits through (idempotency + update-wins, FIXTURES.md §B) is
+tested in test_txlog.py."""
 
 import glob
-import hashlib
 import json
 import os
 import uuid
 
-from pyspark.sql import functions as F
-
 from data_pipeline_demo_spark.plans.reference_etl import PipelineConfig, run_ingest
+from data_pipeline_demo_spark.sinks.txlog import read_txtable, txtable_history
 from data_pipeline_demo_spark.sinks.upsert import (
     append_ledger,
     new_files,
     upsert_jdbc,
-    upsert_parquet,
     upsert_sql,
 )
 from data_pipeline_demo_spark.sources.csv_ingest import (
@@ -27,96 +25,6 @@ CSV_HEADER = (
     "id,TransactionDatetime,Amount,TotalAmount,Surcharge,MSF,Tip,Cashout,"
     "Extras,Levy,ServiceFee,TxnFee,Rebate"
 )
-
-
-def test_upsert_idempotent_and_update_wins(spark, tmp_path):
-    target = str(tmp_path / "target")
-    batch1 = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0)], "id long, amount double"
-    )
-    assert upsert_parquet(spark, batch1, target) == 2
-    # re-delivery of the same batch: same count (idempotent, K3)
-    assert upsert_parquet(spark, batch1, target) == 2
-    # changed non-key value must win (MERGE update path)
-    batch2 = spark.createDataFrame([(2, 99.0), (3, 30.0)], "id long, amount double")
-    assert upsert_parquet(spark, batch2, target) == 3
-    rows = {
-        r["id"]: r["amount"] for r in spark.read.parquet(target).collect()
-    }
-    assert rows == {1: 10.0, 2: 99.0, 3: 30.0}
-
-
-def test_upsert_file_uri_target(spark, tmp_path):
-    """The sink must work against a qualified file:// URI (all metadata
-    and commit renames go through the Hadoop FS API, not os.path)."""
-    target = "file://" + str(tmp_path / "target")
-    b1 = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, amount double")
-    assert upsert_parquet(spark, b1, target) == 2
-    b2 = spark.createDataFrame([(2, 99.0), (3, 30.0)], "id long, amount double")
-    assert upsert_parquet(spark, b2, target) == 3
-    rows = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert rows == {1: 10.0, 2: 99.0, 3: 30.0}
-    # sidecar landed inside the target through the FS API
-    assert (tmp_path / "target" / "_upsert_bucket_spec.json").is_file()
-
-
-def test_upsert_null_key_superseded_not_duplicated(spark, tmp_path):
-    """Null keys are one key: successive batches must replace the
-    null-keyed row (null-safe supersede join), not accumulate copies."""
-    target = str(tmp_path / "target")
-    b1 = spark.createDataFrame([(None, 1.0), (7, 70.0)], "id long, amount double")
-    assert upsert_parquet(spark, b1, target) == 2
-    b2 = spark.createDataFrame([(None, 2.0)], "id long, amount double")
-    assert upsert_parquet(spark, b2, target) == 2
-    rows = {(r["id"], r["amount"]) for r in spark.read.parquet(target).collect()}
-    assert rows == {(7, 70.0), (None, 2.0)}
-
-
-def test_upsert_no_staging_leftovers(spark, tmp_path):
-    """The staging directory must be gone after a successful publish."""
-    target = str(tmp_path / "target")
-    b = spark.createDataFrame([(1, 1.0)], "id long, amount double")
-    upsert_parquet(spark, b, target)
-    upsert_parquet(spark, b, target)
-    leftovers = [p for p in os.listdir(tmp_path) if "staging" in p]
-    assert leftovers == []
-    inside = [p for p in os.listdir(target) if "staging" in p or ".replaced" in p]
-    assert inside == []
-
-
-def _bucket_of_key(spark, key_val, num_buckets=32):
-    return (
-        spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(key_val).cast("long")), F.lit(num_buckets)))
-        .collect()[0][0]
-    )
-
-
-def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
-    """A disjoint-key batch must leave other buckets' files byte-identical
-    (incremental merge is O(touched buckets), not O(table))."""
-    target = str(tmp_path / "target")
-    # find two keys landing in different buckets
-    k1 = 1
-    k2 = next(
-        k for k in range(2, 200)
-        if _bucket_of_key(spark, k) != _bucket_of_key(spark, k1)
-    )
-    upsert_parquet(spark, spark.createDataFrame([(k1, 10.0)], "id long, amount double"), target)
-    b1_dir = os.path.join(target, f"__bucket={_bucket_of_key(spark, k1)}")
-
-    def snapshot(d):
-        return {
-            p: hashlib.md5(open(p, "rb").read()).hexdigest()
-            for p in sorted(glob.glob(os.path.join(d, "*.parquet")))
-        }
-
-    before = snapshot(b1_dir)
-    assert before, "bucket dir for k1 should exist"
-    upsert_parquet(spark, spark.createDataFrame([(k2, 20.0)], "id long, amount double"), target)
-    assert snapshot(b1_dir) == before  # same files, same bytes
-    rows = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert rows == {k1: 10.0, k2: 20.0}
 
 
 class RecordingConnectionFactory:
@@ -279,7 +187,7 @@ def test_reference_etl_end_to_end(spark, tmp_path):
     assert report["processed"][0]["qa"]["checksum_total"] == 300.0
     # EP2 step-5 ordering: notify-start before notify-complete
     assert [e[0] for e in events] == ["start", "done"]
-    target = {r["id"]: r for r in spark.read.parquet(cfg.target_path).collect()}
+    target = {r["id"]: r for r in read_txtable(spark, cfg.target_path).collect()}
     assert target[1]["MSF"] == 5.0  # abs-normalized
 
     # second run: ledger guard skips the already-ingested file (O1/P4)
@@ -318,7 +226,7 @@ def test_reference_etl_multifile_batch(spark, tmp_path):
     starts = [i for i, e in enumerate(events) if e[0] == "start"]
     dones = [i for i, e in enumerate(events) if e[0] == "done"]
     assert max(starts) < min(dones)
-    assert {r["id"] for r in spark.read.parquet(cfg.target_path).collect()} == {1, 2, 3}
+    assert {r["id"] for r in read_txtable(spark, cfg.target_path).collect()} == {1, 2, 3}
     ledger = {r["filename"]: r["num_rows"] for r in spark.read.parquet(cfg.ledger_path).collect()}
     assert ledger == {"dealer_2025-05-01.csv": 2, "dealer_2025-05-02.csv": 1}
     # rerun: everything skipped
@@ -370,76 +278,7 @@ def test_xml_config_parse_and_dispatch(spark, tmp_path):
     assert pcfg.landing_dir.endswith("dealer-data/Data")
     report = run_ingest(spark, pcfg)
     assert report["processed"][0]["rows"] == 1
-    assert spark.read.parquet(str(tmp_path / "transactions")).count() == 1
-
-
-def test_compact_buckets(spark, tmp_path):
-    """Compaction coalesces multi-file buckets to their size-appropriate
-    file count, preserves every row, and skips already-compact buckets."""
-    from data_pipeline_demo_spark.sinks.upsert import compact_buckets
-
-    target = str(tmp_path / "target")
-    big = spark.createDataFrame(
-        [(i, float(i)) for i in range(2000)], "id long, amount double"
-    ).repartition(16)
-    upsert_parquet(spark, big, target, num_buckets=4)
-
-    def bucket_files():
-        out = {}
-        for d in glob.glob(os.path.join(target, "__bucket=*")):
-            out[os.path.basename(d)] = sorted(
-                os.path.basename(p) for p in glob.glob(os.path.join(d, "*.parquet"))
-            )
-        return out
-
-    before = bucket_files()
-    assert any(len(v) >= 2 for v in before.values()), before  # fragmented
-    rows_before = sorted(
-        (r["id"], r["amount"]) for r in spark.read.parquet(target).collect()
-    )
-    n = compact_buckets(spark, target)  # huge default target size -> 1 file each
-    assert n == sum(1 for v in before.values() if len(v) >= 2)
-    after = bucket_files()
-    assert all(len(v) == 1 for v in after.values()), after
-    rows_after = sorted(
-        (r["id"], r["amount"]) for r in spark.read.parquet(target).collect()
-    )
-    assert rows_after == rows_before
-    # second pass: nothing left to do, no staging debris
-    assert compact_buckets(spark, target) == 0
-    assert not glob.glob(os.path.join(target, ".compact_*"))
-    # table still upserts correctly post-compaction
-    assert upsert_parquet(
-        spark, spark.createDataFrame([(0, 999.0)], "id long, amount double"), target
-    ) == 2000
-
-
-def test_upsert_schema_evolution_new_column(spark, tmp_path):
-    """A batch carrying a new column must merge: old rows surface null
-    for it, new rows carry it, and the key merge semantics hold."""
-    target = str(tmp_path / "target")
-    upsert_parquet(
-        spark, spark.createDataFrame([(1, 10.0)], "id long, amount double"), target
-    )
-    evolved = spark.createDataFrame(
-        [(1, 11.0, "AUD"), (2, 20.0, "NZD")],
-        "id long, amount double, currency string",
-    )
-    assert upsert_parquet(spark, evolved, target) == 2
-    rows = {
-        r["id"]: (r["amount"], r["currency"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert rows == {1: (11.0, "AUD"), 2: (20.0, "NZD")}
-    # reverse direction: a narrow batch against the evolved table
-    assert upsert_parquet(
-        spark, spark.createDataFrame([(3, 30.0)], "id long, amount double"), target
-    ) == 3
-    rows = {
-        r["id"]: (r["amount"], r["currency"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert rows == {1: (11.0, "AUD"), 2: (20.0, "NZD"), 3: (30.0, None)}
+    assert read_txtable(spark, str(tmp_path / "transactions")).count() == 1
 
 
 def test_run_ingest_batch_qa_observation(spark, tmp_path):
@@ -468,3 +307,31 @@ def test_run_ingest_batch_qa_observation(spark, tmp_path):
     assert qa["n_dates_parsed"] == 3 and qa["n_dates_null"] == 0
     assert qa["date_min"] == min(p["date_min"] for p in per_file)
     assert qa["date_max"] == max(p["date_max"] for p in per_file)
+
+
+def test_run_ingest_supersedes_across_runs(spark, tmp_path):
+    """A later landing file carrying an already-ingested id updates
+    that row: the target is a txtable, so the superseded row is gone
+    from the snapshot and each run is one version in its history."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    cfg = PipelineConfig(
+        landing_dir=str(landing),
+        target_path=str(tmp_path / "target"),
+        ledger_path=str(tmp_path / "ledger"),
+        quarantine_path=str(tmp_path / "quarantine"),
+    )
+    (landing / "dealer_2025-06-01.csv").write_text(
+        f"{CSV_HEADER}\n1,30/04/2025 19:36,$10.00,$100.00,,,,,,,,,\n"
+        f"2,30/04/2025 19:37,$20.00,$200.00,,,,,,,,,\n"
+    )
+    run_ingest(spark, cfg)
+    (landing / "dealer_2025-06-02.csv").write_text(
+        f"{CSV_HEADER}\n1,01/05/2025 08:00,$15.00,$150.00,,,,,,,,,\n"
+    )
+    report = run_ingest(spark, cfg)
+    assert report["skipped"] == 1
+    assert report["processed"][0]["target_total"] == 2
+    got = {r["id"]: r["Amount"] for r in read_txtable(spark, cfg.target_path).collect()}
+    assert got == {1: 15.0, 2: 20.0}
+    assert len(txtable_history(spark, cfg.target_path)) == 2

@@ -8,6 +8,7 @@ Trigger.AvailableNow must reproduce the batch result exactly.
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline_demo_spark.sinks.txlog import read_txtable, txtable_history
 from data_pipeline_demo_spark.sources.tables import table
 from data_pipeline_demo_spark.streaming import jobs
 
@@ -103,12 +104,18 @@ def test_stateful_user_counts_match_batch(spark, event_stream_source, tmp_path):
     assert n_emits >= 2
 
 
-def test_stream_upsert_effectively_once(spark, event_stream_source, tmp_path):
-    """foreachBatch -> bucketed upsert: multi-batch stream lands every
-    event exactly once in the target; replaying the whole stream (fresh
-    checkpoint, same data) changes nothing — keyed idempotency."""
-    path, schema = event_stream_source
-    target = str(tmp_path / "target")
+def test_stream_upsert_txlog_snapshot_per_batch(spark, event_stream_source, tmp_path):
+    """foreachBatch -> log-backed txtable: each micro-batch is one atomic
+    snapshot commit; the final snapshot holds every event exactly once,
+    history has one version per micro-batch, and full redelivery (fresh
+    checkpoint, same source) leaves the row set unchanged (keyed
+    idempotency across commits)."""
+    src, schema = event_stream_source
+    # re-stage as 3 files so availableNow + maxFilesPerTrigger=1 yields
+    # 3 micro-batches -> 3 snapshot commits
+    path = str(tmp_path / "txsrc")
+    spark.read.schema(schema).parquet(src).repartition(3).write.parquet(path)
+    target = str(tmp_path / "txtarget")
 
     def run(checkpoint):
         stream = (
@@ -125,46 +132,6 @@ def test_stream_upsert_effectively_once(spark, event_stream_source, tmp_path):
         )
         q.awaitTermination(180)
 
-    run(str(tmp_path / "ckpt1"))
-    base = spark.read.schema(schema).parquet(path)
-    n_expected = base.select("event_id").distinct().count()
-    assert spark.read.parquet(target).count() == n_expected
-
-    # full redelivery: new checkpoint, same source -> target unchanged
-    run(str(tmp_path / "ckpt2"))
-    assert spark.read.parquet(target).count() == n_expected
-
-
-def test_stream_upsert_txlog_snapshot_per_batch(spark, event_stream_source, tmp_path):
-    """foreachBatch -> log-backed txtable: each micro-batch is one atomic
-    snapshot commit; the final snapshot holds every event exactly once,
-    history has one version per micro-batch, and full redelivery leaves
-    the row set unchanged (keyed idempotency across commits)."""
-    from data_pipeline_demo_spark.sinks.txlog import read_txtable, txtable_history
-
-    src, schema = event_stream_source
-    # re-stage as 3 files so availableNow + maxFilesPerTrigger=1 yields
-    # 3 micro-batches -> 3 snapshot commits
-    path = str(tmp_path / "txsrc")
-    spark.read.schema(schema).parquet(src).repartition(3).write.parquet(path)
-    target = str(tmp_path / "txtarget")
-
-    def run(checkpoint):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        q = (
-            jobs.stream_upsert_writer(
-                stream, target, key="event_id", checkpoint=checkpoint,
-                use_txlog=True,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
     run(str(tmp_path / "txckpt1"))
     base = spark.read.schema(schema).parquet(path)
     n_expected = base.select("event_id").distinct().count()
@@ -175,6 +142,13 @@ def test_stream_upsert_txlog_snapshot_per_batch(spark, event_stream_source, tmp_
 
     run(str(tmp_path / "txckpt2"))  # full redelivery
     assert read_txtable(spark, target).count() == n_expected
+
+
+def test_stream_upsert_writer_refuses_parquet_sink():
+    """``use_txlog=False`` selected the removed parquet sink: refused
+    before any stream is configured, never silently rerouted."""
+    with pytest.raises(ValueError, match="parquet upsert sink.*removed"):
+        jobs.stream_upsert_writer(None, "unused", use_txlog=False)
 
 
 def test_dedup_within_watermark_drops_replays(spark, event_stream_source, tmp_path):
@@ -220,7 +194,7 @@ def test_stream_ingest_landing_exactly_once_per_file(spark, tmp_path):
 
     q = jobs.stream_ingest_landing(spark, str(landing), target, quarantine, ckpt)
     q.awaitTermination(120)
-    got = {r["id"]: r["Amount"] for r in spark.read.parquet(target).collect()}
+    got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
     assert got == {"1": 10.0}
     assert spark.read.parquet(quarantine).count() == 1
 
@@ -231,9 +205,41 @@ def test_stream_ingest_landing_exactly_once_per_file(spark, tmp_path):
     )
     q2 = jobs.stream_ingest_landing(spark, str(landing), target, quarantine, ckpt)
     q2.awaitTermination(120)
-    got = {r["id"]: r["Amount"] for r in spark.read.parquet(target).collect()}
+    got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
     assert got == {"1": 99.0, "2": 20.0}
     assert spark.read.parquet(quarantine).count() == 1  # not re-quarantined
+
+
+def test_stream_ingest_landing_corrupt_only_batch_commits_nothing(spark, tmp_path):
+    """A micro-batch whose rows are all corrupt quarantines them and
+    commits no txtable version (the upsert callback's empty-batch guard
+    sees the batch's empty clean split)."""
+    header = (
+        "id,TransactionDatetime,Amount,TotalAmount,Surcharge,MSF,Tip,Cashout,"
+        "Extras,Levy,ServiceFee,TxnFee,Rebate"
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.csv").write_text(
+        f"{header}\n1,30/04/2025 19:36,$10.00,$100.00,,,,,,,,,\n"
+    )
+    target = str(tmp_path / "target")
+    quarantine = str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    jobs.stream_ingest_landing(
+        spark, str(landing), target, quarantine, ckpt
+    ).awaitTermination(120)
+    assert len(txtable_history(spark, target)) == 1
+
+    bad = ",".join(["x"] * 30)  # 30 fields: cannot fit the schema
+    (landing / "b.csv").write_text(f"{header}\n{bad}\n{bad}\n")
+    jobs.stream_ingest_landing(
+        spark, str(landing), target, quarantine, ckpt
+    ).awaitTermination(120)
+    assert spark.read.parquet(quarantine).count() == 2
+    assert len(txtable_history(spark, target)) == 1
+    got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
+    assert got == {"1": 10.0}
 
 
 def test_interval_join_stream_equals_batch(spark, event_stream_source, tmp_path):

@@ -320,18 +320,6 @@ def test_txlog_wrong_key_or_buckets_raises(spark, tmp_path):
     assert txlog_upsert(spark, _rows(spark, [(3, "c")]), root) == 3
 
 
-def test_upsert_parquet_wrong_key_or_buckets_raises(spark, tmp_path):
-    from data_pipeline_demo_spark.sinks.upsert import upsert_parquet
-
-    target = str(tmp_path / "t")
-    upsert_parquet(spark, _rows(spark, [(1, "a")]), target, key="id", num_buckets=4)
-    with pytest.raises(ValueError, match="key"):
-        upsert_parquet(spark, _rows(spark, [(2, "b")]), target, key="v")
-    with pytest.raises(ValueError, match="num_buckets"):
-        upsert_parquet(spark, _rows(spark, [(2, "b")]), target, num_buckets=8)
-    assert upsert_parquet(spark, _rows(spark, [(2, "b")]), target) == 2
-
-
 def test_txlog_io_error_propagates_not_commit_race(spark, tmp_path, monkeypatch):
     """A non-race failure (permissions/quota/connectivity) must surface
     as itself: masking it as ConcurrentCommitError would send callers
@@ -364,7 +352,7 @@ def test_txlog_empty_microbatch_no_new_version(spark, tmp_path):
     from data_pipeline_demo_spark.streaming.jobs import make_upsert_batch_fn
 
     root = str(tmp_path / "tx")
-    fn = make_upsert_batch_fn(root, key="id", use_txlog=True)
+    fn = make_upsert_batch_fn(root, key="id")
     fn(_rows(spark, [(1, "a")]), 0)
     assert len(txtable_history(spark, root)) == 1
     empty = _rows(spark, [])
@@ -855,6 +843,33 @@ def test_rename_fallback_distinguishes_race_from_io_failure():
     assert _rename_fallback(FS(False, True), "s", "d") is False
     with pytest.raises(IOError, match="not a commit race"):
         _rename_fallback(FS(False, False), "s", "d")
+
+
+def test_rename_no_overwrite_python_error_propagates(monkeypatch):
+    """Only a JVM failure to build a FileContext (scheme without
+    FileContext support) may route the commit claim to the non-atomic
+    ``FileSystem.rename`` fallback; a Python-side error propagates."""
+    from types import SimpleNamespace
+
+    from data_pipeline_demo_spark.sinks import txlog as txmod
+
+    class FakeJVM:
+        def __getattr__(self, name):  # org.apache.hadoop.fs.FileContext
+            return self
+
+        def getFileContext(self, uri, conf):
+            raise TypeError("not a JVM error")
+
+    def no_fallback(fs, src, dst):
+        raise AssertionError("fell back to FileSystem.rename")
+
+    fake_spark = SimpleNamespace(
+        _jvm=FakeJVM(), _jsc=SimpleNamespace(hadoopConfiguration=lambda: None)
+    )
+    dst = SimpleNamespace(toUri=lambda: "file:///t/_commits/00000.json")
+    monkeypatch.setattr(txmod, "_rename_fallback", no_fallback)
+    with pytest.raises(TypeError, match="not a JVM error"):
+        txmod._rename_no_overwrite(fake_spark, None, "src", dst)
 
 
 def test_zone_map_prune_with_date_bounds(spark, tmp_path):
