@@ -160,11 +160,10 @@ def refresh_cascade(
 
     Returns the list of affected p_date strings.
     """
-    from ..sinks.upsert import _hadoop_fs, _swap_in
+    from ..sinks.upsert import _hadoop_fs
 
-    jvm = spark._jvm
     # a null event time has no bucket, no p_date partition, and would
-    # stage into __HIVE_DEFAULT_PARTITION__ that the publish loop never
+    # stage into __HIVE_DEFAULT_PARTITION__ that the publish never
     # swaps — drop explicitly rather than lose rows silently
     increment = increment.filter(F.col(ts_col).isNotNull())
     inc = _finest_partials(increment, ts_col, dims, value_col, levels[0])
@@ -173,43 +172,73 @@ def refresh_cascade(
     )
     if not days:
         return []
-
-    below: DataFrame | None = None
-    for i, lvl in enumerate(levels):
-        store = store_base.rstrip("/") + "/" + lvl
-        fs, tpath = _hadoop_fs(spark, store)
-        if i == 0:
-            if fs.exists(tpath):
-                existing = (
-                    spark.read.parquet(store)
-                    .filter(F.col("p_date").isin(days))
-                    .drop("p_date")
-                )
-                merged = _combine_partials(existing, inc, dims)
-            else:
-                merged = inc
-        else:
-            merged = _reagg_partials(below, dims, lvl)
-        out = merged.withColumn(
-            "p_date", F.to_date("bucket").cast("string")
+    store = _tier_path(store_base, levels[0])
+    fs, tpath = _hadoop_fs(spark, store)
+    if fs.exists(tpath):
+        existing = (
+            spark.read.parquet(store)
+            .filter(F.col("p_date").isin(days))
+            .drop("p_date")
         )
+        inc = _combine_partials(existing, inc, dims)
+    _publish_tiers(spark, store_base, levels, dims, days, inc)
+    return days
+
+
+def _tier_path(store_base: str, level: str) -> str:
+    return store_base.rstrip("/") + "/" + level
+
+
+def _publish_tiers(
+    spark,
+    store_base: str,
+    levels: Sequence[str],
+    dims: Sequence[str],
+    days: list[str],
+    finest: DataFrame,
+) -> None:
+    """Replace the ``days`` partitions of every tier: ``finest`` holds
+    the finest tier's new partials for those days, and each coarser
+    tier re-aggregates the tier below's published partitions. Each tier
+    stages its partitions, swaps each day in with the stage-and-swap
+    commit the upsert sink uses, and deletes a day that has no rows any
+    more."""
+    from ..sinks.upsert import _hadoop_fs, _swap_in
+
+    jvm = spark._jvm
+    merged = finest
+    for i, lvl in enumerate(levels):
+        store = _tier_path(store_base, lvl)
+        fs, tpath = _hadoop_fs(spark, store)
+        if i:
+            merged = _reagg_partials(below, dims, lvl)
+        out = merged.withColumn("p_date", F.to_date("bucket").cast("string"))
         staging_str = tpath.toString() + "__staging_" + uuid.uuid4().hex
         out.write.mode("overwrite").partitionBy("p_date").parquet(staging_str)
         staging = jvm.org.apache.hadoop.fs.Path(staging_str)
         if not fs.exists(tpath):
             fs.mkdirs(tpath)
         for d in days:
-            src = jvm.org.apache.hadoop.fs.Path(staging, f"p_date={d}")
-            if fs.exists(src):
-                _swap_in(fs, jvm, src, jvm.org.apache.hadoop.fs.Path(tpath, f"p_date={d}"))
+            src_p = jvm.org.apache.hadoop.fs.Path(staging, f"p_date={d}")
+            dst_p = jvm.org.apache.hadoop.fs.Path(tpath, f"p_date={d}")
+            if fs.exists(src_p):
+                _swap_in(fs, jvm, src_p, dst_p)
+            elif fs.exists(dst_p):
+                # the day's rows all vanished: replacement = removal
+                fs.delete(dst_p, True)
         fs.delete(staging, True)
-        # next tier re-aggregates THIS tier's post-merge affected days
+        has_parts = any(
+            st.getPath().getName().startswith("p_date=")
+            for st in fs.listStatus(tpath)
+        )
+        # the next tier re-aggregates THIS tier's published days
         below = (
             spark.read.parquet(store)
             .filter(F.col("p_date").isin(days))
             .drop("p_date")
+            if has_parts
+            else merged.limit(0)
         )
-    return days
 
 
 def refresh_cascade_from_txtable(
@@ -278,51 +307,21 @@ def refresh_cascade_from_txtable(
     if not days:
         return [], latest
     rows = src.filter(F.to_date(ts_col).cast("string").isin(days))
-
-    from ..sinks.upsert import _hadoop_fs, _swap_in
-
-    jvm = spark._jvm
-    below: DataFrame | None = None
-    for i, lvl in enumerate(levels):
-        store = store_base.rstrip("/") + "/" + lvl
-        fs, tpath = _hadoop_fs(spark, store)
-        if i == 0:
-            merged = _finest_partials(rows, ts_col, dims, value_col, lvl)
-        else:
-            merged = _reagg_partials(below, dims, lvl)
-        out = merged.withColumn("p_date", F.to_date("bucket").cast("string"))
-        staging_str = tpath.toString() + "__staging_" + uuid.uuid4().hex
-        out.write.mode("overwrite").partitionBy("p_date").parquet(staging_str)
-        staging = jvm.org.apache.hadoop.fs.Path(staging_str)
-        if not fs.exists(tpath):
-            fs.mkdirs(tpath)
-        for d in days:
-            src_p = jvm.org.apache.hadoop.fs.Path(staging, f"p_date={d}")
-            dst_p = jvm.org.apache.hadoop.fs.Path(tpath, f"p_date={d}")
-            if fs.exists(src_p):
-                _swap_in(fs, jvm, src_p, dst_p)
-            elif fs.exists(dst_p):
-                # the day's rows all vanished: replacement = removal
-                fs.delete(dst_p, True)
-        fs.delete(staging, True)
-        has_parts = any(
-            st.getPath().getName().startswith("p_date=")
-            for st in fs.listStatus(tpath)
-        )
-        below = (
-            spark.read.parquet(store)
-            .filter(F.col("p_date").isin(days))
-            .drop("p_date")
-            if has_parts
-            else merged.limit(0)
-        )
+    _publish_tiers(
+        spark,
+        store_base,
+        levels,
+        dims,
+        days,
+        _finest_partials(rows, ts_col, dims, value_col, levels[0]),
+    )
     return days, latest
 
 
 def read_rollup(spark, store_base: str, level: str) -> DataFrame:
     """Storage-form partials of one persisted tier (drop the partition
     key; pass through :func:`finalize` for the read-time projection)."""
-    return spark.read.parquet(store_base.rstrip("/") + "/" + level).drop("p_date")
+    return spark.read.parquet(_tier_path(store_base, level)).drop("p_date")
 
 
 def gapfill_locf(

@@ -36,6 +36,7 @@ from ..sources.csv_ingest import (
     DEALER_TRANSACTIONS_SCHEMA,
     SOURCE_COL,
     TRANSACTION_LOG_SCHEMA,
+    landing_target_rows,
     read_csv_with_quarantine,
 )
 
@@ -92,7 +93,7 @@ def run_ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
     good, quarantine = read_csv_with_quarantine(
         spark, paths, DEALER_TRANSACTIONS_SCHEMA, with_source=True
     )
-    cleaned = clean_transactions(good).withColumn("id", F.col("id").try_cast("long"))
+    cleaned = clean_transactions(good)
     # The batch is consumed twice (QA aggregates, then the upsert);
     # persist the parsed+cleaned form so the CSV parse/clean chain runs
     # once per batch instead of once per consumer.
@@ -128,7 +129,7 @@ def run_ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, object]:
     from pyspark.sql import Observation
 
     obs = Observation("batch_qa")
-    to_write = cleaned.drop("_all_money_null", SOURCE_COL)
+    to_write = landing_target_rows(cleaned)
     to_write = to_write.observe(
         obs, *_qa_agg_exprs(to_write, "TotalAmount", "TransactionDatetime")
     )

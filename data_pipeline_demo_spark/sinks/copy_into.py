@@ -60,13 +60,7 @@ from .txlog import (
     _publish_touched_buckets,
     _write_copylog_sidecar,
 )
-from .manifest import (
-    append_files,
-    check_features,
-    decimal_columns,
-    next_manifest,
-    norm_fs_path,
-)
+from .manifest import check_features, next_manifest, norm_fs_path
 from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
 # Self-compaction backstop: past this many chain links the next COPY
@@ -382,41 +376,15 @@ def copy_into(
             existing=None,
         )
     num_buckets = int(prev["num_buckets"])
-    stats_columns = list(prev.get("stats_columns", []))
-    bloom_columns = list(prev.get("bloom_columns", []))
-    bloom_bits = int(prev.get("bloom_bits", 1024))
-
     batch = batch.withColumn(BUCKET_COL, _bucket_of(key, num_buckets))
     # blind append (r12 optimization, guide §1.2): no pre-scan of the
-    # landing files for their touched-bucket set — the old
-    # distinct().collect() read EVERY new file once before the write
-    # read them again. An append replaces no bucket's bookkeeping (the
-    # fresh dicts below only ever gain file-bearing buckets, and the
-    # merge algebra adds), so "touched" can safely name every bucket:
-    # the write itself reveals which ones actually received files.
-    touched = list(range(num_buckets))
-    # fresh dicts: _publish writes the files and fills ONLY the new
-    # files' bookkeeping; append_files merges it into the previous
-    # snapshot's without reading any existing file
-    new_buckets: dict[str, list[str]] = {}
-    new_counts: dict[str, int] = {}
-    new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
-    new_nulls: dict[str, dict] = {}
-    _publish_touched_buckets(
-        spark,
-        root_path,
-        batch,
-        touched,
-        new_buckets,
-        new_counts,
-        stats_columns=stats_columns,
-        bucket_stats=new_stats,
-        bloom_columns=bloom_columns,
-        bucket_blooms=new_blooms,
-        bloom_bits=bloom_bits,
-        bucket_nulls=new_nulls,
-        manifest=prev,
+    # landing files for their touched-bucket set — a distinct().collect()
+    # would read EVERY new file once before the write read them again.
+    # An append only adds to the buckets that receive files, so
+    # "touched" can safely name every bucket: the write itself reveals
+    # which ones actually did.
+    written = _publish_touched_buckets(
+        spark, root_path, prev, batch, list(range(num_buckets)), mode="append"
     )
     if _idpin is not None:
         _idpin.unpersist()
@@ -447,23 +415,7 @@ def copy_into(
         next_manifest(
             prev,
             "COPY INTO",
-            **append_files(
-                prev,
-                [
-                    (
-                        bs,
-                        rels,
-                        new_counts[bs],
-                        new_stats.get(bs, {}),
-                        new_blooms.get(bs, {}),
-                        new_nulls.get(bs, {}),
-                    )
-                    for bs, rels in new_buckets.items()
-                ],
-                stats_columns,
-                bloom_columns,
-                decimal_columns(schema_fields or prev.get("schema")),
-            ),
+            **written,
             schema=schema_fields,
             identity_high_water=identity_hwm,
             copy_files=None,
@@ -474,7 +426,8 @@ def copy_into(
     return {
         "num_loaded_files": len(new_files),
         "num_skipped_files": len(files) - len(new_files),
-        "rows_loaded": int(sum(new_counts.values())),
+        "rows_loaded": sum(written["row_counts"].values())
+        - sum(prev["row_counts"].values()),
         "version": version,
     }
 

@@ -63,7 +63,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .txlog import (
-    BLOOM_BITS,
     ConcurrentCommitError,  # noqa: F401  (re-export for callers)
     _apply_generated_columns,
     _bucket_of,
@@ -74,7 +73,7 @@ from .txlog import (
     _read_buckets_logical,
     FEATURE_DV,
 )
-from .manifest import check_features, dvs_without, next_manifest
+from .manifest import check_features, next_manifest
 from .upsert import BUCKET_COL
 
 
@@ -460,10 +459,9 @@ def txlog_merge(
                     "EVOLUTION to add source columns)"
                 )
 
-    # per-action counts ride the publish pass's OWN stat aggregate
-    # (deterministic — no Observation/AQE fragility, zero extra jobs):
-    # live rows carry their tag; deleted rows are derived by manifest
-    # arithmetic below (every touched row is exactly one of
+    # per-action counts ride the bucket write's own Observation (zero
+    # extra jobs): live rows carry their tag; deleted rows are derived
+    # by manifest arithmetic below (every touched row is exactly one of
     # keep / update / delete under the duplicate-free-source guarantee)
     out_cols = [c for c in table_cols if c not in generated]
     result_a = live_a.select(*[_out_a(c) for c in out_cols], "__tag")
@@ -519,11 +517,6 @@ def txlog_merge(
         BUCKET_COL, _bucket_of(key, num_buckets)
     )
 
-    buckets = dict(prev["buckets"])
-    row_counts = dict(prev["row_counts"])
-    bucket_stats = dict(prev.get("bucket_stats", {}))
-    bucket_blooms = dict(prev.get("bucket_blooms", {}))
-    bucket_nulls = dict(prev.get("bucket_nulls", {}))
     live_tags = (
         ["keep"]
         + [
@@ -533,33 +526,10 @@ def txlog_merge(
         ]
         + [f"i{i}" for i in range(len(not_matched))]
     )
-    tag_counts: dict[str, int] = {}
-    # logical rows of the touched buckets BEFORE the merge — pure
-    # manifest arithmetic; deletes fall out as the difference
-    prior_touched_rows = sum(
-        int(prev["row_counts"].get(str(b), 0)) for b in touched
-    ) - sum(
-        int(prev.get("dv_counts", {}).get(str(b), 0)) for b in touched
+    written = _publish_touched_buckets(
+        spark, root_path, prev, result, touched, tags=live_tags
     )
-    _publish_touched_buckets(
-        spark,
-        root_path,
-        result,
-        touched,
-        buckets,
-        row_counts,
-        stats_columns=list(prev.get("stats_columns", [])),
-        bucket_stats=bucket_stats,
-        bloom_columns=list(prev.get("bloom_columns", [])),
-        bucket_blooms=bucket_blooms,
-        bloom_bits=int(prev.get("bloom_bits", BLOOM_BITS)),
-        bucket_nulls=bucket_nulls,
-        manifest=prev,
-        tag_col="__tag",
-        tag_values=live_tags,
-        tag_counts=tag_counts,
-        size_hint_rows=prior_touched_rows,
-    )
+    tag_counts = written.pop("tag_counts")
     if _idpin is not None:
         _idpin.unpersist()
     # counts: updates/inserts from the publish aggregate's tag counts;
@@ -572,8 +542,15 @@ def txlog_merge(
             res.rows_updated += tag_counts.get(f"m{i}", 0)
     for i in range(len(not_matched)):
         res.rows_inserted += tag_counts.get(f"i{i}", 0)
+    # logical rows of the touched buckets BEFORE the merge — pure
+    # manifest arithmetic; deletes fall out as the difference
+    dv_counts = prev.get("dv_counts", {})
     res.rows_deleted = (
-        prior_touched_rows
+        sum(
+            int(prev["row_counts"].get(str(b), 0))
+            - int(dv_counts.get(str(b), 0))
+            for b in touched
+        )
         - tag_counts.get("keep", 0)
         - res.rows_updated
     )
@@ -584,14 +561,9 @@ def txlog_merge(
         next_manifest(
             prev,
             "MERGE",
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
             schema=schema_fields,
             identity_high_water=identity_hwm,
-            bucket_dvs=dvs_without(prev, touched),
+            **written,
         ),
         prev=prev,
     )

@@ -316,7 +316,7 @@ def _require_unique_key(df: DataFrame, key: str, clause: str) -> None:
         )
 
 
-def _split_top_commas(text: str) -> list[str]:
+def _split_column_defs(text: str) -> list[str]:
     """Top-level comma split of a (masked) column-definition list:
     commas inside parens (``DECIMAL(10,2)``, GENERATED expressions)
     and inside angle-bracket type parameters (``struct<a:int,b:int>``)
@@ -393,7 +393,7 @@ def _extract_generated_columns(
     ident: dict[str, dict] = {}
     defaults: dict[str, str] = {}
     not_null: list[str] = []
-    for part in _split_top_commas(schema_text):
+    for part in _split_column_defs(schema_text):
         # identity / generated clauses match on the RAW part FIRST:
         # ``GENERATED BY DEFAULT AS IDENTITY`` contains the word
         # DEFAULT, so the suffix peel below would mangle it into
@@ -1429,7 +1429,7 @@ def txtable_sql(
 
         path = U(m.group("path"))
         n = None
-        for item in _split_top_commas(m.group("cols")):
+        for item in _split_column_defs(m.group("cols")):
             cm = re.match(
                 r"\s*(?P<col>`[^`]+`|\w+)\s+(?P<type>.+?)\s*$", item
             )

@@ -57,8 +57,10 @@ from .manifest import (
     FEATURE_SHARDS,  # noqa: F401  (re-export)
     SHARDS_DIR,
     UnsupportedTableFeatureError,  # noqa: F401  (re-export)
+    append_files,
     check_features,
     commit_rel,
+    decimal_columns,
     deflate as deflate_manifest,
     dvs_without,
     inflate as inflate_manifest,
@@ -93,8 +95,8 @@ OBS_STATS_MAX_EXPRS = 1024
 # 16.6 ns per row×expression (128 exprs × 600k rows = +1.28 s on the
 # write, where the readback's column-pruned re-read+agg of the same
 # files cost +0.18 s). So the Observation path must also be bounded by
-# rows × expressions: callers pass the prior logical row count of the
-# touched buckets (manifest arithmetic, free) as the size hint; above
+# rows × expressions: the size hint is the prior logical row count of
+# the touched buckets (manifest arithmetic, free); above
 # this product — or with no hint (first load, blind append) — the
 # readback wins. 12M ≈ the measured crossover with margin: a 1-bucket
 # point write on a 100 TB table stays obs (tiny rows), a bulk rewrite
@@ -1246,17 +1248,57 @@ def _read_dvs(spark, root_path: str, dv_rels: list[str]):
     )
 
 
+def _dv_matches(spark, root_path: str, manifest: dict, bucket_ids, match):
+    """The LOGICAL rows of the given buckets that ``match`` keeps, each
+    carrying its deletion-vector address (``__dv_file``, ``__dv_pos``);
+    None when the buckets hold no files. ``match`` runs FIRST on the
+    raw snapshot scan, so its predicate or semi-join pushes down to the
+    parquet read and the broadcast ref lookup and the existing-vector
+    anti-join see only the matched rows — O(matched rows), not
+    O(scanned rows). A ref that does not resolve surfaces as NULL, which
+    ``_write_dv_files`` refuses loudly."""
+    files = [
+        _abs(root_path, rel)
+        for b in bucket_ids
+        for rel in manifest["buckets"].get(str(b), [])
+    ]
+    if not files:
+        return None
+    rows = _read_snapshot_files(spark, manifest, files).select(
+        "*",
+        _fp_norm().alias("__fp_norm"),
+        F.col("_metadata.row_index").alias("__dv_pos"),
+    )
+    matched = match(rows).join(
+        F.broadcast(_file_ref_lookup(spark, root_path, manifest, bucket_ids)),
+        "__fp_norm",
+        "left",
+    )
+    dv_rels = _dv_rels(manifest, [str(b) for b in bucket_ids])
+    if dv_rels:
+        # rows a vector already removed must not re-record (they would
+        # double-count dv_counts)
+        dvs = _read_dvs(spark, root_path, dv_rels)
+        matched = matched.join(dvs, ["__dv_file", "__dv_pos"], "left_anti")
+    return matched
+
+
 def _write_dv_files(
-    spark, root_path: str, doomed, prev: dict
-) -> tuple[dict, dict]:
-    """Write ``doomed`` (__dv_file, __dv_pos, BUCKET_COL) as a fresh
-    immutable ``dv/<uuid>/`` parquet dir partitioned by bucket; return
-    (new_bucket_dvs, new_dv_counts) with the previous manifest's
-    entries merged in. Caller commits; a crash first leaves the files
-    invisible (vacuum-able), exactly like data files."""
+    spark, root_path: str, matched, prev: dict
+) -> tuple[dict, dict[str, int]]:
+    """Record the ``matched`` rows (from :func:`_dv_matches`) as a fresh
+    immutable ``dv/<uuid>/`` parquet dir; return the ``bucket_dvs`` and
+    ``dv_counts`` changes for :func:`next_manifest` (the previous
+    manifest's entries merged in) and the rows added per bucket.
+    Caller commits; a crash first leaves the files invisible
+    (vacuum-able), exactly like data files."""
     commit_id = uuid.uuid4().hex
     out_rel = f"{DV_DIR}/{commit_id}"
-    doomed = doomed.persist()
+    doomed = matched.select(
+        "__dv_file",
+        "__dv_pos",
+        _bucket_of(prev["key"], prev["num_buckets"]).alias(BUCKET_COL),
+    ).persist()
     try:
         stat_rows = doomed.groupBy(BUCKET_COL).agg(
             F.count(F.lit(1)).alias("__n"),
@@ -1308,22 +1350,22 @@ def _write_dv_files(
             for st in fs.listStatus(base_dir)
             if st.isFile() and st.getPath().getName().endswith(".parquet")
         )
-        for b in touched:
-            bucket_dvs[b] = bucket_dvs.get(b, []) + shared
-            dv_counts[b] = dv_counts.get(b, 0) + int(per_bucket[b])
-        return bucket_dvs, dv_counts
     for b in touched:
-        sub = jvm.org.apache.hadoop.fs.Path(
-            root, f"{out_rel}/{BUCKET_COL}={b}"
-        )
-        files = sorted(
-            f"{out_rel}/{BUCKET_COL}={b}/" + st.getPath().getName()
-            for st in fs.listStatus(sub)
-            if st.isFile() and st.getPath().getName().endswith(".parquet")
-        )
+        if flat:
+            files = shared
+        else:
+            sub = jvm.org.apache.hadoop.fs.Path(
+                root, f"{out_rel}/{BUCKET_COL}={b}"
+            )
+            files = sorted(
+                f"{out_rel}/{BUCKET_COL}={b}/" + st.getPath().getName()
+                for st in fs.listStatus(sub)
+                if st.isFile() and st.getPath().getName().endswith(".parquet")
+            )
         bucket_dvs[b] = bucket_dvs.get(b, []) + files
         dv_counts[b] = dv_counts.get(b, 0) + int(per_bucket[b])
-    return bucket_dvs, dv_counts
+    changes = {"bucket_dvs": bucket_dvs, "dv_counts": dv_counts}
+    return changes, {b: int(n) for b, n in per_bucket.items()}
 
 
 def _validate_bloom_probe(manifest: dict, col: str, v) -> None:
@@ -1425,230 +1467,185 @@ def _bloom_sparse_words(
 def _publish_touched_buckets(
     spark: SparkSession,
     root_path: str,
+    manifest: dict,
     df: DataFrame,
     touched: list[int],
-    buckets: dict[str, list[str]],
-    row_counts: dict[str, int],
-    stats_columns: list[str] | None = None,
-    bucket_stats: dict[str, dict] | None = None,
-    bloom_columns: list[str] | None = None,
-    bucket_blooms: dict[str, dict] | None = None,
-    bloom_bits: int = BLOOM_BITS,
-    bucket_nulls: dict[str, dict] | None = None,
-    manifest: dict | None = None,
-    tag_col: str | None = None,
-    tag_values: list[str] | None = None,
-    tag_counts: dict | None = None,
-    size_hint_rows: int | None = None,
-) -> None:
-    """Write ``df`` (carrying BUCKET_COL) into a fresh immutable
-    ``data/<uuid>/`` dir partitioned by bucket, then update the manifest
-    bookkeeping dicts in place: each touched bucket's file list is
-    replaced by the new files (or dropped entirely when the bucket came
-    out empty). Untouched buckets are never read, written, or listed.
-    The caller commits the manifest; a crash before that leaves these
-    files invisible (and vacuum-able).
+    mode: str = "rewrite",
+    rows: int | None = None,
+    tags: list[str] | None = None,
+) -> dict:
+    """Write ``df`` (logical column names, carrying BUCKET_COL) into one
+    fresh immutable ``data/<uuid>/`` dir partitioned by bucket, and
+    return the :func:`next_manifest` changes that publish it:
+    ``buckets``, ``row_counts``, ``bucket_stats``, ``bucket_blooms``,
+    ``bucket_nulls`` and, unless appending, ``bucket_dvs``. The caller
+    commits; a crash first leaves the files invisible (and
+    vacuum-able). Buckets outside ``touched`` are never read, written
+    or listed.
 
-    ``manifest`` (the previous snapshot, when one exists) supplies the
-    column mapping: ``df`` arrives under LOGICAL names (stats/bloom
-    aggregates below use them), and the parquet write lands under
-    PHYSICAL names — renamed columns keep reading from their original
-    in-file name across every rewrite.
+    ``manifest`` is the table's snapshot. It names the zone-map
+    (``stats_columns``) and Bloom columns, the Bloom size and the column
+    mapping (the write lands under PHYSICAL names, so renamed columns
+    keep their in-file name), and holds the bookkeeping the changes
+    start from. A table being created passes just its
+    ``stats_columns``, ``bloom_columns`` and ``bloom_bits``.
 
-    ``stats_columns``: zone-map columns — per-bucket min/max land in
-    ``bucket_stats`` (same one-pass aggregate as the row counts), so
-    the read path can prune buckets by value predicate from the
-    manifest alone, before any file IO.
+    ``mode``:
 
-    ``tag_col``/``tag_values``/``tag_counts``: when set, per-tag row
-    counts land in ``tag_counts`` (conditional MERGE's per-action
-    bookkeeping) via an ``Observation`` riding the write action —
-    deterministic under the API's documented guarantee (exactly the
-    rows flowing through the single action) — and the column is
-    dropped before the parquet write.
+    - ``"rewrite"``: ``df`` is the new content of the touched buckets.
+      Their files, counts, zone maps, null counts, filters and deletion
+      vectors are replaced; a touched bucket that came out empty is
+      dropped.
+    - ``"append"``: ``df`` holds rows added to the touched buckets. The
+      new files join them through :func:`append_files` (counts and null
+      counts add, zone maps widen, filters OR); deletion vectors are
+      left alone. ``rows`` is ``df``'s row count when the caller knows
+      it.
+    - ``"full"``: ``df`` is the whole table (CREATE, REPLACE,
+      REBUCKET): the bookkeeping starts empty and every deletion vector
+      clears.
 
-    Execution shape (r12 optimization round, guide §1.2/§5): ONE pass.
-    The old shape persisted ``df``, ran a pre-write stat aggregate
-    (collect), re-derived blooms from cache, then wrote — two actions
-    plus an executor-memory cache of the full merged relation, where
-    per-job fixed cost dominates small commits (streaming triggers,
-    point MERGEs) and the cache competes with execution memory at
-    scale. Now the write is the only action over the merge plan, and
-    per-bucket bookkeeping (row counts, zone-map min/max, null counts)
-    rides the SAME action's ``Observation`` as conditional aggregates —
-    zero extra passes — while the expression budget holds
-    (``OBS_STATS_MAX_EXPRS``). Tables with bloom columns (per-bucket
-    array aggregates that cannot ride a global Observation) or very
-    large touched × stats products instead recompute bookkeeping from
-    the just-written files: a column-pruned read of exactly the new
-    files, no cache resident anywhere (see OPTIMIZATION_r12.md)."""
-    commit_id = uuid.uuid4().hex
-    out_rel = f"{DATA_DIR}/{commit_id}"
+    ``tags``: values of ``df``'s ``__tag`` column (conditional MERGE's
+    per-action rows). Their counts come back as ``tag_counts`` — pop it
+    before the commit — and the column is dropped before the write.
+
+    Bookkeeping (row counts, zone-map min/max, null counts) rides the
+    write's own ``Observation`` as per-bucket conditional aggregates —
+    zero extra jobs — when all of these hold:
+
+    - no Bloom columns (per-bucket word arrays cannot ride a global
+      Observation);
+    - speculation is off: accumulator-backed metrics can double-count
+      re-launched tasks, and a manifest must never carry inflated
+      counts;
+    - ``touched × (1 + 3·stats)`` expressions fit
+      ``OBS_STATS_MAX_EXPRS``, and times the size hint fit
+      ``OBS_STATS_MAX_ROWEXPRS``: CollectMetrics evaluates them per
+      row, interpreted, so a bulk write pays more inside the write than
+      a readback costs. The hint is the rows flowing through the write:
+      the touched buckets' prior logical rows (rewrite), the table's
+      row count (full) or ``rows`` (append). A new table and COPY
+      INTO's blind append have none.
+
+    Otherwise one column-pruned aggregate reads back exactly the new
+    files (a footer-only count without stats or Bloom columns), plus one
+    sparse bit-or aggregate per Bloom column. Tag counts always ride the
+    Observation: the tag column is never written, so they have no
+    readback twin."""
+    out_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
     out_dir = _abs(root_path, out_rel)
-    # schema evolution: a batch may predate a stats column — record
-    # stats only for columns this write carries; absent entries are
-    # conservatively kept by the pruning reader
-    stats_columns = [c for c in (stats_columns or []) if c in df.columns]
-    bloom_columns = [c for c in (bloom_columns or []) if c in df.columns]
-    obs = None
-    towrite = df
-    obs_exprs = []
-    if tag_col and tag_values:
-        # MERGE per-action counts have no post-write readback twin (the
-        # tag column is dropped before the parquet write), so they ride
-        # the Observation unconditionally; under speculative execution
-        # accumulator-backed metrics may double-count the speculated
-        # copies, which the engine's sessions never enable
-        # (spark.speculation stays at its false default). The manifest-
-        # bearing row/stat counts below DO gate on it.
-        obs_exprs.extend(
-            F.sum((F.col(tag_col) == t).cast("long")).alias(f"__tc_{t}")
-            for t in tag_values
+    # a batch may predate a stats or Bloom column (schema evolution):
+    # bookkeeping covers the columns this write carries
+    stats_columns = [
+        c for c in manifest.get("stats_columns", []) if c in df.columns
+    ]
+    bloom_columns = [
+        c for c in manifest.get("bloom_columns", []) if c in df.columns
+    ]
+    prior = manifest.get("row_counts")
+    if mode == "append":
+        hint = rows
+    elif prior is None:
+        hint = None
+    elif mode == "full":
+        hint = sum(int(n) for n in prior.values())
+    else:
+        dv_counts = manifest.get("dv_counts", {})
+        hint = sum(
+            int(prior.get(str(b), 0)) - int(dv_counts.get(str(b), 0))
+            for b in touched
         )
-    # per-bucket bookkeeping rides the SAME Observation when the
-    # conditional-aggregate budget allows and no bloom columns force a
-    # readback anyway (bloom words are per-bucket array aggregates that
-    # cannot ride a global Observation): the readback job below then
-    # disappears entirely — one fewer action AND zero re-read of the
-    # just-written bytes (guide §1.2: remove passes)
-    # r13 (ADVICE): the row×expr budget is now ENFORCED, not just
-    # documented — CollectMetrics evaluates its conditional aggregates
-    # per row, interpreted (measured 16.6 ns/row/expr), so a bulk
-    # rewrite pays more inside the write than the readback job costs.
-    # Callers thread the prior logical row count of the touched buckets
-    # (manifest arithmetic, free) as the hint; no hint (first load,
-    # COPY INTO's blind append) means readback.
     stats_exprs = len(touched) * (1 + 3 * len(stats_columns))
-    # speculative execution re-launches tasks, and accumulator-backed
-    # CollectMetrics can double-count rows from the speculated copies
-    # (ADVICE r12): manifests must never carry inflated row counts, so
-    # with speculation on the bookkeeping takes the readback, which
-    # only reads committed files. (Zone-map min/max would survive
-    # double-counting; row/null counts would not.)
-    speculative = (
-        spark.conf.get("spark.speculation", "false").lower() == "true"
-    )
     use_obs_stats = (
         not bloom_columns
         and touched
-        and not speculative
+        and spark.conf.get("spark.speculation", "false").lower() != "true"
         and stats_exprs <= OBS_STATS_MAX_EXPRS
-        and size_hint_rows is not None
-        and stats_exprs * size_hint_rows <= OBS_STATS_MAX_ROWEXPRS
+        and hint is not None
+        and stats_exprs * hint <= OBS_STATS_MAX_ROWEXPRS
     )
+    obs_exprs = [
+        F.sum((F.col("__tag") == t).cast("long")).alias(f"__tc_{t}")
+        for t in tags or []
+    ]
     if use_obs_stats:
         for b in touched:
             hit = F.col(BUCKET_COL) == b
             obs_exprs.append(F.sum(hit.cast("long")).alias(f"__nb_{b}"))
             for c in stats_columns:
-                obs_exprs.append(
-                    F.min(F.when(hit, F.col(c))).alias(f"__lo_{b}_{c}")
-                )
-                obs_exprs.append(
-                    F.max(F.when(hit, F.col(c))).alias(f"__hi_{b}_{c}")
-                )
-                obs_exprs.append(
+                obs_exprs += [
+                    F.min(F.when(hit, F.col(c))).alias(f"__lo_{b}_{c}"),
+                    F.max(F.when(hit, F.col(c))).alias(f"__hi_{b}_{c}"),
                     F.sum((hit & F.col(c).isNull()).cast("long")).alias(
                         f"__nn_{b}_{c}"
-                    )
-                )
+                    ),
+                ]
+    towrite = df
+    obs = None
     if obs_exprs:
         from pyspark.sql import Observation
 
         obs = Observation()
         towrite = towrite.observe(obs, *obs_exprs)
-    if tag_col and tag_values:
-        towrite = towrite.drop(tag_col)
-    # one shuffle on the bucket column so each bucket's rows sit in
-    # ONE task before the partitioned write: without it every task
-    # writes a sliver into every touched bucket dir — tasks×buckets
-    # files of a few KB (measured: 32×32=1024 ~10 KB files for one
-    # sf0.1 commit), which is metadata poison at scale and makes
-    # every later read/CDC diff open them all. One file per touched
-    # bucket per commit is the Delta optimizeWrite shape; oversized
-    # buckets are re-split by size in compact_txtable. The partition
-    # count is deliberately NOT pinned to len(touched) (r13, ADVICE):
-    # hash partitioning alone already lands each bucket wholly in one
-    # partition, and leaving the count to AQE lets a small commit
-    # (streaming trigger, point MERGE, tiny COPY batch) coalesce to a
-    # few tasks instead of launching len(touched) mostly-empty ones —
-    # AQE coalescing merges partitions, never splits them, so the
-    # one-file-per-touched-bucket invariant is unchanged.
+    if tags:
+        towrite = towrite.drop("__tag")
+    # hash-partition on the bucket so each bucket's rows sit in ONE task
+    # and the commit writes one file per touched bucket (Delta's
+    # optimizeWrite shape), not tasks × buckets slivers. The partition
+    # count is left to AQE, which coalesces a small commit into a few
+    # tasks and never splits a bucket.
     (
-        _to_physical(
-            towrite.repartition(F.col(BUCKET_COL)),
-            manifest,
-        )
+        _to_physical(towrite.repartition(F.col(BUCKET_COL)), manifest)
         .write.mode("error")
         .partitionBy(BUCKET_COL)
         .parquet(out_dir)
     )
+    # one listing of the commit dir finds the file-bearing bucket dirs
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
-    new_files: dict[str, list[str]] = {}
-    # ONE listing of the commit dir discovers the file-bearing bucket
-    # subdirs (r13, ADVICE): the old loop probed exists() + listStatus
-    # per TOUCHED bucket — O(touched) RPC pairs per commit, costly on
-    # object stores for high-bucket tables and for COPY INTO's
-    # touched-all-buckets appends.
     out_path = jvm.org.apache.hadoop.fs.Path(root, out_rel)
     touched_set = {str(b) for b in touched}
     prefix = f"{BUCKET_COL}="
-    if fs.exists(out_path):
-        for dst in fs.listStatus(out_path):
-            name = dst.getPath().getName()
-            if not dst.isDirectory() or not name.startswith(prefix):
-                continue
-            b = name[len(prefix):]
-            if b not in touched_set:
-                continue
-            files = sorted(
-                f"{out_rel}/{name}/" + st.getPath().getName()
-                for st in fs.listStatus(dst.getPath())
-                if st.isFile() and st.getPath().getName().endswith(".parquet")
-            )
-            if files:
-                new_files[b] = files
+    new_files: dict[str, list[str]] = {}
+    for dst in fs.listStatus(out_path) if fs.exists(out_path) else []:
+        name = dst.getPath().getName()
+        b = name[len(prefix):]
+        if not (dst.isDirectory() and name.startswith(prefix)):
+            continue
+        if b not in touched_set:
+            continue
+        files = sorted(
+            f"{out_rel}/{name}/" + st.getPath().getName()
+            for st in fs.listStatus(dst.getPath())
+            if st.isFile() and st.getPath().getName().endswith(".parquet")
+        )
+        if files:
+            new_files[b] = files
 
-    got: dict = {}
-    if obs is not None and new_files:
-        # (a provably-empty merge result is optimized to an empty
-        # relation and the CollectMetrics node with it — no metric row
-        # exists; new_files is empty then, and no rows flowed: tag
-        # counts are 0 and every touched bucket's stats are popped)
-        got = obs.get
-    if tag_col and tag_values and tag_counts is not None:
-        for t in tag_values:
-            tag_counts[t] = int(got.get(f"__tc_{t}") or 0)
-
-    per_bucket: dict[str, int] = {}
+    # a provably-empty df plans no CollectMetrics node, so no metric row
+    # exists; no rows flowed then, and new_files is empty
+    got = obs.get if obs is not None and new_files else {}
+    counts: dict[str, int] = {}
+    stats: dict[str, dict] = {}
+    nulls: dict[str, dict] = {}
+    blooms: dict[str, dict] = {}
     if new_files and use_obs_stats:
-        # bookkeeping straight off the write's Observation: zero extra
-        # actions, zero re-read of the just-written bytes
-        for b in touched:
-            bs = str(b)
-            if bs not in new_files:
-                continue
-            per_bucket[bs] = int(got.get(f"__nb_{b}") or 0)
-            if stats_columns and bucket_stats is not None:
-                bucket_stats[bs] = {
+        for bs in new_files:
+            counts[bs] = int(got.get(f"__nb_{bs}") or 0)
+            if stats_columns:
+                stats[bs] = {
                     c: [
-                        stat_value(got.get(f"__lo_{b}_{c}")),
-                        stat_value(got.get(f"__hi_{b}_{c}")),
+                        stat_value(got.get(f"__lo_{bs}_{c}")),
+                        stat_value(got.get(f"__hi_{bs}_{c}")),
                     ]
                     for c in stats_columns
                 }
-            if stats_columns and bucket_nulls is not None:
-                bucket_nulls[bs] = {
-                    c: int(got.get(f"__nn_{b}_{c}") or 0)
+                nulls[bs] = {
+                    c: int(got.get(f"__nn_{bs}_{c}") or 0)
                     for c in stats_columns
                 }
     elif new_files:
-        # bookkeeping readback over ONLY the new files: logical column
-        # names restored from the physical write mapping; with no stats
-        # or bloom columns this is a footer-only count (no data pages
-        # read)
-        mapping = mapping_of(manifest.get("schema")) if manifest else {}
+        mapping = mapping_of(manifest.get("schema"))
         need = list(dict.fromkeys(stats_columns + bloom_columns))
         rb = spark.read.option("basePath", out_dir).parquet(out_dir).select(
             F.col(BUCKET_COL),
@@ -1656,52 +1653,72 @@ def _publish_touched_buckets(
         )
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in stats_columns:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
-            # null counts ride the same pass (Iceberg's null_value_counts
-            # role): IS NULL / IS NOT NULL probes then prune buckets
-            # from the manifest alone
-            aggs.append(
-                F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}")
-            )
-        stat_rows = rb.groupBy(BUCKET_COL).agg(*aggs).collect()
-        per_bucket = {str(r[BUCKET_COL]): r["__n"] for r in stat_rows}
-        if stats_columns and bucket_stats is not None:
-            for r in stat_rows:
-                bucket_stats[str(r[BUCKET_COL])] = {
+            aggs += [
+                F.min(c).alias(f"__lo_{c}"),
+                F.max(c).alias(f"__hi_{c}"),
+                F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
+            ]
+        for r in rb.groupBy(BUCKET_COL).agg(*aggs).collect():
+            bs = str(r[BUCKET_COL])
+            counts[bs] = int(r["__n"])
+            if stats_columns:
+                stats[bs] = {
                     c: [stat_value(r[f"__lo_{c}"]), stat_value(r[f"__hi_{c}"])]
                     for c in stats_columns
                 }
-        if stats_columns and bucket_nulls is not None:
-            for r in stat_rows:
-                bucket_nulls[str(r[BUCKET_COL])] = {
+                nulls[bs] = {
                     c: int(r[f"__nn_{c}"] or 0) for c in stats_columns
                 }
-        if bloom_columns and bucket_blooms is not None:
-            # fresh filters for every touched bucket, one sparse
-            # combinable aggregate per declared column over the
-            # column-pruned readback
-            touched_strs = {str(b) for b in touched}
-            for bs in touched_strs:
-                bucket_blooms.pop(bs, None)
-            for c in bloom_columns:
-                for bs, words in _bloom_sparse_words(rb, c, bloom_bits).items():
-                    bucket_blooms.setdefault(bs, {})[c] = words
+        for c in bloom_columns:
+            for bs, words in _bloom_sparse_words(
+                rb, c, int(manifest.get("bloom_bits", BLOOM_BITS))
+            ).items():
+                blooms.setdefault(bs, {})[c] = words
 
-    for b in touched:
-        files = new_files.get(str(b), [])
-        if files:
-            buckets[str(b)] = files
-            row_counts[str(b)] = int(per_bucket.get(str(b), 0))
-        else:
-            buckets.pop(str(b), None)
-            row_counts.pop(str(b), None)
-            if bucket_stats is not None:
-                bucket_stats.pop(str(b), None)
-            if bucket_blooms is not None:
-                bucket_blooms.pop(str(b), None)
-            if bucket_nulls is not None:
-                bucket_nulls.pop(str(b), None)
+    if mode == "append":
+        changes = append_files(
+            manifest,
+            [
+                (
+                    bs,
+                    new_files[bs],
+                    counts.get(bs, 0),
+                    stats.get(bs, {}),
+                    blooms.get(bs, {}),
+                    nulls.get(bs, {}),
+                )
+                for bs in sorted(new_files, key=int)
+            ],
+            manifest.get("stats_columns", []),
+            manifest.get("bloom_columns", []),
+            decimal_columns(manifest.get("schema")),
+        )
+    else:
+        base = {} if mode == "full" else manifest
+        fields = {
+            "buckets": new_files,
+            "row_counts": counts,
+            "bucket_stats": stats,
+            "bucket_blooms": blooms,
+            "bucket_nulls": nulls,
+        }
+        changes = {}
+        for field, new in fields.items():
+            cur = dict(base.get(field, {}))
+            for bs in map(str, touched):
+                if bs in new:
+                    cur[bs] = new[bs]
+                else:
+                    cur.pop(bs, None)
+            changes[field] = cur
+        changes["bucket_dvs"] = (
+            None if mode == "full" else dvs_without(manifest, touched)
+        )
+    if tags:
+        changes["tag_counts"] = {
+            t: int(got.get(f"__tc_{t}") or 0) for t in tags
+        }
+    return changes
 
 
 def txlog_upsert(
@@ -1853,10 +1870,7 @@ def txlog_upsert(
         replaced_version = prev["version"]
         prev = None
     version = 0
-    buckets: dict[str, list[str]] = {}
-    row_counts: dict[str, int] = {}
     app_txns: dict[str, int] = {}
-    bucket_stats: dict[str, dict] = {}
     if prev is not None:
         if key is not None and key != prev["key"]:
             raise ValueError(
@@ -1920,19 +1934,14 @@ def txlog_upsert(
         identity_hwm = dict(prev.get("identity_high_water", {}))
         column_defaults = dict(prev.get("column_defaults", {}))
         bloom_bits = int(prev.get("bloom_bits", BLOOM_BITS))
-        buckets = dict(prev["buckets"])
-        row_counts = dict(prev["row_counts"])
         app_txns = dict(prev.get("app_txns", {}))
-        bucket_stats = dict(prev.get("bucket_stats", {}))
-        bucket_blooms = dict(prev.get("bucket_blooms", {}))
-        bucket_nulls = dict(prev.get("bucket_nulls", {}))
         if (
             txn_app_id is not None
             and app_txns.get(txn_app_id, -1) >= txn_version
         ):
             # already committed: skip. LOGICAL rows (minus deletion
             # vectors), matching what the original delivery returned
-            return sum(row_counts.values()) - sum(
+            return sum(prev["row_counts"].values()) - sum(
                 prev.get("dv_counts", {}).values()
             )
     else:
@@ -1947,8 +1956,6 @@ def txlog_upsert(
             for c, cfg in identity_columns.items()
         }
         column_defaults = dict(column_defaults or {})
-        bucket_blooms = {}
-        bucket_nulls = {}
         if replaced_version is not None:
             version = replaced_version + 1
     if txn_app_id is not None:
@@ -2017,10 +2024,10 @@ def txlog_upsert(
     touched = sorted(
         r[0] for r in updates.select(BUCKET_COL).distinct().collect()
     )
-    if not_matched_by_source_delete:
+    if not_matched_by_source_delete and prev is not None:
         # the delete clause must examine every target row: widen the
         # touched set to every non-empty bucket (Delta pays the same)
-        touched = sorted(set(touched) | {int(b) for b in buckets})
+        touched = sorted(set(touched) | {int(b) for b in prev["buckets"]})
     current = (
         _read_buckets_logical(spark, root_path, prev, touched)
         if prev is not None
@@ -2059,31 +2066,18 @@ def txlog_upsert(
     else:
         merged = updates
 
-    _publish_touched_buckets(
+    written = _publish_touched_buckets(
         spark,
         root_path,
+        prev
+        or {
+            "stats_columns": stats_columns,
+            "bloom_columns": bloom_columns,
+            "bloom_bits": bloom_bits,
+        },
         merged,
         touched,
-        buckets,
-        row_counts,
-        stats_columns=stats_columns,
-        bucket_stats=bucket_stats,
-        bloom_columns=bloom_columns,
-        bucket_blooms=bucket_blooms,
-        bloom_bits=bloom_bits,
-        bucket_nulls=bucket_nulls,
-        manifest=prev,
-        # prior logical rows of the touched buckets — manifest
-        # arithmetic; gates the Observation-vs-readback bookkeeping
-        size_hint_rows=(
-            sum(int(prev["row_counts"].get(str(b), 0)) for b in touched)
-            - sum(
-                int(prev.get("dv_counts", {}).get(str(b), 0))
-                for b in touched
-            )
-        )
-        if prev is not None
-        else None,
+        mode="rewrite" if prev is not None else "full",
     )
     if _idpin is not None:
         # files are written; release the identity allocation's pinned
@@ -2098,22 +2092,17 @@ def txlog_upsert(
         version=version,
         key=key,
         num_buckets=num_buckets,
-        buckets=buckets,
-        row_counts=row_counts,
         app_txns=app_txns,
         stats_columns=stats_columns,
-        bucket_stats=bucket_stats,
         bloom_columns=bloom_columns,
-        bucket_blooms=bucket_blooms,
         bloom_bits=bloom_bits,
-        bucket_nulls=bucket_nulls,
         schema=schema_fields,
         dropped_columns=dropped_columns,
         generated_columns=generated_columns,
         identity_columns=identity_columns,
         identity_high_water=identity_hwm,
         column_defaults=column_defaults,
-        bucket_dvs=dvs_without(prev, touched),
+        **written,
         **(
             {
                 "manifest_sharding": {
@@ -2140,7 +2129,7 @@ def txlog_upsert(
             _publish_sidecar_json(
                 spark, root_path, PROPERTIES_DIR, {}, pv, "table properties"
             )
-    return sum(row_counts.values()) - sum(
+    return sum(manifest["row_counts"].values()) - sum(
         manifest.get("dv_counts", {}).values()
     )
 
@@ -2507,41 +2496,65 @@ def txlog_delete(
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
     check_features(prev, frozenset({FEATURE_DV}), "DELETE from")
-    if mode == "merge-on-read":
-        return _txlog_delete_mor(spark, root_path, prev, keys, where)
     key = prev["key"]
     num_buckets = prev["num_buckets"]
-    buckets = dict(prev["buckets"])
-    row_counts = dict(prev["row_counts"])
-
     if keys is not None:
-        # no dropDuplicates on the delete keys (r12): both consumers —
-        # the touched-bucket distinct and the LEFT ANTI below — are
-        # duplicate-insensitive, so the pre-dedup was a pure extra
-        # exchange over the key set
+        # no dropDuplicates on the delete keys (r12): every consumer —
+        # the touched-bucket distinct, the copy-on-write LEFT ANTI and
+        # the merge-on-read LEFT SEMI — is duplicate-insensitive
         del_keys = keys.select(F.col(key).alias("__del_key"))
-        touched = sorted(
-            r[0]
-            for r in del_keys.select(
-                _bucket_of("__del_key", num_buckets).alias(BUCKET_COL)
+        hit = F.col(key).eqNullSafe(F.col("__del_key"))
+        touched = [
+            b
+            for b in sorted(
+                r[0]
+                for r in del_keys.select(
+                    _bucket_of("__del_key", num_buckets).alias(BUCKET_COL)
+                )
+                .distinct()
+                .collect()
             )
-            .distinct()
-            .collect()
-        )
-        touched = [b for b in touched if str(b) in buckets]
-        if not touched:
-            return 0
-        current = _read_buckets_logical(spark, root_path, prev, touched)
-        survivors = current.join(
-            del_keys, F.col(key).eqNullSafe(F.col("__del_key")), "left_anti"
-        ).withColumn(BUCKET_COL, _bucket_of(key, num_buckets))
+            if str(b) in prev["buckets"]
+        ]
     else:
         pred = F.coalesce(F.expr(where), F.lit(False))
-        live = sorted(int(b) for b in buckets)
-        current = _read_buckets_logical(spark, root_path, prev, live)
-        if current is None:
+        touched = sorted(int(b) for b in prev["buckets"])
+    if not touched:
+        return 0
+
+    if mode == "merge-on-read":
+        # record the matched LOGICAL rows as new deletion-vector files;
+        # no data file is rewritten, and every data field carries (null
+        # counts are PHYSICAL: a merge-on-read delete changes no file)
+        matched = _dv_matches(
+            spark,
+            root_path,
+            prev,
+            touched,
+            (lambda rows: rows.join(del_keys, hit, "left_semi"))
+            if keys is not None
+            else (lambda rows: rows.filter(pred)),
+        )
+        if matched is None:
             return 0  # table already empty: nothing to match
-        current = current.withColumn(BUCKET_COL, _bucket_of(key, num_buckets))
+        dvs, added = _write_dv_files(spark, root_path, matched, prev)
+        n = sum(added.values())
+        if n:  # nothing matched: no version churn
+            _commit_manifest(
+                spark,
+                root_path,
+                next_manifest(prev, "DELETE", **dvs),
+                prev=prev,
+            )
+        return n
+
+    current = _read_buckets_logical(spark, root_path, prev, touched)
+    if current is None:
+        return 0  # table already empty: nothing to match
+    current = current.withColumn(BUCKET_COL, _bucket_of(key, num_buckets))
+    if keys is not None:
+        survivors = current.join(del_keys, hit, "left_anti")
+    else:
         touched = sorted(
             r[0]
             for r in current.filter(pred).select(BUCKET_COL).distinct().collect()
@@ -2551,132 +2564,19 @@ def txlog_delete(
         survivors = current.filter(F.col(BUCKET_COL).isin(touched)).filter(
             ~pred
         )
-
+    written = _publish_touched_buckets(
+        spark, root_path, prev, survivors, touched
+    )
+    _commit_manifest(
+        spark, root_path, next_manifest(prev, "DELETE", **written), prev=prev
+    )
     dv_counts = prev.get("dv_counts", {})
-    prior = sum(
-        row_counts[str(b)] - dv_counts.get(str(b), 0) for b in touched
+    return sum(
+        prev["row_counts"][str(b)]
+        - dv_counts.get(str(b), 0)
+        - written["row_counts"].get(str(b), 0)
+        for b in touched
     )
-    bucket_stats = dict(prev.get("bucket_stats", {}))
-    bucket_blooms = dict(prev.get("bucket_blooms", {}))
-    bucket_nulls = dict(prev.get("bucket_nulls", {}))
-    _publish_touched_buckets(
-        spark,
-        root_path,
-        survivors,
-        touched,
-        buckets,
-        row_counts,
-        stats_columns=prev.get("stats_columns", []),
-        bucket_stats=bucket_stats,
-        bloom_columns=prev.get("bloom_columns", []),
-        bucket_blooms=bucket_blooms,
-        bloom_bits=int(prev.get("bloom_bits", BLOOM_BITS)),
-        bucket_nulls=bucket_nulls,
-        manifest=prev,
-        size_hint_rows=prior,
-    )
-    kept = sum(row_counts.get(str(b), 0) for b in touched)
-    _commit_manifest(
-        spark,
-        root_path,
-        next_manifest(
-            prev,
-            "DELETE",
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
-            bucket_dvs=dvs_without(prev, touched),
-        ),
-        prev=prev,
-    )
-    return prior - kept
-
-
-def _txlog_delete_mor(
-    spark: SparkSession,
-    root_path: str,
-    prev: dict,
-    keys: DataFrame | None,
-    where: str | None,
-) -> int:
-    """Merge-on-read DELETE body (see :func:`txlog_delete` ``mode``):
-    record matched LOGICAL rows (already-deleted rows can never be
-    re-recorded — the scan anti-applies existing vectors first) as new
-    deletion-vector files; no data file is read beyond the match scan,
-    none is rewritten. Key deletes scan only the key-hash buckets;
-    predicate deletes scan once to find matches. Commit carries every
-    data field unchanged and merges the new vectors in."""
-    key = prev["key"]
-    num_buckets = prev["num_buckets"]
-    buckets = prev["buckets"]
-    if keys is not None:
-        # duplicate keys need no pre-dedup: LEFT SEMI matches once per
-        # target row regardless (r12 — one exchange fewer)
-        del_keys = keys.select(F.col(key).alias("__del_key"))
-        scan = sorted(
-            r[0]
-            for r in del_keys.select(
-                _bucket_of("__del_key", num_buckets).alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
-        )
-        scan = [b for b in scan if str(b) in buckets]
-    else:
-        scan = sorted(int(b) for b in buckets)
-    if not scan:
-        return 0
-    files = [
-        _abs(root_path, rel) for b in scan for rel in buckets[str(b)]
-    ]
-    if not files:
-        return 0  # table already empty: nothing to match
-    # Match FIRST on the raw scan (predicate/semi-join push down to the
-    # parquet read), carrying only (_metadata path, position); the
-    # broadcast ref lookup and the existing-vector anti-join then run
-    # on the MATCHED set only — O(deleted rows), not O(scanned rows).
-    rows = _read_snapshot_files(spark, prev, files).select(
-        "*",
-        _fp_norm().alias("__fp_norm"),
-        F.col("_metadata.row_index").alias("__dv_pos"),
-    )
-    if keys is not None:
-        matched = rows.join(
-            del_keys, F.col(key).eqNullSafe(F.col("__del_key")), "left_semi"
-        )
-    else:
-        matched = rows.filter(F.coalesce(F.expr(where), F.lit(False)))
-    matched = matched.join(
-        F.broadcast(_file_ref_lookup(spark, root_path, prev, scan)),
-        "__fp_norm",
-        "left",  # unresolvable refs surface as NULL → loud guard below
-    )
-    dv_rels = _dv_rels(prev, [str(b) for b in scan])
-    if dv_rels:
-        # rows a previous merge-on-read delete already removed must not
-        # re-record (they would double-count dv_counts)
-        dvs = _read_dvs(spark, root_path, dv_rels)
-        matched = matched.join(dvs, ["__dv_file", "__dv_pos"], "left_anti")
-    doomed = matched.select(
-        "__dv_file", "__dv_pos", _bucket_of(key, num_buckets).alias(BUCKET_COL)
-    )
-    bucket_dvs, dv_counts = _write_dv_files(spark, root_path, doomed, prev)
-    n = sum(dv_counts.values()) - sum(prev.get("dv_counts", {}).values())
-    if n == 0:
-        return 0  # nothing matched: no version churn
-    # every data field carries: null counts are PHYSICAL (all file
-    # rows) and a merge-on-read delete changes no file
-    _commit_manifest(
-        spark,
-        root_path,
-        next_manifest(
-            prev, "DELETE", bucket_dvs=bucket_dvs, dv_counts=dv_counts
-        ),
-        prev=prev,
-    )
-    return n
 
 
 def _txlog_update_mor(
@@ -2688,71 +2588,33 @@ def _txlog_update_mor(
 ) -> int:
     """Merge-on-read UPDATE body (see :func:`txlog_update` ``mode``):
     matched LOGICAL rows are deletion-vectored and their post-update
-    images APPENDED as new files to the same buckets — IO is
-    O(updated rows) on both sides, no bucket rewrite (Delta's
-    DV-update shape). Zone maps and bloom filters of the touched
-    buckets are POPPED (no filter/stats recorded ⇒ the pruning reader
-    conservatively keeps the bucket — exact, just less prunable until
-    the next rewrite recomputes them)."""
+    images APPENDED to the same buckets by the one bucket write — IO is
+    O(updated rows) on both sides, no bucket rewrite (Delta's DV-update
+    shape). The touched buckets keep their zone maps, null counts and
+    Bloom filters, widened, summed and OR'd over the appended files:
+    all three describe PHYSICAL rows, and deletion-vectored rows stay
+    in their files, so the merged bookkeeping is exact."""
     key = prev["key"]
-    if key in set_map:
-        raise ValueError(
-            f"cannot SET the table key {key!r}: a key change moves rows "
-            "across buckets — express it as txlog_delete + txlog_upsert"
-        )
-    generated = dict(prev.get("generated_columns", {}))
-    gen_hit = [c for c in set_map if c in generated]
-    if gen_hit:
-        raise ValueError(
-            f"cannot SET generated column(s) {gen_hit}: GENERATED ALWAYS "
-            "AS columns recompute from their expressions when their "
-            "inputs change"
-        )
-    id_hit = [c for c in set_map if c in prev.get("identity_columns", {})]
-    if id_hit:
-        raise ValueError(
-            f"cannot SET identity column(s) {id_hit}: identity values "
-            "are write-once, allocated when the row is inserted"
-        )
-    num_buckets = prev["num_buckets"]
-    buckets = {b: list(r) for b, r in prev["buckets"].items()}
-    row_counts = dict(prev["row_counts"])
-    live = sorted(int(b) for b in buckets)
-    files = [_abs(root_path, rel) for b in live for rel in buckets[str(b)]]
-    if not files:
+    matched = _dv_matches(
+        spark,
+        root_path,
+        prev,
+        sorted(int(b) for b in prev["buckets"]),
+        lambda rows: rows.filter(F.coalesce(F.expr(where), F.lit(False))),
+    )
+    if matched is None:
         return 0
-    scan = _read_snapshot_files(spark, prev, files)
-    data_cols = scan.columns
+    data_cols = [
+        c for c in matched.columns
+        if c not in ("__fp_norm", "__dv_pos", "__dv_file")
+    ]
     unknown = [c for c in set_map if c not in data_cols]
     if unknown:
         raise ValueError(f"SET columns not in table schema: {unknown}")
-    rows = scan.select(
-        "*",
-        _fp_norm().alias("__fp_norm"),
-        F.col("_metadata.row_index").alias("__dv_pos"),
-    )
-    matched = rows.filter(F.coalesce(F.expr(where), F.lit(False))).join(
-        F.broadcast(_file_ref_lookup(spark, root_path, prev, live)),
-        "__fp_norm",
-        "left",
-    )
-    dv_rels = _dv_rels(prev, [str(b) for b in live])
-    if dv_rels:
-        dvs = _read_dvs(spark, root_path, dv_rels)
-        matched = matched.join(dvs, ["__dv_file", "__dv_pos"], "left_anti")
     matched = matched.persist()
     try:
-        doomed = matched.select(
-            "__dv_file",
-            "__dv_pos",
-            _bucket_of(key, num_buckets).alias(BUCKET_COL),
-        )
-        bucket_dvs, dv_counts = _write_dv_files(
-            spark, root_path, doomed, prev
-        )
-        n = sum(dv_counts.values()) - sum(
-            prev.get("dv_counts", {}).values()
-        )
+        dvs, added = _write_dv_files(spark, root_path, matched, prev)
+        n = sum(added.values())
         if n == 0:
             return 0  # nothing matched: no version churn
         updated = matched.select(
@@ -2761,67 +2623,27 @@ def _txlog_update_mor(
                 for c in data_cols
             ]
         )
-        for c, expr in generated.items():
+        for c, expr in prev.get("generated_columns", {}).items():
             if c in updated.columns:
                 updated = updated.withColumn(c, F.expr(expr))
         _enforce_table_constraints(spark, root_path, updated)
-        updated = updated.withColumn(
-            BUCKET_COL, _bucket_of(key, num_buckets)
-        )
-        # APPEND the post-update images: fresh immutable dir, file refs
-        # appended to (not replacing) the touched buckets' lists
-        out_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        per_new = {
-            str(r[BUCKET_COL]): r["__n"]
-            for r in updated.groupBy(BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        }
-        touched = sorted(per_new, key=int)
-        shuffle_n = 1 if n < 200_000 else max(len(touched), 1)
-        (
-            _to_physical(
-                updated.repartition(shuffle_n, F.col(BUCKET_COL)), prev
-            )
-            .write.mode("error")
-            .partitionBy(BUCKET_COL)
-            .parquet(_abs(root_path, out_rel))
+        written = _publish_touched_buckets(
+            spark,
+            root_path,
+            prev,
+            updated.withColumn(
+                BUCKET_COL, _bucket_of(key, prev["num_buckets"])
+            ),
+            sorted(int(b) for b in added),
+            mode="append",
+            rows=n,
         )
     finally:
         matched.unpersist()
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    bucket_stats = dict(prev.get("bucket_stats", {}))
-    bucket_blooms = dict(prev.get("bucket_blooms", {}))
-    bucket_nulls = dict(prev.get("bucket_nulls", {}))
-    for b in touched:
-        sub = jvm.org.apache.hadoop.fs.Path(
-            root, f"{out_rel}/{BUCKET_COL}={b}"
-        )
-        new_files = sorted(
-            f"{out_rel}/{BUCKET_COL}={b}/" + st.getPath().getName()
-            for st in fs.listStatus(sub)
-            if st.isFile() and st.getPath().getName().endswith(".parquet")
-        )
-        buckets[b] = buckets.get(b, []) + new_files
-        row_counts[b] = row_counts.get(b, 0) + int(per_new[b])
-        bucket_stats.pop(b, None)
-        bucket_blooms.pop(b, None)
-        bucket_nulls.pop(b, None)
     _commit_manifest(
         spark,
         root_path,
-        next_manifest(
-            prev,
-            "UPDATE",
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
-            bucket_dvs=bucket_dvs,
-            dv_counts=dv_counts,
-        ),
+        next_manifest(prev, "UPDATE", **written, **dvs),
         prev=prev,
     )
     return n
@@ -2858,8 +2680,8 @@ def txlog_update(
     the touched buckets, the matched rows are deletion-vectored and
     their post-update images appended as new files — O(updated rows)
     IO at any bucket size; the next rewrite of a bucket materializes.
-    Touched buckets' zone maps/blooms are popped (conservative) until
-    then.
+    Touched buckets keep their zone maps, null counts and Bloom
+    filters, merged with the appended files'.
     """
     if not set:
         raise ValueError("txlog_update: empty set= mapping")
@@ -2871,8 +2693,6 @@ def txlog_update(
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
     check_features(prev, frozenset({FEATURE_DV}), "UPDATE")
-    if mode == "merge-on-read":
-        return _txlog_update_mor(spark, root_path, prev, set, where)
     key = prev["key"]
     if key in set:
         raise ValueError(
@@ -2893,10 +2713,10 @@ def txlog_update(
             f"cannot SET identity column(s) {id_hit}: identity values "
             "are write-once, allocated when the row is inserted"
         )
+    if mode == "merge-on-read":
+        return _txlog_update_mor(spark, root_path, prev, set, where)
     num_buckets = prev["num_buckets"]
-    buckets = dict(prev["buckets"])
-    row_counts = dict(prev["row_counts"])
-    live = sorted(int(b) for b in buckets)
+    live = sorted(int(b) for b in prev["buckets"])
     current = _read_buckets_logical(spark, root_path, prev, live)
     if current is None:
         return 0
@@ -2911,7 +2731,6 @@ def txlog_update(
     )
     if not touched:
         return 0
-    bucket_nulls = dict(prev.get("bucket_nulls", {}))
     in_touched = current.filter(F.col(BUCKET_COL).isin(touched))
     n_updated = in_touched.filter(pred).count()
     rewritten = in_touched.select(
@@ -2935,43 +2754,11 @@ def txlog_update(
     # un-matched survivors already did; validating the whole rewrite
     # keeps the check one pass)
     _enforce_table_constraints(spark, root_path, rewritten)
-    bucket_stats = dict(prev.get("bucket_stats", {}))
-    bucket_blooms = dict(prev.get("bucket_blooms", {}))
-    _publish_touched_buckets(
-        spark,
-        root_path,
-        rewritten,
-        touched,
-        buckets,
-        row_counts,
-        stats_columns=prev.get("stats_columns", []),
-        bucket_stats=bucket_stats,
-        bloom_columns=prev.get("bloom_columns", []),
-        bucket_blooms=bucket_blooms,
-        bloom_bits=int(prev.get("bloom_bits", BLOOM_BITS)),
-        bucket_nulls=bucket_nulls,
-        manifest=prev,
-        size_hint_rows=sum(
-            int(prev["row_counts"].get(str(b), 0)) for b in touched
-        )
-        - sum(
-            int(prev.get("dv_counts", {}).get(str(b), 0)) for b in touched
-        ),
+    written = _publish_touched_buckets(
+        spark, root_path, prev, rewritten, touched
     )
     _commit_manifest(
-        spark,
-        root_path,
-        next_manifest(
-            prev,
-            "UPDATE",
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
-            bucket_dvs=dvs_without(prev, touched),
-        ),
-        prev=prev,
+        spark, root_path, next_manifest(prev, "UPDATE", **written), prev=prev
     )
     return n_updated
 
@@ -4029,7 +3816,16 @@ def compact_txtable(
                 manifest, prune_between, sorted(scope, key=int), root_path
             )
         )
+    def size_of(rels) -> int:
+        return sum(
+            fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(root, rel)).getLen()
+            for rel in rels
+        )
+
     todo: dict[str, list[str]] = {}
+    # the selection's byte totals, reused by the rewrite: one stat per
+    # file per pass is one HEAD request per file on object stores
+    nbytes: dict[str, int] = {}
     for b, rels in manifest["buckets"].items():
         if b not in scope:
             continue
@@ -4041,12 +3837,8 @@ def compact_txtable(
             continue
         if len(rels) < max(2, min_files):
             continue
-        nbytes = 0
-        for rel in rels:
-            p = jvm.org.apache.hadoop.fs.Path(root, rel)
-            nbytes += fs.getFileStatus(p).getLen()
-        want = max(1, -(-nbytes // target_file_bytes))
-        if len(rels) > want:
+        nbytes[b] = size_of(rels)
+        if len(rels) > max(1, -(-nbytes[b] // target_file_bytes)):
             todo[b] = rels
     if not todo:
         return 0
@@ -4069,11 +3861,9 @@ def compact_txtable(
             bucket_blooms.pop(b, None)
             bucket_nulls.pop(b, None)
             continue
-        nbytes = sum(
-            fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(root, rel)).getLen()
-            for rel in rels
-        )
-        want = int(max(1, -(-nbytes // target_file_bytes)))
+        if b not in nbytes:  # Z-order and DV buckets skip the selection stat
+            nbytes[b] = size_of(rels)
+        want = int(max(1, -(-nbytes[b] // target_file_bytes)))
         bucket_rel = f"{out_rel}/{BUCKET_COL}={b}"
         # logical read: folds the bucket's deletion vectors (if any)
         # into the rewrite — the vectors clear from the new manifest
@@ -4562,36 +4352,24 @@ def rebucket_txtable(
         return prev["version"]  # already there: no-op, no empty commit
     live = sorted(int(b) for b in prev["buckets"])
     rows = _read_buckets_logical(spark, root_path, prev, live)
-    buckets: dict[str, list[str]] = {}
-    row_counts: dict[str, int] = {}
-    bucket_stats: dict[str, dict] = {}
-    bucket_blooms: dict[str, dict] = {}
-    bucket_nulls: dict[str, dict] = {}
-    touched = list(range(new_num_buckets))
+    # the rewrite materializes every deletion vector
+    written = {
+        "buckets": {},
+        "row_counts": {},
+        "bucket_stats": {},
+        "bucket_blooms": {},
+        "bucket_nulls": {},
+        "bucket_dvs": None,
+    }
     if rows is not None:
-        rows = rows.withColumn(BUCKET_COL, _bucket_of(key, new_num_buckets))
-        _publish_touched_buckets(
+        written = _publish_touched_buckets(
             spark,
             root_path,
-            rows,
-            touched,
-            buckets,
-            row_counts,
-            stats_columns=prev.get("stats_columns", []),
-            bucket_stats=bucket_stats,
-            bloom_columns=prev.get("bloom_columns", []),
-            bucket_blooms=bucket_blooms,
-            bloom_bits=int(prev.get("bloom_bits", BLOOM_BITS)),
-            bucket_nulls=bucket_nulls,
-            manifest=prev,
-            # a rebucket rewrites the WHOLE table — the hint is the
-            # full logical row count, which sends bulk rewrites to the
-            # readback by design
-            size_hint_rows=sum(
-                int(n) for n in prev["row_counts"].values()
-            ),
+            prev,
+            rows.withColumn(BUCKET_COL, _bucket_of(key, new_num_buckets)),
+            list(range(new_num_buckets)),
+            mode="full",
         )
-    # the rewrite materialized every deletion vector
     _commit_manifest(
         spark,
         root_path,
@@ -4599,12 +4377,7 @@ def rebucket_txtable(
             prev,
             "REBUCKET",
             num_buckets=new_num_buckets,
-            buckets=buckets,
-            row_counts=row_counts,
-            bucket_stats=bucket_stats,
-            bucket_blooms=bucket_blooms,
-            bucket_nulls=bucket_nulls,
-            bucket_dvs=None,
+            **written,
         ),
         prev=prev,
     )

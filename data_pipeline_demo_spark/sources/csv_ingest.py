@@ -59,6 +59,19 @@ TRANSACTION_LOG_SCHEMA = T.StructType(
 SOURCE_COL = "_src_file"
 
 
+def landing_target_rows(cleaned: DataFrame) -> DataFrame:
+    """The rows a landing ingest commits to its target, from
+    ``clean_transactions`` output: ``id`` as a long (an unparseable id
+    becomes null) and the blank-row flag and source-file tag dropped.
+    The batch (``plans/reference_etl.run_ingest``) and streaming
+    (``streaming/jobs.stream_ingest_landing``) forms both shape their
+    rows here, so either can write a target the other created."""
+    out = cleaned.drop("_all_money_null", SOURCE_COL)
+    if "id" not in out.columns:
+        return out
+    return out.withColumn("id", F.col("id").try_cast("long"))
+
+
 def read_csv_with_quarantine(
     spark: SparkSession,
     path: str | list[str],

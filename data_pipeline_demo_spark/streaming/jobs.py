@@ -329,7 +329,11 @@ def stream_ingest_landing(
     """
     from ..functions.cleaning import clean_transactions
     from ..sinks.upsert import write_quarantine
-    from ..sources.csv_ingest import CORRUPT_COL, DEALER_TRANSACTIONS_SCHEMA
+    from ..sources.csv_ingest import (
+        CORRUPT_COL,
+        DEALER_TRANSACTIONS_SCHEMA,
+        landing_target_rows,
+    )
 
     schema = schema or DEALER_TRANSACTIONS_SCHEMA
     raw = (
@@ -350,7 +354,9 @@ def stream_ingest_landing(
             bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
                 F.col(CORRUPT_COL).alias("raw_record")
             )
-            upsert_batch(clean_transactions(good), batch_id)
+            upsert_batch(
+                landing_target_rows(clean_transactions(good)), batch_id
+            )
             if not bad.isEmpty():
                 write_quarantine(bad, quarantine_path, "schema")
         finally:

@@ -398,6 +398,64 @@ def test_mor_update_matches_cow_update(spark, tmp_path):
     assert {r["_change_type"] for r in ch} == {"update"}
 
 
+def test_mor_update_keeps_zone_maps_and_blooms(spark, tmp_path):
+    """A merge-on-read UPDATE keeps the touched bucket's zone map, null
+    counts and Bloom filter, merged with the appended images'
+    (vectored rows stay in their files, so the physical bookkeeping
+    stays exact); pruned reads then return exactly the rows a filtered
+    full scan returns."""
+    root = str(tmp_path / "sb")
+    txlog_upsert(
+        spark,
+        spark.createDataFrame(
+            [(i, i % 10, f"s{i}") for i in range(40)],
+            "id long, n long, s string",
+        ),
+        root,
+        num_buckets=4,
+        stats_columns=["n"],
+        bloom_columns=["s"],
+    )
+    n = txlog_update(
+        spark,
+        root,
+        set={"n": "n + 100", "s": "concat('u', s)"},
+        where="id = 7",
+        mode="merge-on-read",
+    )
+    assert n == 1
+    m0, m1 = _manifest(tmp_path, "sb", 0), _manifest(tmp_path, "sb", 1)
+    touched = [
+        b for b, rels in m1["buckets"].items()
+        if len(rels) > len(m0["buckets"][b])
+    ]
+    assert len(touched) == 1
+    b = touched[0]
+    lo, hi = m1["bucket_stats"][b]["n"]
+    assert lo == m0["bucket_stats"][b]["n"][0] and hi == 107
+    assert m1["bucket_nulls"][b] == {"n": 0}
+    assert m1["bucket_blooms"][b]["s"] != m0["bucket_blooms"][b]["s"]
+    full = read_txtable(spark, root)
+    for lo, hi in [(100, 200), (0, 5), (7, 7), (107, 107)]:
+        want = sorted(
+            r["id"] for r in full.filter(F.col("n").between(lo, hi)).collect()
+        )
+        got = sorted(
+            r["id"]
+            for r in read_txtable(
+                spark, root, prune_between={"n": (lo, hi)}
+            ).collect()
+        )
+        assert got == want, (lo, hi)
+    for v in ["us7", "s7", "s8"]:
+        want = [r["id"] for r in full.filter(F.col("s") == v).collect()]
+        got = [
+            r["id"]
+            for r in read_txtable(spark, root, bloom_eq={"s": v}).collect()
+        ]
+        assert got == want, v
+
+
 def test_mor_update_then_verbs(spark, tmp_path):
     """Stacked MOR update → MOR delete → MERGE → compact: every verb
     consumes the mixed appended+vectored state correctly."""

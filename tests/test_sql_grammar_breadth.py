@@ -11,7 +11,11 @@ from data_pipeline_demo_spark.sinks.sql_dml import (
     UnsupportedSqlError,
     txtable_sql,
 )
-from data_pipeline_demo_spark.sinks.txlog import read_txtable, txlog_upsert
+from data_pipeline_demo_spark.sinks.txlog import (
+    read_txtable,
+    table_constraints,
+    txlog_upsert,
+)
 
 
 @pytest.fixture()
@@ -68,6 +72,45 @@ def test_alter_add_columns_plural(spark, t):
         txtable_sql(
             spark, f"ALTER TABLE txtable.`{t}` ADD COLUMNS (justaname)"
         )
+
+
+def test_struct_and_map_column_lists_split_at_top_level(spark, tmp_path):
+    """Column-definition lists split only at top-level commas: the inner
+    comma of ``STRUCT<x:INT,y:INT>`` or ``MAP<STRING,INT>`` belongs to
+    the type, so NOT NULL and DEFAULT land on the struct column itself
+    and ADD COLUMNS adds whole struct and map columns."""
+    from data_pipeline_demo_spark.sinks.sql_dml import (
+        _extract_generated_columns,
+    )
+
+    _, _, _, defaults, not_null = _extract_generated_columns(
+        "id BIGINT, s STRUCT<x:INT,y:INT> NOT NULL", lambda x: x
+    )
+    assert not_null == ["s"] and defaults == {}
+    _, _, _, defaults, not_null = _extract_generated_columns(
+        "id BIGINT, s STRUCT<x:INT,y:INT> "
+        "DEFAULT named_struct('x', 1, 'y', 2)",
+        lambda x: x,
+    )
+    assert list(defaults) == ["s"] and not_null == []
+
+    root = str(tmp_path / "nested")
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` (id BIGINT, "
+        "s STRUCT<x:INT,y:INT> NOT NULL) KEY id BUCKETS 2",
+    )
+    assert list(table_constraints(spark, root)) == ["nn_s"]
+    assert read_txtable(spark, root).columns == ["id", "s"]
+    txtable_sql(
+        spark,
+        f"ALTER TABLE txtable.`{root}` ADD COLUMNS "
+        "(p STRUCT<a:INT,b:INT>, m MAP<STRING,INT>, c INT)",
+    )
+    types = dict(read_txtable(spark, root).dtypes)
+    assert types["p"] == "struct<a:int,b:int>"
+    assert types["m"] == "map<string,int>"
+    assert types["c"] == "int"
 
 
 def test_restore_short_forms(spark, t):

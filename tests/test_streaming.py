@@ -195,7 +195,7 @@ def test_stream_ingest_landing_exactly_once_per_file(spark, tmp_path):
     q = jobs.stream_ingest_landing(spark, str(landing), target, quarantine, ckpt)
     q.awaitTermination(120)
     got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
-    assert got == {"1": 10.0}
+    assert got == {1: 10.0}
     assert spark.read.parquet(quarantine).count() == 1
 
     # new file + an update for id=1; old file must NOT be reprocessed
@@ -206,7 +206,7 @@ def test_stream_ingest_landing_exactly_once_per_file(spark, tmp_path):
     q2 = jobs.stream_ingest_landing(spark, str(landing), target, quarantine, ckpt)
     q2.awaitTermination(120)
     got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
-    assert got == {"1": 99.0, "2": 20.0}
+    assert got == {1: 99.0, 2: 20.0}
     assert spark.read.parquet(quarantine).count() == 1  # not re-quarantined
 
 
@@ -239,7 +239,55 @@ def test_stream_ingest_landing_corrupt_only_batch_commits_nothing(spark, tmp_pat
     assert spark.read.parquet(quarantine).count() == 2
     assert len(txtable_history(spark, target)) == 1
     got = {r["id"]: r["Amount"] for r in read_txtable(spark, target).collect()}
-    assert got == {"1": 10.0}
+    assert got == {1: 10.0}
+
+
+def test_stream_then_batch_landing_share_one_target(spark, tmp_path):
+    """The streaming and batch landing ingests commit one row shape
+    (``id`` as a long, no blank-row flag), so a batch ``run_ingest``
+    can upsert into a target the streaming form created."""
+    from data_pipeline_demo_spark.plans.reference_etl import (
+        PipelineConfig,
+        run_ingest,
+    )
+
+    header = (
+        "id,TransactionDatetime,Amount,TotalAmount,Surcharge,MSF,Tip,Cashout,"
+        "Extras,Levy,ServiceFee,TxnFee,Rebate"
+    )
+    stream_dir = tmp_path / "stream_landing"
+    stream_dir.mkdir()
+    (stream_dir / "a.csv").write_text(
+        f"{header}\n1,30/04/2025 19:36,$10.00,$100.00,,,,,,,,,\n"
+    )
+    target = str(tmp_path / "target")
+    jobs.stream_ingest_landing(
+        spark,
+        str(stream_dir),
+        target,
+        str(tmp_path / "quarantine"),
+        str(tmp_path / "ckpt"),
+    ).awaitTermination(120)
+
+    batch_dir = tmp_path / "batch_landing"
+    batch_dir.mkdir()
+    (batch_dir / "dealer_2025-05-01.csv").write_text(
+        f"{header}\n1,1/05/2025 10:00,$11.00,$100.00,,,,,,,,,\n"
+        "2,1/05/2025 11:00,$20.00,$200.00,,,,,,,,,\n"
+    )
+    run_ingest(
+        spark,
+        PipelineConfig(
+            landing_dir=str(batch_dir),
+            target_path=target,
+            ledger_path=str(tmp_path / "ledger"),
+            quarantine_path=str(tmp_path / "quarantine_batch"),
+        ),
+    )
+    rows = read_txtable(spark, target)
+    assert "_all_money_null" not in rows.columns
+    got = {r["id"]: r["Amount"] for r in rows.collect()}
+    assert got == {1: 11.0, 2: 20.0}
 
 
 def test_interval_join_stream_equals_batch(spark, event_stream_source, tmp_path):

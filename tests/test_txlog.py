@@ -1370,8 +1370,13 @@ def test_legacy_constraints_file_migrates_and_vacuum_sweeps(spark, tmp_path):
 
 def test_txlog_not_matched_by_source_delete_full_sync(spark, tmp_path):
     root = str(tmp_path / "tx")
+    # on a new table the clause has no target rows to delete
     txlog_upsert(
-        spark, _rows(spark, [(1, "a"), (2, "b"), (3, "c")]), root, num_buckets=4
+        spark,
+        _rows(spark, [(1, "a"), (2, "b"), (3, "c")]),
+        root,
+        num_buckets=4,
+        not_matched_by_source_delete=True,
     )
     # batch = desired state: 2 updated, 4 new; 1 and 3 must vanish
     n = txlog_upsert(

@@ -19,6 +19,10 @@ A second table declares zone-map (``v``, decimal ``d``) and Bloom
 both paths share: counts, widened bounds, null counts and OR'd Bloom
 words.
 
+Each step's Spark job count (``plan_audit.count_jobs``) prints beside
+the manifests, under ``jobs`` and ``bloom_jobs``, so the same diff
+shows a verb that gained or lost a job.
+
 Normalization replaces commit times and uuid-derived file, shard and
 sidecar names, so equal output means equal manifests. The script uses
 only the public verbs, so it runs unchanged on older checkouts.
@@ -34,6 +38,8 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from plan_audit import count_jobs  # noqa: E402
 
 _UUID = re.compile(
     r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}|[0-9a-f]{32}"
@@ -76,10 +82,13 @@ def normalize(m, workdir: str = ""):
     return m
 
 
-def run_verbs(spark, workdir: str) -> list[tuple[str, dict | None, dict]]:
+def run_verbs(
+    spark, workdir: str, jobs: dict[str, int] | None = None
+) -> list[tuple[str, dict | None, dict]]:
     """Apply every write verb once; returns ``(verb, before, after)``
     root manifests in commit order. ``before`` is the snapshot the verb
-    started from (the source table's, for the clones)."""
+    started from (the source table's, for the clones). ``jobs``, when
+    given, receives each verb's Spark job count."""
     from pyspark.sql import functions as F
 
     from data_pipeline_demo_spark.sinks.copy_into import copy_into
@@ -120,7 +129,9 @@ def run_verbs(spark, workdir: str) -> list[tuple[str, dict | None, dict]]:
 
     def step(verb, root, fn, source=None):
         before = raw_manifest(source or root)
-        fn()
+        n = count_jobs(spark, fn)
+        if jobs is not None:
+            jobs[verb] = n
         out.append((verb, before, raw_manifest(root)))
 
     def write(mode: str, df, root: str) -> None:
@@ -217,10 +228,13 @@ def run_verbs(spark, workdir: str) -> list[tuple[str, dict | None, dict]]:
     return out
 
 
-def run_bloom_appends(spark, workdir: str) -> list[str]:
+def run_bloom_appends(
+    spark, workdir: str, jobs: dict[str, int] | None = None
+) -> list[str]:
     """Blind appends into the stats- and Bloom-declared table
     ``<workdir>/bt``, one commit each; returns the verbs in commit
-    order."""
+    order. ``jobs``, when given, receives each verb's Spark job
+    count."""
     from pyspark.sql import functions as F
 
     from data_pipeline_demo_spark.sinks.copy_into import copy_into
@@ -253,19 +267,20 @@ def run_bloom_appends(spark, workdir: str) -> list[str]:
         df.write.format("txtable").mode("append").save(t)
 
     # a few rows in 8 buckets: the first loads also open new buckets
-    txlog_upsert(
-        spark, rows(0, 2), t, key="id", num_buckets=8,
-        stats_columns=["v", "d"], bloom_columns=["s"],
-    )
-    verbs.append("CREATE")
     for verb, fn in (
+        ("CREATE", lambda: txlog_upsert(
+            spark, rows(0, 2), t, key="id", num_buckets=8,
+            stats_columns=["v", "d"], bloom_columns=["s"],
+        )),
         ("COPY INTO no s", lambda: load("absent", rows(2, 5, s=None))),
         ("COPY INTO s null", lambda: load("nulls", rows(5, 8, s=False))),
         ("APPEND s null", lambda: append(rows(8, 11, s=False))),
         ("COPY INTO", lambda: load("values", rows(11, 40))),
         ("APPEND", lambda: append(rows(40, 70))),
     ):
-        fn()
+        n = count_jobs(spark, fn)
+        if jobs is not None:
+            jobs[verb] = n
         verbs.append(verb)
     return verbs
 
@@ -275,8 +290,10 @@ def main() -> None:
 
     spark = get_spark("manifest-matrix", master="local[2]", shuffle_partitions=4)
     with tempfile.TemporaryDirectory(prefix="manifest-matrix-") as d:
-        steps = run_verbs(spark, d)
-        bloom_verbs = run_bloom_appends(spark, d)
+        jobs: dict[str, int] = {}
+        bloom_jobs: dict[str, int] = {}
+        steps = run_verbs(spark, d, jobs)
+        bloom_verbs = run_bloom_appends(spark, d, bloom_jobs)
         tables, root_bytes = {}, {}
         for name in ("t", "shallow", "deep", "bt"):
             files = sorted(
@@ -291,6 +308,8 @@ def main() -> None:
         {
             "verbs": [v for v, _, _ in steps],
             "bloom_verbs": bloom_verbs,
+            "jobs": jobs,
+            "bloom_jobs": bloom_jobs,
             "tables": tables,
             "root_bytes": root_bytes,
         },
