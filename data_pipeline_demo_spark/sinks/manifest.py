@@ -13,9 +13,14 @@ files in with :func:`append_files`. Readers and writers on both sides
 name and list log files with :func:`commit_rel` and
 :func:`versions_in`, refuse unknown ``requires`` tokens with
 :func:`check_features`, and resolve column mapping with
-:func:`mapping_of`. Shard, listing and file IO is the only thing that
-differs between the JVM-FS and the Python-fs paths; this module takes
-it as a callable or as the names a caller listed.
+:func:`mapping_of`. Both txtable readers — the JVM ``read_txtable`` /
+``txtable_changes`` and the Arrow ``format("txtable")`` — plan through
+the read-planning functions at the end of this module: the files and
+deletion vectors a bucket scan opens, the buckets a change window
+must diff, the version a timestamp names, and the rename check.
+Shard, listing and file IO is the only thing that differs between the
+JVM-FS and the Python-fs paths; this module takes it as a callable, as
+the names a caller listed, or as the values a caller read.
 
 Pure Python on purpose (no pyspark, no py4j): the DataSource's
 driver-side worker imports it without a SparkSession.
@@ -334,8 +339,8 @@ def inflate(manifest: dict, read_shard) -> dict:
 
 # ---------------------------------------------------------------------------
 # Zone-map stat encoding, shared by every stats writer (JVM publish,
-# ANALYZE, the Python writer) and every pruning reader
-# (``read_txtable(prune_between=...)``, the DataSource pushdown).
+# ANALYZE, the Python writer) and the zone-map pruning tier
+# (``sources/pushdown.zone_map_buckets``).
 # ---------------------------------------------------------------------------
 
 
@@ -415,31 +420,6 @@ def widen(prev: list | None, new: list | None, decimal: bool = False):
     except TypeError:
         return None
     return [lo, hi]
-
-
-def zone_maps_overlap(stats: dict | None, bounds: dict[str, tuple]) -> bool:
-    """False iff a bucket's zone maps (``stats``: ``{col: [min, max]}``)
-    prove that no row lies inside every ``{col: (lo, hi)}`` window
-    (``None`` bound = open side). Buckets without stats, and all-null
-    columns, are kept. Raises TypeError for a bound that does not
-    compare with the stored stats; each reader picks its own answer."""
-    if stats is None:
-        return True
-    for c, (lo, hi) in bounds.items():
-        mn, mx = stats.get(c, [None, None])
-        if mn is None or mx is None:
-            continue
-        dec = isinstance(lo, _dec.Decimal) or isinstance(hi, _dec.Decimal)
-        lo_s, hi_s = stat_value(lo), stat_value(hi)
-        if lo_s is not None:
-            a, b = stat_cmp_pair(mx, lo_s, dec)
-            if a < b:
-                return False
-        if hi_s is not None:
-            a, b = stat_cmp_pair(mn, hi_s, dec)
-            if a > b:
-                return False
-    return True
 
 
 # ---------------------------------------------------------------------------
@@ -549,3 +529,99 @@ def append_files(
         "bucket_blooms": bucket_blooms,
         "bucket_nulls": bucket_nulls,
     }
+
+
+# ---------------------------------------------------------------------------
+# Read planning, shared by the two txtable readers. The JVM readers
+# (``sinks/txlog.py``: ``read_txtable``, ``txtable_changes``, the
+# value index's staleness probe) and the Arrow DataSource
+# (``sources/txtable_source.py``) differ only in how they read files and
+# manifests; what they open and which version they read is decided
+# here. The bucket-pruning tiers live beside the Bloom hash in
+# ``sources/pushdown.py``.
+# ---------------------------------------------------------------------------
+
+
+def scan_files(manifest: dict, bucket_ids) -> tuple[list[str], list[str]]:
+    """What a scan of ``bucket_ids`` opens: their data-file refs in
+    bucket order, and the deletion-vector file refs that apply to them,
+    each once (a flat sidecar listed by many buckets is read once; the
+    vectors name their rows by data-file ref)."""
+    bucket_ids = [str(b) for b in bucket_ids]
+    dvs = manifest.get("bucket_dvs", {})
+    rels = [r for b in bucket_ids for r in manifest["buckets"].get(b, [])]
+    return rels, sorted({r for b in bucket_ids for r in dvs.get(b, [])})
+
+
+def changed_buckets(old: dict, new: dict) -> list[str]:
+    """The buckets a change window from snapshot ``old`` to ``new`` must
+    diff, ascending: a bucket changed iff its file list or its
+    deletion-vector list differs. Data files are immutable, so equal
+    lists prove equal rows; a merge-on-read DELETE changes only the
+    vector list."""
+
+    def sig(m: dict, b: str):
+        return m["buckets"].get(b), m.get("bucket_dvs", {}).get(b)
+
+    return sorted(
+        (
+            b
+            for b in set(old["buckets"]) | set(new["buckets"])
+            if sig(old, b) != sig(new, b)
+        ),
+        key=int,
+    )
+
+
+def check_no_rename(old: dict, new: dict) -> None:
+    """Refuse a change window across a column rename: which name would
+    the feed report? (Delta refuses CDF reads across column-mapping
+    schema changes too.) Raises ValueError naming the physical columns
+    that carry different logical names in the two snapshots."""
+    names: dict[str, set] = {}
+    for m in (old, new):
+        for f in m.get("schema", []):
+            names.setdefault(physical_name(f), set()).add(f["name"])
+    conflicted = sorted(p for p, n in names.items() if len(n) > 1)
+    if conflicted:
+        raise ValueError(
+            f"cannot read changes across a column rename (physical "
+            f"column(s) {conflicted} carry different names between "
+            f"versions {old.get('version')} and {new.get('version')}); "
+            "read each side with time travel (VERSION AS OF) instead"
+        )
+
+
+def version_at_timestamp(commits, ts_ms: int, side: str) -> int | None:
+    """The version a timestamp names, or None when no version
+    qualifies (each caller picks its own answer: raise, or ``-1`` for
+    the empty table before the first commit).
+
+    ``commits`` yields ``(version, committed_at_ms)`` in version order
+    and is consumed only up to the answer, so a lazy reader stops
+    reading manifests there. ``committed_at_ms`` is the writer's wall
+    clock and need not increase, so each commit's effective time is
+    Delta's monotonic adjustment: max(its own time, the previous
+    effective time + 1). ``side`` picks the version against those
+    times:
+
+    - ``"at_or_before"``: the last version at or before ``ts_ms``
+      (``TIMESTAMP AS OF``, a change feed's ending bound);
+    - ``"at_or_after"``: the first version at or after it (a change
+      feed's starting commit);
+    - ``"before"``: the last version strictly before it (the base
+      snapshot a change feed starting at ``ts_ms`` diffs against).
+
+    All three split the log at one point: ``before`` and
+    ``at_or_after`` are neighbours, and ``at_or_before`` is one of
+    them."""
+    if side not in ("at_or_before", "at_or_after", "before"):
+        raise ValueError(f"unknown timestamp side {side!r}")
+    found = None
+    eff = None
+    for v, t in commits:
+        eff = int(t) if eff is None else max(int(t), eff + 1)
+        if eff > ts_ms or (eff == ts_ms and side != "at_or_before"):
+            return v if side == "at_or_after" else found
+        found = v
+    return None if side == "at_or_after" else found

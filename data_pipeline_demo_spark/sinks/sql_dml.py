@@ -517,7 +517,8 @@ def _align_insert(
     and every unlisted table column gets NULL (or its generated-column
     expression). Source values cast up to the table type when the cast
     is lossless (``_upcast_ok`` — covers VALUES literals like int→long
-    and decimal-literal→double); a lossy or incompatible type is left
+    and decimal-literal→double) or the types differ only in nested
+    nullability (a ``named_struct`` literal's fields); a lossy or incompatible type is left
     for the writer's schema enforcement to refuse loudly."""
     from pyspark.sql import functions as F
 
@@ -525,6 +526,7 @@ def _align_insert(
         _apply_generated_columns,
         _manifest_struct,
         _upcast_ok,
+        _without_nullability,
     )
 
     tbl = _manifest_struct(man)
@@ -572,7 +574,11 @@ def _align_insert(
         n, t = f["name"], f["type"]
         if n in src:
             c = F.col(src[n])
-            if df_types[src[n]] != t and _upcast_ok(df_types[src[n]], t):
+            have = df_types[src[n]]
+            if have != t and (
+                _upcast_ok(have, t)
+                or _without_nullability(have) == _without_nullability(t)
+            ):
                 c = c.cast(tbl[n].dataType)
             exprs.append(c.alias(n))
         elif n in gen:
@@ -631,15 +637,17 @@ def _bound_version(
     if token.startswith("'"):
         import datetime as _dt
 
-        from .txlog import _version_at_timestamp, _version_from_timestamp
+        from .txlog import _version_at_timestamp
 
         ts = _dt.datetime.fromisoformat(token[1:-1])
         if ts.tzinfo is None:
             ts = ts.replace(tzinfo=_dt.timezone.utc)
-        ts_ms = int(ts.timestamp() * 1000)
-        if side == "from":
-            return _version_from_timestamp(spark, path, ts_ms)
-        return _version_at_timestamp(spark, path, ts_ms)
+        return _version_at_timestamp(
+            spark,
+            path,
+            int(ts.timestamp() * 1000),
+            "at_or_after" if side == "from" else "at_or_before",
+        )
     return int(token)
 
 

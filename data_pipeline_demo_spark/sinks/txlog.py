@@ -58,7 +58,9 @@ from .manifest import (
     SHARDS_DIR,
     UnsupportedTableFeatureError,  # noqa: F401  (re-export)
     append_files,
+    changed_buckets,
     check_features,
+    check_no_rename,
     commit_rel,
     decimal_columns,
     deflate as deflate_manifest,
@@ -69,10 +71,11 @@ from .manifest import (
     next_manifest,
     norm_fs_path,
     physical_name,
+    scan_files,
     shard_groups_of,
     stat_value,
+    version_at_timestamp,
     versions_in,
-    zone_maps_overlap,
 )
 from .upsert import BUCKET_COL, _bucket_of, _hadoop_fs
 
@@ -562,6 +565,22 @@ def _upcast_ok(write_t, table_t) -> bool:
     return False
 
 
+def _without_nullability(t):
+    """A type's JSON with every nested nullability flag dropped. Top-level
+    columns compare by type alone, so a nested field must too: a
+    ``named_struct`` literal's NOT NULL fields store into the table's
+    nullable ones once the writer casts the data to the table type."""
+    if isinstance(t, dict):
+        return {
+            k: _without_nullability(v)
+            for k, v in t.items()
+            if k not in ("nullable", "containsNull", "valueContainsNull")
+        }
+    if isinstance(t, list):
+        return [_without_nullability(v) for v in t]
+    return t
+
+
 def _evolve_fields(
     prev_fields: list[dict],
     new_fields: list[dict],
@@ -583,7 +602,9 @@ def _evolve_fields(
     for f in new_fields:
         have = by_name.get(f["name"])
         if have is not None:
-            if have["type"] != f["type"]:
+            if _without_nullability(have["type"]) != _without_nullability(
+                f["type"]
+            ):
                 if allow_upcast and _upcast_ok(f["type"], have["type"]):
                     continue  # caller casts the write data up
                 raise ValueError(
@@ -1163,14 +1184,6 @@ def _uri_fs_path(p: str) -> str:
     return "".join(out)
 
 
-def _dv_rels(manifest: dict, bucket_ids) -> list[str]:
-    """Unique DV file refs for the given buckets — a flat (shared)
-    sidecar appears in MANY buckets' lists; reading it once is both
-    correct (the anti-join keys on the file reference) and the point."""
-    dvs = manifest.get("bucket_dvs", {})
-    return sorted({r for b in bucket_ids for r in dvs.get(str(b), [])})
-
-
 def _file_ref_lookup(spark, root_path: str, manifest: dict, bucket_ids):
     """Broadcastable (normalized absolute path → manifest file
     reference) relation for the given buckets — metadata-sized (the
@@ -1178,8 +1191,7 @@ def _file_ref_lookup(spark, root_path: str, manifest: dict, bucket_ids):
     store: spelling-independent and stable across reader URI forms."""
     pairs = [
         (_uri_fs_path(norm_fs_path(_abs(root_path, rel))), rel)
-        for b in bucket_ids
-        for rel in manifest["buckets"].get(str(b), [])
+        for rel in scan_files(manifest, bucket_ids)[0]
     ]
     return spark.createDataFrame(pairs, "__fp_norm string, __dv_file string")
 
@@ -1216,16 +1228,10 @@ def _read_buckets_logical(spark, root_path: str, manifest: dict, bucket_ids):
     """Read the LOGICAL rows of the given buckets: the snapshot scan
     with the buckets' deletion vectors anti-applied. Returns None when
     the buckets hold no files."""
-    bucket_ids = [str(b) for b in bucket_ids]
-    files = [
-        _abs(root_path, rel)
-        for b in bucket_ids
-        for rel in manifest["buckets"].get(b, [])
-    ]
-    if not files:
+    rels, dv_rels = scan_files(manifest, bucket_ids)
+    if not rels:
         return None
-    df = _read_snapshot_files(spark, manifest, files)
-    dv_rels = _dv_rels(manifest, bucket_ids)
+    df = _read_snapshot_files(spark, manifest, [_abs(root_path, r) for r in rels])
     if not dv_rels:
         return df
     cols = df.columns
@@ -1257,13 +1263,10 @@ def _dv_matches(spark, root_path: str, manifest: dict, bucket_ids, match):
     anti-join see only the matched rows — O(matched rows), not
     O(scanned rows). A ref that does not resolve surfaces as NULL, which
     ``_write_dv_files`` refuses loudly."""
-    files = [
-        _abs(root_path, rel)
-        for b in bucket_ids
-        for rel in manifest["buckets"].get(str(b), [])
-    ]
-    if not files:
+    rels, dv_rels = scan_files(manifest, bucket_ids)
+    if not rels:
         return None
+    files = [_abs(root_path, r) for r in rels]
     rows = _read_snapshot_files(spark, manifest, files).select(
         "*",
         _fp_norm().alias("__fp_norm"),
@@ -1274,7 +1277,6 @@ def _dv_matches(spark, root_path: str, manifest: dict, bucket_ids, match):
         "__fp_norm",
         "left",
     )
-    dv_rels = _dv_rels(manifest, [str(b) for b in bucket_ids])
     if dv_rels:
         # rows a vector already removed must not re-record (they would
         # double-count dv_counts)
@@ -1420,8 +1422,11 @@ def _validate_bloom_probe(manifest: dict, col: str, v) -> None:
 from ..sources.pushdown import (  # noqa: E402  (parity home)
     BLOOM_BITS,
     BLOOM_K,
-    bloom_might_contain as _bloom_might_contain,
-    bloom_probe_positions as _bloom_probe_positions,
+    bloom_buckets,
+    bloom_might_contain as _bloom_might_contain,  # noqa: F401  (re-export)
+    bloom_probe_positions as _bloom_probe_positions,  # noqa: F401  (re-export)
+    null_count_buckets,
+    zone_map_buckets,
 )
 
 
@@ -2134,60 +2139,39 @@ def txlog_upsert(
     )
 
 
+def _commit_times(spark: SparkSession, root_path: str):
+    """``(version, committed_at_ms)`` of each commit in version order,
+    read lazily: the timestamp resolver stops reading manifests at its
+    answer. A commit without a stamp (legacy) counts as time 0."""
+    fs, root = _hadoop_fs(spark, root_path)
+    for v in _listed_versions(fs, spark._jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)):
+        m = _read_manifest(spark, root_path, v, inflate=False)
+        yield v, m.get("committed_at_ms", 0)
+
+
 def _version_at_timestamp(
-    spark: SparkSession, root_path: str, timestamp_ms: int
+    spark: SparkSession,
+    root_path: str,
+    timestamp_ms: int,
+    side: str = "at_or_before",
 ) -> int:
-    """Greatest version committed at or before ``timestamp_ms`` (Delta's
-    TIMESTAMP AS OF resolution). Raises when the timestamp predates the
-    table's first commit."""
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
-    candidates = [
-        v
-        for v in _listed_versions(fs, commits)
-        if _read_manifest(spark, root_path, v, inflate=False).get(
-            "committed_at_ms", 0
-        )
-        <= timestamp_ms
-    ]
-    if not candidates:
+    """The version ``timestamp_ms`` names (``manifest.version_at_timestamp``):
+    ``at_or_before`` for ``TIMESTAMP AS OF``, ``at_or_after`` for a
+    change feed's starting commit. Raises when no version qualifies:
+    a timestamp before the first commit, or a starting timestamp past
+    the last one (Delta raises the same way)."""
+    v = version_at_timestamp(_commit_times(spark, root_path), timestamp_ms, side)
+    if v is None:
         raise ValueError(
-            f"no txtable commit at {root_path} at or before "
+            f"no txtable commit at {root_path} {side.replace('_', ' ')} "
             f"timestamp_ms={timestamp_ms}"
+            + (
+                " (starting timestamp is past the table's latest commit)"
+                if side == "at_or_after"
+                else ""
+            )
         )
-    return candidates[-1]
-
-
-def _version_from_timestamp(
-    spark: SparkSession, root_path: str, timestamp_ms: int
-) -> int:
-    """Earliest version committed at or after ``timestamp_ms`` — Delta's
-    CDC ``startingTimestamp`` resolution, the ASYMMETRIC twin of
-    :func:`_version_at_timestamp` (endingTimestamp keeps at-or-before).
-    A timestamp falling BETWEEN two commits must exclude the earlier
-    one: the change feed reads "changes committed at or after ts", and
-    the at-or-before resolution would wrongly include the preceding
-    commit's changes. Raises when the timestamp postdates the table's
-    last commit (Delta raises the same way)."""
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    commits = jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)
-    candidates = [
-        v
-        for v in _listed_versions(fs, commits)
-        if _read_manifest(spark, root_path, v, inflate=False).get(
-            "committed_at_ms", 0
-        )
-        >= timestamp_ms
-    ]
-    if not candidates:
-        raise ValueError(
-            f"no txtable commit at {root_path} at or after "
-            f"timestamp_ms={timestamp_ms} (starting timestamp is past "
-            f"the table's latest commit)"
-        )
-    return candidates[0]
+    return v
 
 
 def _zonemap_overlapping_buckets(
@@ -2222,20 +2206,15 @@ def _zonemap_overlapping_buckets(
                     "zone-map stats; pass a numeric/string/bool/date/"
                     "datetime/Decimal value"
                 )
-    stats = manifest.get("bucket_stats", {})
-
-    def overlaps(b: str) -> bool:
-        try:
-            return zone_maps_overlap(stats.get(b), prune_between)
-        except TypeError:
-            raise ValueError(
-                f"prune_between bounds {prune_between!r} are not "
-                "comparable with the stored zone-map stats; pass the "
-                "column's native numeric/string type or a date/decimal "
-                "value"
-            ) from None
-
-    return [b for b in live if overlaps(b)]
+    try:
+        return zone_map_buckets(manifest, prune_between, live)
+    except TypeError:
+        raise ValueError(
+            f"prune_between bounds {prune_between!r} are not "
+            "comparable with the stored zone-map stats; pass the "
+            "column's native numeric/string type or a date/decimal "
+            "value"
+        ) from None
 
 
 def read_txtable(
@@ -2308,70 +2287,32 @@ def read_txtable(
             if hi is not None:
                 cond = cond & (F.col(c) <= F.lit(hi))
             predicate = cond if predicate is None else predicate & cond
-    if bloom_eq:
+    probes = [("bloom_eq", c, [v]) for c, v in (bloom_eq or {}).items()] + [
+        ("bloom_in", c, list(vs)) for c, vs in (bloom_in or {}).items()
+    ]
+    if probes:
+        # one manifest pass per column: bloom_in unions the per-value
+        # probes (the batched point-lookup shape), never one read per
+        # value; the IN predicate is re-applied so results stay exact
         declared = set(manifest.get("bloom_columns", []))
-        missing = set(bloom_eq) - declared
+        missing = {c for _, c, _ in probes} - declared
         if missing:
             raise ValueError(
                 f"txtable {root_path} has no bloom index for "
                 f"{sorted(missing)}; bloom_columns={sorted(declared)} "
                 "(fixed at table creation)"
             )
-        blooms = manifest.get("bucket_blooms", {})
-        for c, v in bloom_eq.items():
-            if v is None:
-                raise ValueError(
-                    "bloom_eq cannot probe NULL (xxhash64 skips nulls; "
-                    "use an explicit IS NULL filter instead)"
-                )
-            _validate_bloom_probe(manifest, c, v)
-            positions = _bloom_probe_positions(
-                v, int(manifest.get("bloom_bits", BLOOM_BITS))
-            )
-            live = [
-                b
-                for b in live
-                if (hx := blooms.get(b, {}).get(c)) is None
-                or _bloom_might_contain(hx, positions)
-            ]
-            cond = F.col(c).cast("string") == F.lit(str(v))
-            predicate = cond if predicate is None else predicate & cond
-    if bloom_in:
-        # IN-list pruning: keep buckets whose filter might contain ANY
-        # of the probed values — the multi-key complement of bloom_eq
-        # (one manifest pass, no per-value reads); the IN predicate is
-        # re-applied so results stay exact
-        declared = set(manifest.get("bloom_columns", []))
-        missing = set(bloom_in) - declared
-        if missing:
-            raise ValueError(
-                f"txtable {root_path} has no bloom index for "
-                f"{sorted(missing)}; bloom_columns={sorted(declared)} "
-                "(fixed at table creation)"
-            )
-        blooms = manifest.get("bucket_blooms", {})
-        for c, values in bloom_in.items():
+        for arg, c, values in probes:
             if not values:
-                raise ValueError(f"bloom_in[{c!r}] is empty")
+                raise ValueError(f"{arg}[{c!r}] is empty")
             if any(v is None for v in values):
                 raise ValueError(
-                    "bloom_in cannot probe NULL (xxhash64 skips nulls; "
+                    f"{arg} cannot probe NULL (xxhash64 skips nulls; "
                     "use an explicit IS NULL filter instead)"
                 )
             for v in values:
                 _validate_bloom_probe(manifest, c, v)
-            pos_sets = [
-                _bloom_probe_positions(
-                    v, int(manifest.get("bloom_bits", BLOOM_BITS))
-                )
-                for v in values
-            ]
-            live = [
-                b
-                for b in live
-                if (hx := blooms.get(b, {}).get(c)) is None
-                or any(_bloom_might_contain(hx, ps) for ps in pos_sets)
-            ]
+            live = bloom_buckets(manifest, c, values, live)
             cond = F.col(c).cast("string").isin([str(v) for v in values])
             predicate = cond if predicate is None else predicate & cond
     if prune_is_null:
@@ -2383,27 +2324,14 @@ def read_txtable(
                 f"{sorted(missing)}; stats_columns={sorted(recorded)} "
                 "(fixed at table creation)"
             )
-        nulls = manifest.get("bucket_nulls", {})
-        rows_phys = manifest.get("row_counts", {})
         for c, want_null in prune_is_null.items():
-
-            def _keep(b: str, col=c, wn=want_null) -> bool:
-                nn = nulls.get(b, {}).get(col)
-                if nn is None:
-                    return True  # no recorded count: must keep
-                if wn:
-                    return nn > 0  # IS NULL: a 0-null bucket can skip
-                return nn < rows_phys.get(b, 1)  # IS NOT NULL: all-null skips
-
-            live = [b for b in live if _keep(b)]
+            live = null_count_buckets(manifest, c, want_null, live)
             cond = (
                 F.col(c).isNull() if want_null else F.col(c).isNotNull()
             )
             predicate = cond if predicate is None else predicate & cond
-    files = [
-        _abs(root_path, rel) for b in live for rel in manifest["buckets"][b]
-    ]
-    if not files:
+    df = _read_buckets_logical(spark, root_path, manifest, live)
+    if df is None:
         # a schema-bearing manifest with zero live data files is a
         # valid snapshot (empty CREATE TABLE, or everything pruned):
         # return the typed empty frame. Only a LEGACY schemaless
@@ -2421,27 +2349,20 @@ def read_txtable(
                     for f in st.fields
                 ]
             )
-        if prune_between or bloom_eq or bloom_in or prune_is_null:
-            schema_files = [
-                _abs(root_path, rel)
-                for b in sorted(manifest["buckets"], key=int)
-                for rel in manifest["buckets"][b]
-            ]
-            if schema_files:  # everything pruned: empty frame, real schema
-                return (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*schema_files)
-                    .limit(0)
-                )
+        schema_files = scan_files(manifest, sorted(manifest["buckets"], key=int))[0]
+        if predicate is not None and schema_files:
+            # everything pruned: empty frame, real schema
+            return (
+                spark.read.option("mergeSchema", "true")
+                .parquet(*[_abs(root_path, r) for r in schema_files])
+                .limit(0)
+            )
         raise FileNotFoundError(
             f"txtable {root_path} version {manifest['version']} is empty"
         )
-    df = _read_snapshot_files(spark, manifest, files)
-    if _dv_rels(manifest, live):
-        # merge-on-read: anti-apply the live buckets' deletion vectors
-        # (zone-map/bloom pruning above stays sound — DV'd rows can
-        # only make stats conservative, and the predicate re-applies)
-        df = _read_buckets_logical(spark, root_path, manifest, live)
+    # merge-on-read buckets come back with their deletion vectors
+    # anti-applied; pruning above stays sound (vectored rows only make
+    # stats conservative) and the predicate re-applies
     return df.filter(predicate) if predicate is not None else df
 
 
@@ -3029,38 +2950,14 @@ def txtable_changes(
     for m in (m_from, m_to):
         check_features(m, frozenset({FEATURE_DV}), "read changes from")
     key = m_to["key"]
-
-    # a bucket changed iff its file list OR its deletion-vector list
-    # differs (a merge-on-read DELETE touches no data file, but the
-    # bucket's logical rows changed all the same)
-    def _sig(m, b):
-        return (
-            m["buckets"].get(b),
-            m.get("bucket_dvs", {}).get(b),
-        )
-
-    changed = sorted(
-        {
-            b
-            for b in set(m_from["buckets"]) | set(m_to["buckets"])
-            if _sig(m_from, b) != _sig(m_to, b)
-        },
-        key=int,
-    )
-
-    def side_files(manifest):
-        return [
-            _abs(root_path, rel)
-            for b in changed
-            for rel in manifest["buckets"].get(b, [])
-        ]
-
-    f_old, f_new = side_files(m_from), side_files(m_to)
+    changed = changed_buckets(m_from, m_to)
     # Only changed buckets' files are ever opened — including for the
     # schema of a zero-file side (fresh or fully-deleted table), which
     # borrows limit(0) from the OTHER side rather than reading an
     # unchanged bucket.
-    if not f_old and not f_new:
+    old = _read_buckets_logical(spark, root_path, m_from, changed)
+    new = _read_buckets_logical(spark, root_path, m_to, changed)
+    if old is None and new is None:
         # no changed buckets: empty diff. Keep the output schema stable
         # by borrowing columns from any live file (footer-only read);
         # a table with no files at all degrades to key+_change_type.
@@ -3076,33 +2973,9 @@ def txtable_changes(
         return spark.createDataFrame([], f"{key} string").withColumn(
             "_change_type", F.lit(None).cast("string")
         )
-    # CDC across a column RENAME is ambiguous (which name does the
-    # feed report?) — Delta refuses CDF reads across column-mapping
-    # schema changes; so do we. Checked only when data actually
-    # changed in the window: a rename-only window has no changed
-    # buckets and returned the empty feed above.
-    by_phys: dict[str, set] = {}
-    for mm in (m_from, m_to):
-        for f in mm.get("schema", []):
-            by_phys.setdefault(physical_name(f), set()).add(f["name"])
-    conflicted = sorted(p for p, names in by_phys.items() if len(names) > 1)
-    if conflicted:
-        raise ValueError(
-            f"cannot read changes across a column rename (physical "
-            f"column(s) {conflicted} carry different names between "
-            f"versions {m_from['version']} and {m_to['version']}); "
-            "read each side with VERSION AS OF time travel instead"
-        )
-    old = (
-        _read_buckets_logical(spark, root_path, m_from, changed)
-        if f_old
-        else None
-    )
-    new = (
-        _read_buckets_logical(spark, root_path, m_to, changed)
-        if f_new
-        else None
-    )
+    # checked only when data changed in the window: a rename-only
+    # window has no changed buckets and returned the empty feed above
+    check_no_rename(m_from, m_to)
     if old is None:
         old = new.limit(0)
     if new is None:

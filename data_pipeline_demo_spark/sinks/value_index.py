@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .manifest import changed_buckets
 from .txlog import (
     _latest_manifest,
     _read_buckets_logical,
@@ -361,15 +362,7 @@ def _changed_since(
         return None
     if m_wm["num_buckets"] != latest["num_buckets"]:
         return None
-
-    def _sig(m, b):
-        return (m["buckets"].get(b), m.get("bucket_dvs", {}).get(b))
-
-    return {
-        int(b)
-        for b in set(m_wm["buckets"]) | set(latest["buckets"])
-        if _sig(m_wm, b) != _sig(latest, b)
-    }
+    return {int(b) for b in changed_buckets(m_wm, latest)}
 
 
 def _stale_scan_buckets(

@@ -4,18 +4,29 @@ Spark 4.1's Python DataSource filter pushdown
 (``DataSourceReader.pushFilters``, gated by
 ``spark.sql.python.filterPushdown.enabled`` — the engine session factory
 turns it on) hands the reader the query's AND-ed predicates at planning
-time.  We use them for METADATA-ONLY partition pruning, two tiers, both
+time.  We use them for METADATA-ONLY partition pruning, four tiers, all
 conservative:
 
 - **zone maps** — manifest ``bucket_stats`` ``[min, max]`` per stats
   column: a bucket whose recorded range cannot intersect the predicate's
-  bounds is never scanned.  Iceberg's manifest-stats role, same overlap
-  rule as ``sinks.txlog.read_txtable(prune_between=...)``.
+  bounds is never scanned.  Iceberg's manifest-stats role.
+- **Bloom filters** — ``EqualTo``/``In`` on a declared Bloom column keep
+  only buckets whose filter might hold a literal.
+- **null counts** — ``IsNull``/``IsNotNull`` on a stats column skip
+  buckets with no nulls / only nulls.
 - **key buckets** — ``EqualTo``/``In`` on the table's bucketing key hash
   the literal with the SAME function the writer used
-  (``pmod(xxhash64(key), num_buckets)``, ``sinks/upsert.py:41``): a point
+  (``pmod(xxhash64(key), num_buckets)``, ``sinks/upsert._bucket_of``): a point
   lookup plans exactly the one bucket that can hold the key, independent
   of any stats.
+
+The zone-map, Bloom and null-count tiers are one function each
+(``zone_map_buckets``, ``bloom_buckets``, ``null_count_buckets``),
+shared with ``sinks.txlog.read_txtable``'s ``prune_between`` /
+``bloom_eq`` / ``bloom_in`` / ``prune_is_null``.  Each entry point keeps
+its own input policy: ``read_txtable`` refuses an undeclared column, a
+NULL probe or an incomparable bound, while pushdown skips a filter it
+cannot use.
 
 Every filter is handed back to Spark unhandled, so Spark re-applies all
 predicates post-scan: pruning can only *skip* buckets that provably hold
@@ -51,7 +62,9 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from ..sinks.manifest import BLOOM_BITS, zone_maps_overlap
+import decimal as _dec
+
+from ..sinks.manifest import BLOOM_BITS, stat_cmp_pair, stat_value
 
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -216,6 +229,16 @@ def _one_col(f) -> str | None:
     return attr[0] if isinstance(attr, tuple) and len(attr) == 1 else None
 
 
+def _eq_values(f) -> list:
+    """The non-null literals an ``EqualTo``/``In`` filter accepts (empty
+    for any other filter shape)."""
+    if isinstance(f, EqualTo):
+        return [] if f.value is None else [f.value]
+    if isinstance(f, In):
+        return [v for v in f.value if v is not None]
+    return []
+
+
 def collect_bounds(filters) -> dict[str, tuple]:
     """Per-column [lo, hi] interval implied by the AND of ``filters``.
     Strict comparisons are relaxed to inclusive — conservative for
@@ -240,19 +263,16 @@ def collect_bounds(filters) -> dict[str, tuple]:
         col = _one_col(f)
         if col is None:
             continue
-        if isinstance(f, EqualTo) and f.value is not None:
-            tighten(col, f.value, f.value)
+        vals = _eq_values(f)
+        if vals:
+            try:
+                tighten(col, min(vals), max(vals))
+            except TypeError:
+                pass
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
             tighten(col, f.value, None)
         elif isinstance(f, (LessThan, LessThanOrEqual)):
             tighten(col, None, f.value)
-        elif isinstance(f, In):
-            vals = [v for v in f.value if v is not None]
-            if vals:
-                try:
-                    tighten(col, min(vals), max(vals))
-                except TypeError:
-                    pass
     return bounds
 
 
@@ -281,103 +301,120 @@ def key_equality_buckets(filters, key: str, num_buckets: int, key_kind: str):
     return out
 
 
-def bloom_filter_buckets(filters, manifest: dict):
-    """Bucket-keep predicate from the manifest bloom index: for each
-    Equal/In filter on a DECLARED bloom column, a bucket survives only
-    if its stored filter might contain at least one of the literals.
-    Returns a set of surviving bucket ids, or None when no usable
-    bloom filter applies (unsupported literal types poison only their
-    own filter — conservative)."""
-    declared = set(manifest.get("bloom_columns", []))
-    if not declared:
-        return None
-    blooms = manifest.get("bucket_blooms", {})
-    out: set[str] | None = None
-    for f in filters:
-        col = _one_col(f)
-        if col not in declared:
+# --- bucket-pruning tiers: the buckets of ``live`` that may match ----------
+
+
+def zone_maps_overlap(stats: dict | None, bounds: dict[str, tuple]) -> bool:
+    """False iff a bucket's zone maps (``stats``: ``{col: [min, max]}``)
+    prove that no row lies inside every ``{col: (lo, hi)}`` window
+    (``None`` bound = open side). Buckets without stats, and all-null
+    columns, are kept. Raises TypeError for a bound that does not
+    compare with the stored stats."""
+    if stats is None:
+        return True
+    for c, (lo, hi) in bounds.items():
+        mn, mx = stats.get(c, [None, None])
+        if mn is None or mx is None:
             continue
-        if isinstance(f, EqualTo) and f.value is not None:
-            vals = [f.value]
-        elif isinstance(f, In):
-            vals = [v for v in f.value if v is not None]
-            if not vals:
-                continue
-        else:
-            continue
-        bits = int(manifest.get("bloom_bits", BLOOM_BITS))
+        dec = isinstance(lo, _dec.Decimal) or isinstance(hi, _dec.Decimal)
+        lo_s, hi_s = stat_value(lo), stat_value(hi)
+        if lo_s is not None:
+            a, b = stat_cmp_pair(mx, lo_s, dec)
+            if a < b:
+                return False
+        if hi_s is not None:
+            a, b = stat_cmp_pair(mn, hi_s, dec)
+            if a > b:
+                return False
+    return True
+
+
+def zone_map_buckets(
+    manifest: dict, bounds: dict[str, tuple], live, strict: bool = True
+) -> list[str]:
+    """The buckets of ``live`` whose zone maps may overlap every
+    ``{col: (lo, hi)}`` window. A bound that does not compare with a
+    bucket's stats raises TypeError when ``strict``, else keeps that
+    bucket."""
+    stats = manifest.get("bucket_stats", {})
+
+    def keep(b: str) -> bool:
         try:
-            pos_sets = [bloom_probe_positions(v, bits) for v in vals]
-        except ValueError:
-            continue  # unhashable literal type: skip THIS filter
-        keep = set()
-        for b in manifest["buckets"]:
-            hx = blooms.get(b, {}).get(col)
-            if hx is None or any(
-                bloom_might_contain(hx, ps) for ps in pos_sets
-            ):
-                keep.add(b)
-        out = keep if out is None else (out & keep)
-    return out
+            return zone_maps_overlap(stats.get(b), bounds)
+        except TypeError:
+            if strict:
+                raise
+            return True
+
+    return [b for b in live if keep(b)]
+
+
+def bloom_buckets(manifest: dict, col: str, values, live) -> list[str]:
+    """The buckets of ``live`` whose Bloom filter on ``col`` might hold
+    any of ``values``; a bucket without a filter is kept. Raises
+    ValueError for a value type the probe cannot hash."""
+    bits = int(manifest.get("bloom_bits", BLOOM_BITS))
+    pos_sets = [bloom_probe_positions(v, bits) for v in values]
+    blooms = manifest.get("bucket_blooms", {})
+    return [
+        b
+        for b in live
+        if (hx := blooms.get(b, {}).get(col)) is None
+        or any(bloom_might_contain(hx, ps) for ps in pos_sets)
+    ]
+
+
+def null_count_buckets(manifest: dict, col: str, want_null: bool, live) -> list[str]:
+    """The buckets of ``live`` that may hold a row with ``col IS NULL``
+    (``want_null``) or ``col IS NOT NULL``: a 0-null bucket cannot match
+    the first, an all-null one the second. Counts are physical (deletion
+    vectors do not decrement them); a bucket without a count is kept."""
+    nulls = manifest.get("bucket_nulls", {})
+    rows = manifest.get("row_counts", {})
+
+    def keep(b: str) -> bool:
+        n = nulls.get(b, {}).get(col)
+        if n is None:
+            return True
+        return n > 0 if want_null else n < rows.get(b, 1)
+
+    return [b for b in live if keep(b)]
 
 
 def prune_bucket_ids(manifest: dict, filters, arrow_schema) -> list[str]:
     """Live bucket ids that can still hold matching rows — the
-    intersection of the key-equality tier, the zone-map tier, and the
-    bloom-index tier, in the manifest's sorted order.  With no usable
-    filter this is exactly the full live set (pruning is opt-out-free:
-    it can only remove work)."""
+    intersection of the key-equality, zone-map, Bloom and null-count
+    tiers, in the manifest's sorted order. A filter a tier cannot use
+    (undeclared column, unhashable or incomparable literal) is skipped;
+    Spark re-applies every filter, so with no usable filter this is the
+    full live set."""
     live = sorted(manifest["buckets"], key=int)
-
-    bf = bloom_filter_buckets(filters, manifest)
-    if bf is not None:
-        live = [b for b in live if b in bf]
-
-    kb = key_equality_buckets(
-        filters,
-        manifest.get("key"),
-        int(manifest.get("num_buckets", 0) or 0),
-        _arrow_key_kind(arrow_schema, manifest.get("key")),
-    ) if manifest.get("num_buckets") else None
-    if kb is not None:
-        live = [b for b in live if int(b) in kb]
-
+    blooms = set(manifest.get("bloom_columns", []))
     stats_cols = set(manifest.get("stats_columns", []))
+    for f in filters:
+        col = _one_col(f)
+        vals = _eq_values(f) if col in blooms else []
+        if vals:
+            try:
+                live = bloom_buckets(manifest, col, vals, live)
+            except ValueError:
+                pass  # unhashable literal type: skip THIS filter
+        if col in stats_cols and isinstance(f, (IsNull, IsNotNull)):
+            live = null_count_buckets(manifest, col, isinstance(f, IsNull), live)
+
+    if manifest.get("num_buckets"):
+        kb = key_equality_buckets(
+            filters,
+            manifest.get("key"),
+            int(manifest["num_buckets"]),
+            _arrow_key_kind(arrow_schema, manifest.get("key")),
+        )
+        if kb is not None:
+            live = [b for b in live if int(b) in kb]
+
     bounds = {
         c: bnds for c, bnds in collect_bounds(filters).items() if c in stats_cols
     }
     if bounds:
-        stats = manifest.get("bucket_stats", {})
-
-        def overlaps(b: str) -> bool:
-            try:
-                return zone_maps_overlap(stats.get(b), bounds)
-            except TypeError:
-                return True  # incomparable literal: keep, stay exact
-
-        live = [b for b in live if overlaps(b)]
-
-    # null-count tier: Spark pushes IsNull/IsNotNull as first-class
-    # filters — a 0-null bucket cannot satisfy IS NULL, an all-null one
-    # cannot satisfy IS NOT NULL (counts are physical; absent → keep)
-    nulls = manifest.get("bucket_nulls", {})
-    rows_phys = manifest.get("row_counts", {})
-    for f in filters:
-        col = _one_col(f)
-        if col is None or col not in stats_cols:
-            continue
-        if isinstance(f, IsNull):
-            live = [
-                b
-                for b in live
-                if nulls.get(b, {}).get(col) is None
-                or nulls[b][col] > 0
-            ]
-        elif isinstance(f, IsNotNull):
-            live = [
-                b
-                for b in live
-                if nulls.get(b, {}).get(col) is None
-                or nulls[b][col] < rows_phys.get(b, 1)
-            ]
+        live = zone_map_buckets(manifest, bounds, live, strict=False)
     return live

@@ -43,7 +43,13 @@ ABSOLUTE refs into its source table (``sinks.manifest.is_absolute_ref``);
 those are resolved against the REF's own scheme, not joined onto the
 clone root. Log file names and listings, the ``requires`` gate and
 column mapping come from ``sinks/manifest.py``, the same functions the
-JVM verbs use; this module only does the IO.
+JVM verbs use. So does read planning: the files and deletion vectors
+each bucket partition opens (``scan_files``), the buckets a change
+window diffs (``changed_buckets``), the version a timestamp names
+(``version_at_timestamp``) and the rename check (``check_no_rename``)
+are the functions ``read_txtable``/``txtable_changes`` call, and the
+bucket-pruning tiers are ``sources/pushdown.py``'s. This module only
+does the IO.
 
 SQL access: ``spark.read.format("txtable").load(root)
 .createOrReplaceTempView("t")`` then query ``t``. ``CREATE TABLE …
@@ -73,11 +79,15 @@ from ..sinks.manifest import (
     COMMITS_DIR,
     FEATURE_DV,
     FEATURE_SHARDS,
+    changed_buckets,
     check_features as _check_features,  # the name of a parameter below
+    check_no_rename,
     commit_rel,
     inflate,
     is_absolute_ref,
     mapping_of,
+    scan_files,
+    version_at_timestamp,
     versions_in,
 )
 
@@ -276,22 +286,13 @@ def _latest_version(fs, root: str) -> int:
     return _manifest_versions(fs, root)[-1]
 
 
-def _version_before_timestamp(fs, root: str, ts_ms: int) -> int:
-    """Greatest committed version whose commit time is strictly before
-    ``ts_ms`` — the change-feed base for ``startingTimestamp`` (feed =
-    every change committed at-or-after the timestamp). ``-1`` when the
-    timestamp predates the table: the full history replays, first
-    commit's inserts included."""
-    base = -1
+def _commit_times(fs, root: str):
+    """``(version, committed_at_ms)`` of each commit in version order,
+    read lazily (the resolver stops at its answer). Metadata-only
+    probes: the eventual snapshot or change read checks features."""
     for v in _manifest_versions(fs, root):
-        # metadata-only probe: the eventual snapshot/CDC read re-checks
-        if _read_manifest(fs, root, v, check_features=False).get(
-            "committed_at_ms", 0
-        ) < ts_ms:
-            base = v
-        else:
-            break
-    return base
+        m = _read_manifest(fs, root, v, check_features=False)
+        yield v, m.get("committed_at_ms", 0)
 
 
 def _parse_timestamp_ms(raw: str) -> int:
@@ -307,18 +308,37 @@ def _parse_timestamp_ms(raw: str) -> int:
 
 
 def _snapshot_refs(fs, root: str, manifest: dict, fs_options: dict) -> list[tuple]:
-    return [
-        _resolve_ref(fs, root, rel, fs_options)
-        for b in sorted(manifest["buckets"], key=int)
-        for rel in manifest["buckets"][b]
-    ]
+    rels, _ = scan_files(manifest, sorted(manifest["buckets"], key=int))
+    return [_resolve_ref(fs, root, rel, fs_options) for rel in rels]
 
 
-def _bucket_refs(fs, root: str, manifest: dict, b: str, fs_options: dict) -> list[tuple]:
-    return [
-        _resolve_ref(fs, root, rel, fs_options)
-        for rel in manifest["buckets"].get(b, [])
-    ]
+class _BucketPartition(InputPartition):
+    """One bucket of one snapshot, resolved for the executor: its data
+    refs, the manifest ref of each (deletion vectors name rows by
+    manifest ref, spelling-independently) and its deletion-vector
+    refs."""
+
+    def __init__(
+        self,
+        refs: list[tuple],
+        rels: list[str] | None = None,
+        dv_refs: list[tuple] | None = None,
+    ):
+        self.refs = refs
+        self.rels = rels or []
+        self.dv_refs = dv_refs or []
+
+
+def _bucket_partition(
+    fs, root: str, manifest: dict, b: str, fs_options: dict
+) -> _BucketPartition:
+    """Bucket ``b`` of ``manifest`` as planned by ``scan_files``."""
+    rels, dv_rels = scan_files(manifest, [b])
+    return _BucketPartition(
+        [_resolve_ref(fs, root, rel, fs_options) for rel in rels],
+        rels,
+        [_resolve_ref(fs, root, rel, fs_options) for rel in dv_rels],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -380,48 +400,25 @@ def _aligned_table(ref: tuple, schema, mapping: dict | None = None):
     return pa.Table.from_arrays(cols, schema=schema)
 
 
-def _empty_table(schema):
+def _logical_tables(side: _BucketPartition, schema, mapping: dict | None = None):
+    """Each file of one bucket side aligned to ``schema`` with its
+    deletion-vector positions dropped (positions are per file, so the
+    filter runs at file grain)."""
+    dv_positions = _load_dv_positions(side.dv_refs) if side.dv_refs else {}
+    for i, ref in enumerate(side.refs):
+        t = _aligned_table(ref, schema, mapping)
+        yield _dv_anti_filter(t, side.rels[i], dv_positions) if dv_positions else t
+
+
+def _concat_logical(side: _BucketPartition, schema, mapping: dict | None = None):
+    """One bucket side's logical rows as one table."""
     import pyarrow as pa
 
+    tables = list(_logical_tables(side, schema, mapping))
+    if tables:
+        return pa.concat_tables(tables)
     return pa.Table.from_arrays(
         [pa.nulls(0, f.type) for f in schema], schema=schema
-    )
-
-
-def _concat_aligned(refs: list[tuple], schema, mapping: dict | None = None):
-    import pyarrow as pa
-
-    if not refs:
-        return _empty_table(schema)
-    return pa.concat_tables(
-        [_aligned_table(r, schema, mapping) for r in refs]
-    )
-
-
-def _concat_aligned_logical(
-    refs: list[tuple],
-    rels: list[str],
-    dv_refs: list[tuple],
-    schema,
-    mapping: dict | None = None,
-):
-    """One snapshot side's LOGICAL rows: each file anti-filtered by its
-    deletion-vector positions BEFORE concatenation (positions are
-    per-file, so the filter must run at file grain)."""
-    import pyarrow as pa
-
-    if not refs:
-        return _empty_table(schema)
-    if not dv_refs:
-        return _concat_aligned(refs, schema, mapping)
-    dv_positions = _load_dv_positions(dv_refs)
-    return pa.concat_tables(
-        [
-            _dv_anti_filter(
-                _aligned_table(r, schema, mapping), rel, dv_positions
-            )
-            for r, rel in zip(refs, rels)
-        ]
     )
 
 
@@ -440,65 +437,29 @@ def _neq_null_safe(a, b):
     return pc.or_(pc.xor(pc.is_null(a), pc.is_null(b)), ne)
 
 
-def _changed_buckets(m_from: dict, m_to: dict) -> list[str]:
-    # a bucket changed iff its FILE list or its DELETION-VECTOR list
-    # differs: a merge-on-read DELETE touches no data file but changes
-    # the bucket's logical rows all the same
-    def sig(m, b):
-        return (m["buckets"].get(b), m.get("bucket_dvs", {}).get(b))
-
-    return sorted(
-        (
-            b
-            for b in set(m_from["buckets"]) | set(m_to["buckets"])
-            if sig(m_from, b) != sig(m_to, b)
-        ),
-        key=int,
-    )
-
-
-def _bucket_change_batches(
-    old_refs: list[tuple],
-    new_refs: list[tuple],
-    schema,
-    key: str,
-    include_preimages: bool = False,
-    old_side: tuple = ((), ()),
-    new_side: tuple = ((), ()),
-    old_mapping: dict | None = None,
-    new_mapping: dict | None = None,
-) -> Iterator:
-    """insert/update/delete Arrow batches for ONE bucket between two
-    snapshots: a hash key-compare (``index_in``) plus vectorized
-    null-safe column diffs — no per-row Python objects, O(bucket) Arrow
-    memory bounded per executor task. ``include_preimages`` switches
-    updates to the Delta-CDF shape (``update_preimage`` with the OLD
-    values + ``update_postimage`` with the new) — algebraically
-    complete for consumers that must retract old contributions
-    (join-view/aggregate maintenance), matching the JVM reader's
-    ``txtable_changes(include_preimages=True)``."""
+def _bucket_change_batches(p: _ChangesPartition) -> Iterator:
+    """insert/update/delete Arrow batches for ONE changed bucket: a hash
+    key-compare (``index_in``, null matching null like the JVM feed's
+    null-safe join) plus vectorized null-safe column diffs — no per-row
+    Python objects, O(bucket) Arrow memory bounded per executor task.
+    ``p.pre`` switches updates to the Delta-CDF shape
+    (``update_preimage`` with the OLD values + ``update_postimage`` with
+    the new) — algebraically complete for consumers that must retract
+    old contributions (join-view/aggregate maintenance), matching the
+    JVM reader's ``txtable_changes(include_preimages=True)``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    old = _concat_aligned_logical(
-        old_refs, old_side[0], old_side[1], schema, old_mapping
-    )
-    new = _concat_aligned_logical(
-        new_refs, new_side[0], new_side[1], schema, new_mapping
-    )
-    for t in (old, new):
-        if t.num_rows and pc.any(pc.is_null(t.column(key))).as_py():
-            raise ValueError(
-                "txtable change feed requires non-null keys "
-                "(the JVM-side txtable_changes handles null keys)"
-            )
+    schema, key = p.schema, p.key
+    old = _concat_logical(p.old, schema, p.old_mapping)
+    new = _concat_logical(p.new, schema, p.new_mapping)
     pre = new.slice(0, 0)
     if old.num_rows == 0 or new.num_rows == 0:
         inserts, updates, deletes = new, new.slice(0, 0), old
     else:
         ok = old.column(key).combine_chunks()
         nk = new.column(key).combine_chunks()
-        idx = pc.index_in(nk, value_set=ok)
+        idx = pc.index_in(nk, value_set=ok, skip_nulls=False)
         inserts = new.filter(pc.is_null(idx))
         matched_new = new.filter(pc.is_valid(idx))
         matched_old = old.take(idx.drop_null())
@@ -511,14 +472,16 @@ def _bucket_change_batches(
         updates = (
             matched_new.filter(diff) if diff is not None else matched_new
         )
-        if include_preimages:
+        if p.pre:
             # row-aligned with matched_new, so the same diff mask selects
             # exactly the preimages of the emitted postimages
             pre = (
                 matched_old.filter(diff) if diff is not None else matched_old
             )
-        deletes = old.filter(pc.is_null(pc.index_in(ok, value_set=nk)))
-    update_tag = "update_postimage" if include_preimages else "update"
+        deletes = old.filter(
+            pc.is_null(pc.index_in(ok, value_set=nk, skip_nulls=False))
+        )
+    update_tag = "update_postimage" if p.pre else "update"
     emit = (
         (inserts, "insert"),
         (pre, "update_preimage"),
@@ -536,23 +499,6 @@ def _bucket_change_batches(
 # ---------------------------------------------------------------------------
 # Batch snapshot reader.
 # ---------------------------------------------------------------------------
-
-
-class _BucketPartition(InputPartition):
-    """One bucket's resolved data refs, plus — for deletion-vector
-    tables — the manifest rel string per ref (the DV files identify
-    rows by manifest reference, spelling-independently) and the
-    bucket's resolved DV refs."""
-
-    def __init__(
-        self,
-        refs: list[tuple],
-        rels: list[str] | None = None,
-        dv_refs: list[tuple] | None = None,
-    ):
-        self.refs = refs
-        self.rels = rels or []
-        self.dv_refs = dv_refs or []
 
 
 def _dv_anti_filter(table, rel: str, dv_positions: dict):
@@ -607,49 +553,30 @@ class _TxTableBatchReader(DataSourceReader):
             refs = _snapshot_refs(fs, root, self.manifest, fs_options)
             self.arrow_schema = _union_arrow_schema(refs) if refs else None
 
-    def _partition_for(self, b: str) -> _BucketPartition:
-        rels = self.manifest["buckets"].get(b, [])
-        dv_rels = self.manifest.get("bucket_dvs", {}).get(b, [])
-        return _BucketPartition(
-            [
-                _resolve_ref(self.fs, self.root, rel, self.fs_options)
-                for rel in rels
-            ],
-            rels=rels,
-            dv_refs=[
-                _resolve_ref(self.fs, self.root, rel, self.fs_options)
-                for rel in dv_rels
-            ],
-        )
+    def _bucket_ids(self) -> list[str]:
+        return sorted(self.manifest["buckets"], key=int)
 
     def partitions(self) -> list[InputPartition]:
-        # one partition per live bucket: the same parallel grain the
+        # one partition per planned bucket: the same parallel grain the
         # JVM reader gets from the manifest, no directory listing.
-        # A fully-emptied table needs one no-op partition — Spark
-        # replaces an EMPTY list with a default None partition that
-        # read() cannot handle (same guard as the pushdown reader)
+        # Nothing to read (an emptied table, or everything pruned)
+        # needs one no-op partition: Spark replaces an EMPTY list with
+        # a default None partition that read() cannot handle
         return [
-            self._partition_for(b)
-            for b in sorted(self.manifest["buckets"], key=int)
+            _bucket_partition(self.fs, self.root, self.manifest, b, self.fs_options)
+            for b in self._bucket_ids()
         ] or [_BucketPartition([])]
 
     def read(self, partition: _BucketPartition) -> Iterator:
-        dv_positions = (
-            _load_dv_positions(partition.dv_refs)
-            if partition.dv_refs
-            else {}
-        )
-        for i, ref in enumerate(partition.refs):
-            t = _aligned_table(ref, self.arrow_schema, self.mapping)
-            if dv_positions:
-                t = _dv_anti_filter(t, partition.rels[i], dv_positions)
+        for t in _logical_tables(partition, self.arrow_schema, self.mapping):
             yield from t.to_batches()
 
 
 class _TxTablePushdownBatchReader(_TxTableBatchReader):
     """Snapshot reader + planning-time partition pruning from the query's
-    pushed predicates (``sources/pushdown.py``): manifest zone maps plus
-    writer-parity key-bucket hashing.  Every filter is returned unhandled
+    pushed predicates (``sources/pushdown.prune_bucket_ids``): manifest
+    zone maps, Bloom filters and null counts plus writer-parity
+    key-bucket hashing.  Every filter is returned unhandled
     so Spark re-applies it — pruning only skips buckets that provably
     hold no match; results stay exact.
 
@@ -671,16 +598,8 @@ class _TxTablePushdownBatchReader(_TxTableBatchReader):
         )
         return filters  # all re-applied by Spark: pruning is metadata-only
 
-    def partitions(self) -> list[InputPartition]:
-        ids = (
-            self._kept
-            if self._kept is not None
-            else sorted(self.manifest["buckets"], key=int)
-        )
-        parts = [self._partition_for(b) for b in ids]
-        # everything pruned: Spark replaces an EMPTY partition list with a
-        # single default None partition, so hand it one no-op partition
-        return parts or [_BucketPartition([])]
+    def _bucket_ids(self) -> list[str]:
+        return self._kept if self._kept is not None else super()._bucket_ids()
 
 
 # ---------------------------------------------------------------------------
@@ -695,39 +614,22 @@ class _ChangesPartition(InputPartition):
 
     def __init__(
         self,
-        old_refs: list[tuple],
-        new_refs: list[tuple],
+        old: _BucketPartition,
+        new: _BucketPartition,
         schema,
         key: str,
         pre: bool = False,
-        old_side: tuple = ((), ()),
-        new_side: tuple = ((), ()),
         old_mapping: dict | None = None,
         new_mapping: dict | None = None,
     ):
-        self.old_refs = old_refs
-        self.new_refs = new_refs
+        self.old = old
+        self.new = new
         self.schema = schema
         self.key = key
         self.pre = pre
-        # (manifest rels aligned with refs, resolved DV refs) per side —
-        # empty for DV-free snapshots
-        self.old_side = old_side
-        self.new_side = new_side
         # logical→physical column mapping per side (column mapping)
         self.old_mapping = old_mapping
         self.new_mapping = new_mapping
-
-
-def _bucket_side(fs, root: str, m: dict, b: str, fs_options: dict):
-    """(refs, rels, dv_refs) for one bucket of one snapshot side."""
-    rels = m["buckets"].get(b, [])
-    dv_rels = m.get("bucket_dvs", {}).get(b, [])
-    return (
-        [_resolve_ref(fs, root, rel, fs_options) for rel in rels],
-        rels,
-        [_resolve_ref(fs, root, rel, fs_options) for rel in dv_rels],
-    )
 
 
 def _change_partitions(
@@ -756,49 +658,27 @@ def _change_partitions(
             "sinks.txlog.txtable_changes, or restart the feed from the "
             "rebucketed version"
         )
-    changed = _changed_buckets(m_from, m_to)
+    changed = changed_buckets(m_from, m_to)
     if changed:
-        # CDC across a column RENAME is ambiguous (which name does the
-        # feed report?) — refuse, matching the JVM txtable_changes and
-        # Delta's CDF-vs-column-mapping policy. Rename-only windows
-        # have no changed buckets and fall through to the empty feed.
-        by_phys: dict[str, set] = {}
-        for mm in (m_from, m_to):
-            for f in mm.get("schema", []):
-                phys = (f.get("metadata") or {}).get("physical") or f["name"]
-                by_phys.setdefault(phys, set()).add(f["name"])
-        conflicted = sorted(
-            p for p, names in by_phys.items() if len(names) > 1
-        )
-        if conflicted:
-            raise ValueError(
-                f"cannot read changes across a column rename (physical "
-                f"column(s) {conflicted} carry different names between "
-                f"versions {m_from.get('version')} and "
-                f"{m_to.get('version')}); read each side with time "
-                "travel instead"
-            )
+        # rename-only windows have no changed buckets: the empty feed
+        check_no_rename(m_from, m_to)
     old_mapping = mapping_of(m_from.get("schema"))
     new_mapping = mapping_of(m_to.get("schema"))
-    parts = []
-    for b in changed:
-        o_refs, o_rels, o_dvs = _bucket_side(fs, root, m_from, b, fs_options)
-        n_refs, n_rels, n_dvs = _bucket_side(fs, root, m_to, b, fs_options)
-        parts.append(
-            _ChangesPartition(
-                o_refs,
-                n_refs,
-                schema,
-                key,
-                pre,
-                old_side=(o_rels, o_dvs),
-                new_side=(n_rels, n_dvs),
-                old_mapping=old_mapping,
-                new_mapping=new_mapping,
-            )
+    parts = [
+        _ChangesPartition(
+            _bucket_partition(fs, root, m_from, b, fs_options),
+            _bucket_partition(fs, root, m_to, b, fs_options),
+            schema,
+            key,
+            pre,
+            old_mapping,
+            new_mapping,
         )
+        for b in changed
+    ]
     # the API needs >=1 partition; an empty diff reads as no rows
-    return parts or [_ChangesPartition([], [], schema, key, pre)]
+    empty = _BucketPartition([])
+    return parts or [_ChangesPartition(empty, empty, schema, key, pre)]
 
 
 def _cdf_arrow_schema(fs, root: str, m_from: dict, m_to: dict, fs_options: dict):
@@ -861,26 +741,14 @@ class _TxTableChangesBatchReader(DataSourceReader):
         return self._parts
 
     def read(self, partition: _ChangesPartition) -> Iterator:
-        yield from _bucket_change_batches(
-            partition.old_refs,
-            partition.new_refs,
-            partition.schema,
-            partition.key,
-            getattr(partition, "pre", False),
-            getattr(partition, "old_side", ((), ())),
-            getattr(partition, "new_side", ((), ())),
-            getattr(partition, "old_mapping", None),
-            getattr(partition, "new_mapping", None),
-        )
+        return _bucket_change_batches(partition)
 
 
 class _TxTableStreamReader(DataSourceStreamReader):
     """Streaming change feed, partition-based: offsets are manifest
     versions; each micro-batch plans one partition per changed bucket
-    and the per-bucket diff runs in executor workers (the
-    SimpleDataSourceStreamReader predecessor materialized every batch's
-    rows on the driver — a ceiling at 100× bucket size; this reader's
-    driver footprint is manifests only)."""
+    and the per-bucket diff runs in executor workers, so the driver
+    touches manifests only."""
 
     def __init__(
         self,
@@ -922,17 +790,7 @@ class _TxTableStreamReader(DataSourceStreamReader):
         )
 
     def read(self, partition: _ChangesPartition) -> Iterator:
-        yield from _bucket_change_batches(
-            partition.old_refs,
-            partition.new_refs,
-            partition.schema,
-            partition.key,
-            getattr(partition, "pre", False),
-            getattr(partition, "old_side", ((), ())),
-            getattr(partition, "new_side", ((), ())),
-            getattr(partition, "old_mapping", None),
-            getattr(partition, "new_mapping", None),
-        )
+        return _bucket_change_batches(partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable manifest versions; nothing to ack
@@ -990,7 +848,10 @@ class TxTableDataSource(DataSource):
         if sv is not None:
             return int(sv)
         if st is not None:
-            return _version_before_timestamp(fs, root, _parse_timestamp_ms(st))
+            v = version_at_timestamp(
+                _commit_times(fs, root), _parse_timestamp_ms(st), "before"
+            )
+            return -1 if v is None else v
         return None
 
     def schema(self):

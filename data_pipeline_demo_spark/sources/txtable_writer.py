@@ -108,7 +108,7 @@ class ConcurrentCommitError(RuntimeError):
 # XXH64 of a fixed <32-byte input is a short straight-line mix, so both
 # widths vectorize fully in numpy uint64 arithmetic (wrapping mul/shift
 # ≡ mod 2^64). Parity with the scalar spec implementation
-# (sources/pushdown.py:81) and with pyspark's xxhash64 is asserted in
+# (sources/pushdown.xxh64) and with pyspark's xxhash64 is asserted in
 # tests/test_txtable_writer.py.
 # ---------------------------------------------------------------------------
 
@@ -217,7 +217,7 @@ def xxh64_var_bytes(mat) -> "object":
     depends only on L), so the whole group computes as straight-line
     numpy uint64 arithmetic — the loops below iterate over CHUNK
     POSITIONS (≤ L/8 + 3 steps), never over rows. Parity with the
-    scalar spec (``sources/pushdown.py:81``) and with Spark's
+    scalar spec (``sources/pushdown.xxh64``) and with Spark's
     ``xxhash64`` asserted in tests."""
     np = _np()
     m, n = mat.shape

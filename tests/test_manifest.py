@@ -4,7 +4,10 @@ every commit, and the carry-forward contract of each write verb."""
 from __future__ import annotations
 
 import ast
+import json
+import os
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -14,12 +17,16 @@ from data_pipeline_demo_spark.sinks.manifest import (
     FEATURE_SHARDS,
     UnsupportedTableFeatureError,
     append_files,
+    changed_buckets,
     check_features,
+    check_no_rename,
     commit_rel,
     deflate,
     inflate,
     mapping_of,
     next_manifest,
+    scan_files,
+    version_at_timestamp,
     versions_in,
 )
 
@@ -87,6 +94,91 @@ def test_only_the_manifest_module_assembles_manifests():
         h for h in _layout_literals(PKG) if not h.startswith("sinks/manifest.py")
     ]
     assert hits == [], f"log layout spelled outside sinks/manifest.py: {hits}"
+
+
+def _mentions(node, *constants) -> bool:
+    found = {
+        n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and n.value in constants
+    }
+    return found == set(constants)
+
+
+# A read-planning concern and the module that alone may define it.
+_PLANNER = {
+    "changed-bucket signature": "sinks/manifest.py",
+    "commit-time comparison": "sinks/manifest.py",
+    "physical-name derivation": "sinks/manifest.py",
+    "bucket-pruning probe": "sources/pushdown.py",
+}
+
+
+def _planning_sites(root: Path) -> list[tuple[str, str]]:
+    """``(concern, path:line)`` for each spot that decides a read-planning
+    concern:
+
+    - a tuple pairing a bucket's file list with its deletion-vector
+      list (the changed-bucket signature);
+    - a comparison against ``committed_at_ms`` (timestamp resolution),
+      except vacuum's retention cutoff, a different concern;
+    - a read of a schema field's ``"physical"`` metadata;
+    - a direct call of the zone-map or Bloom probe."""
+    out = []
+    probes = {"zone_maps_overlap", "bloom_might_contain", "_bloom_might_contain"}
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        exempt = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "vacuum_txtable"
+            for n in ast.walk(f)
+        }
+        rel = str(path.relative_to(root))
+        for node in ast.walk(tree):
+            concern = None
+            if isinstance(node, ast.Tuple) and _mentions(node, "buckets", "bucket_dvs"):
+                concern = "changed-bucket signature"
+            elif (
+                isinstance(node, ast.Compare)
+                and id(node) not in exempt
+                and _mentions(node, "committed_at_ms")
+            ):
+                concern = "commit-time comparison"
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get"
+                and node.args
+                and _mentions(node.args[0], "physical")
+            ) or (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, ast.Load)
+                and _mentions(node.slice, "physical")
+            ):
+                concern = "physical-name derivation"
+            elif isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) in probes
+                or getattr(node.func, "attr", None) in probes
+            ):
+                concern = "bucket-pruning probe"
+            if concern is not None:
+                out.append((concern, f"{rel}:{node.lineno}"))
+    return out
+
+
+def test_each_read_planning_concern_is_defined_once():
+    """Guard: both txtable readers (the JVM ``read_txtable`` /
+    ``txtable_changes`` and the Arrow ``format("txtable")``) plan
+    through one module per concern. A second copy elsewhere in the
+    package drifts (the copies of the timestamp rule disagreed on
+    non-monotonic commit times)."""
+    stray = [
+        (c, where)
+        for c, where in _planning_sites(PKG)
+        if not where.startswith(_PLANNER[c] + ":")
+    ]
+    assert stray == [], f"read planning outside its planner module: {stray}"
 
 
 def test_layout_helpers():
@@ -406,10 +498,15 @@ EXPECTED = {v: dict(zip(TRACKED, row)) for v, row in _EXPECTED_ROWS.items()}
 
 
 @pytest.fixture(scope="module")
-def verb_steps(spark, tmp_path_factory):
+def matrix_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("matrix"))
+
+
+@pytest.fixture(scope="module")
+def verb_steps(spark, matrix_dir):
     from manifest_matrix import run_verbs
 
-    return run_verbs(spark, str(tmp_path_factory.mktemp("matrix")))
+    return run_verbs(spark, matrix_dir)
 
 
 def test_carry_matrix(verb_steps):
@@ -429,3 +526,222 @@ def test_analyze_after_restore_drops_restored_from_version(verb_steps):
     by_verb = {verb: after for verb, _before, after in verb_steps}
     assert by_verb["RESTORE"]["restored_from_version"] == 2
     assert "restored_from_version" not in by_verb["ANALYZE after RESTORE"]
+
+
+# ---------------------------------------------------------------------------
+# Read planning: the pure functions both txtable readers plan through,
+# and a differential check that the two readers agree on every version
+# of the matrix tables.
+# ---------------------------------------------------------------------------
+
+
+def test_version_at_timestamp_adjusts_non_monotonic_commit_times():
+    """Commit times are writer wall clocks: v2 stamped before v1 takes
+    effective time 3001, so every side splits the log between v0 and v1
+    at ts=2500."""
+    commits = [(0, 1000), (1, 3000), (2, 2000), (3, 4000)]
+    at = {
+        side: version_at_timestamp(commits, 2500, side)
+        for side in ("before", "at_or_before", "at_or_after")
+    }
+    assert at == {"before": 0, "at_or_before": 0, "at_or_after": 1}
+    # an exact effective time: at_or_before includes it, before does not
+    assert version_at_timestamp(commits, 3001, "at_or_before") == 2
+    assert version_at_timestamp(commits, 3001, "before") == 1
+    assert version_at_timestamp(commits, 3001, "at_or_after") == 2
+    # outside the log: each caller picks its own answer for None
+    assert version_at_timestamp(commits, 999, "at_or_before") is None
+    assert version_at_timestamp(commits, 999, "before") is None
+    assert version_at_timestamp(commits, 4001, "at_or_after") is None
+    assert version_at_timestamp(commits, 10**6, "at_or_before") == 3
+
+    # the commits are read only up to the answer
+    seen = []
+
+    def lazy():
+        for v, t in commits:
+            seen.append(v)
+            yield v, t
+
+    assert version_at_timestamp(lazy(), 1500, "before") == 0
+    assert seen == [0, 1]
+
+
+def test_changed_buckets_and_scan_files():
+    old = {
+        "buckets": {"0": ["a"], "1": ["b"], "2": ["c"], "10": ["d"]},
+        "bucket_dvs": {"1": ["dv1"]},
+    }
+    new = {
+        "buckets": {"0": ["a"], "1": ["b"], "2": ["c", "e"], "3": ["f"], "10": ["d"]},
+        "bucket_dvs": {"0": ["dv0", "flat"], "10": ["flat"]},
+    }
+    # changed file lists, changed vector lists, a new bucket; ascending
+    assert changed_buckets(old, new) == ["0", "1", "2", "3", "10"]
+    assert changed_buckets(new, new) == []
+    assert scan_files(new, [10, "0"]) == (["d", "a"], ["dv0", "flat"])
+    assert scan_files(new, ["7"]) == ([], [])
+
+
+def test_check_no_rename():
+    f = lambda name, phys=None: {  # noqa: E731
+        "name": name, "metadata": {"physical": phys} if phys else {}
+    }
+    check_no_rename({"schema": [f("a"), f("b")]}, {"schema": [f("a"), f("c")]})
+    with pytest.raises(ValueError, match=r"column rename .*\['col-1'\]"):
+        check_no_rename(
+            {"version": 1, "schema": [f("a", "col-1")]},
+            {"version": 2, "schema": [f("b", "col-1")]},
+        )
+
+
+@pytest.fixture(scope="module")
+def bloom_verbs(spark, matrix_dir):
+    from manifest_matrix import run_bloom_appends
+
+    return run_bloom_appends(spark, matrix_dir)
+
+
+def _row_key(d: dict) -> tuple:
+    """A row as a hashable multiset element; a null and an absent column
+    are the same (the readers align a window's two schemas
+    differently)."""
+    return tuple(sorted((k, repr(v)) for k, v in d.items() if v is not None))
+
+
+def _collect_tagged(frames: dict) -> dict[str, Counter]:
+    """The row multiset of each frame in ``frames`` ({tag: DataFrame}),
+    read in one collect: the frames are tagged and unioned by name."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.withColumn("__case", F.lit(tag)) for tag, df in frames.items()],
+    )
+    out = {tag: Counter() for tag in frames}
+    for r in union.collect():
+        d = r.asDict(True)
+        out[d.pop("__case")][_row_key(d)] += 1
+    return out
+
+
+def _format_rows(options: dict) -> Counter:
+    """The row multiset ``format("txtable")`` reads for ``options``,
+    planned and read in-process by the DataSource's own reader (the
+    code Spark's Python workers run, without a worker round trip per
+    read)."""
+    import pyarrow as pa
+
+    from data_pipeline_demo_spark.sources.txtable_source import TxTableDataSource
+
+    src = TxTableDataSource(options)
+    reader = src.reader(src.schema())
+    return Counter(
+        _row_key(r)
+        for p in reader.partitions()
+        for b in reader.read(p)
+        for r in pa.Table.from_batches([b]).to_pylist()
+    )
+
+
+def _snapshot_diff(old: Counter, new: Counter, preimages: bool) -> Counter:
+    """The changes a pair of snapshots implies, keyed by ``id``: a row
+    only in ``new`` is an insert, only in ``old`` a delete, and a key in
+    both whose other values differ an update (a preimage and a
+    postimage with ``preimages``). Shares no planning code with either
+    reader, so it also catches a planner both readers get wrong."""
+    o = {dict(r)["id"]: dict(r) for r in old}
+    n = {dict(r)["id"]: dict(r) for r in new}
+    out = Counter()
+
+    def emit(row: dict, tag: str) -> None:
+        out[tuple(sorted({**row, "_change_type": repr(tag)}.items()))] += 1
+
+    for k in n.keys() - o.keys():
+        emit(n[k], "insert")
+    for k in o.keys() - n.keys():
+        emit(o[k], "delete")
+    for k in o.keys() & n.keys():
+        if o[k] != n[k] and preimages:
+            emit(o[k], "update_preimage")
+            emit(n[k], "update_postimage")
+        elif o[k] != n[k]:
+            emit(n[k], "update")
+    return out
+
+
+def test_both_readers_agree_on_every_matrix_version(
+    spark, matrix_dir, verb_steps, bloom_verbs
+):
+    """Every version of the verb-matrix table ``t`` and the Bloom table
+    ``bt`` reads the same rows through ``read_txtable`` and
+    ``format("txtable")``; every consecutive version pair gives the same
+    changes through ``txtable_changes`` and the DataSource's change
+    feed, with and without preimages, and equal to the changes the two
+    snapshots imply. Windows across a bucket-count change are refused
+    by the DataSource."""
+    from data_pipeline_demo_spark.sinks.txlog import read_txtable, txtable_changes
+
+    for name in ("t", "bt"):
+        root = os.path.join(matrix_dir, name)
+        manifests = [
+            json.loads(p.read_text())
+            for p in sorted(Path(root, "_commits").glob("[0-9]*.json"))
+        ]
+        assert len(manifests) > 5
+        jvm, fmt, windows = {}, {}, []
+        for v in range(len(manifests)):
+            jvm[f"v{v}"] = read_txtable(spark, root, version=v)
+            fmt[f"v{v}"] = {"path": root, "version": str(v)}
+        for v in range(len(manifests) - 1):
+            window = {
+                "path": root,
+                "readchangefeed": "true",
+                "startingversion": str(v),
+                "endingversion": str(v + 1),
+            }
+            rebucketed = manifests[v]["num_buckets"] != manifests[v + 1]["num_buckets"]
+            if rebucketed:
+                with pytest.raises(NotImplementedError, match="bucket-count"):
+                    _format_rows(window)
+            for pre in (False, True):
+                tag = f"v{v}->v{v + 1} preimages={pre}"
+                windows.append((v, pre, tag))
+                jvm[tag] = txtable_changes(spark, root, v, v + 1, include_preimages=pre)
+                if not rebucketed:
+                    fmt[tag] = {**window, "includepreimages": str(pre).lower()}
+        want = _collect_tagged(jvm)
+        for v, pre, tag in windows:
+            implied = _snapshot_diff(want[f"v{v}"], want[f"v{v + 1}"], pre)
+            assert want[tag] == implied, (name, tag)
+        for tag, options in fmt.items():
+            assert _format_rows(options) == want[tag], (name, tag)
+
+
+def test_both_pruning_entry_points_agree(spark, matrix_dir, bloom_verbs):
+    """``read_txtable``'s zone-map, Bloom and null-count probes and the
+    same predicates pushed into ``format("txtable")`` prune through one
+    tier each and return the same rows as an unpruned filtered scan."""
+    from data_pipeline_demo_spark.sinks.txlog import read_txtable
+
+    root = os.path.join(matrix_dir, "bt")
+    full = read_txtable(spark, root)
+    ds = spark.read.format("txtable").load(root)
+    cases = [
+        ({"prune_between": {"v": (2, 3)}}, "v >= 2 AND v <= 3"),
+        ({"bloom_eq": {"s": "s42"}}, "s = 's42'"),
+        ({"bloom_in": {"s": ["s12", "s61", "nope"]}}, "s IN ('s12', 's61', 'nope')"),
+        ({"prune_is_null": {"v": False}}, "v IS NOT NULL"),
+    ]
+    frames = {}
+    for i, (kwargs, where) in enumerate(cases):
+        frames[f"{i} scan"] = full.filter(where)
+        frames[f"{i} read_txtable"] = read_txtable(spark, root, **kwargs)
+        frames[f"{i} format"] = ds.filter(where)
+    got = _collect_tagged(frames)
+    for i, (_, where) in enumerate(cases):
+        assert got[f"{i} scan"], where
+        assert got[f"{i} read_txtable"] == got[f"{i} scan"], where
+        assert got[f"{i} format"] == got[f"{i} scan"], where

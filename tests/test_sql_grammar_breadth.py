@@ -113,6 +113,26 @@ def test_struct_and_map_column_lists_split_at_top_level(spark, tmp_path):
     assert types["c"] == "int"
 
 
+def test_insert_named_struct_into_struct_column(spark, tmp_path):
+    """A ``named_struct`` literal's fields are NOT NULL while the
+    table's are nullable: the types differ only in nested nullability,
+    so the INSERT stores (cast to the table type) instead of raising a
+    schema conflict, and the table schema keeps its nullable fields."""
+    root = str(tmp_path / "nested_ins")
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` (id BIGINT, "
+        "s STRUCT<x:INT,y:INT> NOT NULL) KEY id BUCKETS 2",
+    )
+    txtable_sql(
+        spark,
+        f"INSERT INTO txtable.`{root}` VALUES (1, named_struct('x', 1, 'y', 2))",
+    )
+    df = read_txtable(spark, root)
+    assert [(r["id"], r["s"]["x"], r["s"]["y"]) for r in df.collect()] == [(1, 1, 2)]
+    assert all(f.nullable for f in df.schema["s"].dataType.fields)
+
+
 def test_restore_short_forms(spark, t):
     txtable_sql(spark, f"UPDATE txtable.`{t}` SET amt = amt + 1")
     # Databricks allows RESTORE without TABLE and without TO

@@ -283,8 +283,18 @@ def test_bucket_change_batches_arrow_compare(tmp_path):
 
     from data_pipeline_demo_spark.sources.txtable_source import (
         _bucket_change_batches,
+        _BucketPartition,
+        _ChangesPartition,
         _LocalFS,
     )
+
+    def diff(po, pn):
+        return _bucket_change_batches(
+            _ChangesPartition(
+                _BucketPartition([(fs, po)]), _BucketPartition([(fs, pn)]),
+                schema, "id",
+            )
+        )
 
     schema = pa.schema(
         [
@@ -316,19 +326,27 @@ def test_bucket_change_batches_arrow_compare(tmp_path):
     pq.write_table(new, pn)
     fs = _LocalFS()
     got = {}
-    for batch in _bucket_change_batches([(fs, po)], [(fs, pn)], schema, "id"):
+    for batch in diff(po, pn):
         for r in pa.Table.from_batches([batch]).to_pylist():
             got[r["id"]] = r["_change_type"]
     assert got == {2: "update", 3: "update", 4: "update", 6: "insert", 5: "delete"}
 
-    # null keys refuse loudly (matching the prior contract)
-    bad = pa.table(
-        {"id": [None], "v": ["x"], "tags": [[1]]}, schema=schema
+    # a null key matches a null key, as in the JVM feed's null-safe
+    # join: a null-key row whose value changed is one update, the answer
+    # txtable_changes gives (test_null_key_change_feeds_agree)
+    null_old, null_new = (
+        pa.table({"id": [None, 1], "v": [v, "a"], "tags": [[1], [1]]}, schema=schema)
+        for v in ("x", "y")
     )
-    pb = str(tmp_path / "bad.parquet")
-    pq.write_table(bad, pb)
-    with pytest.raises(ValueError, match="non-null keys"):
-        list(_bucket_change_batches([(fs, po)], [(fs, pb)], schema, "id"))
+    pb, pc_ = str(tmp_path / "null_old.parquet"), str(tmp_path / "null_new.parquet")
+    pq.write_table(null_old, pb)
+    pq.write_table(null_new, pc_)
+    got = [
+        (r["id"], r["v"], r["_change_type"])
+        for batch in diff(pb, pc_)
+        for r in pa.Table.from_batches([batch]).to_pylist()
+    ]
+    assert got == [(None, "y", "update")]
 
 
 def test_no_full_bucket_to_pylist_in_source():
@@ -513,6 +531,76 @@ def test_starting_timestamp_resolution(registered, tmp_path):
     )
     with pytest.raises(Exception, match="at most one"):
         cdf(startingVersion="0", startingTimestamp="0")
+
+
+def test_non_monotonic_commit_times_split_once(registered, tmp_path):
+    """Commit times are writer wall clocks and need not increase. With
+    v0..v3 stamped 1000, 3000, 2000, 4000 ms, every reader resolves
+    ts=2500 to one split point between v0 and v1 (v2 takes effective
+    time 3001): time travel reads v0, and both change feeds start
+    after v0."""
+    from data_pipeline_demo_spark.sinks.sql_dml import txtable_sql
+    from data_pipeline_demo_spark.sinks.txlog import read_txtable
+
+    spark = registered
+    root = str(tmp_path / "tx")
+    txlog_upsert(spark, _rows(spark, [(1, "a")]), root, num_buckets=2)
+    for batch in ([(2, "b")], [(3, "c")], [(1, "A")]):
+        txlog_upsert(spark, _rows(spark, batch), root)
+    commits = Path(root) / "_commits"
+    for v, ms in enumerate([1000, 3000, 2000, 4000]):
+        p = commits / f"{v:020d}.json"
+        m = json.loads(p.read_text())
+        m["committed_at_ms"] = ms
+        p.write_text(json.dumps(m))
+    for crc in commits.glob(".*.crc"):  # else Hadoop reads the old bytes' checksum
+        crc.unlink()
+    ts = "1970-01-01 00:00:02.500"
+
+    assert _as_dict(read_txtable(spark, root, timestamp_ms=2500)) == {1: "a"}
+    assert _as_dict(
+        txtable_sql(spark, f"SELECT * FROM txtable.`{root}` TIMESTAMP AS OF '{ts}'")
+    ) == {1: "a"}
+    after_v0 = {(2, "insert", "b"), (3, "insert", "c"), (1, "update", "A")}
+    sql = txtable_sql(
+        spark,
+        f"SELECT id, _change_type, v FROM table_changes(txtable.`{root}`, '{ts}')",
+    )
+    assert {tuple(r) for r in sql.collect()} == after_v0
+    ds = (
+        spark.read.format("txtable")
+        .option("readChangeFeed", "true")
+        .option("startingTimestamp", "2500")
+        .load(root)
+    )
+    assert {(r["id"], r["_change_type"], r["v"]) for r in ds.collect()} == after_v0
+
+
+def test_null_key_change_feeds_agree(registered, tmp_path):
+    """A null key is a key like any other in both change feeds: a
+    null-key row whose value changes is one update in
+    ``txtable_changes`` and in ``format("txtable")``."""
+    from data_pipeline_demo_spark.sinks.txlog import txtable_changes
+
+    spark = registered
+    root = str(tmp_path / "tx")
+    txlog_upsert(spark, _rows(spark, [(None, "a"), (1, "x")]), root, num_buckets=2)
+    txlog_upsert(spark, _rows(spark, [(None, "A")]), root)
+    for pre in (False, True):
+        jvm = txtable_changes(spark, root, 0, 1, include_preimages=pre)
+        ds = (
+            spark.read.format("txtable")
+            .option("readChangeFeed", "true")
+            .option("startingVersion", "0")
+            .option("includePreimages", str(pre).lower())
+            .load(root)
+        )
+        got = [
+            sorted((r["id"], r["v"], r["_change_type"]) for r in df.collect())
+            for df in (jvm, ds)
+        ]
+        assert got[0] == got[1]
+    assert got[1] == [(None, "A", "update_postimage"), (None, "a", "update_preimage")]
 
 
 def test_cdf_schema_survives_delete_everything(registered, tmp_path):
