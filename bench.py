@@ -560,6 +560,8 @@ def bench_lakehouse(spark, sf_dir: str, runs: int):
                 spark, sroot,
                 next_manifest(
                     None, "BENCH", key="li_id", num_buckets=32,
+                    schema=[{"name": "li_id", "type": "long",
+                             "nullable": True, "metadata": {}}],
                     buckets=buckets,
                     row_counts={b: 1 for b in buckets},
                     manifest_sharding={"groups": 32},

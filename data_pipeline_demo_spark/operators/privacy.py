@@ -25,22 +25,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks.upsert import composite_key
+
 
 def _group_key(group_cols: Sequence[str]) -> Column:
-    """Injective, null-distinct group-key encoding: ``concat_ws`` SKIPS
-    nulls, so ``(NULL, 'a')`` and ``('a', NULL)`` would hash alike and
-    SHARE one noise draw — correlated noise across releases is a
-    privacy defect, not just a cosmetic one (the join_view VIEW_KEY
-    lesson). Encode NULL as a marker and escape the marker/separator
-    so no value can forge another component's encoding."""
-    parts = []
-    for c in group_cols:
-        s = F.col(c).cast("string")
-        escaped = F.regexp_replace(
-            F.regexp_replace(s, "\x00", "\x00\x00"), "\x1f", "\x00\x1f"
-        )
-        parts.append(F.coalesce(escaped, F.lit("\x00N")))
-    return F.concat_ws("\x1f", *parts)
+    """Injective, null-distinct group-key encoding
+    (:func:`~..sinks.upsert.composite_key`): with a plain ``concat_ws``,
+    ``(NULL, 'a')`` and ``('a', NULL)`` would hash alike and SHARE one
+    noise draw — correlated noise across releases is a privacy defect,
+    not just a cosmetic one."""
+    return composite_key(group_cols)
 
 
 def _laplace_noise(key: Column, seed: int, scale: Column) -> Column:

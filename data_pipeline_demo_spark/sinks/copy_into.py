@@ -41,7 +41,6 @@ Design for 100 TB:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .txlog import (
@@ -52,9 +51,8 @@ from .txlog import (
     _apply_generated_columns,
     _commit_manifest,
     _copy_chain,
-    _copy_history_map,
+    _enforce_schema,
     _enforce_table_constraints,
-    _evolved_schema,
     _history_of,
     _latest_manifest,
     _publish_touched_buckets,
@@ -247,20 +245,11 @@ def _read_new_files(
         return reader.parquet(*paths)
     if file_format == "orc":
         return reader.orc(*paths)
-    fields = manifest.get("schema")
-    if not fields:
-        raise ValueError(
-            "COPY INTO with FILEFORMAT = "
-            f"{file_format.upper()} needs the table's recorded schema "
-            "to parse text files, but this table's manifest predates "
-            "schema tracking — load via parquet, or recreate the table "
-            "with a schema (CREATE TABLE ... (schema))"
-        )
     gen = set(manifest.get("generated_columns", {}))
     want = StructType.fromJson(
         {
             "type": "struct",
-            "fields": [f for f in fields if f["name"] not in gen],
+            "fields": [f for f in manifest["schema"] if f["name"] not in gen],
         }
     )
     return reader.schema(want).format(file_format).load(paths)
@@ -307,12 +296,11 @@ def copy_into(
     check_features(prev, frozenset({FEATURE_DV}), "COPY INTO")
 
     files = _list_source_files(spark, source, pattern)
-    # full history = sidecar chain (newest wins) + legacy embedded map;
-    # the chain read is len(chain) small JSON reads, bounded by
-    # COPYLOG_CHAIN_MAX / OPTIMIZE compaction
+    # full history = the sidecar chain (newest wins); the chain read is
+    # len(chain) small JSON reads, bounded by COPYLOG_CHAIN_MAX /
+    # OPTIMIZE compaction
     chain = _copy_chain(spark, root_path, prev)
-    legacy = prev.get("copy_files") or {}
-    history = _history_of(chain, legacy)
+    history = _history_of(chain)
     new_files = [
         (p, sz, mt)
         for p, sz, mt in files
@@ -331,26 +319,13 @@ def copy_into(
     )
 
     # schema enforcement/evolution + lossless upcasts — the same gate
-    # every other write path applies (txlog_upsert's block)
-    dropped_columns = list(prev.get("dropped_columns", []))
-    schema_fields = None
-    if "schema" in prev:
-        schema_fields = _evolved_schema(
-            prev["schema"], batch, merge_schema, dropped_columns
-        )
-        want = StructType.fromJson(
-            {"type": "struct", "fields": schema_fields}
-        )
-        casts = [
-            (f.name, f.dataType)
-            for f in want.fields
-            if f.name in set(batch.columns)
-            and batch.schema[f.name].dataType != f.dataType
-        ]
-        if casts:
-            batch = batch.withColumns(
-                {n: F.col(n).cast(t) for n, t in casts}
-            )
+    # txlog_upsert applies
+    schema_fields, batch = _enforce_schema(
+        prev["schema"],
+        batch,
+        merge_schema,
+        list(prev.get("dropped_columns", [])),
+    )
 
     column_defaults = dict(prev.get("column_defaults", {}))
     if column_defaults:
@@ -393,11 +368,11 @@ def copy_into(
     # one O(new files) sidecar per load, chained onto the previous head
     # — the manifest carries only the O(1) pointer (round-11 judge
     # directive #2: the embedded map grew O(all files ever) per
-    # commit). Legacy embedded history and over-long chains fold into
-    # this sidecar (prev=None), migrating/compacting in place.
+    # commit). An over-long chain folds into this sidecar (prev=None),
+    # compacting in place.
     new_map = {p: [sz, mt, version] for p, sz, mt in new_files}
     total = len(set(history) | set(new_map))
-    if legacy or len(chain) >= COPYLOG_CHAIN_MAX:
+    if len(chain) >= COPYLOG_CHAIN_MAX:
         sidecar_files = {**history, **new_map}
         prev_head = None
     else:
@@ -418,7 +393,6 @@ def copy_into(
             **written,
             schema=schema_fields,
             identity_high_water=identity_hwm,
-            copy_files=None,
             copy_log={"head": head_rel, "count": total},
         ),
         prev=prev,
@@ -439,6 +413,7 @@ def copy_history(spark: SparkSession, root_path: str) -> list[dict]:
     man = _latest_manifest(spark, root_path)
     if man is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
+    history = _history_of(_copy_chain(spark, root_path, man))
     return sorted(
         (
             {
@@ -447,7 +422,7 @@ def copy_history(spark: SparkSession, root_path: str) -> list[dict]:
                 "mtime_ms": int(rec[1]),
                 "version": int(rec[2]) if len(rec) > 2 else None,
             }
-            for p, rec in _copy_history_map(spark, root_path, man).items()
+            for p, rec in history.items()
         ),
         key=lambda r: (r["version"], r["file"]),
     )

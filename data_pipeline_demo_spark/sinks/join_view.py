@@ -38,35 +38,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .txlog import read_txtable, txlog_delete, txlog_upsert
+from .upsert import composite_key
 
-_SEP = "\x1f"
 VIEW_KEY = "__vkey"
 
 
-def _key_part(c) -> "F.Column":
-    """One composite-key component, null-distinct and injective:
-    ``concat_ws`` SKIPS nulls, so ``(NULL, 5)`` and ``(5, NULL)`` would
-    collide on the same view key and one MERGE row would silently
-    overwrite the other (round-6 advisor finding). Encode NULL as a
-    dedicated marker and escape the marker/separator characters in
-    real values so no value can forge another component's encoding."""
-    s = c.cast("string")
-    escaped = F.regexp_replace(
-        F.regexp_replace(s, "\x00", "\x00\x00"), _SEP, "\x00\x1f"
-    )
-    return F.coalesce(escaped, F.lit("\x00N"))
-
-
 def _with_view_key(joined: DataFrame, on: str, a_id: str, b_id: str) -> DataFrame:
-    return joined.withColumn(
-        VIEW_KEY,
-        F.concat_ws(
-            _SEP,
-            _key_part(F.col(on)),
-            _key_part(F.col(a_id)),
-            _key_part(F.col(b_id)),
-        ),
-    )
+    # null-distinct: (NULL, 5) and (5, NULL) must not share a view key,
+    # or one MERGE row would silently overwrite the other
+    return joined.withColumn(VIEW_KEY, composite_key([on, a_id, b_id]))
 
 
 def build_join_view(

@@ -11,13 +11,17 @@ is carried (or deliberately reset) in exactly one place. Both blind
 appends, ``format("txtable")`` APPEND and COPY INTO, fold their new
 files in with :func:`append_files`. Readers and writers on both sides
 name and list log files with :func:`commit_rel` and
-:func:`versions_in`, refuse unknown ``requires`` tokens with
-:func:`check_features`, and resolve column mapping with
-:func:`mapping_of`. Both txtable readers — the JVM ``read_txtable`` /
-``txtable_changes`` and the Arrow ``format("txtable")`` — plan through
-the read-planning functions at the end of this module: the files and
-deletion vectors a bucket scan opens, the buckets a change window
-must diff, the version a timestamp names, and the rename check.
+:func:`versions_in`, refuse any manifest outside the one format every
+writer commits with :func:`check_format` (it always records the
+table's ``schema`` and a ``committed_at_ms`` stamp, and keeps COPY
+INTO history in ``copylog/`` sidecars, never in the manifest), refuse
+unknown ``requires`` tokens with :func:`check_features`, and resolve
+column mapping with :func:`mapping_of`. Both txtable readers — the
+JVM ``read_txtable`` / ``txtable_changes`` and the Arrow
+``format("txtable")`` — plan through the read-planning functions at
+the end of this module: the files and deletion vectors a bucket scan
+opens, the buckets a change window must diff, the version a timestamp
+names, and the rename check.
 Shard, listing and file IO is the only thing that differs between the
 JVM-FS and the Python-fs paths; this module takes it as a callable, as
 the names a caller listed, or as the values a caller read.
@@ -55,7 +59,8 @@ _REQUIRED = {
 }
 
 # Fields carried only while non-empty: an empty value is written as an
-# absent key (the shape readers of older manifests expect).
+# absent key, which keeps manifests small. ``schema`` is never empty:
+# every table has at least its key column.
 _OPTIONAL = (
     "bucket_nulls",
     "schema",
@@ -66,7 +71,6 @@ _OPTIONAL = (
     "column_defaults",
     "bucket_dvs",
     "dv_counts",
-    "copy_files",
     "copy_log",
     "manifest_sharding",
 )
@@ -92,7 +96,9 @@ def next_manifest(base: dict | None, operation: str, **changes) -> dict:
     still have vectors (and the identity high-water mark only beside
     identity columns), derives ``requires`` from the result, and stamps
     the operation and the commit time. ``version`` defaults to
-    ``base["version"] + 1`` (0 without a base)."""
+    ``base["version"] + 1`` (0 without a base). A creating commit must
+    state ``key``, ``num_buckets`` and ``schema``, so no writer
+    publishes a manifest that :func:`check_format` refuses."""
     out: dict = {"version": 0 if base is None else base["version"] + 1}
     if base is not None:
         out.update({k: _copy(base[k]) for k in CARRIED if k in base})
@@ -109,7 +115,7 @@ def next_manifest(base: dict | None, operation: str, **changes) -> dict:
     for k in list(out):
         if out[k] is None or (k in _OPTIONAL and not out[k]):
             del out[k]
-    missing = {"key", "num_buckets"} - set(out)
+    missing = {"key", "num_buckets", "schema"} - set(out)
     if missing:
         raise ValueError(f"a creating commit must state {sorted(missing)}")
     out = {**{k: out.pop(k) for k in ("version", *CARRIED) if k in out}, **out}
@@ -193,7 +199,7 @@ def mapping_of(fields) -> dict[str, str]:
     inactive, the fast path."""
     return {
         f["name"]: physical_name(f)
-        for f in fields or []
+        for f in fields
         if physical_name(f) != f["name"]
     }
 
@@ -203,7 +209,7 @@ def decimal_columns(fields) -> set[str]:
     stats are stringified Decimals and compare by value."""
     return {
         f["name"]
-        for f in fields or []
+        for f in fields
         if str(f.get("type", "")).startswith("decimal")
     }
 
@@ -233,6 +239,29 @@ def check_features(
         f"cannot {op} this txtable: manifest version "
         f"{manifest.get('version')} requires table feature(s) "
         f"{missing} unsupported here.{hint}"
+    )
+
+
+def check_format(manifest: dict) -> None:
+    """Refuse a parsed ``_commits/<v>.json`` outside the one manifest
+    format: every commit records the table's ``schema`` and its
+    ``committed_at_ms`` stamp, and COPY INTO history lives in
+    ``copylog/`` sidecars, never embedded as ``copy_files``. Both
+    readers run this on every manifest they parse. It raises
+    :class:`UnsupportedTableFeatureError`, never a ValueError, so no
+    reader quarantines a well-formed manifest of an older format."""
+    if "schema" not in manifest:
+        problem = "records no schema"
+    elif "committed_at_ms" not in manifest:
+        problem = "has no committed_at_ms stamp"
+    elif "copy_files" in manifest:
+        problem = "embeds its COPY INTO history (copy_files)"
+    else:
+        return
+    raise UnsupportedTableFeatureError(
+        f"txtable manifest version {manifest.get('version')} {problem}: it "
+        "predates the current manifest format, which this engine no "
+        "longer reads"
     )
 
 
@@ -360,14 +389,13 @@ def stat_value(v):
     return str(v)
 
 
-def stat_cmp_pair(a, b, decimal_bound: bool):
+def stat_cmp_pair(a, b, decimal: bool):
     """(a, b) coerced so ``a < b`` compares by VALUE for zone-map
-    pruning. ``decimal_bound=True`` means the caller's bound was a
-    Decimal (so the column is decimal-typed and its string stats are
-    stringified Decimals): string pairs re-parse through Decimal. With
-    a non-Decimal bound strings pass through: for STRING columns
+    pruning. ``decimal=True`` means the column is decimal-typed, so its
+    string stats are stringified Decimals: string pairs re-parse
+    through Decimal. Otherwise strings pass through: for STRING columns
     Spark's own predicate semantics ARE lexicographic."""
-    if decimal_bound and isinstance(a, str) and isinstance(b, str):
+    if decimal and isinstance(a, str) and isinstance(b, str):
         try:
             return _dec.Decimal(a), _dec.Decimal(b)
         except _dec.InvalidOperation:
@@ -382,16 +410,9 @@ def widen(prev: list | None, new: list | None, decimal: bool = False):
     column is decimal-typed, so string stats are stringified Decimals):
     string pairs COMPARE by Decimal value — '9.5' vs '12.0' must pick
     hi='12.0', never the lexical '9.5' — while the stored strings pass
-    through unchanged (the rule :func:`stat_cmp_pair` applies).
-
-    When ``decimal`` is False but a compared string pair PARSES as
-    Decimal AND the lexical and numeric orders disagree, the column's
-    type is ambiguous (a legacy schema-less manifest can't say whether
-    '9.5'/'12.0' are stringified decimals or genuine strings): picking
-    lexically could record a numerically too-NARROW bound that a
-    Decimal-probing reader then uses to wrongly prune rows. Drop the
-    stat to None — conservative, the bucket stays kept. Incomparable
-    values (a schema-evolved type) drop it too."""
+    through unchanged (the rule :func:`stat_cmp_pair` applies). Other
+    strings compare lexically, as Spark compares STRING values.
+    Incomparable values (a schema-evolved type) drop the stat."""
     if prev is None or new is None:
         return None
 
@@ -403,17 +424,6 @@ def widen(prev: list | None, new: list | None, decimal: bool = False):
                 return v
         return v
 
-    def _ambiguous(a, b) -> bool:
-        if decimal or not (isinstance(a, str) and isinstance(b, str)):
-            return False
-        try:
-            da, db = _dec.Decimal(a), _dec.Decimal(b)
-        except _dec.InvalidOperation:
-            return False  # not decimal-shaped: lexical is the order
-        return (a <= b) != (da <= db)  # orders disagree: can't pick safely
-
-    if _ambiguous(prev[0], new[0]) or _ambiguous(prev[1], new[1]):
-        return None
     try:
         lo = prev[0] if _key(prev[0]) <= _key(new[0]) else new[0]
         hi = prev[1] if _key(prev[1]) >= _key(new[1]) else new[1]
@@ -449,8 +459,8 @@ def append_files(
     ``bucket_nulls`` changes for :func:`next_manifest`. ``prev=None``
     appends to an empty snapshot (an overwrite).
 
-    Each entry is ``(bucket, files, rows, stats[, blooms[, nulls]])``
-    for files newly written into one bucket; entries apply in order,
+    Each entry is ``(bucket, files, rows, stats, blooms, nulls)`` for
+    files newly written into one bucket; entries apply in order,
     so a later entry sees an earlier one's files as prior files.
 
     - Files join the bucket's list and ``rows`` add to its row count.
@@ -461,14 +471,13 @@ def append_files(
       column goes stat-less for the bucket. A bucket whose prior files
       have no stats, or no range for a column, stays without one.
     - ``nulls`` (``{col: n}``) sum; a column missing from them was
-      absent from the batch, so all ``rows`` are null there. A legacy
-      entry without them, or a bucket whose prior files have no
-      counts, loses its counts.
+      absent from the batch, so all ``rows`` are null there. ``None``,
+      or a bucket whose prior files have no counts, loses its counts.
     - ``blooms`` (``{col: {word: hex16}}``) OR into the bucket's
       filter, one word map per bloom column (empty when no word is
       set); ``None`` (the writer could not hash a column's type) or a
       bucket whose prior files lost their filter leaves the bucket
-      without one. A legacy entry without blooms counts as ``None``.
+      without one.
     """
     prev = prev or {}
     buckets = {b: list(fl) for b, fl in prev.get("buckets", {}).items()}
@@ -476,9 +485,7 @@ def append_files(
     bucket_stats = {b: dict(s) for b, s in prev.get("bucket_stats", {}).items()}
     bucket_blooms = {b: dict(w) for b, w in prev.get("bucket_blooms", {}).items()}
     bucket_nulls = {b: dict(n) for b, n in prev.get("bucket_nulls", {}).items()}
-    for b, files, rows, stats, *rest in entries:
-        blooms = rest[0] if rest else None
-        nulls = rest[1] if len(rest) > 1 else None
+    for b, files, rows, stats, blooms, nulls in entries:
         bs = str(b)
         prior = bool(buckets.get(bs))
         buckets[bs] = buckets.get(bs, []) + list(files)
@@ -580,7 +587,7 @@ def check_no_rename(old: dict, new: dict) -> None:
     that carry different logical names in the two snapshots."""
     names: dict[str, set] = {}
     for m in (old, new):
-        for f in m.get("schema", []):
+        for f in m["schema"]:
             names.setdefault(physical_name(f), set()).add(f["name"])
     conflicted = sorted(p for p, n in names.items() if len(n) > 1)
     if conflicted:

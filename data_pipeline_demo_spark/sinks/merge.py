@@ -149,11 +149,8 @@ def txlog_merge(
             "corrupt the bucketing"
         )
     num_buckets = int(prev["num_buckets"])
-    table_cols = (
-        [f["name"] for f in prev["schema"]]
-        if "schema" in prev
-        else None
-    )
+    schema_fields = [dict(f) for f in prev["schema"]]
+    table_cols = [f["name"] for f in schema_fields]
     generated = dict(prev.get("generated_columns", {}))
     identity = dict(prev.get("identity_columns", {}))
     identity_hwm = dict(prev.get("identity_high_water", {}))
@@ -225,40 +222,29 @@ def txlog_merge(
     # xxhash64 hashes int32 and int64 to different values, so an
     # int-typed source key against a long-keyed table would select the
     # wrong touched buckets and silently match nothing (found by
-    # round-11 adversarial probing; txlog_upsert has the same cast at
-    # sinks/txlog.py:1305). Lossless upcasts cast up; anything else
-    # refuses.
-    schema_fields_pre = (
-        [dict(f) for f in prev["schema"]] if "schema" in prev else None
-    )
-    if schema_fields_pre is not None:
-        from pyspark.sql.types import StructType as _ST
+    # round-11 adversarial probing; txlog_upsert casts the same way in
+    # sinks/txlog._enforce_schema). Lossless upcasts cast up; anything
+    # else refuses.
+    from pyspark.sql.types import StructType as _ST
 
-        from .txlog import _upcast_ok
+    from .txlog import _upcast_ok
 
-        want_struct = _ST.fromJson(
-            {"type": "struct", "fields": schema_fields_pre}
-        )
-        if key in want_struct.fieldNames():
-            want_t = want_struct[key].dataType
-            have_t = src.schema[key].dataType
-            if have_t != want_t:
-                if not _upcast_ok(
-                    have_t.jsonValue(), want_t.jsonValue()
-                ):
-                    raise ValueError(
-                        f"MERGE source key {key!r} is "
-                        f"{have_t.simpleString()} but the table key is "
-                        f"{want_t.simpleString()} — cast the source "
-                        "key explicitly (a mismatched key type would "
-                        "hash to the wrong buckets)"
-                    )
-                src = src.withColumn(key, F.col(key).cast(want_t))
-    schema_fields = (
-        [dict(f) for f in prev["schema"]] if "schema" in prev else None
-    )
+    want_t = _ST.fromJson({"type": "struct", "fields": schema_fields})[
+        key
+    ].dataType
+    have_t = src.schema[key].dataType
+    if have_t != want_t:
+        if not _upcast_ok(have_t.jsonValue(), want_t.jsonValue()):
+            raise ValueError(
+                f"MERGE source key {key!r} is "
+                f"{have_t.simpleString()} but the table key is "
+                f"{want_t.simpleString()} — cast the source "
+                "key explicitly (a mismatched key type would "
+                "hash to the wrong buckets)"
+            )
+        src = src.withColumn(key, F.col(key).cast(want_t))
     dropped_columns = list(prev.get("dropped_columns", []))
-    if evolve_schema and schema_fields is not None:
+    if evolve_schema:
         from .txlog import _evolved_schema
 
         schema_fields = _evolved_schema(
@@ -296,17 +282,10 @@ def txlog_merge(
     if current is None:
         # zero touched buckets (empty source / empty table): an empty
         # frame under the table's schema keeps the plan total
-        from pyspark.sql.types import StructType as _ST
-
-        if schema_fields is not None:
-            current = spark.createDataFrame(
-                [], _ST.fromJson({"type": "struct", "fields": schema_fields})
-            )
-        else:
-            current = src.limit(0)
+        current = spark.createDataFrame(
+            [], _ST.fromJson({"type": "struct", "fields": schema_fields})
+        )
     t_cols = current.columns
-    if table_cols is None:
-        table_cols = t_cols
 
     # Execution shape (round-11 judge directive #4): the old plan was
     # ONE full-outer join — which Spark can never broadcast, so every
@@ -473,26 +452,21 @@ def txlog_merge(
     # cast each branch to the table's recorded types BEFORE the union
     # (INSERT literals arrive as whatever Spark inferred; a same-name
     # type divergence between branches would fail the union)
-    if schema_fields is not None:
-        from pyspark.sql.types import StructType as _ST
+    want = _ST.fromJson({"type": "struct", "fields": schema_fields})
 
-        want = _ST.fromJson(
-            {"type": "struct", "fields": schema_fields}
+    def _cast_to_table(df):
+        return df.select(
+            *[
+                F.col(c).cast(want[c].dataType).alias(c)
+                if c in want.fieldNames()
+                else F.col(c)
+                for c in df.columns
+            ]
         )
 
-        def _cast_to_table(df):
-            return df.select(
-                *[
-                    F.col(c).cast(want[c].dataType).alias(c)
-                    if c in want.fieldNames()
-                    else F.col(c)
-                    for c in df.columns
-                ]
-            )
-
-        result_a = _cast_to_table(result_a)
-        if result_b is not None:
-            result_b = _cast_to_table(result_b)
+    result_a = _cast_to_table(result_a)
+    if result_b is not None:
+        result_b = _cast_to_table(result_b)
     result = (
         result_a
         if result_b is None

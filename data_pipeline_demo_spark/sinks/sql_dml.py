@@ -530,8 +530,6 @@ def _align_insert(
     )
 
     tbl = _manifest_struct(man)
-    if tbl is None:  # legacy pre-schema-tracking manifest: append as-is
-        return df
     # source columns bind by POSITION; their own names are often
     # expression strings (`CAST(0.1 AS DOUBLE)`) whose dots/parens
     # break name resolution — rename to safe positional handles first
@@ -1368,10 +1366,9 @@ def txtable_sql(
             "num_deletion_vector_files": num_dv_files,
             "deletion_vector_size_bytes": dv_size_bytes,
             # COPY INTO load-history size: O(1) from the sidecar-chain
-            # pointer (legacy embedded maps count their entries)
+            # pointer
             "num_copy_loaded_files": int(
-                (man.get("copy_log") or {}).get("count")
-                or len(man.get("copy_files") or {})
+                (man.get("copy_log") or {}).get("count", 0)
             ),
             # Delta's DESCRIBE DETAIL `properties` column
             "properties": table_properties(spark, path),
@@ -1576,7 +1573,6 @@ def txtable_sql(
         from .txlog import (
             _latest_manifest,
             _manifest_struct,
-            read_txtable,
             table_constraints,
             table_properties,
         )
@@ -1599,13 +1595,13 @@ def txtable_sql(
 
         dflt = man.get("column_defaults") or {}
         cons_all = table_constraints(spark, path)
+        st = _manifest_struct(man)
         # canonical nn_<col> constraints fold back to inline NOT NULL
         nn_cols = {
-            c
-            for c in (f.name for f in (_manifest_struct(man) or read_txtable(spark, path).schema).fields)
-            if cons_all.get(_nn_name(c)) == f"`{c}` IS NOT NULL"
+            f.name
+            for f in st.fields
+            if cons_all.get(_nn_name(f.name)) == f"`{f.name}` IS NOT NULL"
         }
-        st = _manifest_struct(man) or read_txtable(spark, path).schema
         cols = ", ".join(
             f"{_bq(f.name)} {f.dataType.simpleString().upper()}"
             + (

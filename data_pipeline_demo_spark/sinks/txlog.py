@@ -60,6 +60,7 @@ from .manifest import (
     append_files,
     changed_buckets,
     check_features,
+    check_format,
     check_no_rename,
     commit_rel,
     decimal_columns,
@@ -166,8 +167,10 @@ def _latest_manifest(spark: SparkSession, root_path: str) -> dict | None:
 def _read_manifest(
     spark: SparkSession, root_path: str, version: int, inflate: bool = True
 ) -> dict:
-    """``inflate=False`` skips shard resolution — for metadata-only
-    probes (timestamps, operations) that never touch ``buckets``."""
+    """The parsed ``_commits/<version>.json``, refused unless it is in
+    the one manifest format (:func:`check_format`). ``inflate=False``
+    skips shard resolution — for metadata-only probes (timestamps,
+    operations) that never touch ``buckets``."""
     jvm = spark._jvm
     fs, root = _hadoop_fs(spark, root_path)
     p = _commit_path(jvm, root, version)
@@ -181,6 +184,7 @@ def _read_manifest(
     finally:
         stream.close()
     m = json.loads(text)
+    check_format(m)
     if not inflate:
         return m
     # a corrupt SHARD raises RuntimeError, so _latest_manifest never
@@ -421,10 +425,8 @@ def _commit_manifest(
 # table doesn't have raises unless the caller opts into evolution
 # (``evolve_schema=True`` — Delta's ``schema.autoMerge``), and a column
 # whose type conflicts raises always (type changes rewrite data; that
-# must never happen implicitly). Manifests committed before this feature
-# carry no schema and keep the original mergeSchema behavior end-to-end.
-# Everything here is metadata-sized: enforcement compares field lists,
-# never touches data files.
+# must never happen implicitly). Everything here is metadata-sized:
+# enforcement compares field lists, never touches data files.
 
 
 def _schema_fields(df: DataFrame) -> list[dict]:
@@ -439,14 +441,10 @@ def _schema_fields(df: DataFrame) -> list[dict]:
 
 
 def _manifest_struct(manifest: dict):
-    """The manifest's recorded schema as a StructType, or None for
-    legacy (pre-schema-tracking) manifests."""
-    fields = manifest.get("schema")
-    if not fields:
-        return None
+    """The manifest's recorded schema as a StructType."""
     from pyspark.sql.types import StructType
 
-    return StructType.fromJson({"type": "struct", "fields": fields})
+    return StructType.fromJson({"type": "struct", "fields": manifest["schema"]})
 
 
 # --- column mapping (Delta's name-mode, round-10) ---------------------------
@@ -466,16 +464,14 @@ def _manifest_struct(manifest: dict):
 def _physical_struct(manifest: dict):
     """The manifest schema as a StructType under PHYSICAL names — what
     the parquet files actually contain."""
-    fields = manifest.get("schema")
-    if not fields:
-        return None
     from pyspark.sql.types import StructType
 
     return StructType.fromJson(
         {
             "type": "struct",
             "fields": [
-                {**f, "name": physical_name(f), "metadata": {}} for f in fields
+                {**f, "name": physical_name(f), "metadata": {}}
+                for f in manifest["schema"]
             ],
         }
     )
@@ -483,7 +479,7 @@ def _physical_struct(manifest: dict):
 
 def _to_logical(df, manifest: dict):
     """Rename a physically-named frame to logical names (post-read)."""
-    mapping = mapping_of(manifest.get("schema"))
+    mapping = mapping_of(manifest["schema"])
     if not mapping:
         return df
     phys_to_log = {p: l for l, p in mapping.items()}
@@ -495,12 +491,10 @@ def _to_logical(df, manifest: dict):
     )
 
 
-def _to_physical(df, manifest: dict | None):
+def _to_physical(df, manifest: dict):
     """Rename a logically-named frame to physical names (pre-write).
     Columns outside the schema (BUCKET_COL, helper cols) pass through."""
-    if manifest is None:
-        return df
-    mapping = mapping_of(manifest.get("schema"))
+    mapping = mapping_of(manifest["schema"])
     if not mapping:
         return df
     return df.select(
@@ -519,6 +513,27 @@ def _evolved_schema(
 ) -> list[dict]:
     """DataFrame wrapper over :func:`_evolve_fields`."""
     return _evolve_fields(prev_fields, _schema_fields(df), evolve_schema, dropped)
+
+
+def _enforce_schema(
+    prev_fields: list[dict],
+    df: DataFrame,
+    evolve_schema: bool,
+    dropped: list[str],
+) -> tuple[list[dict], DataFrame]:
+    """The schema a write of ``df`` records (:func:`_evolved_schema`)
+    and ``df`` cast UP to its types: lossless upcasts are accepted, so
+    written files always match the manifest schema."""
+    from pyspark.sql.types import StructType
+
+    fields = _evolved_schema(prev_fields, df, evolve_schema, dropped)
+    want = StructType.fromJson({"type": "struct", "fields": fields})
+    casts = {
+        f.name: F.col(f.name).cast(f.dataType)
+        for f in want.fields
+        if f.name in df.columns and df.schema[f.name].dataType != f.dataType
+    }
+    return fields, df.withColumns(casts) if casts else df
 
 
 # write-side types that cast LOSSLESSLY up to a wider table type (the
@@ -995,15 +1010,27 @@ def _identity_restore_carry(src: dict, cur: dict) -> dict:
 def _read_snapshot_files(spark: SparkSession, manifest: dict, files: list[str]):
     """Read a snapshot's parquet files under the manifest's recorded
     schema (explicit-schema read: no footer-merge pass, missing columns
-    null, dropped columns projected away); legacy manifests fall back
-    to mergeSchema. Column mapping applies here: files are read under
-    PHYSICAL names and aliased to the manifest's logical names — the
-    one read-side mapping point every snapshot consumer shares."""
-    st = _manifest_struct(manifest)
-    if st is not None:
-        phys = _physical_struct(manifest)
-        return _to_logical(spark.read.schema(phys).parquet(*files), manifest)
-    return spark.read.option("mergeSchema", "true").parquet(*files)
+    null, dropped columns projected away). Column mapping applies here:
+    files are read under PHYSICAL names and aliased to the manifest's
+    logical names — the one read-side mapping point every snapshot
+    consumer shares."""
+    phys = _physical_struct(manifest)
+    return _to_logical(spark.read.schema(phys).parquet(*files), manifest)
+
+
+def _empty_frame(spark: SparkSession, manifest: dict) -> DataFrame:
+    """A snapshot with no rows, typed by the manifest schema, without
+    IO. JVM-side construction: ``createDataFrame([], st)`` pays ~0.35s
+    of Python-side plan setup per call, which made the metadata-only
+    fast path SLOWER than the scan it skips at small scale; range(0) +
+    typed null casts is pure Catalyst (~ms), so pruning wins at every
+    size."""
+    return spark.range(0).select(
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in _manifest_struct(manifest).fields
+        ]
+    )
 
 
 def _abs(root_path: str, rel: str) -> str:
@@ -1096,64 +1123,51 @@ def _copy_chain(
     return out
 
 
-def _history_of(links, legacy: dict | None) -> dict[str, list]:
+def _history_of(links) -> dict[str, list]:
     """Load history ``{path: [size, mtime_ms, version]}`` of a copylog
-    chain (newest entry wins for a force-reloaded file) plus a legacy
-    embedded ``copy_files`` map (oldest — fills gaps only)."""
+    chain (newest entry wins for a force-reloaded file)."""
     out: dict[str, list] = {}
     for _rel, payload in links:
         for p, rec in payload.get("files", {}).items():
             out.setdefault(p, rec)
-    for p, rec in (legacy or {}).items():
-        out.setdefault(p, rec)
     return out
 
 
-def _copy_history_map(
-    spark: SparkSession, root_path: str, manifest: dict
-) -> dict[str, list]:
-    """Full load history of the snapshot (see :func:`_history_of`)."""
-    return _history_of(
-        _copy_chain(spark, root_path, manifest), manifest.get("copy_files")
-    )
-
-
 def _single_copy_log(spark: SparkSession, root_path: str, hist: dict) -> dict:
-    """Manifest changes pointing the COPY history at ONE new sidecar
-    holding ``hist``; the legacy embedded map retires."""
+    """Manifest change pointing the COPY history at ONE new sidecar
+    holding ``hist``."""
     rel = _write_copylog_sidecar(
         spark, root_path, {"files": hist, "prev": None, "count": len(hist)}
     )
-    return {"copy_files": None, "copy_log": {"head": rel, "count": len(hist)}}
+    return {"copy_log": {"head": rel, "count": len(hist)}}
 
 
 def _clone_copy_fields(
     spark: SparkSession, source_root: str, src_manifest: dict,
     target_root: str,
 ) -> dict:
-    """Manifest changes giving a CLONE target the source's full COPY
+    """Manifest change giving a CLONE target the source's full COPY
     history: one compacted sidecar written into the TARGET's copylog/
     (the chain's rel paths are root-relative, so a raw pointer copy
-    would dangle across roots). Both fields reset when the source has
-    no history."""
-    hist = _copy_history_map(spark, source_root, src_manifest)
+    would dangle across roots). It resets when the source has no
+    history."""
+    hist = _history_of(_copy_chain(spark, source_root, src_manifest))
     if not hist:
-        return {"copy_files": None, "copy_log": None}
+        return {"copy_log": None}
     return _single_copy_log(spark, target_root, hist)
 
 
 def _compacted_copy_fields(
     spark: SparkSession, root_path: str, manifest: dict
 ) -> dict:
-    """OPTIMIZE's copylog maintenance: collapse a multi-link chain (or
-    a legacy embedded ``copy_files`` map) into ONE sidecar, so the
-    skip-check walk on the next COPY INTO is a single read. An
-    already-compact chain carries through untouched (no changes)."""
+    """OPTIMIZE's copylog maintenance: collapse a multi-link chain into
+    ONE sidecar, so the skip-check walk on the next COPY INTO is a
+    single read. An already-compact chain carries through untouched
+    (no changes)."""
     links = _copy_chain(spark, root_path, manifest)
-    legacy = manifest.get("copy_files")
-    if len(links) <= 1 and not legacy:
+    if len(links) <= 1:
         return {}
-    return _single_copy_log(spark, root_path, _history_of(links, legacy))
+    return _single_copy_log(spark, root_path, _history_of(links))
 
 
 # ASCII characters java.net.URI leaves raw in a path: RFC 2396
@@ -1376,14 +1390,15 @@ def _validate_bloom_probe(manifest: dict, col: str, v) -> None:
     e.g. probing int 5 on a double column hashes '5' while the filter
     holds '5.0': the bucket would silently prune to an empty (wrong)
     result. String probes always pass (the explicit render-it-yourself
-    escape hatch); legacy manifests without a schema skip the check
-    (documented caller contract)."""
+    escape hatch)."""
     import datetime as _dt
 
-    st = _manifest_struct(manifest)
-    if st is None or isinstance(v, str):
+    if isinstance(v, str):
         return
-    names = {f.name: f.dataType.simpleString() for f in st.fields}
+    names = {
+        f.name: f.dataType.simpleString()
+        for f in _manifest_struct(manifest).fields
+    }
     t = names.get(col)
     if t is None:
         return
@@ -1492,7 +1507,7 @@ def _publish_touched_buckets(
     (``stats_columns``) and Bloom columns, the Bloom size and the column
     mapping (the write lands under PHYSICAL names, so renamed columns
     keep their in-file name), and holds the bookkeeping the changes
-    start from. A table being created passes just its
+    start from. A table being created passes just its ``schema``,
     ``stats_columns``, ``bloom_columns`` and ``bloom_bits``.
 
     ``mode``:
@@ -1650,7 +1665,7 @@ def _publish_touched_buckets(
                     for c in stats_columns
                 }
     elif new_files:
-        mapping = mapping_of(manifest.get("schema"))
+        mapping = mapping_of(manifest["schema"])
         need = list(dict.fromkeys(stats_columns + bloom_columns))
         rb = spark.read.option("basePath", out_dir).parquet(out_dir).select(
             F.col(BUCKET_COL),
@@ -1696,7 +1711,7 @@ def _publish_touched_buckets(
             ],
             manifest.get("stats_columns", []),
             manifest.get("bloom_columns", []),
-            decimal_columns(manifest.get("schema")),
+            decimal_columns(manifest["schema"]),
         )
     else:
         base = {} if mode == "full" else manifest
@@ -1975,32 +1990,14 @@ def txlog_upsert(
     if generated_columns:
         updates = _apply_generated_columns(spark, updates, generated_columns)
 
-    # schema enforcement/evolution BEFORE any file is written; legacy
-    # tables (manifests predating schema tracking) skip both
+    # schema enforcement/evolution BEFORE any file is written
     dropped_columns = list(prev.get("dropped_columns", [])) if prev else []
     if prev is None:
         schema_fields = _schema_fields(updates)
-    elif "schema" in prev:
-        schema_fields = _evolved_schema(
+    else:
+        schema_fields, updates = _enforce_schema(
             prev["schema"], updates, evolve_schema, dropped_columns
         )
-        # lossless upcasts were accepted above: cast the batch UP to the
-        # table types so written files always match the manifest schema
-        from pyspark.sql.types import StructType as _ST
-
-        want = _ST.fromJson({"type": "struct", "fields": schema_fields})
-        casts = [
-            (f.name, f.dataType)
-            for f in want.fields
-            if f.name in set(updates.columns)
-            and updates.schema[f.name].dataType != f.dataType
-        ]
-        if casts:
-            updates = updates.withColumns(
-                {n: F.col(n).cast(t) for n, t in casts}
-            )
-    else:
-        schema_fields = None
 
     # identity / DEFAULT configs validate at table definition time
     # (creation or REPLACE — the only commits that can introduce them)
@@ -2076,6 +2073,7 @@ def txlog_upsert(
         root_path,
         prev
         or {
+            "schema": schema_fields,
             "stats_columns": stats_columns,
             "bloom_columns": bloom_columns,
             "bloom_bits": bloom_bits,
@@ -2142,11 +2140,11 @@ def txlog_upsert(
 def _commit_times(spark: SparkSession, root_path: str):
     """``(version, committed_at_ms)`` of each commit in version order,
     read lazily: the timestamp resolver stops reading manifests at its
-    answer. A commit without a stamp (legacy) counts as time 0."""
+    answer."""
     fs, root = _hadoop_fs(spark, root_path)
     for v in _listed_versions(fs, spark._jvm.org.apache.hadoop.fs.Path(root, COMMITS_DIR)):
         m = _read_manifest(spark, root_path, v, inflate=False)
-        yield v, m.get("committed_at_ms", 0)
+        yield v, m["committed_at_ms"]
 
 
 def _version_at_timestamp(
@@ -2332,34 +2330,9 @@ def read_txtable(
             predicate = cond if predicate is None else predicate & cond
     df = _read_buckets_logical(spark, root_path, manifest, live)
     if df is None:
-        # a schema-bearing manifest with zero live data files is a
-        # valid snapshot (empty CREATE TABLE, or everything pruned):
-        # return the typed empty frame. Only a LEGACY schemaless
-        # manifest with no pruning context has nothing to type it with.
-        st = _manifest_struct(manifest)
-        if st is not None:  # empty frame, no IO at all
-            # JVM-side construction: createDataFrame([], st) pays
-            # ~0.35s of Python-side plan setup per call, which made
-            # the metadata-only fast path SLOWER than the scan it
-            # skips at small scale; range(0) + typed null casts is
-            # pure Catalyst (~ms), so pruning wins at every size
-            return spark.range(0).select(
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in st.fields
-                ]
-            )
-        schema_files = scan_files(manifest, sorted(manifest["buckets"], key=int))[0]
-        if predicate is not None and schema_files:
-            # everything pruned: empty frame, real schema
-            return (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*[_abs(root_path, r) for r in schema_files])
-                .limit(0)
-            )
-        raise FileNotFoundError(
-            f"txtable {root_path} version {manifest['version']} is empty"
-        )
+        # zero live data files is a valid snapshot (empty CREATE TABLE,
+        # or everything pruned)
+        return _empty_frame(spark, manifest)
     # merge-on-read buckets come back with their deletion vectors
     # anti-applied; pruning above stays sound (vectored rows only make
     # stats conservative) and the predicate re-applies
@@ -2712,20 +2685,12 @@ def txlog_add_column(
     resurrect — existing rows read null, exactly like any added
     column. The same minting applies when the name collides with
     another field's physical name (e.g. the original name of a since-
-    renamed column). Returns the new version.
-
-    Requires a schema-tracked table (any table created since schema
-    tracking; legacy tables must take one write first)."""
+    renamed column). Returns the new version."""
     from pyspark.sql.types import StructType
 
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    if "schema" not in prev:
-        raise ValueError(
-            f"txtable {root_path} predates schema tracking; run one "
-            "MERGE/UPDATE to record a schema before ALTERing it"
-        )
     fields = [dict(f) for f in prev["schema"]]
     if any(f["name"] == name for f in fields):
         raise ValueError(f"column {name!r} already exists")
@@ -2764,11 +2729,6 @@ def txlog_drop_column(spark: SparkSession, root_path: str, name: str) -> int:
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    if "schema" not in prev:
-        raise ValueError(
-            f"txtable {root_path} predates schema tracking; run one "
-            "MERGE/UPDATE to record a schema before ALTERing it"
-        )
     if name == prev["key"]:
         raise ValueError(f"cannot drop the table key {name!r}")
     if name in prev.get("stats_columns", []) or name in prev.get(
@@ -2847,11 +2807,6 @@ def txlog_rename_column(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    if "schema" not in prev:
-        raise ValueError(
-            f"txtable {root_path} predates schema tracking; run one "
-            "MERGE/UPDATE to record a schema before ALTERing it"
-        )
     if old == prev["key"]:
         raise ValueError(f"cannot rename the table key {old!r}")
     if old in prev.get("stats_columns", []) or old in prev.get(
@@ -2951,26 +2906,15 @@ def txtable_changes(
         check_features(m, frozenset({FEATURE_DV}), "read changes from")
     key = m_to["key"]
     changed = changed_buckets(m_from, m_to)
-    # Only changed buckets' files are ever opened — including for the
-    # schema of a zero-file side (fresh or fully-deleted table), which
-    # borrows limit(0) from the OTHER side rather than reading an
-    # unchanged bucket.
+    # Only changed buckets' files are ever opened; a zero-file side
+    # (fresh or fully-deleted table) borrows limit(0) from the OTHER
+    # side rather than reading an unchanged bucket.
     old = _read_buckets_logical(spark, root_path, m_from, changed)
     new = _read_buckets_logical(spark, root_path, m_to, changed)
     if old is None and new is None:
-        # no changed buckets: empty diff. Keep the output schema stable
-        # by borrowing columns from any live file (footer-only read);
-        # a table with no files at all degrades to key+_change_type.
-        for m in (m_to, m_from):
-            if m["buckets"]:
-                src = _abs(root_path, next(iter(m["buckets"].values()))[0])
-                # through the mapped snapshot reader, so the borrowed
-                # schema carries LOGICAL names, not in-file physicals
-                df = _read_snapshot_files(spark, m, [src]).limit(0)
-                return df.select(*sorted(df.columns)).withColumn(
-                    "_change_type", F.lit(None).cast("string")
-                )
-        return spark.createDataFrame([], f"{key} string").withColumn(
+        # no changed buckets: the empty diff, typed by the end snapshot
+        df = _empty_frame(spark, m_to)
+        return df.select(*sorted(df.columns)).withColumn(
             "_change_type", F.lit(None).cast("string")
         )
     # checked only when data changed in the window: a rename-only
@@ -3272,11 +3216,6 @@ def set_column_default(
     prev = _latest_manifest(spark, root_path)
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    if "schema" not in prev:
-        raise ValueError(
-            f"txtable {root_path} predates schema tracking; run one "
-            "MERGE/UPDATE to record a schema before ALTERing it"
-        )
     fields = [dict(f) for f in prev["schema"]]
     if not any(f["name"] == col for f in fields):
         raise ValueError(f"column {col!r} does not exist")
@@ -3479,9 +3418,7 @@ def vacuum_txtable(
     job that resolved an older snapshot may still be executing when its
     files are swept, failing mid-query. ``retain_hours`` bounds that
     window the way Delta's ``VACUUM ... RETAIN`` does: pick it longer
-    than your longest-running query/job. Manifests predating the
-    ``committed_at_ms`` field count as old (legacy tables), protected
-    only by ``keep_last``.
+    than your longest-running query/job.
 
     Single-WRITER assumption: run vacuum only when no merge is in
     flight, or an in-flight commit's not-yet-referenced data files and
@@ -3500,7 +3437,7 @@ def vacuum_txtable(
         cutoff_ms = (time.time() - retain_hours * 3600.0) * 1000.0
         for v in versions:
             m = _read_manifest(spark, root_path, v, inflate=False)
-            if m.get("committed_at_ms", 0) >= cutoff_ms:
+            if m["committed_at_ms"] >= cutoff_ms:
                 keep.add(v)
     live: set[str] = set()
     live_copylogs: set[str] = set()

@@ -46,6 +46,41 @@ def _bucket_of(key: str, num_buckets: int) -> Column:
     ).cast("int")
 
 
+# A composite key joins its parts with _KEY_SEP; NUL escapes the
+# separator and itself inside a part, and a NULL part is _NULL_PART.
+_KEY_SEP = "\x1f"
+_NULL_PART = "\x00N"
+
+
+def composite_key(cols: Sequence[str]) -> Column:
+    """Injective, null-distinct string key of the columns ``cols``.
+    ``concat_ws`` alone SKIPS nulls, so ``(NULL, 'x')`` and
+    ``('x', NULL)`` would share a key; here each part is its ``CAST AS
+    STRING`` with the escape applied, so no value can forge another
+    part's encoding. A key of non-null values without NUL or separator
+    bytes equals ``concat_ws``'s."""
+
+    def part(c):
+        s = F.col(c).cast("string")
+        escaped = F.regexp_replace(
+            F.regexp_replace(s, "\x00", "\x00\x00"), _KEY_SEP, "\x00\x1f"
+        )
+        return F.coalesce(escaped, F.lit(_NULL_PART))
+
+    return F.concat_ws(_KEY_SEP, *[part(c) for c in cols])
+
+
+def composite_key_str(parts: Sequence[str | None]) -> str:
+    """:func:`composite_key` of literal ``parts``, each already rendered
+    as its ``CAST AS STRING`` text (``None`` for NULL)."""
+    return _KEY_SEP.join(
+        _NULL_PART
+        if p is None
+        else p.replace("\x00", "\x00\x00").replace(_KEY_SEP, "\x00\x1f")
+        for p in parts
+    )
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, qualified Path) for any Hadoop-FS URI — file://,
     hdfs://, s3a://, or a bare local path. All sink metadata and commit

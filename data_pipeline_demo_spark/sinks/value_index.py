@@ -62,15 +62,12 @@ from .txlog import (
     txlog_upsert,
     txtable_changes,
 )
-from .upsert import _bucket_of
+from .upsert import _bucket_of, composite_key, composite_key_str
 
 INDEX_APP = "value-index"
 INDEX_NUM_BUCKETS = 8
 _NULL_VKEY = "\x00null"  # NULL's key render (NULL itself can't be a key)
 _INDEX_SCHEMA = "vkey string, value string, buckets array<int>"
-
-
-_SEP = "\x1f"
 
 
 def _cols_of(col) -> list[str]:
@@ -88,21 +85,12 @@ def _cols_of(col) -> list[str]:
 def _value_expr(cols: list[str]):
     """The indexed value's string render. Single column: plain CAST
     (back-compatible with existing indexes — NULL stays NULL).
-    Composite: injective concat of per-part renders with NULL markers
-    and escaped separator bytes (the join_view key encoding), so
-    ('a', NULL) never collides with (NULL, 'a') or with a value that
-    contains the separator."""
+    Composite: :func:`~.upsert.composite_key`, so ('a', NULL) never
+    collides with (NULL, 'a') or with a value that contains the
+    separator."""
     if len(cols) == 1:
         return F.col(cols[0]).cast("string")
-
-    def part(c):
-        s = F.col(c).cast("string")
-        escaped = F.regexp_replace(
-            F.regexp_replace(s, "\x00", "\x00\x00"), _SEP, "\x00\x1f"
-        )
-        return F.coalesce(escaped, F.lit("\x00N"))
-
-    return F.concat_ws(_SEP, *[part(c) for c in cols])
+    return composite_key(cols)
 
 
 def _pairs_for_buckets(
@@ -167,8 +155,8 @@ def _target_str(value) -> str:
 def _vkey_str(value, cols: list[str] | None = None) -> str:
     """Key render of a lookup value. Single-column: NULL sentinel or
     the CAST-string mirror. Composite (``value`` is a list/tuple
-    matching ``cols``): the python mirror of :func:`_value_expr`'s
-    escape-and-join encoding."""
+    matching ``cols``): :func:`~.upsert.composite_key_str`, the python
+    mirror of :func:`_value_expr`'s encoding."""
     if cols is not None and len(cols) > 1:
         vals = list(value)
         if len(vals) != len(cols):
@@ -176,17 +164,9 @@ def _vkey_str(value, cols: list[str] | None = None) -> str:
                 f"composite lookup needs {len(cols)} values "
                 f"({cols}), got {len(vals)}"
             )
-
-        def part(v):
-            if v is None:
-                return "\x00N"
-            return (
-                _target_str(v)
-                .replace("\x00", "\x00\x00")
-                .replace(_SEP, "\x00\x1f")
-            )
-
-        return _SEP.join(part(v) for v in vals)
+        return composite_key_str(
+            [None if v is None else _target_str(v) for v in vals]
+        )
     return _NULL_VKEY if value is None else _target_str(value)
 
 

@@ -64,7 +64,12 @@ from pyspark.sql.datasource import (
 
 import decimal as _dec
 
-from ..sinks.manifest import BLOOM_BITS, stat_cmp_pair, stat_value
+from ..sinks.manifest import (
+    BLOOM_BITS,
+    decimal_columns,
+    stat_cmp_pair,
+    stat_value,
+)
 
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -204,23 +209,22 @@ def bloom_might_contain(words: dict, positions: list[int]) -> bool:
     return True
 
 
-def _arrow_key_kind(arrow_schema, key: str) -> str | None:
-    """Map the key column's Arrow type onto the hash encoding Spark uses,
-    or None for types this tier doesn't cover (dates, decimals, ...)."""
-    if arrow_schema is None:
-        return None
-    try:
-        t = arrow_schema.field(key).type
-    except KeyError:
-        return None
-    import pyarrow as pa
+# a bucketing key's recorded (Spark JSON) type → the hash encoding the
+# writer used; other types (dates, decimals, ...) skip the key tier
+_KEY_KINDS = {
+    "string": "string",
+    "long": "int64",
+    "integer": "int32",
+    "short": "int32",
+    "byte": "int32",
+}
 
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_int64(t):
-        return "int64"
-    if pa.types.is_int8(t) or pa.types.is_int16(t) or pa.types.is_int32(t):
-        return "int32"
+
+def _key_kind(manifest: dict) -> str | None:
+    """The hash encoding of the table key's recorded type, or None."""
+    for f in manifest["schema"]:
+        if f["name"] == manifest["key"]:
+            return _KEY_KINDS.get(f["type"])
     return None
 
 
@@ -304,19 +308,29 @@ def key_equality_buckets(filters, key: str, num_buckets: int, key_kind: str):
 # --- bucket-pruning tiers: the buckets of ``live`` that may match ----------
 
 
-def zone_maps_overlap(stats: dict | None, bounds: dict[str, tuple]) -> bool:
+def zone_maps_overlap(
+    stats: dict | None, bounds: dict[str, tuple], decimal: set[str]
+) -> bool:
     """False iff a bucket's zone maps (``stats``: ``{col: [min, max]}``)
     prove that no row lies inside every ``{col: (lo, hi)}`` window
-    (``None`` bound = open side). Buckets without stats, and all-null
-    columns, are kept. Raises TypeError for a bound that does not
-    compare with the stored stats."""
+    (``None`` bound = open side). ``decimal``: the decimal-typed
+    columns, whose string stats compare by value. Buckets without
+    stats, and all-null columns, are kept, and so are the string stats
+    of any other column under a numeric bound: Spark compares those
+    values as numbers, the stats only order them as text. Raises
+    TypeError for a bound that does not compare with the stored
+    stats."""
     if stats is None:
         return True
     for c, (lo, hi) in bounds.items():
         mn, mx = stats.get(c, [None, None])
         if mn is None or mx is None:
             continue
-        dec = isinstance(lo, _dec.Decimal) or isinstance(hi, _dec.Decimal)
+        dec = c in decimal
+        if not dec and isinstance(mn, str) and any(
+            isinstance(v, (int, float, _dec.Decimal)) for v in (lo, hi)
+        ):
+            continue
         lo_s, hi_s = stat_value(lo), stat_value(hi)
         if lo_s is not None:
             a, b = stat_cmp_pair(mx, lo_s, dec)
@@ -337,10 +351,11 @@ def zone_map_buckets(
     bucket's stats raises TypeError when ``strict``, else keeps that
     bucket."""
     stats = manifest.get("bucket_stats", {})
+    decimal = decimal_columns(manifest["schema"])
 
     def keep(b: str) -> bool:
         try:
-            return zone_maps_overlap(stats.get(b), bounds)
+            return zone_maps_overlap(stats.get(b), bounds, decimal)
         except TypeError:
             if strict:
                 raise
@@ -381,7 +396,7 @@ def null_count_buckets(manifest: dict, col: str, want_null: bool, live) -> list[
     return [b for b in live if keep(b)]
 
 
-def prune_bucket_ids(manifest: dict, filters, arrow_schema) -> list[str]:
+def prune_bucket_ids(manifest: dict, filters) -> list[str]:
     """Live bucket ids that can still hold matching rows — the
     intersection of the key-equality, zone-map, Bloom and null-count
     tiers, in the manifest's sorted order. A filter a tier cannot use
@@ -405,9 +420,9 @@ def prune_bucket_ids(manifest: dict, filters, arrow_schema) -> list[str]:
     if manifest.get("num_buckets"):
         kb = key_equality_buckets(
             filters,
-            manifest.get("key"),
+            manifest["key"],
             int(manifest["num_buckets"]),
-            _arrow_key_kind(arrow_schema, manifest.get("key")),
+            _key_kind(manifest),
         )
         if kb is not None:
             live = [b for b in live if int(b) in kb]

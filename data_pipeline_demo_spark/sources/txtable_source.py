@@ -20,8 +20,9 @@ Design constraints of the Python DS API honored here:
   with pyarrow — no Spark-on-Spark.
 - Batch reads parallelize one partition per live bucket and yield
   Arrow RecordBatches (zero row-at-a-time Python); schema evolution is
-  honored by aligning every file to the union schema (missing columns
-  → nulls), mirroring ``mergeSchema``.
+  honored by aligning every file to the manifest's recorded schema
+  (missing columns → nulls, dropped columns projected away), as the
+  JVM reader's explicit-schema scan does.
 - Change feeds (batch AND streaming) plan one partition per CHANGED
   bucket — only buckets whose immutable file lists differ between the
   two manifests are ever opened (the ``txtable_changes`` pruning
@@ -43,9 +44,11 @@ ABSOLUTE refs into its source table (``sinks.manifest.is_absolute_ref``);
 those are resolved against the REF's own scheme, not joined onto the
 clone root. Log file names and listings, the ``requires`` gate and
 column mapping come from ``sinks/manifest.py``, the same functions the
-JVM verbs use. So does read planning: the files and deletion vectors
-each bucket partition opens (``scan_files``), the buckets a change
-window diffs (``changed_buckets``), the version a timestamp names
+JVM verbs use, and so does the one-format gate (``check_format``),
+which every manifest read here passes. So does read planning: the
+files and deletion vectors each bucket partition opens
+(``scan_files``), the buckets a change window diffs
+(``changed_buckets``), the version a timestamp names
 (``version_at_timestamp``) and the rename check (``check_no_rename``)
 are the functions ``read_txtable``/``txtable_changes`` call, and the
 bucket-pruning tiers are ``sources/pushdown.py``'s. This module only
@@ -81,6 +84,7 @@ from ..sinks.manifest import (
     FEATURE_SHARDS,
     changed_buckets,
     check_features as _check_features,  # the name of a parameter below
+    check_format,
     check_no_rename,
     commit_rel,
     inflate,
@@ -117,11 +121,6 @@ class _LocalFS:
         import pyarrow.parquet as pq
 
         return pq.read_table(path)
-
-    def parquet_schema(self, path: str):
-        import pyarrow.parquet as pq
-
-        return pq.read_schema(path)
 
     def __eq__(self, other) -> bool:  # dedupes refs in tests
         return isinstance(other, _LocalFS)
@@ -183,15 +182,6 @@ class _FsspecFS:
             return pq.read_table(path, filesystem=self.fs())
         except (TypeError, ValueError, NotImplementedError, AttributeError):
             return pq.read_table(pa.BufferReader(self.open_bytes(path)))
-
-    def parquet_schema(self, path: str):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        try:
-            return pq.read_schema(path, filesystem=self.fs())
-        except (TypeError, ValueError, NotImplementedError, AttributeError):
-            return pq.read_schema(pa.BufferReader(self.open_bytes(path)))
 
     def __eq__(self, other) -> bool:
         return (
@@ -261,6 +251,7 @@ def _read_manifest(
 ) -> dict:
     p = root.rstrip("/") + "/" + commit_rel(version)
     m = json.loads(fs.open_bytes(p).decode("utf-8"))
+    check_format(m)
     if check_features:
         # refused, not half-read: ignoring e.g. deletion vectors would
         # resurrect deleted rows
@@ -276,9 +267,15 @@ def _read_manifest(
 def _manifest_or_empty(fs, root: str, version: int, template: dict) -> dict:
     """Version ``-1`` is the synthetic empty base (before the table's
     first commit) — it makes the first commit's own inserts replayable
-    by the change feed (startingTimestamp before table creation)."""
+    by the change feed (startingTimestamp before table creation). It
+    borrows ``template``'s key and schema: it has no rows to type."""
     if version < 0:
-        return {"version": -1, "key": template["key"], "buckets": {}}
+        return {
+            "version": -1,
+            "key": template["key"],
+            "schema": template["schema"],
+            "buckets": {},
+        }
     return _read_manifest(fs, root, version)
 
 
@@ -292,7 +289,7 @@ def _commit_times(fs, root: str):
     probes: the eventual snapshot or change read checks features."""
     for v in _manifest_versions(fs, root):
         m = _read_manifest(fs, root, v, check_features=False)
-        yield v, m.get("committed_at_ms", 0)
+        yield v, m["committed_at_ms"]
 
 
 def _parse_timestamp_ms(raw: str) -> int:
@@ -305,11 +302,6 @@ def _parse_timestamp_ms(raw: str) -> int:
     if dt.tzinfo is None:
         dt = dt.replace(tzinfo=timezone.utc)
     return int(dt.timestamp() * 1000)
-
-
-def _snapshot_refs(fs, root: str, manifest: dict, fs_options: dict) -> list[tuple]:
-    rels, _ = scan_files(manifest, sorted(manifest["buckets"], key=int))
-    return [_resolve_ref(fs, root, rel, fs_options) for rel in rels]
 
 
 class _BucketPartition(InputPartition):
@@ -342,41 +334,26 @@ def _bucket_partition(
 
 
 # ---------------------------------------------------------------------------
-# Arrow-side helpers (schema union, alignment, vectorized CDC compare).
+# Arrow-side helpers (schema, alignment, vectorized CDC compare).
 # ---------------------------------------------------------------------------
 
 
+def _manifest_struct(manifest: dict) -> StructType:
+    """The manifest's recorded per-version schema (the read authority:
+    time travel returns each version's OWN schema, metadata-added
+    columns surface as nulls, dropped columns project away)."""
+    return StructType.fromJson({"type": "struct", "fields": manifest["schema"]})
+
+
 def _manifest_arrow_schema(manifest: dict):
-    """The manifest's recorded per-version schema as an Arrow schema
-    (the read authority when present: time travel returns each
-    version's OWN schema, metadata-added columns surface as nulls,
-    dropped columns project away), or None for legacy manifests."""
-    fields = manifest.get("schema")
-    if not fields:
-        return None
+    """:func:`_manifest_struct` as an Arrow schema."""
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    return to_arrow_schema(
-        StructType.fromJson({"type": "struct", "fields": fields})
-    )
-
-
-def _union_arrow_schema(refs: list[tuple]):
-    """mergeSchema semantics: union of the files' footers, field order =
-    first appearance."""
-    import pyarrow as pa
-
-    fields: dict[str, object] = {}
-    for fs, path in refs:
-        for field in fs.parquet_schema(path):
-            if field.name not in fields:
-                fields[field.name] = field
-    return pa.schema(list(fields.values()))
+    return to_arrow_schema(_manifest_struct(manifest))
 
 
 def _aligned_table(ref: tuple, schema, mapping: dict | None = None):
-    """Read one parquet file aligned to the union schema: missing
+    """Read one parquet file aligned to the read schema: missing
     columns null-filled, order normalized. ``mapping`` (logical →
     physical) routes each LOGICAL field to the in-file column that
     actually holds its bytes — renamed columns keep reading their
@@ -548,10 +525,7 @@ class _TxTableBatchReader(DataSourceReader):
         self.fs_options = fs_options
         self.manifest = _read_manifest(fs, root, version)
         self.arrow_schema = _manifest_arrow_schema(self.manifest)
-        self.mapping = mapping_of(self.manifest.get("schema"))
-        if self.arrow_schema is None:  # legacy manifest: union of footers
-            refs = _snapshot_refs(fs, root, self.manifest, fs_options)
-            self.arrow_schema = _union_arrow_schema(refs) if refs else None
+        self.mapping = mapping_of(self.manifest["schema"])
 
     def _bucket_ids(self) -> list[str]:
         return sorted(self.manifest["buckets"], key=int)
@@ -593,9 +567,7 @@ class _TxTablePushdownBatchReader(_TxTableBatchReader):
         from .pushdown import prune_bucket_ids
 
         filters = list(filters)
-        self._kept = prune_bucket_ids(
-            self.manifest, filters, self.arrow_schema
-        )
+        self._kept = prune_bucket_ids(self.manifest, filters)
         return filters  # all re-applied by Spark: pruning is metadata-only
 
     def _bucket_ids(self) -> list[str]:
@@ -662,8 +634,8 @@ def _change_partitions(
     if changed:
         # rename-only windows have no changed buckets: the empty feed
         check_no_rename(m_from, m_to)
-    old_mapping = mapping_of(m_from.get("schema"))
-    new_mapping = mapping_of(m_to.get("schema"))
+    old_mapping = mapping_of(m_from["schema"])
+    new_mapping = mapping_of(m_to["schema"])
     parts = [
         _ChangesPartition(
             _bucket_partition(fs, root, m_from, b, fs_options),
@@ -681,32 +653,17 @@ def _change_partitions(
     return parts or [_ChangesPartition(empty, empty, schema, key, pre)]
 
 
-def _cdf_arrow_schema(fs, root: str, m_from: dict, m_to: dict, fs_options: dict):
+def _cdf_arrow_schema(m_from: dict, m_to: dict):
     """Alignment schema for a change window: the UNION of the two
     snapshots' RECORDED schemas (evolution-safe — a column only one
     side has reads null on the other; a column DROPPED by version
     `to` is projected away exactly like the snapshot reader does, so
-    tombstoned data never resurrects through the change feed). A
-    legacy side with no recorded schema contributes its file-footer
-    union instead; a fully-empty legacy window (no schema, no files)
-    cannot describe its own rows and raises."""
+    tombstoned data never resurrects through the change feed)."""
     import pyarrow as pa
 
-    sides = []
-    for m in (m_to, m_from):
-        a = _manifest_arrow_schema(m)
-        if a is None:
-            refs = _snapshot_refs(fs, root, m, fs_options)
-            a = _union_arrow_schema(refs) if refs else None
-        if a is not None:
-            sides.append(a)
-    if not sides:
-        raise FileNotFoundError(
-            f"txtable {root}: both change-window snapshots are empty"
-        )
     fields: dict[str, object] = {}
-    for a in sides:
-        for field in a:
+    for m in (m_to, m_from):
+        for field in _manifest_arrow_schema(m):
             fields.setdefault(field.name, field)
     return pa.schema(list(fields.values()))
 
@@ -729,9 +686,7 @@ class _TxTableChangesBatchReader(DataSourceReader):
     ):
         self.m_to = _read_manifest(fs, root, to_v)
         self.m_from = _manifest_or_empty(fs, root, from_v, self.m_to)
-        self.arrow_schema = _cdf_arrow_schema(
-            fs, root, self.m_from, self.m_to, fs_options
-        )
+        self.arrow_schema = _cdf_arrow_schema(self.m_from, self.m_to)
         self._parts = _change_partitions(
             fs, root, self.m_from, self.m_to, self.arrow_schema, fs_options,
             pre,
@@ -781,9 +736,7 @@ class _TxTableStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         m_to = _read_manifest(self.fs, self.root, end["version"])
         m_from = _manifest_or_empty(self.fs, self.root, start["version"], m_to)
-        schema = _cdf_arrow_schema(
-            self.fs, self.root, m_from, m_to, self.fs_options
-        )
+        schema = _cdf_arrow_schema(m_from, m_to)
         return _change_partitions(
             self.fs, self.root, m_from, m_to, schema, self.fs_options,
             self.pre,
@@ -866,7 +819,7 @@ class TxTableDataSource(DataSource):
             m_from = _manifest_or_empty(
                 fs, root, sv if sv is not None else to_v, m_to
             )
-            arrow = _cdf_arrow_schema(fs, root, m_from, m_to, self._fs_options())
+            arrow = _cdf_arrow_schema(m_from, m_to)
             from pyspark.sql.types import StringType, StructField
 
             return StructType(
@@ -877,14 +830,7 @@ class TxTableDataSource(DataSource):
         v = int(version) if version is not None else _latest_version(fs, root)
         # schema resolution is metadata-only; the snapshot reader below
         # enforces its own feature policy (deletion vectors supported)
-        manifest = _read_manifest(fs, root, v, check_features=False)
-        fields = manifest.get("schema")
-        if fields:  # schema-tracked: the manifest is the authority
-            return StructType.fromJson({"type": "struct", "fields": fields})
-        refs = _snapshot_refs(fs, root, manifest, self._fs_options())
-        if not refs:
-            raise FileNotFoundError(f"txtable {root} version {v} is empty")
-        return from_arrow_schema(_union_arrow_schema(refs))
+        return _manifest_struct(_read_manifest(fs, root, v, check_features=False))
 
     def reader(self, schema: StructType) -> DataSourceReader:
         fs, root = self._fs_root()

@@ -174,7 +174,9 @@ def xxh64_fixed4_seeded(word: int, seeds) -> "object":
     probe (`sources/pushdown.py:bloom_probe_positions`)."""
     np = _np()
     h = seeds + np.uint64((_P5 + 4) & ((1 << 64) - 1))
-    h = h ^ (np.uint64(word & 0xFFFFFFFF) * np.uint64(_P1))
+    # a Python-int product masked to 64 bits: numpy scalar products
+    # wrap too, but warn about it
+    h = h ^ np.uint64((word & 0xFFFFFFFF) * _P1 & ((1 << 64) - 1))
     h = _rotl_v(h, 23) * np.uint64(_P2) + np.uint64(_P3)
     return _fmix_v(h)
 
@@ -458,17 +460,11 @@ def put_manifest_if_absent(fs, root: str, version: int, payload: bytes,
 # ---------------------------------------------------------------------------
 
 
-# a column whose running range could not be widened (``widen`` gave
-# None): it stays range-less for the rest of the task
-_NO_RANGE = object()
-
-
 @dataclass
 class _TxFiles(WriterCommitMessage):
     """One task's written files: (bucket, root-relative path, rows,
     stats, blooms, nulls), which ``commit_files`` folds in with
-    ``sinks.manifest.append_files`` (stats ``{col: [lo, hi] | None}``,
-    ``None`` for a dropped range)."""
+    ``sinks.manifest.append_files`` (stats ``{col: [lo, hi]}``)."""
 
     entries: list = field(default_factory=list)
 
@@ -534,13 +530,14 @@ class _TaskState:
             col = tbl.column(c)
             nn[c] += int(col.null_count)
             cur = st.get(c)
-            if col.null_count == len(col) or cur is _NO_RANGE:
+            if col.null_count == len(col):
                 continue
             mm = pc.min_max(col)
             # RAW python values here (Decimal/date compare by value);
             # finish() stringifies via stat_value for the wire format
             lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            st[c] = [lo, hi] if cur is None else widen(cur, [lo, hi]) or _NO_RANGE
+            # one Arrow type per column, so the slices always compare
+            st[c] = [lo, hi] if cur is None else widen(cur, [lo, hi])
 
     def _track_blooms(self, b: int, tbl):
         """OR this slice's bloom positions into the bucket's running
@@ -656,9 +653,7 @@ class _TaskState:
                     self.rels[b],
                     self.rows[b],
                     {
-                        c: None
-                        if v is _NO_RANGE
-                        else [stat_value(v[0]), stat_value(v[1])]
+                        c: [stat_value(v[0]), stat_value(v[1])]
                         for c, v in self.stats[b].items()
                         if v is not None
                     },
@@ -722,7 +717,7 @@ def _resolve_table_spec(fs, root: str, options: dict, schema) -> dict:
             # _to_physical boundary — a mapped table keeps its
             # df.write.format("txtable") path (round-11 judge
             # directive #3; this was a loud refusal before)
-            "mapping": mapping_of(m.get("schema")),
+            "mapping": mapping_of(m["schema"]),
         }
     else:
         spec = {
@@ -735,23 +730,21 @@ def _resolve_table_spec(fs, root: str, options: dict, schema) -> dict:
             "bloom_bits": 1024,
             "mapping": {},
         }
-    if schema is not None:
-        names = [f.name for f in schema.fields]
-        if spec["key"] not in names:
-            raise ValueError(
-                f"write schema {names} lacks the table key {spec['key']!r}"
-            )
-        dt = schema[spec["key"]].dataType
-        spec["key_kind"] = _key_kind_of_spark_type(dt)
-        spec["schema_fields"] = [
-            {
-                "name": f.name,
-                "type": f.dataType.jsonValue(),
-                "nullable": True,
-                "metadata": {},
-            }
-            for f in schema.fields
-        ]
+    names = [f.name for f in schema.fields]
+    if spec["key"] not in names:
+        raise ValueError(
+            f"write schema {names} lacks the table key {spec['key']!r}"
+        )
+    spec["key_kind"] = _key_kind_of_spark_type(schema[spec["key"]].dataType)
+    spec["schema_fields"] = [
+        {
+            "name": f.name,
+            "type": f.dataType.jsonValue(),
+            "nullable": True,
+            "metadata": {},
+        }
+        for f in schema.fields
+    ]
     spec["evolve_schema"] = str(options.get("evolveschema", "false")).lower() in (
         "1",
         "true",
@@ -811,12 +804,11 @@ def _resolve_commit_schema(prev: dict | None, spec: dict, overwrite: bool):
 
     Mirrors the JVM verbs' contract (``sinks/txlog.py``): a fresh table
     or an overwrite records the write's schema outright (overwrite
-    replaces the table, so tombstones reset too); an append against a
-    schema-tracked table ENFORCES it — new columns need the
-    ``evolveSchema`` write option, type conflicts always raise; legacy
-    (pre-tracking) tables skip both. Raises ValueError on violation —
-    before the manifest is claimed, so the staged files stay invisible
-    and vacuum-able."""
+    replaces the table, so tombstones reset too); an append ENFORCES
+    the table's schema — new columns need the
+    ``evolveSchema`` write option, type conflicts always raise. Raises
+    ValueError on violation — before the manifest is claimed, so the
+    staged files stay invisible and vacuum-able."""
     if (
         prev is not None
         and prev.get("generated_columns")
@@ -842,7 +834,7 @@ def _resolve_commit_schema(prev: dict | None, spec: dict, overwrite: bool):
     ):
         missing = sorted(
             set(prev["column_defaults"])
-            - {f["name"] for f in (spec.get("schema_fields") or [])}
+            - {f["name"] for f in spec["schema_fields"]}
         )
         if missing:
             # Delta's allowColumnDefaults writer feature: appending
@@ -873,18 +865,13 @@ def _resolve_commit_schema(prev: dict | None, spec: dict, overwrite: bool):
             "sinks.txlog.txlog_upsert, SQL INSERT, or COPY INTO"
         )
     if prev is None or overwrite:
-        return spec.get("schema_fields"), []
-    prev_schema = prev.get("schema")
+        return spec["schema_fields"], []
     dropped = list(prev.get("dropped_columns", []))
-    if prev_schema is None:
-        return None, dropped
-    if not spec.get("schema_fields"):
-        return [dict(f) for f in prev_schema], dropped
     from ..sinks.txlog import _evolve_fields  # driver-side only
 
     return (
         _evolve_fields(
-            prev_schema,
+            prev["schema"],
             spec["schema_fields"],
             spec.get("evolve_schema", False),
             dropped,
@@ -983,7 +970,7 @@ def commit_files(
                     f"{spec['num_buckets']}); a concurrent creation or "
                     "rebucket won the race — re-run the write"
                 )
-            cur_mapping = mapping_of(prev.get("schema"))
+            cur_mapping = mapping_of(prev["schema"])
             if cur_mapping != spec.get("mapping", {}):
                 # a RENAME/re-ADD committed between plan and commit:
                 # this write's files carry the PLAN-time physical names
@@ -1024,29 +1011,32 @@ def commit_files(
         )
         # table-level declarations carry forward on APPEND (a blind
         # insert changes rows, never the table's contract); OVERWRITE
-        # replaces the snapshot and resets them with the schema —
-        # generated columns, defaults, COPY history and deletion
-        # vectors (bloom declarations and sharding stay).
-        reset = (
-            dict.fromkeys(
-                ("generated_columns", "column_defaults", "copy_files",
-                 "copy_log", "bucket_dvs")
-            )
-            if overwrite
-            else {}
-        )
+        # replaces the snapshot and resets COPY history and deletion
+        # vectors with it (bloom declarations and sharding stay). It
+        # resets generated columns and defaults too, unless the
+        # front-end attests it applied them (SQL INSERT OVERWRITE
+        # does): those rules then carry for the columns still in the
+        # schema.
+        reset = {}
+        if overwrite:
+            names = {f["name"] for f in schema_fields}
+            reset = {"copy_log": None, "bucket_dvs": None}
+            for rules, handled in (
+                ("generated_columns", "generated_handled"),
+                ("column_defaults", "defaults_handled"),
+            ):
+                kept = (prev or {}).get(rules, {}) if spec.get(handled) else {}
+                reset[rules] = {c: e for c, e in kept.items() if c in names}
         identity = {}
         if prev is not None and prev.get("identity_columns"):
-            # identity carries on OVERWRITE too (unlike generated
-            # columns, which reset with the snapshot): losing the
+            # identity carries on OVERWRITE too, attested or not
+            # (unlike generated columns and defaults): losing the
             # high-water mark would re-issue already-used ids — actual
             # corruption, not just a dropped rule. The config survives
             # per column as long as the column is still in the schema;
             # the mark is monotone across overwrites.
             new_names = (
-                {f["name"] for f in schema_fields}
-                if (overwrite and schema_fields)
-                else None
+                {f["name"] for f in schema_fields} if overwrite else None
             )
             keep = {
                 c: dict(cfg)
@@ -1071,7 +1061,7 @@ def commit_files(
                 [(b, [rel], *rest) for b, rel, *rest in entries],
                 spec["stats_columns"],
                 (prev or {}).get("bloom_columns", []),
-                decimal_columns(schema_fields or (prev or {}).get("schema")),
+                decimal_columns(schema_fields),
             ),
             app_txns=app_txns,
             stats_columns=spec["stats_columns"],

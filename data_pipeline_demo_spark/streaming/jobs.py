@@ -599,10 +599,9 @@ def make_sketch_batch_fn(
     maintained table bit-equals one-shot sketching), ``"heavy_hitters"``
     (MG — stored ≤ true ≤ stored+err carried through every merge) and
     ``"quantile"`` (MRL — rank-error bound preserved under merging)."""
-    from pyspark.sql import functions as SF
-
     from ..operators import sketches
     from ..sinks.txlog import read_txtable, txlog_upsert
+    from ..sinks.upsert import composite_key
 
     state_cols = {
         "distinct": ["sketch"],
@@ -639,9 +638,8 @@ def make_sketch_batch_fn(
             merged = merge(old, new)
         except FileNotFoundError:
             merged = new
-        keyed = merged.withColumn(
-            "__gkey", SF.concat_ws("\x1f", *[SF.col(c).cast("string") for c in group_cols])
-        )
+        # null-distinct: (NULL, 'x') and ('x', NULL) are two groups
+        keyed = merged.withColumn("__gkey", composite_key(group_cols))
         txlog_upsert(
             spark,
             keyed,

@@ -303,3 +303,22 @@ def test_update_set_default_keyword(spark):
         txtable_sql(
             spark, f"UPDATE txtable.`{root}` SET k = DEFAULT WHERE true"
         )
+
+
+def test_sql_insert_overwrite_keeps_generated_columns_and_defaults(spark):
+    """SQL INSERT OVERWRITE computes generated columns and fills
+    defaults itself, so the overwritten table keeps both rules: a later
+    INSERT naming only (id, v) still fills d and computes g."""
+    root = _root("ow")
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` (id BIGINT, v INT, g INT GENERATED "
+        "ALWAYS AS (v * 2), d STRING DEFAULT 'x') KEY id BUCKETS 4",
+    )
+    txtable_sql(spark, f"INSERT OVERWRITE txtable.`{root}` (id, v) VALUES (3, 30)")
+    man = _latest_manifest(spark, root)
+    assert man["generated_columns"] == {"g": "v * 2"}
+    assert man["column_defaults"] == {"d": "'x'"}
+    txtable_sql(spark, f"INSERT INTO txtable.`{root}` (id, v) VALUES (4, 40)")
+    got = {r["id"]: (r["v"], r["d"], r["g"]) for r in read_txtable(spark, root).collect()}
+    assert got == {3: (30, "x", 60), 4: (40, "x", 80)}

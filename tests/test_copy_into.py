@@ -240,8 +240,8 @@ def test_python_append_carries_generated_columns_regression(spark, tmp_path):
 
 def test_copy_history_survives_every_verb(spark, tmp_path):
     """The cross-cutting carry: EVERY snapshot-evolving commit must
-    propagate copy_files — any path that drops it re-arms loaded files
-    for a silent double load."""
+    propagate the COPY history (copy_log) — any path that drops it
+    re-arms loaded files for a silent double load."""
     land = str(tmp_path / "land")
     root = str(tmp_path / "t")
     _land_parquet(spark, land, "a", [(1, "a"), (2, "b")], "id long, v string")
@@ -619,53 +619,6 @@ def test_copy_chain_compacts_on_optimize_and_vacuum_sweeps(spark, tmp_path):
     # skip-check still exactly-once after compaction + sweep
     r = copy_into(spark, root, land, "parquet")
     assert r["num_loaded_files"] == 0 and r["num_skipped_files"] == 4
-
-
-def test_copy_legacy_embedded_history_migrates(spark, tmp_path):
-    """A table whose manifest still embeds copy_files (pre-sidecar
-    layout) keeps exactly-once semantics, and the next COPY INTO folds
-    the legacy map into the chain and retires the embedded key."""
-    import time as _time
-
-    from data_pipeline_demo_spark.sinks.txlog import _commit_manifest
-
-    land = str(tmp_path / "land")
-    root = str(tmp_path / "t")
-    f0 = _land_parquet(spark, land, "a", [(1, "a")], "id long, v string")
-    _create(spark, root)
-    copy_into(spark, root, land, "parquet")
-    # rewrite the table's pointer into the LEGACY embedded shape
-    man = _latest_manifest(spark, root)
-    hist = {
-        h["file"]: [h["size"], h["mtime_ms"], h["version"]]
-        for h in copy_history(spark, root)
-    }
-    legacy_man = {
-        k: v for k, v in man.items() if k != "copy_log"
-    }
-    legacy_man.update(
-        version=man["version"] + 1,
-        copy_files=hist,
-        operation="TEST-LEGACY",
-        committed_at_ms=int(_time.time() * 1000),
-    )
-    _commit_manifest(spark, root, legacy_man)
-    # skip-check reads the embedded map
-    r = copy_into(spark, root, land, "parquet")
-    assert r["num_loaded_files"] == 0 and r["num_skipped_files"] == 1
-    # a new load migrates: embedded key retired, chain holds everything
-    _land_parquet(spark, land, "b", [(2, "b")], "id long, v string")
-    copy_into(spark, root, land, "parquet")
-    man2 = _latest_manifest(spark, root)
-    assert "copy_files" not in man2
-    assert man2["copy_log"]["count"] == 2
-    assert len(copy_history(spark, root)) == 2
-    assert any(
-        h["file"].endswith("a.parquet")
-        for h in copy_history(spark, root)
-    ), f0
-    r = copy_into(spark, root, land, "parquet")
-    assert r["num_loaded_files"] == 0 and r["num_skipped_files"] == 2
 
 
 def test_copy_chain_self_compacts_past_max(spark, tmp_path, monkeypatch):

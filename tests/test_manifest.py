@@ -19,6 +19,7 @@ from data_pipeline_demo_spark.sinks.manifest import (
     append_files,
     changed_buckets,
     check_features,
+    check_format,
     check_no_rename,
     commit_rel,
     deflate,
@@ -181,6 +182,103 @@ def test_each_read_planning_concern_is_defined_once():
     assert stray == [], f"read planning outside its planner module: {stray}"
 
 
+def _older_format_sites(root: Path) -> list[tuple[str, str]]:
+    """``(what, path:line)`` for each spot that serves a manifest outside
+    the one format :func:`check_format` admits:
+
+    - a ``mergeSchema`` read option (snapshot files read under the
+      recorded schema; COPY INTO's copy option is parsed as a quoted SQL
+      literal, never passed to a reader);
+    - a ``"copy_files"`` constant or keyword (COPY history lives in
+      sidecars);
+    - a ``.get("committed_at_ms", default)`` (every commit is stamped);
+    - a function that reads parquet footer schemas to build a read
+      schema (``read_schema`` / ``parquet_schema``)."""
+    out = []
+    footer = {"read_schema", "parquet_schema"}
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = str(path.relative_to(root))
+        for node in ast.walk(tree):
+            what = None
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "option"
+                and node.args
+                and _mentions(node.args[0], "mergeSchema")
+            ):
+                what = "mergeSchema read"
+            elif (isinstance(node, ast.Constant) and node.value == "copy_files") or (
+                isinstance(node, ast.keyword) and node.arg == "copy_files"
+            ):
+                what = "embedded copy_files"
+            elif (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "get"
+                and len(node.args) == 2
+                and _mentions(node.args[0], "committed_at_ms")
+            ):
+                what = "defaulted committed_at_ms"
+            elif isinstance(node, ast.FunctionDef) and (
+                node.name in footer
+                or any(
+                    getattr(n, "attr", None) in footer
+                    for n in ast.walk(node)
+                    if isinstance(n, ast.Attribute)
+                )
+            ):
+                what = "footer-union schema"
+            if what is not None:
+                out.append((what, f"{rel}:{node.lineno}"))
+    return out
+
+
+def test_one_manifest_format_has_no_second_path():
+    """Guard: every manifest a reader accepts records its schema and
+    commit stamp and keeps COPY history in sidecars
+    (``check_format``), so no reader or writer keeps a path for the
+    older shapes: no ``mergeSchema`` footer sweep, no embedded
+    ``copy_files`` outside the gate, no default for a missing
+    ``committed_at_ms``, no schema unioned from file footers."""
+    stray = [
+        (what, where)
+        for what, where in _older_format_sites(PKG)
+        if not (what == "embedded copy_files" and where.startswith("sinks/manifest.py:"))
+    ]
+    assert stray == [], f"older-manifest paths: {stray}"
+
+
+def _field(name: str, type_: str = "long") -> dict:
+    return {"name": name, "type": type_, "nullable": True, "metadata": {}}
+
+
+def test_creating_commits_state_a_schema():
+    """A creating commit without a schema is refused when it is built,
+    so no writer publishes a manifest the gate refuses; the commits that
+    tools/manifest_soak.py assembles by hand pass the gate."""
+    import manifest_soak
+
+    with pytest.raises(ValueError, match="schema"):
+        next_manifest(None, "CREATE", key="id", num_buckets=2)
+    for sharded in (False, True):
+        buckets = manifest_soak._fabricate_buckets(manifest_soak.NUM_BUCKETS)
+        check_format(manifest_soak._base_manifest(buckets, sharded))
+
+
+def test_check_format_refuses_older_manifests():
+    good = next_manifest(None, "CREATE", key="id", num_buckets=2, schema=[_field("id")])
+    check_format(good)
+    for forged, field in (
+        ({k: v for k, v in good.items() if k != "schema"}, "schema"),
+        ({k: v for k, v in good.items() if k != "committed_at_ms"}, "committed_at_ms"),
+        ({**good, "copy_files": {"f.parquet": [1, 2, 0]}}, "copy_files"),
+    ):
+        with pytest.raises(UnsupportedTableFeatureError, match=field) as e:
+            check_format(forged)
+        # never a ValueError: readers quarantine a manifest on ValueError
+        assert not isinstance(e.value, ValueError)
+
+
 def test_layout_helpers():
     assert commit_rel(7) == "_commits/00000000000000000007.json"
     assert commit_rel(0, "_properties") == "_properties/00000000000000000000.json"
@@ -195,7 +293,7 @@ def test_layout_helpers():
         {"name": "c", "metadata": {"physical": "c"}},
         {"name": "d"},
     ]
-    assert mapping_of(fields) == {"b": "col-1"} and mapping_of(None) == {}
+    assert mapping_of(fields) == {"b": "col-1"}
 
 
 def test_check_features_refuses_unknown_tokens():
@@ -294,11 +392,11 @@ _APPEND_CASES = {
         ("x",),
         {"bucket_stats": {"x": ["1.0", "12.0"]}},
     ),
-    "decimal-shaped strings without a type drop the range": (
+    "decimal-shaped strings without a type widen lexically": (
         {**_PREV, "bucket_stats": {"0": {"x": ["1.0", "9.5"]}}},
         [("0", ["a"], 3, {"x": ["2.0", "12.0"]}, {}, {"x": 0})],
         (),
-        {"bucket_stats": absent},
+        {"bucket_stats": {"x": ["1.0", "9.5"]}},
     ),
     "bloom words OR": (
         _PREV,
@@ -324,13 +422,6 @@ _APPEND_CASES = {
         [("0", ["a"], 3, {}, None, {})],
         (),
         {"bucket_blooms": absent},
-    ),
-    "a legacy 4-tuple entry pops nulls and blooms": (
-        _PREV,
-        [("0", ["a"], 3, {"x": [11, 12]})],
-        (),
-        {"bucket_nulls": absent, "bucket_blooms": absent,
-         "bucket_stats": {"x": [10, 20]}, "row_counts": 8},
     ),
 }
 
@@ -359,7 +450,7 @@ def test_append_files_leaves_prev_and_other_buckets_alone():
     assert got["row_counts"] == {"0": 5, "1": 2, "2": 1}
     assert got["bucket_stats"]["2"] == {"x": [0, 0]}
     # no declared columns: only files and counts move
-    got = append_files(prev, [(0, ["new"], 1, {"x": [0, 0]})], [], [])
+    got = append_files(prev, [(0, ["new"], 1, {"x": [0, 0]}, {}, {})], [], [])
     assert got["bucket_stats"] == prev["bucket_stats"]
     assert got["bucket_blooms"] == prev["bucket_blooms"]
 
@@ -369,6 +460,7 @@ def test_next_manifest_carries_and_resets():
         "version": 4,
         "key": "id",
         "num_buckets": 2,
+        "schema": [_field("id"), _field("i")],
         "buckets": {"0": ["a"], "1": ["b"]},
         "row_counts": {"0": 1, "1": 1},
         "bucket_dvs": {"0": ["dv0"], "1": ["dv1"]},
@@ -413,6 +505,7 @@ def test_deflate_reuses_unchanged_shards_and_inflate_restores():
         "CREATE",
         key="id",
         num_buckets=4,
+        schema=[_field("id")],
         buckets={"0": ["a"], "1": ["b"], "2": ["c"]},
         manifest_sharding={"groups": 2},
     )
@@ -440,7 +533,7 @@ def test_deflate_reuses_unchanged_shards_and_inflate_restores():
 # tracked field -> the manifest keys that make it up
 TRACKED = {
     "identity_hwm": ("identity_high_water",),
-    "copy_history": ("copy_log", "copy_files"),
+    "copy_history": ("copy_log",),
     "generated": ("generated_columns",),
     "defaults": ("column_defaults",),
     "app_txns": ("app_txns",),
@@ -492,7 +585,7 @@ _EXPECTED_ROWS = {
     "RESTORE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
     "ANALYZE after RESTORE": ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
     "TRUNCATE":              ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep"),
-    "OVERWRITE":             ("keep",   "reset",  "reset",  "reset",  "keep",   "-",      "keep"),
+    "OVERWRITE":             ("keep",   "reset",  "keep",   "reset",  "keep",   "-",      "keep"),
 }
 EXPECTED = {v: dict(zip(TRACKED, row)) for v, row in _EXPECTED_ROWS.items()}
 
@@ -526,6 +619,87 @@ def test_analyze_after_restore_drops_restored_from_version(verb_steps):
     by_verb = {verb: after for verb, _before, after in verb_steps}
     assert by_verb["RESTORE"]["restored_from_version"] == 2
     assert "restored_from_version" not in by_verb["ANALYZE after RESTORE"]
+
+
+def test_every_matrix_manifest_passes_the_gate(matrix_dir, verb_steps, bloom_verbs):
+    """Every write verb, both blind-append paths included, commits a
+    manifest in the one format the readers admit."""
+    paths = sorted(Path(matrix_dir).glob("*/_commits/[0-9]*.json"))
+    # every step commits at least once
+    assert len(paths) >= len(verb_steps) + len(bloom_verbs)
+    for p in paths:
+        check_format(json.loads(p.read_text()))
+
+
+_FORGERIES = {
+    "schema removed": lambda m: {k: v for k, v in m.items() if k != "schema"},
+    "committed_at_ms removed": lambda m: {
+        k: v for k, v in m.items() if k != "committed_at_ms"
+    },
+    "copy_files embedded": lambda m: {
+        **m, "copy_files": {"file:/land/a.parquet": [10, 20, 0]}
+    },
+}
+
+
+def test_older_manifests_are_refused_by_every_reader_and_writer(spark, tmp_path):
+    """A latest manifest forged into an older shape is refused with
+    UnsupportedTableFeatureError by every reader and writer, and the log
+    is left exactly as it was: no reader quarantines it."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_demo_spark.sinks.copy_into import copy_into
+    from data_pipeline_demo_spark.sinks.merge import NotMatchedClause, txlog_merge
+    from data_pipeline_demo_spark.sinks.sql_dml import txtable_sql
+    from data_pipeline_demo_spark.sinks.txlog import (
+        read_txtable,
+        txlog_upsert,
+        txtable_changes,
+    )
+    from data_pipeline_demo_spark.sources.txtable_source import TxTableDataSource
+
+    def rows(lo: int, hi: int):
+        return spark.range(lo, hi).select("id", (F.col("id") % 3).alias("v"))
+
+    root = str(tmp_path / "t")
+    txlog_upsert(spark, rows(0, 4), root, key="id", num_buckets=2)
+    txlog_upsert(spark, rows(2, 6), root)
+    land = str(tmp_path / "land")
+    rows(10, 12).write.parquet(land)
+    commits = Path(root, "_commits")
+    latest = Path(root, commit_rel(1))
+    good = latest.read_bytes()
+    snapshot = {"path": root}
+    feed = {"path": root, "readchangefeed": "true", "startingversion": "0"}
+    verbs = {
+        "read_txtable": lambda: read_txtable(spark, root),
+        "TIMESTAMP AS OF": lambda: txtable_sql(
+            spark, f"SELECT * FROM txtable.`{root}` TIMESTAMP AS OF '2100-01-01'"
+        ),
+        "txtable_changes": lambda: txtable_changes(spark, root, 0, 1),
+        "format schema": lambda: TxTableDataSource(snapshot).schema(),
+        "format reader": lambda: TxTableDataSource(snapshot).reader(None),
+        "format change feed schema": lambda: TxTableDataSource(feed).schema(),
+        "format change feed reader": lambda: TxTableDataSource(feed).reader(None),
+        "txlog_upsert": lambda: txlog_upsert(spark, rows(0, 1), root),
+        "txlog_merge": lambda: txlog_merge(
+            spark, rows(0, 1), root, not_matched=[NotMatchedClause()]
+        ),
+        "COPY INTO": lambda: copy_into(spark, root, land, "parquet"),
+    }
+    for forgery, forge in _FORGERIES.items():
+        forged = json.dumps(forge(json.loads(good))).encode()
+        latest.write_bytes(forged)
+        # the checksum sidecar would no longer match the rewritten file
+        Path(commits, f".{latest.name}.crc").unlink(missing_ok=True)
+        listing = sorted(os.listdir(commits))
+        for verb, run in verbs.items():
+            with pytest.raises(UnsupportedTableFeatureError, match="predates"):
+                run()
+            assert sorted(os.listdir(commits)) == listing, (forgery, verb)
+            assert latest.read_bytes() == forged, (forgery, verb)
+    latest.write_bytes(good)
+    assert read_txtable(spark, root).count() == 6
 
 
 # ---------------------------------------------------------------------------

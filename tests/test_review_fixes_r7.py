@@ -427,12 +427,12 @@ def test_python_pushdown_null_counts_and_decimal_bounds(spark, tmp_path):
     # direct planner probes: a synthetic all-null / no-null bucket map
     m2 = dict(m)
     m2["bucket_nulls"] = {b: {"v": 0} for b in full}
-    assert prune_bucket_ids(m2, [IsNull(("v",))], None) == []
+    assert prune_bucket_ids(m2, [IsNull(("v",))]) == []
     m2["bucket_nulls"] = {
         b: {"v": m["row_counts"][b]} for b in full
     }
-    assert prune_bucket_ids(m2, [IsNotNull(("v",))], None) == []
-    assert prune_bucket_ids(m2, [], None) == full
+    assert prune_bucket_ids(m2, [IsNotNull(("v",))]) == []
+    assert prune_bucket_ids(m2, []) == full
 
 
 def test_python_writer_tracks_null_counts(spark, tmp_path):

@@ -1114,3 +1114,20 @@ def test_dedup_then_window_stream_equals_batch(spark, event_stream_source):
     assert set(finalized) <= set(got)
     want_by_key = {(r[0], r[1]): r for r in want}
     assert all(want_by_key[(r[0], r[1])] == r for r in got)
+
+
+def test_sketch_sink_keeps_groups_that_differ_only_in_nulls(spark, tmp_path):
+    """The sketch sink keys each group injectively: (NULL, 'x') and
+    ('x', NULL), and ('', NULL) and (NULL, NULL), are four groups, not
+    two (a null-skipping concat_ws key merged them)."""
+    from data_pipeline_demo_spark.sinks.txlog import read_txtable
+    from data_pipeline_demo_spark.streaming.jobs import make_sketch_batch_fn
+
+    root = str(tmp_path / "sk")
+    groups = [(None, "x"), ("x", None), ("", None), (None, None)]
+    batch = spark.createDataFrame(
+        [(a, b, i) for i, (a, b) in enumerate(groups)], "a string, b string, u long"
+    )
+    make_sketch_batch_fn(root, ["a", "b"], "u")(batch, 0)
+    got = [(r["a"], r["b"]) for r in read_txtable(spark, root).collect()]
+    assert sorted(got, key=repr) == sorted(groups, key=repr)

@@ -19,6 +19,7 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_pipeline_demo_spark.sinks.txlog import (
     read_txtable,
@@ -260,12 +261,11 @@ def test_second_append_widens_zone_maps(registered, tmp_path):
     assert got.count() == 100
 
 
-def test_dropped_zone_map_range_stays_dropped(registered, tmp_path):
-    """A task whose running range cannot widen (decimal-shaped strings
-    whose lexical and numeric orders disagree) records no range for
-    the column, rather than only its last slice's range, and the
-    commit drops the bucket's older range with it: both pruning
-    readers must still find '9.5'."""
+def test_decimal_shaped_string_zone_map_widens_lexically(registered, tmp_path):
+    """A STRING column whose values parse as numbers ('9.5', '12.0':
+    lexical and numeric orders disagree) keeps a lexical zone map
+    across a task's slices and across commits, and both pruning readers
+    still find '9.5'."""
     spark = registered
     root = str(tmp_path / "zr")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -282,18 +282,54 @@ def test_dropped_zone_map_range_stays_dropped(registered, tmp_path):
     try:
         append([(1, "9.5"), (2, "12.0")])
         fs, r = _fs_root(root, {})
-        assert "s" not in _read_manifest(fs, r, 0)["bucket_stats"].get("0", {})
+        assert _read_manifest(fs, r, 0)["bucket_stats"]["0"]["s"] == ["12.0", "9.5"]
         append([(3, "1.0")])
         append([(4, "9.7"), (5, "12.5")])
     finally:
         spark.conf.set(key, old)
-    assert "s" not in _read_manifest(fs, r, 2)["bucket_stats"].get("0", {})
+    assert _read_manifest(fs, r, 2)["bucket_stats"]["0"]["s"] == ["1.0", "9.7"]
     got = read_txtable(spark, root, prune_between={"s": ("9", "9.9")}).filter(
         F.col("s").between("9", "9.9")
     )
     assert sorted(x.k for x in got.collect()) == [1, 4]
     pushed = spark.read.format("txtable").load(root).filter("s = '9.5'")
     assert [x.k for x in pushed.collect()] == [1]
+
+
+def test_decimal_probe_on_a_string_column_keeps_the_bucket(registered, tmp_path):
+    """A Decimal bound on a STRING column whose lexical zone map is
+    ['1.0', '9.5'] must not compare those strings as Decimals: Spark
+    finds '12.0' between 10 and 13, so the bucket is kept. The same
+    stats on a DECIMAL column do prune."""
+    from decimal import Decimal
+
+    from data_pipeline_demo_spark.sources.pushdown import zone_map_buckets
+
+    spark = registered
+    root = str(tmp_path / "ds")
+    txlog_upsert(
+        spark,
+        spark.createDataFrame([(1, "9.5"), (2, "12.0"), (3, "1.0")], "k long, s string"),
+        root,
+        key="k",
+        num_buckets=1,
+        stats_columns=["s"],
+    )
+    fs, r = _fs_root(root, {})
+    m = _read_manifest(fs, r, 0)
+    assert m["bucket_stats"]["0"]["s"] == ["1.0", "9.5"]
+    window = {"s": (Decimal("10"), Decimal("13"))}
+    assert zone_map_buckets(m, window, ["0"]) == ["0"]
+    got = read_txtable(spark, root, prune_between=window)
+    assert [x.k for x in got.collect()] == [2]
+    as_decimal = {
+        **m,
+        "schema": [
+            {**f, "type": "decimal(10,1)"} if f["name"] == "s" else f
+            for f in m["schema"]
+        ],
+    }
+    assert zone_map_buckets(as_decimal, window, ["0"]) == []
 
 
 def test_append_without_a_stats_column_counts_its_nulls(registered, tmp_path):
@@ -345,8 +381,17 @@ def test_unsupported_key_type_raises(registered, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _field(name: str, type_: str) -> dict:
+    return {"name": name, "type": type_, "nullable": True, "metadata": {}}
+
+
 def _spec():
-    return {"key": "k", "num_buckets": 4, "stats_columns": []}
+    return {
+        "key": "k",
+        "num_buckets": 4,
+        "stats_columns": [],
+        "schema_fields": [_field("k", "long")],
+    }
 
 
 def test_commit_claim_is_exclusive(tmp_path):
@@ -360,7 +405,7 @@ def test_concurrent_appends_both_survive(tmp_path):
     retries against the winner's manifest — BOTH file sets end up live."""
     fs, root = _fs_root(str(tmp_path / "t"), {})
     commit_files(
-        fs, root, _spec(), [_TxFiles(entries=[(0, "data/base/p.parquet", 1, {})])], False
+        fs, root, _spec(), [_TxFiles(entries=[(0, "data/base/p.parquet", 1, {}, {}, {})])], False
     )
     barrier = threading.Barrier(2)
     errs = []
@@ -372,7 +417,7 @@ def test_concurrent_appends_both_survive(tmp_path):
                 fs,
                 root,
                 _spec(),
-                [_TxFiles(entries=[(1, f"data/{tag}/p.parquet", 1, {})])],
+                [_TxFiles(entries=[(1, f"data/{tag}/p.parquet", 1, {}, {}, {})])],
                 False,
             )
         except Exception as e:  # pragma: no cover
@@ -394,7 +439,7 @@ def test_concurrent_appends_both_survive(tmp_path):
 
 def test_txn_watermark_skips_replay(tmp_path):
     fs, root = _fs_root(str(tmp_path / "t"), {})
-    msg = [_TxFiles(entries=[(0, "data/x/p.parquet", 3, {})])]
+    msg = [_TxFiles(entries=[(0, "data/x/p.parquet", 3, {}, {}, {})])]
     assert commit_files(
         fs, root, _spec(), msg, False, txn_app_id="app", txn_version=7
     )
@@ -414,14 +459,14 @@ def test_txn_watermark_skips_replay(tmp_path):
 
 
 def test_widen_drops_ambiguous_decimal_shaped_strings():
-    """Legacy schema-less manifest: a string stat pair that parses as
-    Decimal with lexical/numeric order DISAGREEING is type-ambiguous —
-    widen must return None (bucket conservatively kept) instead of a
-    possibly too-narrow lexical bound ('9.5' beats '12.0' lexically)."""
+    """Every manifest records its schema, so ``decimal=`` is exact and a
+    decimal-shaped string pair is never ambiguous: without the decimal
+    type it is a STRING column and widens lexically, as Spark compares
+    strings ('9.5' beats '12.0'); with it, by value."""
     from data_pipeline_demo_spark.sinks.manifest import widen
 
-    # disagreement: lexical '12.0' < '9.5' but numeric 12.0 > 9.5
-    assert widen(["1.0", "9.5"], ["2.0", "12.0"]) is None
+    # lexical '12.0' < '9.5' (numeric 12.0 > 9.5): a string column's order
+    assert widen(["1.0", "9.5"], ["2.0", "12.0"]) == ["1.0", "9.5"]
     # agreement (same order both ways): safe, widens normally
     assert widen(["1.0", "2.0"], ["1.5", "3.0"]) == ["1.0", "3.0"]
     # non-decimal strings: lexical is the order (dates, ids)
@@ -449,7 +494,7 @@ def test_legacy_stream_app_id_migration_boundary(tmp_path):
     )
 
     fs, root = _fs_root(str(tmp_path / "t"), {})
-    msg = [_TxFiles(entries=[(0, "data/x/p.parquet", 3, {})])]
+    msg = [_TxFiles(entries=[(0, "data/x/p.parquet", 3, {}, {}, {})])]
     # pre-upgrade history: legacy fixed id committed through batch 5
     assert commit_files(
         fs, root, _spec(), msg, False,
@@ -616,12 +661,14 @@ def test_stream_sink_exactly_once(registered, tmp_path):
     assert read_txtable(spark, root).count() == 300
 
     # simulate a post-checkpoint-loss replay of batch 0: the LOG skips it
-    spec = _resolve_table_spec(fs, r, {}, None)
+    spec = _resolve_table_spec(
+        fs, r, {}, StructType.fromDDL("k long, v long, d date")
+    )
     assert not commit_files(
         fs,
         r,
         spec,
-        [_TxFiles(entries=[(0, "data/replay/p.parquet", 9, {})])],
+        [_TxFiles(entries=[(0, "data/replay/p.parquet", 9, {}, {}, {})])],
         False,
         txn_app_id="e2e-stream",
         txn_version=0,
@@ -715,6 +762,7 @@ def test_cross_engine_commit_claims(registered, tmp_path):
             "version": 1, "key": "k", "num_buckets": 4, "buckets": {},
             "row_counts": {}, "app_txns": {}, "stats_columns": [],
             "bucket_stats": {}, "committed_at_ms": 0,
+            "schema": [_field("k", "long"), _field("v", "string")],
         }).encode()
     ) is True
     with pytest.raises(JvmRace):
@@ -722,8 +770,10 @@ def test_cross_engine_commit_claims(registered, tmp_path):
                                        "num_buckets": 4, "buckets": {}})
     # and python commit_files RETRIES past the claimed version
     commit_files(
-        fs, r, {"key": "k", "num_buckets": 4, "stats_columns": []},
-        [_TxFiles(entries=[(0, "data/x/p.parquet", 1, {})])], False,
+        fs,
+        r,
+        {**_spec(), "schema_fields": [_field("k", "long"), _field("v", "string")]},
+        [_TxFiles(entries=[(0, "data/x/p.parquet", 1, {}, {}, {})])], False,
     )
     assert _read_manifest(fs, r, 2)["version"] == 2
 
@@ -837,3 +887,35 @@ def test_python_append_unsupported_bloom_type_pops_filter(registered, tmp_path):
     blooms = json.loads(commits[-1].read_text())["bucket_blooms"]
     # id=1 hashes to one bucket; that bucket's filter is popped
     assert blooms == {}
+
+
+def test_bloom_build_emits_no_overflow_warning(tmp_path):
+    """The task writer's Bloom build hashes with wrapping 64-bit
+    products and warns about none of them (it used to warn on every
+    Bloom-column write); the positions still match the scalar hash."""
+    import struct
+    import warnings
+
+    import numpy as np
+    import pyarrow as pa
+
+    from data_pipeline_demo_spark.sources.txtable_writer import (
+        _TaskState,
+        xxh64_fixed4_seeded,
+    )
+
+    seeds = np.array([42, 2**63 + 5, 2**64 - 1], dtype=np.uint64)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = xxh64_fixed4_seeded(2, seeds)
+        fs, root = _fs_root(str(tmp_path / "t"), {})
+        task = _TaskState(fs, root, "c0", ["grp"], ["sku", "grp"], 256)
+        batch = pa.record_batch(
+            [pa.array([1, 2, 3], pa.int64()), pa.array(["a", None, "c"]),
+             pa.array([7, 8, None], pa.int32())],
+            names=["id", "sku", "grp"],
+        )
+        task.write_batch(batch, "id", "int64", 4)
+        task.finish()
+    want = [xxh64(struct.pack("<i", 2), seed=int(s)) for s in seeds]
+    assert [int(h) for h in got] == want

@@ -50,6 +50,10 @@ def _base_manifest(buckets: dict, sharded: bool) -> dict:
         "SOAK",
         key="id",
         num_buckets=NUM_BUCKETS,
+        schema=[
+            {"name": c, "type": t, "nullable": True, "metadata": {}}
+            for c, t in (("id", "long"), ("v", "double"))
+        ],
         buckets=buckets,
         row_counts={b: len(r) * 1000 for b, r in buckets.items()},
         stats_columns=["v"],
