@@ -120,6 +120,8 @@ def _register_engine_sources(spark: SparkSession) -> None:
         # not silently leave format("txtable") unresolvable
         pass
     except Exception as e:  # pragma: no cover - defensive signal path
+        # broad on purpose: a session without format("txtable") still
+        # serves every other query, so the failure warns, not raises
         import warnings
 
         warnings.warn(

@@ -622,6 +622,17 @@ _COPY_HISTORY_REF = re.compile(
 )
 
 
+def _timestamp_ms(literal: str) -> int:
+    """Epoch milliseconds of a SQL ISO timestamp literal (the text
+    between the quotes); a literal without a zone means UTC."""
+    import datetime as _dt
+
+    ts = _dt.datetime.fromisoformat(literal)
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return int(ts.timestamp() * 1000)
+
+
 def _bound_version(
     spark: SparkSession, path: str, token: str, side: str = "from"
 ) -> int:
@@ -633,17 +644,12 @@ def _bound_version(
     preceding commit), while the TO bound resolves to the greatest
     version at or before it."""
     if token.startswith("'"):
-        import datetime as _dt
-
         from .txlog import _version_at_timestamp
 
-        ts = _dt.datetime.fromisoformat(token[1:-1])
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
         return _version_at_timestamp(
             spark,
             path,
-            int(ts.timestamp() * 1000),
+            _timestamp_ms(token[1:-1]),
             "at_or_after" if side == "from" else "at_or_before",
         )
     return int(token)
@@ -708,13 +714,8 @@ def _rewrite_selects(spark: SparkSession, text: str, u=None) -> str:
         path = u(m.group("path"))
         version = int(m.group("ver")) if m.group("ver") else None
         if m.group("ts"):
-            import datetime as _dt
-
-            ts = _dt.datetime.fromisoformat(u(m.group("ts")))
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
             version = _version_at_timestamp(
-                spark, path, int(ts.timestamp() * 1000)
+                spark, path, _timestamp_ms(u(m.group("ts")))
             )
         name = "txtable_" + uuid.uuid4().hex[:12]
         read_txtable(spark, path, version=version).createOrReplaceTempView(
@@ -1271,13 +1272,10 @@ def txtable_sql(
             return restore_txtable(
                 spark, U(m.group("path")), version=int(m.group("ver"))
             )
-        import datetime as _dt
-
-        ts = _dt.datetime.fromisoformat(U(m.group("ts")))
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
         return restore_txtable(
-            spark, U(m.group("path")), timestamp_ms=int(ts.timestamp() * 1000)
+            spark,
+            U(m.group("path")),
+            timestamp_ms=_timestamp_ms(U(m.group("ts"))),
         )
 
     m = re.match(
@@ -1761,34 +1759,24 @@ def txtable_sql(
     if m:
         # Delta's CLONE statement: SHALLOW (default, like Delta) is the
         # zero-copy metadata branch; DEEP copies data files. Time travel
-        # clones the source AS OF the given version/timestamp. CREATE
-        # OR REPLACE redefines an existing target as the clone in one
-        # commit, target history preserved.
+        # clones the source AS OF the given version/timestamp (resolved
+        # to a version here, for both kinds). CREATE OR REPLACE
+        # redefines an existing target as the clone in one commit,
+        # target history preserved.
         from .txlog import (
             _version_at_timestamp,
             deep_clone_txtable,
             shallow_clone_txtable,
         )
 
-        version = int(m.group("ver")) if m.group("ver") is not None else None
-        ts_ms = None
-        if m.group("ts") is not None:
-            import datetime as _dt
-
-            ts = _dt.datetime.fromisoformat(U(m.group("ts")))
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            ts_ms = int(ts.timestamp() * 1000)
         clone_src, clone_dst = U(m.group("src")), U(m.group("dst"))
-        if m.group("deep"):
-            return deep_clone_txtable(
-                spark, clone_src, clone_dst,
-                version=version, timestamp_ms=ts_ms,
-                replace=bool(m.group("repl")),
+        version = int(m.group("ver")) if m.group("ver") is not None else None
+        if m.group("ts") is not None:
+            version = _version_at_timestamp(
+                spark, clone_src, _timestamp_ms(U(m.group("ts")))
             )
-        if ts_ms is not None:
-            version = _version_at_timestamp(spark, clone_src, ts_ms)
-        return shallow_clone_txtable(
+        clone = deep_clone_txtable if m.group("deep") else shallow_clone_txtable
+        return clone(
             spark, clone_src, clone_dst, version=version,
             replace=bool(m.group("repl")),
         )
@@ -1867,6 +1855,7 @@ def txtable_sql(
         # creation-time zone-map / bloom-filter column lists. CREATE OR
         # REPLACE redefines an existing table atomically, history
         # preserved.
+        from pyspark.errors import ParseException
         from pyspark.sql.types import StructType
 
         from .txlog import _latest_manifest
@@ -1879,7 +1868,7 @@ def txtable_sql(
         )
         try:
             schema = StructType.fromDDL(U(ddl_text))
-        except Exception as e:
+        except ParseException as e:
             raise UnsupportedSqlError(
                 f"cannot parse CREATE TABLE schema "
                 f"{U(m.group('schema'))!r}: {e}"

@@ -73,7 +73,6 @@ from .manifest import (
     norm_fs_path,
     physical_name,
     scan_files,
-    shard_groups_of,
     stat_value,
     version_at_timestamp,
     versions_in,
@@ -298,6 +297,8 @@ class HadoopRenameLogStore(LogStore):
         try:
             won = _rename_no_overwrite(spark, fs, tmp, dst)
         except Exception:
+            # broad on purpose: whatever the failure, the tmp file is
+            # removed and the failure re-raised as itself
             fs.delete(tmp, False)
             raise
         if not won:
@@ -714,6 +715,13 @@ def _validate_column_defaults(
     defaulted key would collapse every omitted-key row into one bucket
     and one merge key) nor carry a second generation rule."""
     types = {f["name"]: f["type"] for f in (schema_fields or [])}
+    from pyspark.errors import (
+        AnalysisException,
+        ArithmeticException,
+        DateTimeException,
+        IllegalArgumentException,
+        SparkRuntimeException,
+    )
     from pyspark.sql.types import StructType as _ST
 
     for c, expr in defaults.items():
@@ -753,7 +761,17 @@ def _validate_column_defaults(
                     F.col(c).cast(want.fields[0].dataType)
                 )
             probe.collect()
-        except Exception as e:
+        except (
+            # what a bad expression raises on Spark 4.1: unresolvable
+            # or unparsable (AnalysisException, ParseException), or
+            # failing to evaluate or cast under ANSI (overflow, a
+            # malformed number or date, raise_error)
+            AnalysisException,
+            ArithmeticException,
+            DateTimeException,
+            IllegalArgumentException,
+            SparkRuntimeException,
+        ) as e:
             raise ValueError(
                 f"DEFAULT for {c!r} does not evaluate as a constant "
                 f"of the declared type: {expr!r} ({e})"
@@ -2986,6 +3004,83 @@ def txtable_changes(
     )
 
 
+def _clone_txtable(
+    spark: SparkSession,
+    source_root: str,
+    target_root: str,
+    version: int | None,
+    replace: bool,
+    deep: bool,
+) -> int:
+    """The one CLONE commit both clone verbs make: the source snapshot's
+    manifest, carried whole by :func:`next_manifest` (schema, tombstones,
+    generated columns, DEFAULTs, identity and its high-water mark,
+    sharding) over new bucket lists, at version 0 — or, replacing an
+    existing target, at its next version with its history kept. The
+    bucket lists are the only difference: a shallow clone references
+    the source's files by absolute path, a deep clone rewrites the
+    logical rows into the target's own ``data/``. The data lands before
+    the manifest's claim, so a crash before it leaves the target as it
+    was and a retry starts over; table properties and constraints copy
+    after it (:func:`_clone_mutable_metadata`). Returns the cloned row
+    count."""
+    src = (
+        _latest_manifest(spark, source_root)
+        if version is None
+        else _read_manifest(spark, source_root, version)
+    )
+    if src is None:
+        raise FileNotFoundError(f"no committed txtable at {source_root}")
+    # a shallow clone refuses deletion vectors: its manifest would need
+    # the source's DV files too, and vacuum/compact interplay across
+    # tables gets subtle. Materialize first (compact_txtable) or
+    # deep-clone (the rewrite materializes them).
+    check_features(
+        src,
+        frozenset({FEATURE_DV} if deep else ()),
+        "deep-clone" if deep else "shallow-clone",
+    )
+    tgt = _latest_manifest(spark, target_root)
+    if tgt is not None and not replace:
+        raise FileExistsError(
+            f"target {target_root} is already a txtable; clone onto a "
+            "fresh path (or pass replace=True / CREATE OR REPLACE ... "
+            "CLONE to redefine it, history preserved)"
+        )
+    if tgt is not None:
+        check_features(tgt, frozenset({FEATURE_DV}), "replace")
+    if deep:
+        written = _rewrite_snapshot(
+            spark, source_root, src, target_root, src["num_buckets"]
+        )
+    else:
+        fs, root = _hadoop_fs(spark, source_root)
+        qualified = fs.makeQualified(root).toString()
+        written = {
+            "buckets": {
+                b: [_abs(qualified, rel) for rel in rels]
+                for b, rels in src["buckets"].items()
+            }
+        }
+    # COPY history travels with the content (_clone_copy_fields). A
+    # sharded source clones sharded: with no prev to reuse, fresh shard
+    # files land in the target's own _manifest_shards/.
+    m = next_manifest(
+        src,
+        "CLONE" if tgt is None else "REPLACE CLONE",
+        version=0 if tgt is None else tgt["version"] + 1,
+        app_txns={},
+        **written,
+        **_clone_copy_fields(spark, source_root, src, target_root),
+    )
+    rows = sum(m["row_counts"].values())
+    _commit_manifest(spark, target_root, m)
+    _clone_mutable_metadata(
+        spark, source_root, target_root, replace=tgt is not None
+    )
+    return rows
+
+
 def shallow_clone_txtable(
     spark: SparkSession,
     source_root: str,
@@ -3013,58 +3108,14 @@ def shallow_clone_txtable(
 
     Writer-idempotency watermarks (``app_txns``) are NOT copied: the
     clone is a fresh target, and inherited watermarks would wrongly
-    suppress the first delivery of each stream into it.
+    suppress the first delivery of each stream into it. A source with
+    deletion vectors is refused.
 
     Returns the cloned row count.
     """
-    src = (
-        _latest_manifest(spark, source_root)
-        if version is None
-        else _read_manifest(spark, source_root, version)
+    return _clone_txtable(
+        spark, source_root, target_root, version, replace, deep=False
     )
-    if src is None:
-        raise FileNotFoundError(f"no committed txtable at {source_root}")
-    # Deliberately unsupported with deletion vectors: the clone's
-    # manifest would need the source's DV files too, and vacuum/compact
-    # interplay across tables gets subtle. Materialize first
-    # (compact_txtable) or deep-clone (reads logically).
-    check_features(src, frozenset(), "shallow-clone")
-    tgt = _latest_manifest(spark, target_root)
-    if tgt is not None and not replace:
-        raise FileExistsError(
-            f"target {target_root} is already a txtable; clone onto a "
-            "fresh path (or pass replace=True / CREATE OR REPLACE ... "
-            "CLONE to redefine it, history preserved)"
-        )
-    if tgt is not None:
-        # CREATE OR REPLACE ... CLONE: the target is redefined as the
-        # clone in one commit; its prior versions stay time-travelable
-        check_features(tgt, frozenset({FEATURE_DV}), "replace")
-    fs, root = _hadoop_fs(spark, source_root)
-    qualified = fs.makeQualified(root).toString()
-    # the clone carries the SOURCE snapshot's table state. A sharded
-    # source clones SHARDED: with no prev to reuse, fresh shard files
-    # land in the TARGET's own _manifest_shards/. COPY history travels
-    # with the content (_clone_copy_fields).
-    _commit_manifest(
-        spark,
-        target_root,
-        next_manifest(
-            src,
-            "CLONE" if tgt is None else "REPLACE CLONE",
-            version=0 if tgt is None else tgt["version"] + 1,
-            buckets={
-                b: [_abs(qualified, rel) for rel in rels]
-                for b, rels in src["buckets"].items()
-            },
-            app_txns={},
-            **_clone_copy_fields(spark, source_root, src, target_root),
-        ),
-    )
-    _clone_mutable_metadata(
-        spark, source_root, target_root, replace=tgt is not None
-    )
-    return sum(src["row_counts"].values())
 
 
 def _clone_mutable_metadata(
@@ -3110,97 +3161,34 @@ def deep_clone_txtable(
     source_root: str,
     target_root: str,
     version: int | None = None,
-    timestamp_ms: int | None = None,
     replace: bool = False,
 ) -> int:
     """Self-contained copy of a snapshot (Delta ``CLONE`` deep
-    semantics): the snapshot's rows are REWRITTEN into the target's own
-    ``data/`` directory with the source's key/bucketing/stats spec, so
-    the result has no dependency on the source's files — vacuum the
-    source freely, ship the target elsewhere. The complement of
-    :func:`shallow_clone_txtable` (zero-copy, source-dependent):
-    shallow to branch cheaply, deep to detach.
+    semantics): the shallow clone's one commit, with the snapshot's
+    LOGICAL rows rewritten into the target's own ``data/`` under the
+    source's bucket modulus and physical column names, so the result
+    has no dependency on the source's files — vacuum the source
+    freely, ship the target elsewhere. Shallow to branch cheaply, deep
+    to detach.
 
-    One full read + bucketed write of the chosen snapshot — O(snapshot)
-    data IO by definition; history does NOT come along (the clone
-    starts at version 0, Delta parity), and writer-idempotency
-    watermarks are not inherited for the same reason as the shallow
-    clone. At most one of ``version`` / ``timestamp_ms``. Returns the
-    cloned row count.
+    One read of every live bucket and one bucketed write — O(snapshot)
+    data IO by definition — then ONE manifest: the source snapshot's,
+    carried whole (schema and tombstones, generated columns, DEFAULTs,
+    identity rule and high-water mark, COPY history, sharding), with
+    the rewritten buckets. Deletion vectors materialize on the way
+    through, so the clone requires no table feature for them. History
+    does not come along (the clone starts at version 0, Delta parity),
+    nor do writer-idempotency watermarks (``app_txns``), for the same
+    reason as the shallow clone. A crash before the claim leaves the
+    target without a version, and a retry starts over.
+
+    ``replace`` redefines an existing target as the clone at its next
+    version, its earlier versions still time-travelable; without it an
+    existing target is refused. Returns the cloned row count.
     """
-    if version is not None and timestamp_ms is not None:
-        raise ValueError("pass at most one of version / timestamp_ms")
-    if timestamp_ms is not None:
-        version = _version_at_timestamp(spark, source_root, timestamp_ms)
-    m = (
-        _latest_manifest(spark, source_root)
-        if version is None
-        else _read_manifest(spark, source_root, version)
+    return _clone_txtable(
+        spark, source_root, target_root, version, replace, deep=True
     )
-    if m is None:
-        raise FileNotFoundError(f"no committed txtable at {source_root}")
-    target_exists = _latest_manifest(spark, target_root) is not None
-    if target_exists and not replace:
-        raise FileExistsError(
-            f"deep clone target {target_root} is already a txtable "
-            "(pass replace=True / CREATE OR REPLACE ... DEEP CLONE to "
-            "redefine it, history preserved)"
-        )
-    rows = read_txtable(spark, source_root, version=version)
-    n = txlog_upsert(
-        spark,
-        rows,
-        target_root,
-        key=m["key"],
-        num_buckets=m["num_buckets"],
-        stats_columns=m.get("stats_columns", []) or None,
-        bloom_columns=m.get("bloom_columns", []) or None,
-        bloom_bits=int(m.get("bloom_bits", BLOOM_BITS)),
-        generated_columns=m.get("generated_columns", {}) or None,
-        manifest_shards=shard_groups_of(m.get("manifest_sharding")),
-        replace=replace,
-    )
-    # dropped-column tombstones must survive the clone (without them a
-    # later ADD COLUMN of the same name would resurrect old file data
-    # on the clone — the exact hazard the tombstone exists to prevent)
-    dropped = list(m.get("dropped_columns", []))
-    if dropped:
-        tgt = _latest_manifest(spark, target_root)
-        _alter_commit(spark, target_root, tgt, dropped_columns=dropped)
-    if m.get("identity_columns"):
-        # identity spec + high-water mark re-attach AFTER the data
-        # lands: the cloned rows legitimately CARRY their ids, which
-        # the creation write's ALWAYS check would refuse if the rule
-        # were active during it; the source's mark travels so the
-        # clone never re-issues an id the source already handed out
-        tgt = _latest_manifest(spark, target_root)
-        _commit_manifest(
-            spark,
-            target_root,
-            next_manifest(
-                tgt,
-                "CLONE",
-                identity_columns=m["identity_columns"],
-                identity_high_water=m.get("identity_high_water", {}),
-            ),
-            prev=tgt,
-        )
-    copy_fields = _clone_copy_fields(spark, source_root, m, target_root)
-    if copy_fields["copy_log"]:
-        # COPY INTO load history travels with the content it describes
-        # (same rule as the shallow clone): without it a COPY on the
-        # clone would re-load files whose rows it already has
-        tgt = _latest_manifest(spark, target_root)
-        _commit_manifest(
-            spark,
-            target_root,
-            next_manifest(tgt, "CLONE", **copy_fields),
-            prev=tgt,
-        )
-    _clone_mutable_metadata(
-        spark, source_root, target_root, replace=target_exists
-    )
-    return n
 
 
 def set_column_default(
@@ -4157,29 +4145,11 @@ def rebucket_txtable(
     if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
     check_features(prev, frozenset({FEATURE_DV}), "rebucket")
-    key = prev["key"]
     if new_num_buckets == prev["num_buckets"]:
         return prev["version"]  # already there: no-op, no empty commit
-    live = sorted(int(b) for b in prev["buckets"])
-    rows = _read_buckets_logical(spark, root_path, prev, live)
-    # the rewrite materializes every deletion vector
-    written = {
-        "buckets": {},
-        "row_counts": {},
-        "bucket_stats": {},
-        "bucket_blooms": {},
-        "bucket_nulls": {},
-        "bucket_dvs": None,
-    }
-    if rows is not None:
-        written = _publish_touched_buckets(
-            spark,
-            root_path,
-            prev,
-            rows.withColumn(BUCKET_COL, _bucket_of(key, new_num_buckets)),
-            list(range(new_num_buckets)),
-            mode="full",
-        )
+    written = _rewrite_snapshot(
+        spark, root_path, prev, root_path, new_num_buckets
+    )
     _commit_manifest(
         spark,
         root_path,
@@ -4192,3 +4162,38 @@ def rebucket_txtable(
         prev=prev,
     )
     return prev["version"] + 1
+
+
+def _rewrite_snapshot(
+    spark: SparkSession,
+    source_root: str,
+    manifest: dict,
+    target_root: str,
+    num_buckets: int,
+) -> dict:
+    """Rewrite the LOGICAL rows of every live bucket of ``manifest`` (a
+    snapshot of ``source_root``) under ``num_buckets`` into one fresh
+    data dir of ``target_root``, and return the :func:`next_manifest`
+    changes that publish them (REBUCKET: the same root, a new modulus;
+    deep CLONE: another root, the same modulus). One read, one
+    ``mode="full"`` publish; every deletion vector materializes on the
+    way through. A snapshot without files gives empty changes."""
+    live = sorted(int(b) for b in manifest["buckets"])
+    rows = _read_buckets_logical(spark, source_root, manifest, live)
+    if rows is None:
+        return {
+            "buckets": {},
+            "row_counts": {},
+            "bucket_stats": {},
+            "bucket_blooms": {},
+            "bucket_nulls": {},
+            "bucket_dvs": None,
+        }
+    return _publish_touched_buckets(
+        spark,
+        target_root,
+        manifest,
+        rows.withColumn(BUCKET_COL, _bucket_of(manifest["key"], num_buckets)),
+        list(range(num_buckets)),
+        mode="full",
+    )

@@ -103,6 +103,31 @@ def test_defaults_fixed_after_creation_and_validated(spark):
         )
 
 
+def test_default_validation_refuses_only_bad_expressions(
+    spark, monkeypatch
+):
+    """An expression that fails to parse, resolve or cast refuses as
+    "does not evaluate"; an unrelated failure surfaces as itself."""
+    from data_pipeline_demo_spark.sinks import txlog
+
+    schema = [
+        {"name": c, "type": t, "nullable": True, "metadata": {}}
+        for c, t in (("k", "string"), ("n", "integer"))
+    ]
+    for bad in ("1 +", "no_such_col", "'abc'", "2147483648L"):
+        with pytest.raises(ValueError, match="does not evaluate"):
+            txlog._validate_column_defaults(
+                spark, {"n": bad}, schema, "k", {}, {}
+            )
+
+    def boom(expr):
+        raise RuntimeError("unrelated")
+
+    monkeypatch.setattr(txlog.F, "expr", boom)
+    with pytest.raises(RuntimeError, match="unrelated"):
+        txlog._validate_column_defaults(spark, {"n": "1"}, schema, "k", {}, {})
+
+
 def test_defaults_carry_through_alter_and_clone(spark):
     root = _mk(spark, _root("alter"))
     txlog_rename_column(spark, root, "status", "state")

@@ -580,7 +580,7 @@ _EXPECTED_ROWS = {
     "MERGE conditional":     ("change", "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
     "REBUCKET":              ("keep",   "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
     "CLONE shallow":         ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep"),
-    "CLONE deep":            ("keep",   "change", "keep",   "reset",  "reset",  "-",      "keep"),
+    "CLONE deep":            ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep"),
     "REPLACE":               ("reset",  "reset",  "reset",  "reset",  "-",      "-",      "reset"),
     "RESTORE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
     "ANALYZE after RESTORE": ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
@@ -611,6 +611,16 @@ def test_carry_matrix(verb_steps):
     assert list(got) == list(EXPECTED)
     for verb, row in EXPECTED.items():
         assert got[verb] == row, verb
+
+
+def test_every_step_commits_one_manifest(verb_steps):
+    """Each verb is one atomic commit: a clone is its target's version
+    0, every other step the version right after its starting
+    snapshot."""
+    for verb, before, after in verb_steps:
+        fresh = before is None or verb.startswith("CLONE")
+        want = 0 if fresh else before["version"] + 1
+        assert after["version"] == want, verb
 
 
 def test_analyze_after_restore_drops_restored_from_version(verb_steps):

@@ -333,11 +333,11 @@ def test_history_operation_audit_trail(spark, tmp_path):
         "CREATE", "MERGE", "UPDATE", "DELETE", "APPEND", "COPY INTO",
         "ALTER", "OPTIMIZE", "TRUNCATE", "RESTORE",
     ]
-    # deep clone: v0 CREATE + CLONE metadata commit carrying history
+    # deep clone: one CLONE commit, the COPY history carried in it
     clone = str(tmp_path / "dclone")
     deep_clone_txtable(spark, root, clone)
     cops = [h["operation"] for h in txtable_history(spark, clone)]
-    assert cops[0] == "CREATE" and "CLONE" in cops
+    assert cops == ["CLONE"]
     rc = copy_into(spark, clone, land, "parquet")
     assert rc["num_loaded_files"] == 0  # history traveled with content
 

@@ -250,12 +250,12 @@ def test_sql_clone_shallow_deep_and_time_travel(spark, t, tmp_path):
         txtable_sql(spark, f"CREATE TABLE txtable.`{c1}` CLONE txtable.`{t}`")
 
 
-def test_sql_shallow_clone_timestamp_as_of(spark, t, tmp_path):
-    """SHALLOW CLONE ... TIMESTAMP AS OF resolves the timestamp to a
-    version through the shallow branch too (advisor round-8 medium: the
-    branch referenced _version_at_timestamp without importing it, so
-    this spec-advertised form raised NameError; only VERSION AS OF and
-    the DEEP path were covered)."""
+@pytest.mark.parametrize("kind", ["SHALLOW", "DEEP"])
+def test_sql_shallow_clone_timestamp_as_of(spark, t, tmp_path, kind):
+    """[SHALLOW|DEEP] CLONE ... TIMESTAMP AS OF resolves the timestamp
+    to a version once, in the SQL branch, for both kinds (the shallow
+    branch once referenced _version_at_timestamp without importing it,
+    so this form raised NameError)."""
     import datetime as dt
     import json
     from pathlib import Path
@@ -271,7 +271,7 @@ def test_sql_shallow_clone_timestamp_as_of(spark, t, tmp_path):
     c = str(tmp_path / "clone_ts")
     txtable_sql(
         spark,
-        f"CREATE TABLE txtable.`{c}` SHALLOW CLONE txtable.`{t}` "
+        f"CREATE TABLE txtable.`{c}` {kind} CLONE txtable.`{t}` "
         f"TIMESTAMP AS OF '{ts}'",
     )
     assert _rows(spark, c)[2] == (20.0, "x")  # pre-update snapshot
@@ -283,7 +283,7 @@ def test_sql_shallow_clone_timestamp_as_of(spark, t, tmp_path):
     with pytest.raises(ValueError, match="at or before"):
         txtable_sql(
             spark,
-            f"CREATE TABLE txtable.`{tmp_path / 'clone_early'}` SHALLOW "
+            f"CREATE TABLE txtable.`{tmp_path / 'clone_early'}` {kind} "
             f"CLONE txtable.`{t}` TIMESTAMP AS OF '{early}'",
         )
 
@@ -539,6 +539,23 @@ def test_sql_create_table_empty_schema(spark, tmp_path):
     with pytest.raises(UnsupportedSqlError, match="cannot parse"):
         txtable_sql(
             spark, f"CREATE TABLE txtable.`{tmp_path / 'p'}` (a NOTATYPE)"
+        )
+
+
+def test_sql_create_table_unrelated_error_propagates(
+    spark, tmp_path, monkeypatch
+):
+    """Only a schema parse error becomes "cannot parse"; any other
+    failure while reading the DDL surfaces as itself."""
+    from pyspark.sql.types import StructType
+
+    def boom(ddl):
+        raise RuntimeError("unrelated")
+
+    monkeypatch.setattr(StructType, "fromDDL", staticmethod(boom))
+    with pytest.raises(RuntimeError, match="unrelated"):
+        txtable_sql(
+            spark, f"CREATE TABLE txtable.`{tmp_path / 'e'}` (a INT)"
         )
 
 

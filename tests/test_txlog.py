@@ -1195,6 +1195,131 @@ def test_deep_clone_detaches_from_source(spark, tmp_path):
         deep_clone_txtable(spark, tgt, tgt)
 
 
+def _rich_source(spark, root):
+    """A source holding a renamed column (column mapping), a dropped
+    one (tombstone), a live merge-on-read deletion vector, an ALWAYS
+    identity column and a DEFAULT."""
+    from data_pipeline_demo_spark.sinks.sql_dml import txtable_sql
+    from data_pipeline_demo_spark.sinks.txlog import (
+        _latest_manifest,
+        txlog_delete,
+        txlog_drop_column,
+        txlog_rename_column,
+    )
+
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` (k STRING, v DOUBLE, x INT, "
+        "status STRING DEFAULT 'pending', rid BIGINT GENERATED ALWAYS AS "
+        "IDENTITY (START WITH 100 INCREMENT BY 3)) KEY k BUCKETS 2",
+    )
+    txtable_sql(
+        spark,
+        f"INSERT INTO txtable.`{root}` (k, v, x, status) VALUES "
+        "('a', 1.0, 1, 'live'), ('b', 2.0, 2, 'live'), ('c', 3.0, 3, 'live'), "
+        "('d', 4.0, 4, 'live')",
+    )
+    txlog_rename_column(spark, root, "v", "amount")
+    txlog_drop_column(spark, root, "x")
+    txlog_delete(spark, root, where="k = 'b'", mode="merge-on-read")
+    m = _latest_manifest(spark, root)
+    assert m["bucket_dvs"] and m["dropped_columns"]
+    return m
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_deep_clone_is_one_commit_of_the_source_manifest(spark, tmp_path):
+    """A deep clone reads the source's logical rows (deletion vectors
+    applied) and commits them once under the source's manifest: the
+    physical column names, tombstones, DEFAULT and identity rule with
+    its high-water mark all carry, and no table feature is required."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_demo_spark.sinks.manifest import mapping_of
+    from data_pipeline_demo_spark.sinks.sql_dml import txtable_sql
+    from data_pipeline_demo_spark.sinks.txlog import deep_clone_txtable
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    sm = _rich_source(spark, src)
+    assert deep_clone_txtable(spark, src, tgt) == 3
+    assert _sorted_rows(read_txtable(spark, tgt)) == _sorted_rows(
+        read_txtable(spark, src)
+    )
+    [commit] = glob.glob(f"{tgt}/_commits/*.json")
+    with open(commit) as f:
+        m = json.load(f)
+    assert m["operation"] == "CLONE" and "requires" not in m
+    assert "bucket_dvs" not in m
+    for field in ("schema", "dropped_columns", "column_defaults",
+                  "identity_columns", "identity_high_water"):
+        assert m[field] == sm[field], field
+    physical = mapping_of(m["schema"])["amount"]
+    assert physical != "amount"
+    files = glob.glob(f"{tgt}/data/*/*/*.parquet")
+    assert files and all(physical in pq.read_schema(f).names for f in files)
+    txtable_sql(
+        spark, f"INSERT INTO txtable.`{tgt}` (k, amount) VALUES ('z', 9.0)"
+    )
+    z = read_txtable(spark, tgt).filter("k = 'z'").collect()[0]
+    assert z["status"] == "pending"
+    assert z["rid"] == sm["identity_high_water"]["rid"] + 3
+
+
+def test_deep_clone_fault_at_the_claim_leaves_no_version(spark, tmp_path):
+    """A fault injected into any of the target's manifest claims leaves
+    the target with no committed version, and a plain retry clones it
+    whole."""
+    import contextlib
+
+    from data_pipeline_demo_spark.sinks.txlog import (
+        HadoopRenameLogStore,
+        _latest_manifest,
+        deep_clone_txtable,
+        set_log_store,
+    )
+
+    class Injected(Exception):
+        pass
+
+    class FaultOnClaim(HadoopRenameLogStore):
+        """Raise once, on the ``nth`` claim of ``root``'s manifest."""
+
+        def __init__(self, root, nth):
+            self.prefix, self.nth, self.seen = f"{root}/_commits/", nth, 0
+
+        def put_if_absent(self, spark, fs, commits, dst, payload):
+            if self.prefix in dst.toString():
+                self.seen += 1
+                if self.seen == self.nth:
+                    raise Injected(dst.toString())
+            return super().put_if_absent(spark, fs, commits, dst, payload)
+
+    src = str(tmp_path / "src")
+    _rich_source(spark, src)
+    want = _sorted_rows(read_txtable(spark, src))
+    for nth in (1, 2):
+        tgt = str(tmp_path / f"tgt{nth}")
+        store = FaultOnClaim(tgt, nth)
+        prev = set_log_store(store)
+        try:
+            with contextlib.suppress(Injected):
+                deep_clone_txtable(spark, src, tgt)
+        finally:
+            set_log_store(prev)
+        if store.seen >= nth:  # the fault fired
+            assert _latest_manifest(spark, tgt) is None, nth
+            deep_clone_txtable(spark, src, tgt)
+        assert _sorted_rows(read_txtable(spark, tgt)) == want, nth
+        assert [h["operation"] for h in txtable_history(spark, tgt)] == [
+            "CLONE"
+        ]
+
+
 # ---------------------------------------------------------------------------
 # CHECK constraints
 # ---------------------------------------------------------------------------
