@@ -4160,9 +4160,9 @@ def q240_tblproperties_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser), upsert-SET overwriting one key, UNSET IF EXISTS, survival
     across a data verb (UPDATE), and SHOW TBLPROPERTIES reading the
     final map — the oracle is the literal expected key/value rows.
-    Mirrors Delta's semantics: string/string, mutable (not
-    time-traveled), versioned sidecar for loud concurrent-change
-    conflicts.
+    Mirrors Delta's semantics: string/string, kept in the table log
+    (each change is one manifest commit, so concurrent changes
+    conflict loudly).
 
     Scale: every operation is one metadata-file read/claim —
     table-size-independent."""

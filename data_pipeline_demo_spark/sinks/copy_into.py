@@ -334,7 +334,7 @@ def copy_into(
     generated_columns = dict(prev.get("generated_columns", {}))
     if generated_columns:
         batch = _apply_generated_columns(spark, batch, generated_columns)
-    _enforce_table_constraints(spark, root_path, batch)
+    _enforce_table_constraints(prev, batch)
 
     key = prev["key"]
     # identity columns allocate over the loaded files exactly as a

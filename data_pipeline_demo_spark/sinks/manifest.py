@@ -1,7 +1,9 @@
 """The txtable log format: the one place that owns the table's file
 layout, assembles, shards, reassembles and stat-encodes
 ``_commits/<version>.json``, and merges appended files into a
-manifest's bucket bookkeeping.
+manifest's bucket bookkeeping. The manifest is the table's one log:
+table properties and CHECK constraints are manifest fields too, so
+every change to them is a commit and every snapshot is one state.
 
 Every writer builds its next manifest through :func:`next_manifest` —
 the JVM verbs (``sinks/txlog.py``, ``sinks/merge.py``,
@@ -13,7 +15,8 @@ files in with :func:`append_files`. Readers and writers on both sides
 name and list log files with :func:`commit_rel` and
 :func:`versions_in`, refuse any manifest outside the one format every
 writer commits with :func:`check_format` (it always records the
-table's ``schema`` and a ``committed_at_ms`` stamp, and keeps COPY
+table's ``schema``, ``properties``, ``constraints`` and a
+``committed_at_ms`` stamp, and keeps COPY
 INTO history in ``copylog/`` sidecars, never in the manifest), refuse
 unknown ``requires`` tokens with :func:`check_features`, and resolve
 column mapping with :func:`mapping_of`. Both txtable readers — the
@@ -56,6 +59,8 @@ _REQUIRED = {
     "bloom_columns": list,
     "bucket_blooms": dict,
     "bloom_bits": lambda: BLOOM_BITS,
+    "properties": dict,
+    "constraints": dict,
 }
 
 # Fields carried only while non-empty: an empty value is written as an
@@ -145,11 +150,9 @@ def dvs_without(base: dict | None, buckets) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def commit_rel(version: int, log_dir: str = COMMITS_DIR) -> str:
-    """Root-relative path of ``version``'s file in a versioned log
-    directory: ``_commits/`` by default, or a sidecar log such as
-    ``_constraints/`` or ``_properties/``."""
-    return f"{log_dir}/{version:020d}.json"
+def commit_rel(version: int) -> str:
+    """Root-relative path of ``version``'s manifest in ``_commits/``."""
+    return f"{COMMITS_DIR}/{version:020d}.json"
 
 
 def versions_in(names) -> list[int]:
@@ -244,14 +247,18 @@ def check_features(
 
 def check_format(manifest: dict) -> None:
     """Refuse a parsed ``_commits/<v>.json`` outside the one manifest
-    format: every commit records the table's ``schema`` and its
+    format: every commit records the table's ``schema``, its
+    ``properties`` and ``constraints`` (``{}`` when empty) and its
     ``committed_at_ms`` stamp, and COPY INTO history lives in
     ``copylog/`` sidecars, never embedded as ``copy_files``. Both
     readers run this on every manifest they parse. It raises
     :class:`UnsupportedTableFeatureError`, never a ValueError, so no
     reader quarantines a well-formed manifest of an older format."""
-    if "schema" not in manifest:
-        problem = "records no schema"
+    unrecorded = [
+        k for k in ("schema", "properties", "constraints") if k not in manifest
+    ]
+    if unrecorded:
+        problem = f"records no {unrecorded[0]}"
     elif "committed_at_ms" not in manifest:
         problem = "has no committed_at_ms stamp"
     elif "copy_files" in manifest:

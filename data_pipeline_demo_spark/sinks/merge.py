@@ -486,7 +486,7 @@ def txlog_merge(
         result, identity_hwm, _idpin = _allocate_identity_columns(
             spark, result, identity, identity_hwm, key, existing=current
         )
-    _enforce_table_constraints(spark, root_path, result)
+    _enforce_table_constraints(prev, result)
     result = result.withColumn(
         BUCKET_COL, _bucket_of(key, num_buckets)
     )

@@ -1318,12 +1318,7 @@ def txtable_sql(
         # Delta's DESCRIBE DETAIL: one metadata dict for the current
         # snapshot — manifest-only plus one fs stat pass over the live
         # file refs (metadata-sized at any table size).
-        from .txlog import (
-            _hadoop_fs,
-            _latest_manifest,
-            table_constraints,
-            table_properties,
-        )
+        from .txlog import _hadoop_fs, _latest_manifest
 
         path = U(m.group("path"))
         man = _latest_manifest(spark, path)
@@ -1369,7 +1364,7 @@ def txtable_sql(
                 (man.get("copy_log") or {}).get("count", 0)
             ),
             # Delta's DESCRIBE DETAIL `properties` column
-            "properties": table_properties(spark, path),
+            "properties": man["properties"],
             "stats_columns": man.get("stats_columns", []),
             "bloom_columns": man.get("bloom_columns", []),
             # manifest sharding: 0 = unsharded root; the requires token
@@ -1381,7 +1376,7 @@ def txtable_sql(
                 set(man.get("requires", []))
                 | ({"manifest-shards"} if man.get("manifest_sharding") else set())
             ),
-            "constraints": table_constraints(spark, path),
+            "constraints": man["constraints"],
             # identity columns: the spec plus the current high-water
             # mark (the last value handed out — Delta surfaces this
             # through SYNC IDENTITY tooling; here it is plain metadata)
@@ -1568,12 +1563,7 @@ def txtable_sql(
         # txtable_sql). Data does not travel (use CLONE for that).
         # Identifiers emit backtick-quoted so names with spaces or
         # reserved words re-parse (round-12 advisor finding).
-        from .txlog import (
-            _latest_manifest,
-            _manifest_struct,
-            table_constraints,
-            table_properties,
-        )
+        from .txlog import _latest_manifest, _manifest_struct
 
         path = U(m.group("path"))
         man = _latest_manifest(spark, path)
@@ -1592,7 +1582,7 @@ def txtable_sql(
             )
 
         dflt = man.get("column_defaults") or {}
-        cons_all = table_constraints(spark, path)
+        cons_all = man["constraints"]
         st = _manifest_struct(man)
         # canonical nn_<col> constraints fold back to inline NOT NULL
         nn_cols = {
@@ -1626,11 +1616,11 @@ def txtable_sql(
             stmt += " BLOOM (" + ", ".join(
                 _bq(c) for c in man["bloom_columns"]
             ) + ")"
-        props = dict(table_properties(spark, path))
+        props = dict(man["properties"])
         if man.get("manifest_sharding"):
-            # the manifest is the source of truth for sharding (a table
-            # enabled via txlog_upsert(manifest_shards=) carries no
-            # sidecar property) — emit it so the recreate script
+            # the manifest's sharding config is the source of truth (a
+            # table enabled via txlog_upsert(manifest_shards=) carries
+            # no such property) — emit it so the recreate script
             # produces a sharded table too
             props["txtable.manifestShards"] = str(
                 man["manifest_sharding"]["groups"]
@@ -1730,12 +1720,13 @@ def txtable_sql(
         # an exception is this front-end's loud equivalent), and so
         # does a missing TABLE (Spark parity — a bare {} would read as
         # "exists, no properties")
-        from .txlog import _latest_manifest, table_properties
+        from .txlog import _latest_manifest
 
         path = U(m.group("path"))
-        if _latest_manifest(spark, path) is None:
+        man = _latest_manifest(spark, path)
+        if man is None:
             raise FileNotFoundError(f"no committed txtable at {path}")
-        props = table_properties(spark, path)
+        props = man["properties"]
         key = m.group("key")
         if key is None:
             return props
@@ -1810,17 +1801,13 @@ def txtable_sql(
         props = (
             _parse_props_kv(m.group("props"), U) if m.group("props") else {}
         )
-        n = txlog_upsert(
+        return txlog_upsert(
             spark, df, dst, key=key,
             num_buckets=int(m.group("nb") or 16),
+            properties=props,
             replace=bool(m.group("repl")),
             manifest_shards=_shards_prop(props),
         )
-        if props:
-            from .txlog import set_table_properties
-
-            set_table_properties(spark, dst, props)
-        return n
 
     if re.match(
         rf"CREATE{_WS}(?:OR{_WS}REPLACE{_WS})?TABLE\b", text, re.IGNORECASE
@@ -1891,7 +1878,7 @@ def txtable_sql(
         props = (
             _parse_props_kv(m.group("props"), U) if m.group("props") else {}
         )
-        n = txlog_upsert(
+        return txlog_upsert(
             spark, empty, dst, key=key,
             num_buckets=int(m.group("nb") or 16),
             stats_columns=split(m.group("stats")) if m.group("stats") else None,
@@ -1899,25 +1886,15 @@ def txtable_sql(
             generated_columns=gen or None,
             identity_columns=ident or None,
             column_defaults=dflts or None,
-            replace=bool(m.group("repl")),
-            manifest_shards=_shards_prop(props),
-        )
-        if props:
-            from .txlog import set_table_properties
-
-            set_table_properties(spark, dst, props)
-        if not_null:
+            properties=props,
             # NOT NULL registers as a canonically-named CHECK
             # constraint (`nn_<col>`: `col` IS NOT NULL) — it rides
             # the existing constraint machinery on every write path,
             # and SHOW CREATE folds it back to the inline syntax
-            from .txlog import set_table_constraint
-
-            for c in not_null:
-                set_table_constraint(
-                    spark, dst, _nn_name(c), f"`{c}` IS NOT NULL"
-                )
-        return n
+            constraints={_nn_name(c): f"`{c}` IS NOT NULL" for c in not_null},
+            replace=bool(m.group("repl")),
+            manifest_shards=_shards_prop(props),
+        )
 
     if re.search(rf"{_WS}USING{_WS}DELTA\b", text, re.IGNORECASE) and re.match(
         rf"CREATE{_WS}(?:OR{_WS}REPLACE{_WS})?TABLE\b", text, re.IGNORECASE

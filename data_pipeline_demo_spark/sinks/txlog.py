@@ -118,8 +118,8 @@ class ConcurrentCommitError(RuntimeError):
     """
 
 
-def _commit_path(jvm, root, version: int, log_dir: str = COMMITS_DIR):
-    return jvm.org.apache.hadoop.fs.Path(root, commit_rel(version, log_dir))
+def _commit_path(jvm, root, version: int):
+    return jvm.org.apache.hadoop.fs.Path(root, commit_rel(version))
 
 
 def _listed_versions(fs, log_dir) -> list[int]:
@@ -1774,6 +1774,8 @@ def txlog_upsert(
     generated_columns: dict[str, str] | None = None,
     identity_columns: dict[str, dict] | None = None,
     column_defaults: dict[str, str] | None = None,
+    properties: dict[str, str] | None = None,
+    constraints: dict[str, str] | None = None,
     not_matched_by_source_delete: bool | str = False,
     replace: bool = False,
     manifest_shards: int | bool | None = None,
@@ -1815,6 +1817,13 @@ def txlog_upsert(
     never regresses (RESTORE keeps the extreme), and survives
     TRUNCATE — deleted ids are never re-issued. See
     :func:`_allocate_identity_columns` for the allocation plan.
+
+    ``properties`` / ``constraints`` (creation-time, like
+    ``column_defaults``): the new table's TBLPROPERTIES and CHECK
+    constraints, committed in the creating manifest itself. The
+    constraints gate the creating batch. On an existing table they must
+    match the current values; change them with
+    :func:`set_table_properties` and :func:`set_table_constraint`.
 
     ``bloom_columns`` (creation-time, like ``stats_columns``): columns
     whose per-bucket Bloom filters are maintained in the manifest —
@@ -1872,11 +1881,11 @@ def txlog_upsert(
     table is redefined in ONE commit — new key/buckets/schema/stats/
     bloom/generated columns, batch rows as the new contents, COPY
     history and writer watermarks reset, constraints and TBLPROPERTIES
-    cleared, manifest sharding reset (pass ``manifest_shards`` to keep
-    the replacement sharded) — while every prior version stays
-    time-travelable (RESTORE to a pre-replace version brings the old
-    table back). No-op when the table doesn't exist yet (plain
-    create).
+    replaced by the declared ones, manifest sharding reset (pass
+    ``manifest_shards`` to keep the replacement sharded) — while every
+    prior version stays time-travelable (RESTORE to a pre-replace
+    version brings the old table back). No-op when the table doesn't
+    exist yet (plain create).
 
     Crash safety: every write lands in a fresh ``data/<uuid>/`` dir; a
     crash anywhere before the manifest rename leaves the table bit-for-
@@ -1898,13 +1907,11 @@ def txlog_upsert(
     if replace and prev is not None:
         # CREATE OR REPLACE semantics (Delta parity): the next commit
         # defines a brand-new table shape — fresh key/buckets/schema/
-        # stats/bloom/generated columns, empty starting snapshot, reset
-        # COPY history and writer watermarks — while every PRIOR version
-        # stays time-travelable under its own manifest (atomic: one
-        # manifest claim, same race rules as any write). Constraints
-        # and TBLPROPERTIES reset after the commit lands (they are
-        # write-side governance, not time-traveled state — Delta
-        # stores both in the replaced metadata too).
+        # stats/bloom/generated columns, constraints and properties,
+        # empty starting snapshot, reset COPY history and writer
+        # watermarks — while every PRIOR version stays time-travelable
+        # under its own manifest (atomic: one manifest claim, same race
+        # rules as any write).
         replaced_version = prev["version"]
         prev = None
     version = 0
@@ -1962,6 +1969,15 @@ def txlog_upsert(
                 f"{prev.get('column_defaults', {})}; got "
                 f"{column_defaults} (fixed at table creation)"
             )
+        for name, given, verb in (
+            ("properties", properties, "set_table_properties"),
+            ("constraints", constraints, "set_table_constraint"),
+        ):
+            if given is not None and given != prev[name]:
+                raise ValueError(
+                    f"txtable {root_path} has {name}={prev[name]}; got "
+                    f"{given} — change them with {verb} (ALTER TABLE)"
+                )
         version = prev["version"] + 1
         key = prev["key"]
         num_buckets = prev["num_buckets"]
@@ -1971,6 +1987,8 @@ def txlog_upsert(
         identity_columns = dict(prev.get("identity_columns", {}))
         identity_hwm = dict(prev.get("identity_high_water", {}))
         column_defaults = dict(prev.get("column_defaults", {}))
+        properties = prev["properties"]
+        constraints = prev["constraints"]
         bloom_bits = int(prev.get("bloom_bits", BLOOM_BITS))
         app_txns = dict(prev.get("app_txns", {}))
         if (
@@ -1994,6 +2012,11 @@ def txlog_upsert(
             for c, cfg in identity_columns.items()
         }
         column_defaults = dict(column_defaults or {})
+        properties = dict(properties or {})
+        constraints = dict(constraints or {})
+        _check_properties(properties)
+        for name, pred in constraints.items():
+            _check_constraint(name, pred, identity_columns)
         if replaced_version is not None:
             version = replaced_version + 1
     if txn_app_id is not None:
@@ -2030,13 +2053,12 @@ def txlog_upsert(
         )
 
     # CHECK constraints gate the batch BEFORE any file is written
-    # (one counting pass, only when the table declares constraints).
-    # REPLACE resets constraints, so the replaced table's old rules
-    # must not gate the new definition's first batch. Constraints
-    # cannot reference identity columns (set_table_constraint refuses
-    # them), so gating BEFORE identity allocation is sound.
-    if replaced_version is None:
-        _enforce_table_constraints(spark, root_path, updates)
+    # (one counting pass, only when the table declares constraints):
+    # the table's own, or a creating commit's declared ones — REPLACE
+    # drops the replaced table's rules. Constraints cannot reference
+    # identity columns (_check_constraint refuses them), so gating
+    # BEFORE identity allocation is sound.
+    check_constraints(updates, constraints)
 
     updates = updates.dropDuplicates([key]).withColumn(
         BUCKET_COL, _bucket_of(key, num_buckets)
@@ -2123,6 +2145,8 @@ def txlog_upsert(
         identity_columns=identity_columns,
         identity_high_water=identity_hwm,
         column_defaults=column_defaults,
+        properties=properties,
+        constraints=constraints,
         **written,
         **(
             {
@@ -2139,17 +2163,6 @@ def txlog_upsert(
         ),
     )
     _commit_manifest(spark, root_path, manifest, prev=prev)
-    if replaced_version is not None:
-        # reset write-side governance AFTER the commit landed (a lost
-        # commit race must not wipe the incumbent's constraints/props)
-        cv, cons = _latest_constraints(spark, root_path)
-        if cons:
-            _publish_constraints(spark, root_path, {}, cv)
-        pv, props = _latest_sidecar_json(spark, root_path, PROPERTIES_DIR)
-        if props:
-            _publish_sidecar_json(
-                spark, root_path, PROPERTIES_DIR, {}, pv, "table properties"
-            )
     return sum(manifest["row_counts"].values()) - sum(
         manifest.get("dv_counts", {}).values()
     )
@@ -2538,7 +2551,7 @@ def _txlog_update_mor(
         for c, expr in prev.get("generated_columns", {}).items():
             if c in updated.columns:
                 updated = updated.withColumn(c, F.expr(expr))
-        _enforce_table_constraints(spark, root_path, updated)
+        _enforce_table_constraints(prev, updated)
         written = _publish_touched_buckets(
             spark,
             root_path,
@@ -2665,7 +2678,7 @@ def txlog_update(
     # UPDATE results must satisfy the table's CHECK constraints (the
     # un-matched survivors already did; validating the whole rewrite
     # keeps the check one pass)
-    _enforce_table_constraints(spark, root_path, rewritten)
+    _enforce_table_constraints(prev, rewritten)
     written = _publish_touched_buckets(
         spark, root_path, prev, rewritten, touched
     )
@@ -2676,11 +2689,11 @@ def txlog_update(
 
 
 def _alter_commit(spark, root_path: str, prev: dict, **changes) -> int:
-    """Publish a METADATA-ONLY schema change (``schema``,
-    ``dropped_columns``, generated/identity/default declarations in
-    ``changes``): every file reference, row count, stat, and bloom
-    carries forward untouched — one manifest write, zero data IO, at
-    any table size. Returns the new version."""
+    """Publish a METADATA-ONLY change (``schema``, ``dropped_columns``,
+    generated/identity/default declarations, ``properties`` or
+    ``constraints`` in ``changes``): every file reference, row count,
+    stat, and bloom carries forward untouched — one manifest write,
+    zero data IO, at any table size. Returns the new version."""
     m = next_manifest(prev, "ALTER", **changes)
     _commit_manifest(spark, root_path, m, prev=prev)
     return m["version"]
@@ -3015,15 +3028,15 @@ def _clone_txtable(
     """The one CLONE commit both clone verbs make: the source snapshot's
     manifest, carried whole by :func:`next_manifest` (schema, tombstones,
     generated columns, DEFAULTs, identity and its high-water mark,
-    sharding) over new bucket lists, at version 0 — or, replacing an
-    existing target, at its next version with its history kept. The
-    bucket lists are the only difference: a shallow clone references
-    the source's files by absolute path, a deep clone rewrites the
-    logical rows into the target's own ``data/``. The data lands before
-    the manifest's claim, so a crash before it leaves the target as it
-    was and a retry starts over; table properties and constraints copy
-    after it (:func:`_clone_mutable_metadata`). Returns the cloned row
-    count."""
+    sharding, table properties and CHECK constraints) over new bucket
+    lists, at version 0 — or, replacing an existing target, at its next
+    version with its history kept. The bucket lists are the only
+    difference: a shallow clone references the source's files by
+    absolute path, a deep clone rewrites the logical rows into the
+    target's own ``data/``. The data lands before the manifest's claim,
+    and the claim is the clone's only log write, so a crash before it
+    leaves the target as it was and a retry starts over. Returns the
+    cloned row count."""
     src = (
         _latest_manifest(spark, source_root)
         if version is None
@@ -3075,9 +3088,6 @@ def _clone_txtable(
     )
     rows = sum(m["row_counts"].values())
     _commit_manifest(spark, target_root, m)
-    _clone_mutable_metadata(
-        spark, source_root, target_root, replace=tgt is not None
-    )
     return rows
 
 
@@ -3106,54 +3116,18 @@ def shallow_clone_txtable(
     directory, never the absolute source refs. ``compact_txtable`` on
     the clone localizes (materializes) every bucket it rewrites.
 
-    Writer-idempotency watermarks (``app_txns``) are NOT copied: the
-    clone is a fresh target, and inherited watermarks would wrongly
-    suppress the first delivery of each stream into it. A source with
-    deletion vectors is refused.
+    Table properties and CHECK constraints are the cloned snapshot's
+    (an ``AS OF`` clone carries that version's, Delta parity); the two
+    tables' metadata diverge afterwards. Writer-idempotency watermarks
+    (``app_txns``) are NOT copied: the clone is a fresh target, and
+    inherited watermarks would wrongly suppress the first delivery of
+    each stream into it. A source with deletion vectors is refused.
 
     Returns the cloned row count.
     """
     return _clone_txtable(
         spark, source_root, target_root, version, replace, deep=False
     )
-
-
-def _clone_mutable_metadata(
-    spark: SparkSession,
-    source_root: str,
-    target_root: str,
-    replace: bool = False,
-) -> None:
-    """Delta CLONE parity: table properties and CHECK constraints
-    (Delta's 'invariants') copy onto the clone target as its own
-    version-0 sidecars; afterwards the two tables' metadata diverge
-    independently. CURRENT metadata is what copies (properties and
-    constraints are mutable, not time-traveled, so an AS OF clone
-    still carries today's values — the only coherent reading under
-    this engine's metadata stance). Writer-idempotency watermarks
-    stay excluded as before.
-
-    ``replace`` (CREATE OR REPLACE ... CLONE): the target already has
-    sidecar history — publish the source's metadata at the target's
-    next sidecar version, and publish even an EMPTY set when the
-    target had values (the replace must clear them)."""
-    cons = _latest_constraints(spark, source_root)[1]
-    tv, tcons = (
-        _latest_constraints(spark, target_root) if replace else (None, {})
-    )
-    if cons or tcons:
-        _publish_constraints(spark, target_root, cons, tv)
-    props = _latest_sidecar_json(spark, source_root, PROPERTIES_DIR)[1]
-    pv, tprops = (
-        _latest_sidecar_json(spark, target_root, PROPERTIES_DIR)
-        if replace
-        else (None, {})
-    )
-    if props or tprops:
-        _publish_sidecar_json(
-            spark, target_root, PROPERTIES_DIR, props, pv,
-            "table properties",
-        )
 
 
 def deep_clone_txtable(
@@ -3174,9 +3148,10 @@ def deep_clone_txtable(
     One read of every live bucket and one bucketed write — O(snapshot)
     data IO by definition — then ONE manifest: the source snapshot's,
     carried whole (schema and tombstones, generated columns, DEFAULTs,
-    identity rule and high-water mark, COPY history, sharding), with
-    the rewritten buckets. Deletion vectors materialize on the way
-    through, so the clone requires no table feature for them. History
+    identity rule and high-water mark, COPY history, sharding, table
+    properties and CHECK constraints), with the rewritten buckets.
+    Deletion vectors materialize on the way through, so the clone
+    requires no table feature for them. History
     does not come along (the clone starts at version 0, Delta parity),
     nor do writer-idempotency watermarks (``app_txns``), for the same
     reason as the shallow clone. A crash before the claim leaves the
@@ -3309,8 +3284,10 @@ def restore_txtable(
     # would be silently STRIPPED (its bookkeeping dropped) — refuse
     check_features(src, frozenset({FEATURE_DV}), "restore to")
     # the restored snapshot's state (COPY history included) on top of
-    # the CURRENT table's sharding mode; the identity high-water mark
-    # never regresses (ids issued by the undone versions stay burned)
+    # the CURRENT table's sharding mode, properties and constraints
+    # (Delta parity: RESTORE rolls back data, not table metadata); the
+    # identity high-water mark never regresses (ids issued by the
+    # undone versions stay burned)
     _commit_manifest(
         spark,
         root_path,
@@ -3323,6 +3300,8 @@ def restore_txtable(
             ),
             **_identity_restore_carry(src, cur),
             manifest_sharding=cur.get("manifest_sharding"),
+            properties=cur["properties"],
+            constraints=cur["constraints"],
             restored_from_version=version,
         ),
         prev=cur,
@@ -3371,12 +3350,13 @@ def truncate_txtable(spark: SparkSession, root_path: str) -> int:
 
 
 def drop_txtable(spark: SparkSession, root_path: str) -> bool:
-    """``DROP TABLE``: remove the table — data, log, constraints,
-    indexes under the root — irreversibly (path-based tables have no
-    catalog soft-delete; this is ``rm -r`` through the Hadoop FS API,
-    so it works on any scheme). Time travel dies with the log by
-    definition; use RESTORE + VACUUM for reversible cleanup. Returns
-    True if something existed and was removed."""
+    """``DROP TABLE``: remove the table — data, log (properties and
+    constraints with it), indexes under the root — irreversibly
+    (path-based tables have no catalog soft-delete; this is ``rm -r``
+    through the Hadoop FS API, so it works on any scheme). Time travel
+    dies with the log by definition; use RESTORE + VACUUM for
+    reversible cleanup. Returns True if something existed and was
+    removed."""
     fs, root = _hadoop_fs(spark, root_path)
     if not fs.exists(root):
         return False
@@ -3538,28 +3518,6 @@ def vacuum_txtable(
             if not dry_run:
                 fs.delete(st.getPath(), False)
             deleted += 1
-    # Superseded constraint/property versions (and the legacy single
-    # file once a versioned one exists) are dead metadata — only the
-    # NEWEST version governs, so sweeping the rest never changes
-    # behavior.
-    for dir_name, legacy_name in (
-        (CONSTRAINTS_DIR, CONSTRAINTS_FILE),
-        (PROPERTIES_DIR, None),
-    ):
-        cdir = jvm.org.apache.hadoop.fs.Path(root, dir_name)
-        if not fs.exists(cdir):
-            continue
-        cvers = _listed_versions(fs, cdir)
-        for v in cvers[:-1]:
-            if not dry_run:
-                fs.delete(_commit_path(jvm, root, v, dir_name), False)
-            deleted += 1
-        if legacy_name is not None:
-            legacy = jvm.org.apache.hadoop.fs.Path(root, legacy_name)
-            if cvers and fs.exists(legacy):
-                if not dry_run:
-                    fs.delete(legacy, False)
-                deleted += 1
     return deleted
 
 
@@ -3739,115 +3697,22 @@ def compact_txtable(
 
 
 # ---------------------------------------------------------------------------
-# CHECK constraints: Delta's ADD CONSTRAINT semantics for the txtable.
+# CHECK constraints and TBLPROPERTIES: Delta's mutable table metadata,
+# kept in the manifest (``constraints``, ``properties``) like every
+# other table fact. Each change is one ALTER commit, so it races every
+# other write on the one version claim, and each snapshot carries the
+# metadata it was written under.
 # ---------------------------------------------------------------------------
-
-CONSTRAINTS_FILE = "_constraints.json"  # legacy single-file (read fallback)
-CONSTRAINTS_DIR = "_constraints"
 
 
 class ConstraintViolationError(ValueError):
     """A write would commit rows violating a table CHECK constraint."""
 
 
-def _latest_constraints(
-    spark: SparkSession, root_path: str
-) -> tuple[int | None, dict[str, str]]:
-    """(version, {name: predicate}) of the newest constraints version.
-    Constraints are VERSIONED like the commit log — one immutable
-    ``_constraints/<v>.json`` per change, claimed create-no-overwrite —
-    because a last-writer-wins replace let two concurrent ADD
-    CONSTRAINT calls silently drop one constraint (round-6 advisor
-    finding). A pre-versioning ``_constraints.json`` single file reads
-    as version -1; the first versioned publish supersedes it. Returns
-    ``(None, {})`` when the table has no constraints."""
-    return _latest_sidecar_json(
-        spark, root_path, CONSTRAINTS_DIR, legacy_file=CONSTRAINTS_FILE
-    )
-
-
-def _latest_sidecar_json(
-    spark: SparkSession,
-    root_path: str,
-    dir_name: str,
-    legacy_file: str | None = None,
-) -> tuple[int | None, dict]:
-    """Generic newest-version read of a versioned JSON sidecar dir
-    (``<dir>/<v>.json``, immutable, claimed create-no-overwrite) — the
-    mutable-table-metadata pattern constraints pioneered, shared by
-    TBLPROPERTIES. Returns ``(None, {})`` when absent."""
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    d = jvm.org.apache.hadoop.fs.Path(root, dir_name)
-    versions = _listed_versions(fs, d) if fs.exists(d) else []
-    best = versions[-1] if versions else None
-    if best is not None:
-        p = _commit_path(jvm, root, best, dir_name)
-    else:
-        if legacy_file is None:
-            return None, {}
-        p = jvm.org.apache.hadoop.fs.Path(root, legacy_file)
-        if not fs.exists(p):
-            return None, {}
-        best = -1
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return best, dict(json.loads(text))
-
-
 def table_constraints(spark: SparkSession, root_path: str) -> dict[str, str]:
-    """The table's CHECK constraints: ``{name: sql_predicate}``.
-    Mutable table metadata (Delta stores them in table properties —
-    same stance: constraints govern writes from the moment they are
-    set; they are not themselves time-traveled), but each CHANGE is an
-    immutable versioned file so concurrent changes race on a
-    create-no-overwrite claim instead of overwriting each other."""
-    return _latest_constraints(spark, root_path)[1]
-
-
-def _publish_constraints(
-    spark: SparkSession,
-    root_path: str,
-    cons: dict,
-    base_version: int | None,
-) -> None:
-    """Claim ``_constraints/<base+1>.json`` through the installed
-    LogStore (the same create-no-overwrite seam the commit log uses).
-    A concurrent constraint change that already claimed the version
-    raises :class:`ConcurrentCommitError` — the caller re-reads and
-    retries with intent intact, instead of silently losing an entry."""
-    _publish_sidecar_json(
-        spark, root_path, CONSTRAINTS_DIR, cons, base_version, "constraints"
-    )
-
-
-def _publish_sidecar_json(
-    spark: SparkSession,
-    root_path: str,
-    dir_name: str,
-    payload_obj: dict,
-    base_version: int | None,
-    what: str,
-) -> None:
-    """Generic claim of ``<dir>/<base+1>.json`` through the installed
-    LogStore (create-no-overwrite). A concurrent change that already
-    claimed the version raises :class:`ConcurrentCommitError` — the
-    caller re-reads and retries with intent intact."""
-    jvm = spark._jvm
-    fs, root = _hadoop_fs(spark, root_path)
-    d = jvm.org.apache.hadoop.fs.Path(root, dir_name)
-    fs.mkdirs(d)
-    version = 0 if base_version is None else base_version + 1
-    dst = _commit_path(jvm, root, version, dir_name)
-    payload = json.dumps(payload_obj).encode("utf-8")
-    if not _log_store.put_if_absent(spark, fs, d, dst, payload):
-        raise ConcurrentCommitError(
-            f"{what} version {version} at {root_path} was claimed "
-            f"by a concurrent {what} change; re-read and retry"
-        )
+    """The latest version's CHECK constraints: ``{name: sql_predicate}``
+    (``{}`` when there is no table)."""
+    return (_latest_manifest(spark, root_path) or {}).get("constraints", {})
 
 
 def check_constraints(df, constraints: dict[str, str]) -> None:
@@ -3879,91 +3744,90 @@ def check_constraints(df, constraints: dict[str, str]) -> None:
         )
 
 
-def set_table_constraint(
-    spark: SparkSession, root_path: str, name: str, predicate: str
-) -> None:
-    """ADD CONSTRAINT: validates the predicate parses AND that every
-    EXISTING row satisfies it (Delta's ADD CONSTRAINT scan — a
-    constraint the current data violates would make the table
-    unwritable), then publishes it; every subsequent MERGE/UPDATE/write
-    validates incoming rows against it."""
-    if not name or not name.isidentifier():
-        raise ValueError(f"constraint name must be an identifier: {name!r}")
+def _check_constraint(name: str, predicate: str, identity_columns) -> None:
+    """Refuse a constraint declaration: its name must be an identifier,
+    and it must not read an identity column — constraints gate batches
+    BEFORE identity allocation fills the column, so such a predicate
+    would see nulls."""
     import re as _re
 
-    _man = _latest_manifest(spark, root_path)
-    _ident = (_man or {}).get("identity_columns", {})
-    _hit = [
+    if not name or not name.isidentifier():
+        raise ValueError(f"constraint name must be an identifier: {name!r}")
+    hit = [
         c
-        for c in _ident
+        for c in identity_columns
         if _re.search(rf"\b{_re.escape(c)}\b", predicate)
     ]
-    if _hit:
+    if hit:
         raise ValueError(
-            f"constraint {name!r} references identity column(s) {_hit}: "
+            f"constraint {name!r} references identity column(s) {hit}: "
             "constraints gate batches BEFORE identity allocation fills "
             "the column, so such a predicate would see nulls"
         )
-    try:
-        current = read_txtable(spark, root_path)
-        check_constraints(current, {name: predicate})
-    except FileNotFoundError as e:
-        if "is empty" not in str(e):
-            raise  # no table at all: nothing to attach constraints to
-    base, cons = _latest_constraints(spark, root_path)
-    cons[name] = predicate
-    _publish_constraints(spark, root_path, cons, base)
+
+
+def set_table_constraint(
+    spark: SparkSession, root_path: str, name: str, predicate: str
+) -> int:
+    """ADD CONSTRAINT: check that every row of the latest snapshot
+    satisfies the predicate (Delta's ADD CONSTRAINT scan — a constraint
+    the current data violates would make the table unwritable), then
+    commit it over that same snapshot. A write that lands during the
+    scan makes the claim fail with :class:`ConcurrentCommitError`
+    instead of admitting rows the scan never saw. Every later write
+    validates its rows against it. Returns the new version."""
+    prev = _latest_manifest(spark, root_path)
+    if prev is None:
+        raise FileNotFoundError(f"no committed txtable at {root_path}")
+    _check_constraint(name, predicate, prev.get("identity_columns", {}))
+    check_constraints(
+        read_txtable(spark, root_path, version=prev["version"]),
+        {name: predicate},
+    )
+    return _alter_commit(
+        spark, root_path, prev,
+        constraints={**prev["constraints"], name: predicate},
+    )
 
 
 def drop_table_constraint(
     spark: SparkSession, root_path: str, name: str
 ) -> bool:
-    """DROP CONSTRAINT; returns whether it existed."""
-    base, cons = _latest_constraints(spark, root_path)
-    existed = name in cons
-    if existed:
-        del cons[name]
-        _publish_constraints(spark, root_path, cons, base)
-    return existed
+    """DROP CONSTRAINT; returns whether it existed (a missing one
+    commits nothing)."""
+    prev = _latest_manifest(spark, root_path)
+    if prev is None:
+        raise FileNotFoundError(f"no committed txtable at {root_path}")
+    if name not in prev["constraints"]:
+        return False
+    cons = dict(prev["constraints"])
+    del cons[name]
+    _alter_commit(spark, root_path, prev, constraints=cons)
+    return True
 
 
-def _enforce_table_constraints(spark, root_path, df) -> None:
-    """Write-path hook: validate a batch about to be committed."""
-    check_constraints(df, table_constraints(spark, root_path))
-
-
-# ---------------------------------------------------------------------------
-# TBLPROPERTIES: Delta's mutable string key/value table metadata.
-# ---------------------------------------------------------------------------
-
-PROPERTIES_DIR = "_properties"
+def _enforce_table_constraints(manifest: dict | None, df) -> None:
+    """Write-path hook: validate a batch against the constraints of the
+    manifest the write commits over."""
+    check_constraints(df, (manifest or {}).get("constraints", {}))
 
 
 def table_properties(spark: SparkSession, root_path: str) -> dict[str, str]:
-    """The table's TBLPROPERTIES: ``{key: value}``, both strings.
+    """The latest version's TBLPROPERTIES: ``{key: value}``, both
+    strings (``{}`` when there is no table).
 
-    Same stance as constraints (Delta keeps both in the same metadata
-    domain): properties are MUTABLE table metadata — they govern from
-    the moment they are set and are not time-traveled — but every
-    change is an immutable versioned ``_properties/<v>.json`` claimed
-    create-no-overwrite, so concurrent changes conflict loudly instead
-    of last-writer-wins dropping one. The engine attaches no behavior
-    to any key (like Delta with user properties); they are carried,
-    listed, and survive every data verb. RESTORE/TRUNCATE leave them
-    untouched; CLONE copies the source's current properties and
-    constraints onto the target (Delta parity — ``CLONE`` carries
-    table properties and invariants), after which the two diverge;
-    DROP TABLE removes them with the root."""
-    return _latest_sidecar_json(spark, root_path, PROPERTIES_DIR)[1]
+    The engine attaches no behavior to any key (like Delta with user
+    properties); they are carried by every verb, listed, and shown by
+    ``DESCRIBE HISTORY`` as ALTER commits. Data verbs, RESTORE and
+    TRUNCATE keep the current values; REPLACE clears them; CLONE
+    carries the cloned snapshot's (Delta parity — ``CLONE`` carries
+    table properties and invariants), after which the two tables
+    diverge; DROP TABLE removes them with the root."""
+    return (_latest_manifest(spark, root_path) or {}).get("properties", {})
 
 
-def set_table_properties(
-    spark: SparkSession, root_path: str, props: dict[str, str]
-) -> None:
-    """ALTER TABLE ... SET TBLPROPERTIES: upsert the given keys (Delta
-    semantics — existing keys overwrite, others persist untouched)."""
-    if not props:
-        raise ValueError("SET TBLPROPERTIES: need at least one key")
+def _check_properties(props: dict) -> None:
+    """TBLPROPERTIES are string/string with non-empty keys."""
     for k, v in props.items():
         if not isinstance(k, str) or not k:
             raise ValueError(f"property key must be a non-empty string: {k!r}")
@@ -3972,12 +3836,22 @@ def set_table_properties(
                 f"property value for {k!r} must be a string (got "
                 f"{type(v).__name__}) — TBLPROPERTIES are string/string"
             )
-    if _latest_manifest(spark, root_path) is None:
+
+
+def set_table_properties(
+    spark: SparkSession, root_path: str, props: dict[str, str]
+) -> int:
+    """ALTER TABLE ... SET TBLPROPERTIES: upsert the given keys (Delta
+    semantics — existing keys overwrite, others persist untouched) in
+    one commit. Returns the new version."""
+    if not props:
+        raise ValueError("SET TBLPROPERTIES: need at least one key")
+    _check_properties(props)
+    prev = _latest_manifest(spark, root_path)
+    if prev is None:
         raise FileNotFoundError(f"no committed txtable at {root_path}")
-    base, cur = _latest_sidecar_json(spark, root_path, PROPERTIES_DIR)
-    cur.update(props)
-    _publish_sidecar_json(
-        spark, root_path, PROPERTIES_DIR, cur, base, "table properties"
+    return _alter_commit(
+        spark, root_path, prev, properties={**prev["properties"], **props}
     )
 
 
@@ -3990,10 +3864,13 @@ def unset_table_properties(
     """ALTER TABLE ... UNSET TBLPROPERTIES [IF EXISTS]: remove keys.
     Spark/Delta semantics: a missing key raises unless IF EXISTS.
     Returns how many keys were actually removed (a no-op change
-    publishes no new version)."""
+    commits nothing)."""
     if not keys:
         raise ValueError("UNSET TBLPROPERTIES: need at least one key")
-    base, cur = _latest_sidecar_json(spark, root_path, PROPERTIES_DIR)
+    prev = _latest_manifest(spark, root_path)
+    if prev is None:
+        raise FileNotFoundError(f"no committed txtable at {root_path}")
+    cur = dict(prev["properties"])
     missing = [k for k in keys if k not in cur]
     if missing and not if_exists:
         raise KeyError(
@@ -4006,9 +3883,7 @@ def unset_table_properties(
             del cur[k]
             removed += 1
     if removed:
-        _publish_sidecar_json(
-            spark, root_path, PROPERTIES_DIR, cur, base, "table properties"
-        )
+        _alter_commit(spark, root_path, prev, properties=cur)
     return removed
 
 

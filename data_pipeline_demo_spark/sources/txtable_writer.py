@@ -1327,9 +1327,9 @@ def write_txtable(
     and the txlog verbs enforce them."""
     from pyspark.sql import functions as F
 
-    from ..sinks.txlog import _enforce_table_constraints
+    from ..sinks.txlog import _enforce_table_constraints, _latest_manifest
 
-    _enforce_table_constraints(df.sparkSession, path, df)
+    _enforce_table_constraints(_latest_manifest(df.sparkSession, path), df)
 
     bucket = F.coalesce(
         F.pmod(F.xxhash64(F.col(key)), F.lit(int(num_buckets))), F.lit(0)

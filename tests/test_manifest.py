@@ -279,9 +279,19 @@ def test_check_format_refuses_older_manifests():
         assert not isinstance(e.value, ValueError)
 
 
+def test_check_format_refuses_a_manifest_without_properties_or_constraints():
+    """Table properties and CHECK constraints are manifest fields, written
+    as ``{}`` when empty; a manifest without either field predates them
+    (its table kept them in sidecar logs this engine no longer reads)."""
+    good = next_manifest(None, "CREATE", key="id", num_buckets=2, schema=[_field("id")])
+    assert good["properties"] == {} and good["constraints"] == {}
+    for field in ("properties", "constraints"):
+        with pytest.raises(UnsupportedTableFeatureError, match=f"no {field}"):
+            check_format({k: v for k, v in good.items() if k != field})
+
+
 def test_layout_helpers():
     assert commit_rel(7) == "_commits/00000000000000000007.json"
-    assert commit_rel(0, "_properties") == "_properties/00000000000000000000.json"
     names = [
         commit_rel(v).split("/")[1] for v in (3, 1, 12)
     ] + [".tmp-abc", ".quarantine-00000000000000000004.json", "x.json",
@@ -539,6 +549,8 @@ TRACKED = {
     "app_txns": ("app_txns",),
     "dvs": ("bucket_dvs", "dv_counts"),
     "sharding": ("manifest_sharding",),
+    "props": ("properties",),
+    "constraints": ("constraints",),
 }
 
 
@@ -563,29 +575,34 @@ def carry_matrix(steps) -> dict[str, dict[str, str]]:
 # truncated table does not re-load its landing files) while OVERWRITE
 # drops it with the replaced snapshot; REPLACE drops it too, as a new
 # table definition. The asymmetry is the existing contract, kept as is.
+# Table properties and constraints ride every data verb and RESTORE,
+# carry into clones, and reset on REPLACE; the metadata verbs run last
+# in the scenario, so no data step pays for a constraint check.
 _EXPECTED_ROWS = {
-    # verb                   hwm       copy      gen       defaults  app       dvs       sharding
-    "CREATE":                ("set",    "-",      "set",    "set",    "set",    "-",      "set"),
-    "COPY INTO":             ("change", "set",    "keep",   "keep",   "keep",   "-",      "keep"),
-    "DELETE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
-    "ALTER ADD":             ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
-    "ALTER DROP":            ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
-    "APPEND":                ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
-    "UPDATE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
-    "DELETE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
-    "UPDATE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep"),
-    "MERGE upsert":          ("change", "keep",   "keep",   "keep",   "change", "keep",   "keep"),
-    "ANALYZE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
-    "OPTIMIZE ZORDER":       ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep"),
-    "MERGE conditional":     ("change", "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
-    "REBUCKET":              ("keep",   "keep",   "keep",   "keep",   "keep",   "-",      "keep"),
-    "CLONE shallow":         ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep"),
-    "CLONE deep":            ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep"),
-    "REPLACE":               ("reset",  "reset",  "reset",  "reset",  "-",      "-",      "reset"),
-    "RESTORE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep"),
-    "ANALYZE after RESTORE": ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep"),
-    "TRUNCATE":              ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep"),
-    "OVERWRITE":             ("keep",   "reset",  "keep",   "reset",  "keep",   "-",      "keep"),
+    # verb                   hwm       copy      gen       defaults  app       dvs       sharding  props     constraints
+    "CREATE":                ("set",    "-",      "set",    "set",    "set",    "-",      "set",    "set",    "-"),
+    "COPY INTO":             ("change", "set",    "keep",   "keep",   "keep",   "-",      "keep",   "keep",   "-"),
+    "DELETE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep",   "keep",   "-"),
+    "ALTER ADD":             ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "-"),
+    "ALTER DROP":            ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "-"),
+    "APPEND":                ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "-"),
+    "UPDATE MOR":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep",   "keep",   "-"),
+    "DELETE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep",   "keep",   "-"),
+    "UPDATE COW":            ("keep",   "keep",   "keep",   "keep",   "keep",   "change", "keep",   "keep",   "-"),
+    "MERGE upsert":          ("change", "keep",   "keep",   "keep",   "change", "keep",   "keep",   "keep",   "-"),
+    "ANALYZE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "-"),
+    "OPTIMIZE ZORDER":       ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep",   "keep",   "-"),
+    "MERGE conditional":     ("change", "keep",   "keep",   "keep",   "keep",   "-",      "keep",   "keep",   "-"),
+    "REBUCKET":              ("keep",   "keep",   "keep",   "keep",   "keep",   "-",      "keep",   "keep",   "-"),
+    "CLONE shallow":         ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep",   "keep",   "-"),
+    "CLONE deep":            ("keep",   "change", "keep",   "keep",   "reset",  "-",      "keep",   "keep",   "-"),
+    "REPLACE":               ("reset",  "reset",  "reset",  "reset",  "-",      "-",      "reset",  "reset",  "-"),
+    "RESTORE":               ("keep",   "keep",   "keep",   "keep",   "keep",   "set",    "keep",   "keep",   "-"),
+    "ANALYZE after RESTORE": ("keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "keep",   "-"),
+    "TRUNCATE":              ("keep",   "keep",   "keep",   "keep",   "keep",   "reset",  "keep",   "keep",   "-"),
+    "OVERWRITE":             ("keep",   "reset",  "keep",   "reset",  "keep",   "-",      "keep",   "keep",   "-"),
+    "SET TBLPROPERTIES":     ("keep",   "-",      "keep",   "-",      "keep",   "-",      "keep",   "change", "-"),
+    "ADD CONSTRAINT":        ("keep",   "-",      "keep",   "-",      "keep",   "-",      "keep",   "keep",   "set"),
 }
 EXPECTED = {v: dict(zip(TRACKED, row)) for v, row in _EXPECTED_ROWS.items()}
 

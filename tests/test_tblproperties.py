@@ -1,28 +1,33 @@
-"""TBLPROPERTIES (sinks/txlog.py + sinks/sql_dml.py): Delta's mutable
-string key/value table metadata — SET upsert semantics, UNSET [IF
+"""TBLPROPERTIES and CHECK constraints as manifest fields
+(sinks/txlog.py + sinks/sql_dml.py): SET upsert semantics, UNSET [IF
 EXISTS], SHOW (full map + single key), survival across data verbs,
 DESCRIBE DETAIL's `properties` column, masking of keyword-bearing
-values, versioned-sidecar concurrency, and vacuum's superseded-version
-sweep."""
-
-import os
+values, stale-base conflicts on the one commit log, ADD CONSTRAINT
+racing a write, one log claim per verb, and clone fault/retry."""
 
 import pytest
 
+from data_pipeline_demo_spark.sinks import txlog
 from data_pipeline_demo_spark.sinks.sql_dml import txtable_sql
 from data_pipeline_demo_spark.sinks.txlog import (
-    PROPERTIES_DIR,
     ConcurrentCommitError,
-    _publish_sidecar_json,
+    HadoopRenameLogStore,
+    _alter_commit,
+    _latest_manifest,
+    deep_clone_txtable,
     read_txtable,
     restore_txtable,
+    set_log_store,
+    set_table_constraint,
     set_table_properties,
+    shallow_clone_txtable,
+    table_constraints,
     table_properties,
     truncate_txtable,
     txlog_update,
     txlog_upsert,
+    txtable_history,
     unset_table_properties,
-    vacuum_txtable,
 )
 
 
@@ -134,56 +139,32 @@ def test_non_string_value_refuses(spark, t):
 
 def test_concurrent_change_conflicts_loudly(spark, t):
     set_table_properties(spark, t, {"a": "1"})
-    # two writers read base version 0 and both try to claim version 1:
-    # the second create-no-overwrite claim must raise, not overwrite
-    _publish_sidecar_json(
-        spark, t, PROPERTIES_DIR, {"a": "1", "b": "2"}, 0, "table properties"
-    )
+    # two writers read the same base manifest and both commit over it:
+    # the second claim of the same version must raise, not overwrite
+    stale = _latest_manifest(spark, t)
+    _alter_commit(spark, t, stale, properties={**stale["properties"], "b": "2"})
     with pytest.raises(ConcurrentCommitError):
-        _publish_sidecar_json(
-            spark, t, PROPERTIES_DIR, {"a": "1", "c": "3"}, 0,
-            "table properties",
+        _alter_commit(
+            spark, t, stale, properties={**stale["properties"], "c": "3"}
         )
-    # the retry path: re-read (sees b) and publish intent on top
+    # the retry path: re-read (sees b) and commit intent on top
     set_table_properties(spark, t, {"c": "3"})
     assert table_properties(spark, t) == {"a": "1", "b": "2", "c": "3"}
 
 
-def _versions(pdir):
-    return sorted(
-        f for f in os.listdir(pdir)
-        if f.endswith(".json") and not f.startswith(".")
-    )
-
-
-def test_vacuum_sweeps_superseded_property_versions(spark, t):
-    for i in range(4):
-        set_table_properties(spark, t, {"k": str(i)})
-    pdir = os.path.join(t, PROPERTIES_DIR)
-    assert len(_versions(pdir)) == 4
-    vacuum_txtable(spark, t, keep_last=1)
-    assert len(_versions(pdir)) == 1
-    assert table_properties(spark, t) == {"k": "3"}
-
-
 def test_unset_noop_publishes_no_version(spark, t):
     set_table_properties(spark, t, {"k": "1"})
-    pdir = os.path.join(t, PROPERTIES_DIR)
-    n0 = len(_versions(pdir))
+    history = txtable_history(spark, t)
+    # a property change is a commit of its own, listed in the history
+    assert history[-1]["operation"] == "ALTER"
     assert unset_table_properties(spark, t, ["zzz"], if_exists=True) == 0
-    assert len(_versions(pdir)) == n0
+    assert txtable_history(spark, t) == history
 
 
 def test_clone_carries_properties_and_constraints(spark, t, tmp_path):
     """Delta CLONE parity: properties + CHECK constraints copy to the
-    target, then diverge independently."""
-    from data_pipeline_demo_spark.sinks.txlog import (
-        deep_clone_txtable,
-        set_table_constraint,
-        shallow_clone_txtable,
-        table_constraints,
-    )
-
+    target, then diverge independently; an AS OF clone carries the
+    cloned version's values."""
     set_table_properties(spark, t, {"owner": "data-eng"})
     set_table_constraint(spark, t, "v_nonneg", "v >= 0")
     sh = str(tmp_path / "sh")
@@ -196,6 +177,11 @@ def test_clone_carries_properties_and_constraints(spark, t, tmp_path):
     # divergence: changing the clone leaves the source untouched
     set_table_properties(spark, sh, {"owner": "ml-team"})
     assert table_properties(spark, t) == {"owner": "data-eng"}
+    # version 1 is the SET: it has the property, not yet the constraint
+    v1 = str(tmp_path / "v1")
+    shallow_clone_txtable(spark, t, v1, version=1)
+    assert table_properties(spark, v1) == {"owner": "data-eng"}
+    assert table_constraints(spark, v1) == {}
 
 
 def test_create_table_with_tblproperties(spark, tmp_path):
@@ -249,8 +235,6 @@ def test_show_create_table_roundtrip(spark, tmp_path):
     dst = str(tmp_path / "dst")
     for stmt in script.replace(src, dst).split(";\n"):
         txtable_sql(spark, stmt)
-    from data_pipeline_demo_spark.sinks.txlog import table_constraints
-
     d_src = txtable_sql(spark, f"DESCRIBE DETAIL txtable.`{src}`")
     d_dst = txtable_sql(spark, f"DESCRIBE DETAIL txtable.`{dst}`")
     for f in ("key", "num_buckets", "properties", "constraints"):
@@ -291,3 +275,134 @@ def test_show_create_generated_columns_roundtrip(spark, tmp_path):
     txtable_sql(spark, f"INSERT INTO txtable.`{dst}` (id, v) VALUES (7, 3.0)")
     [r] = read_txtable(spark, dst).collect()
     assert (r.id, r.v, r.v2) == (7, 3.0, 6.0)
+
+
+def test_add_constraint_conflicts_with_a_write_during_its_scan(
+    spark, t, monkeypatch
+):
+    """ADD CONSTRAINT commits over the snapshot it scanned: a write of a
+    violating row that commits during the scan makes the constraint's
+    claim fail, instead of the constraint landing over that row."""
+    scan = txlog.check_constraints
+
+    def scan_while_a_write_lands(df, constraints):
+        if "v_nonneg" in constraints:
+            txlog_upsert(
+                spark, spark.createDataFrame([(99, -1.0)], "id long, v double"), t
+            )
+        return scan(df, constraints)
+
+    monkeypatch.setattr(txlog, "check_constraints", scan_while_a_write_lands)
+    with pytest.raises(ConcurrentCommitError):
+        set_table_constraint(spark, t, "v_nonneg", "v >= 0")
+    assert table_constraints(spark, t) == {}
+    assert read_txtable(spark, t).filter("v < 0").count() == 1
+
+
+class _Claims(HadoopRenameLogStore):
+    """Counts the log claims; ``fail_at`` raises at that claim (0-based)."""
+
+    def __init__(self, fail_at=None):
+        self.n = 0
+        self.fail_at = fail_at
+
+    def put_if_absent(self, spark, fs, commits, dst, payload):
+        self.n += 1
+        if self.n - 1 == self.fail_at:
+            raise IOError("injected claim fault")
+        return super().put_if_absent(spark, fs, commits, dst, payload)
+
+
+@pytest.fixture
+def claims():
+    """Install a claim-counting LogStore; ``claims(fail_at)`` swaps in a
+    fresh one and returns it."""
+    installed = []
+
+    def install(fail_at=None):
+        store = _Claims(fail_at)
+        installed.append(set_log_store(store))
+        return store
+
+    yield install
+    if installed:
+        set_log_store(installed[0])
+
+
+@pytest.fixture
+def governed(spark, t):
+    set_table_properties(spark, t, {"owner": "data-eng"})
+    set_table_constraint(spark, t, "v_nonneg", "v >= 0")
+    return t
+
+
+def _sorted_rows(spark, root):
+    return sorted(read_txtable(spark, root).collect())
+
+
+_CLONES = pytest.mark.parametrize(
+    "clone", [shallow_clone_txtable, deep_clone_txtable], ids=["shallow", "deep"]
+)
+
+
+@_CLONES
+def test_clone_is_one_claim(spark, governed, tmp_path, claims, clone):
+    store = claims()
+    clone(spark, governed, str(tmp_path / "dst"))
+    assert store.n == 1
+
+
+@_CLONES
+def test_clone_fault_at_any_claim_leaves_no_version(
+    spark, governed, tmp_path, claims, clone
+):
+    """A fault at any log claim a clone makes leaves the target without
+    a version, and a plain retry yields the source's rows, properties
+    and constraints."""
+    probe = claims()
+    clone(spark, governed, str(tmp_path / "probe"))
+    for k in range(probe.n):
+        dst = str(tmp_path / f"dst{k}")
+        claims(fail_at=k)
+        with pytest.raises(IOError, match="injected"):
+            clone(spark, governed, dst)
+        assert _latest_manifest(spark, dst) is None
+        claims()
+        clone(spark, governed, dst)
+        assert _sorted_rows(spark, dst) == _sorted_rows(spark, governed)
+        assert table_properties(spark, dst) == {"owner": "data-eng"}
+        assert table_constraints(spark, dst) == {"v_nonneg": "v >= 0"}
+
+
+def test_create_with_properties_and_not_null_is_one_claim(
+    spark, tmp_path, claims
+):
+    root = str(tmp_path / "ddl")
+    store = claims()
+    txtable_sql(
+        spark,
+        f"CREATE TABLE txtable.`{root}` "
+        "(id BIGINT, a STRING NOT NULL, b DOUBLE NOT NULL) "
+        "KEY id BUCKETS 2 TBLPROPERTIES ('owner' = 'data-eng')",
+    )
+    assert store.n == 1
+    assert table_properties(spark, root) == {"owner": "data-eng"}
+    assert table_constraints(spark, root) == {
+        "nn_a": "`a` IS NOT NULL",
+        "nn_b": "`b` IS NOT NULL",
+    }
+
+
+def test_create_or_replace_resets_metadata_in_one_claim(
+    spark, governed, claims
+):
+    store = claims()
+    txtable_sql(
+        spark,
+        f"CREATE OR REPLACE TABLE txtable.`{governed}` (id BIGINT, w STRING) "
+        "KEY id BUCKETS 2",
+    )
+    assert store.n == 1
+    assert table_properties(spark, governed) == {}
+    assert table_constraints(spark, governed) == {}
+    assert txtable_history(spark, governed)[-1]["operation"] == "REPLACE"

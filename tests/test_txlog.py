@@ -1406,13 +1406,13 @@ def test_add_constraint_scans_existing_rows(spark, tmp_path):
 
 def test_concurrent_constraint_change_raises_not_lost(spark, tmp_path):
     """Two concurrent ADD CONSTRAINT calls must NOT last-writer-wins:
-    the versioned create-no-overwrite publish makes the loser raise
+    both commit over the same base manifest, the loser raises
     ConcurrentCommitError, and a retry (re-read, re-apply) converges
-    with BOTH constraints present (round-6 advisor finding)."""
+    with BOTH constraints present."""
     from data_pipeline_demo_spark.sinks.txlog import (
         ConcurrentCommitError,
-        _latest_constraints,
-        _publish_constraints,
+        _alter_commit,
+        _latest_manifest,
         set_table_constraint,
         table_constraints,
         txlog_upsert,
@@ -1428,15 +1428,17 @@ def test_concurrent_constraint_change_raises_not_lost(spark, tmp_path):
     )
     set_table_constraint(spark, root, "amount_nonneg", "amount >= 0")
     # simulate the race: both writers read base version v, writer A
-    # publishes v+1 first; writer B's publish at the SAME base must
+    # commits v+1 first; writer B's commit over the SAME base must
     # raise instead of silently dropping A's entry
-    base, cons_b = _latest_constraints(spark, root)  # B's stale read
+    stale = _latest_manifest(spark, root)  # B's stale read
     set_table_constraint(spark, root, "qty_pos", "qty > 0")  # A wins
-    cons_b["amount_cap"] = "amount <= 1e9"
     import pytest as _pytest
 
-    with _pytest.raises(ConcurrentCommitError, match="constraint"):
-        _publish_constraints(spark, root, cons_b, base)
+    with _pytest.raises(ConcurrentCommitError):
+        _alter_commit(
+            spark, root, stale,
+            constraints={**stale["constraints"], "amount_cap": "amount <= 1e9"},
+        )
     # B retries through the public API: re-reads, re-applies — nothing lost
     set_table_constraint(spark, root, "amount_cap", "amount <= 1e9")
     assert table_constraints(spark, root) == {
@@ -1444,53 +1446,6 @@ def test_concurrent_constraint_change_raises_not_lost(spark, tmp_path):
         "qty_pos": "qty > 0",
         "amount_cap": "amount <= 1e9",
     }
-
-
-def test_legacy_constraints_file_migrates_and_vacuum_sweeps(spark, tmp_path):
-    """A pre-versioning ``_constraints.json`` single file still reads;
-    the first versioned change supersedes it; vacuum sweeps superseded
-    constraint versions and the legacy file without touching the live
-    newest one."""
-    import json as _json
-    import os
-
-    from data_pipeline_demo_spark.sinks.txlog import (
-        CONSTRAINTS_DIR,
-        CONSTRAINTS_FILE,
-        drop_table_constraint,
-        set_table_constraint,
-        table_constraints,
-        txlog_upsert,
-        vacuum_txtable,
-    )
-
-    root = str(tmp_path / "cons_legacy_tx")
-    txlog_upsert(
-        spark,
-        spark.createDataFrame([(1, 1.0)], "id long, amount double"),
-        root,
-        key="id",
-        num_buckets=2,
-    )
-    with open(os.path.join(root, CONSTRAINTS_FILE), "w") as f:
-        _json.dump({"legacy_rule": "amount >= 0"}, f)
-    assert table_constraints(spark, root) == {"legacy_rule": "amount >= 0"}
-    set_table_constraint(spark, root, "newer_rule", "amount <= 100")
-    assert table_constraints(spark, root) == {
-        "legacy_rule": "amount >= 0",
-        "newer_rule": "amount <= 100",
-    }
-    drop_table_constraint(spark, root, "legacy_rule")
-    vacuum_txtable(spark, root, keep_last=100)
-    # live content unchanged; only the newest version file remains
-    assert table_constraints(spark, root) == {"newer_rule": "amount <= 100"}
-    assert not os.path.exists(os.path.join(root, CONSTRAINTS_FILE))
-    left = [
-        f
-        for f in os.listdir(os.path.join(root, CONSTRAINTS_DIR))
-        if f.endswith(".json")
-    ]
-    assert len(left) == 1
 
 
 def test_txlog_not_matched_by_source_delete_full_sync(spark, tmp_path):

@@ -763,6 +763,7 @@ def test_cross_engine_commit_claims(registered, tmp_path):
             "row_counts": {}, "app_txns": {}, "stats_columns": [],
             "bucket_stats": {}, "committed_at_ms": 0,
             "schema": [_field("k", "long"), _field("v", "string")],
+            "properties": {}, "constraints": {},
         }).encode()
     ) is True
     with pytest.raises(JvmRace):

@@ -2,9 +2,11 @@
 
 The scenario builds one table that carries every carry-forward feature
 at once — identity column, generated column, column DEFAULT, writer
-watermark (``app_txns``), COPY INTO history, deletion vectors and
-manifest sharding — then applies each verb and records the root
-manifest before and after it. ``tests/test_manifest.py`` pins which
+watermark (``app_txns``), COPY INTO history, deletion vectors, manifest
+sharding and a table property — then applies each verb and records the
+root manifest before and after it. The two table-metadata verbs (SET
+TBLPROPERTIES, ADD CONSTRAINT) run last, so no constraint check adds a
+Spark job to a data verb. ``tests/test_manifest.py`` pins which
 fields each verb keeps, resets or changes from this scenario; the CLI
 prints the normalized manifests so two checkouts can be diffed:
 
@@ -25,7 +27,7 @@ shows a verb that gained or lost a job.
 
 Normalization replaces commit times and uuid-derived file, shard and
 sidecar names, so equal output means equal manifests. The script uses
-only the public verbs, so it runs unchanged on older checkouts.
+only the public verbs.
 """
 
 from __future__ import annotations
@@ -103,6 +105,8 @@ def run_verbs(
         deep_clone_txtable,
         rebucket_txtable,
         restore_txtable,
+        set_table_constraint,
+        set_table_properties,
         shallow_clone_txtable,
         truncate_txtable,
         txlog_add_column,
@@ -153,6 +157,7 @@ def run_verbs(
         generated_columns={"g": "v * 2"},
         identity_columns={"ident": {"always": False}},
         column_defaults={"d": "'x'"},
+        properties={"owner": "matrix"},
         txn_app_id="app",
         txn_version=0,
         manifest_shards=2,
@@ -224,6 +229,12 @@ def run_verbs(
             (F.col("id") + 2000).alias("ident"),
         ),
         t,
+    ))
+    step("SET TBLPROPERTIES", t, lambda: set_table_properties(
+        spark, t, {"owner": "matrix-2"}
+    ))
+    step("ADD CONSTRAINT", t, lambda: set_table_constraint(
+        spark, t, "v_nonneg", "v >= 0"
     ))
     return out
 
